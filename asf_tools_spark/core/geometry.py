@@ -86,10 +86,3 @@ def polygon_cover_cells(ring: np.ndarray, res: int) -> np.ndarray:
     inside = cover[keep]
     edges = _edge_supercover(ring, res)
     return np.unique(np.concatenate([inside, np.intersect1d(edges, cover)]))
-
-
-def bbox_intersects(
-    a: tuple[float, float, float, float], b: tuple[float, float, float, float]
-) -> bool:
-    """(min_lat, min_lon, max_lat, max_lon) bbox intersection test."""
-    return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])

@@ -62,9 +62,3 @@ def get_area_raster(raster: str) -> str:
     """``*_VV.tif -> *_area.tif`` suffix rewrite
     (ref: src/asf_tools/composite.py:60-70)."""
     return "_".join(raster.split("_")[:-1] + ["area.tif"])
-
-
-def banker_round(x: np.ndarray, scale: float = 1.0) -> np.ndarray:
-    """numpy half-to-even rounding of ``x*scale`` (ref water_map.py:87 uses
-    ``np.around`` — Spark's HALF_UP round would diverge; SURVEY §2.8 F6)."""
-    return np.around(np.asarray(x) * scale)

@@ -147,7 +147,7 @@ def xxhash64_strings(*values: str) -> int:
     return _signed(h)
 
 
-# ---- Murmur3_x86_32 (Spark's `hash(...)` / ml HashingTF bucket hash) ----
+# ---- Murmur3_x86_32 (Spark's `hash(...)`) ----
 # Spark's variant differs from canonical murmur3 in tail handling: trailing
 # bytes are mixed ONE AT A TIME (each through mixK1/mixH1, sign-extended),
 # not accumulated into one final k1 — replicate exactly or bucket indices
@@ -177,8 +177,8 @@ def _mix_h1(h1: int, k1: int) -> int:
 
 def murmur3_string(s: str, seed: int = SPARK_SEED) -> int:
     """Spark Murmur3_x86_32 of a string's UTF-8 bytes (the SQL `hash()`
-    expression for StringType, and ml HashingTF's term hash — both default
-    seed 42). Returns Spark's SIGNED 32-bit value."""
+    expression for StringType, default seed 42). Returns Spark's SIGNED
+    32-bit value."""
     data = s.encode("utf-8")
     n = len(data)
     h1 = seed & _M32
@@ -195,37 +195,3 @@ def murmur3_string(s: str, seed: int = SPARK_SEED) -> int:
     h1 = (h1 * 0xC2B2AE35) & _M32
     h1 ^= h1 >> 16
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def murmur3_string2(s: str, seed: int = SPARK_SEED) -> int:
-    """Spark's `hashUnsafeBytes2` on a string's UTF-8 bytes — the variant
-    ml HashingTF hashes terms with. Differs from ``murmur3_string`` (the
-    SQL `hash()` expression) ONLY in tail handling: trailing bytes
-    accumulate into one little-endian k1 (canonical murmur3), not one
-    mixH1 round per byte. "a" buckets to 35 here vs 18 under `hash()` at
-    numFeatures=64 — conflate the two and every frozen-model index is
-    wrong."""
-    data = s.encode("utf-8")
-    n = len(data)
-    h1 = seed & _M32
-    for i in range(0, n - n % 4, 4):
-        word = int.from_bytes(data[i : i + 4], "little")
-        h1 = _mix_h1(h1, _mix_k1(word))
-    k1 = 0
-    for i in range(n - n % 4, n):
-        k1 ^= (data[i] & 0xFF) << (8 * (i % 4))
-    if n % 4:
-        h1 ^= _mix_k1(k1)
-    h1 ^= n
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _M32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _M32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def hashing_tf_index(term: str, n_features: int) -> int:
-    """ml HashingTF bucket: nonNegativeMod(hashUnsafeBytes2(term), n)."""
-    h = murmur3_string2(term)
-    return ((h % n_features) + n_features) % n_features

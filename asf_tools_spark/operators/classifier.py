@@ -112,11 +112,11 @@ def score_quality(
 # The fastText deployment trick: a trained linear model is just (weights,
 # intercept) — scoring needs no pyspark.ml at all. Feature indices here
 # come from the SQL `hash()` expression (Murmur3, seed 42), NOT ml
-# HashingTF (which uses the hashUnsafeBytes2 tail variant — see
-# core/xxh.py): that keeps the whole inference path inside whole-stage
-# codegen, and training (train_frozen_classifier) builds its features
-# from the SAME Catalyst expression so train/score indices can never
-# disagree.
+# HashingTF (which hashes with the hashUnsafeBytes2 tail variant: "a"
+# buckets to 35 there vs 18 under `hash()` at numFeatures=64): that keeps
+# the whole inference path inside whole-stage codegen, and training
+# (train_frozen_classifier) builds its features from the SAME Catalyst
+# expression so train/score indices can never disagree.
 
 
 def hashed_token_index(tok: Column, n_features: int) -> Column:

@@ -46,24 +46,6 @@ def interp_membership_col(
     )
 
 
-def membership_limits(grid: DataFrame, value_col: str = "value",
-                      mask_percentile: float = 90.0, std_range: float = 3.0) -> tuple[float, float]:
-    """Distributed twin of core.fuzzy.determine_membership_limits
-    (ref water_map.py:100-107): 0-masked, p90-clipped median / median+3σ+5.
-    Three tiny scalar aggregates; exact percentile (linear interpolation,
-    same as np.nanpercentile)."""
-    v = F.col(value_col)
-    nonzero = grid.where(F.abs(v) > 1e-8)  # np.ma.masked_values(x, 0.0) atol
-    cap = nonzero.agg(
-        F.percentile(v, mask_percentile / 100.0).alias("p")
-    ).collect()[0].p
-    stats = nonzero.where(v <= F.lit(cap)).agg(
-        F.median(v).alias("med"), F.stddev_pop(v).alias("sd")
-    ).collect()[0]
-    lower = float(stats.med)
-    return lower, lower + std_range * float(stats.sd) + 5.0
-
-
 def slope_magnitude_col(grid: DataFrame, value_col: str = "value",
                         pixel_size: float = 30.0, out: str = "slope") -> DataFrame:
     """np.gradient-along-rows slope in degrees (ref water_map.py:93-97,

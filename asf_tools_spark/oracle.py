@@ -37,46 +37,11 @@ HOTSPOTS = [(40.71, -74.01), (51.51, -0.13), (35.68, 139.69), (-23.55, -46.63), 
 HOTSPOT_PCT = 30  # percent of pages pinned to a hotspot
 
 
-def geotag_lat_sql(key_expr: str, dialect: str) -> str:
-    """Deterministic latitude for a page key (hash-derived; 30% hotspots)."""
-    ha = hash8_sql(key_expr, dialect, salt="geo-a")
-    hb = hash8_sql(key_expr, dialect, salt="geo-b")
-    hc = hash8_sql(key_expr, dialect, salt="geo-c")
-    hotspot_case = " ".join(
-        f"WHEN ({hb}) % 5 = {i} THEN {dbl(lat)}" for i, (lat, _lon) in enumerate(HOTSPOTS)
-    )
-    jitter = f"(({hc}) % 1000) / {dbl(1000.0)} - {dbl(0.5)}"
-    uniform = f"(({hc}) % 1700000) / {dbl(10000.0)} - {dbl(85.0)}"
-    return f"CASE WHEN ({ha}) % 100 < {HOTSPOT_PCT} THEN (CASE {hotspot_case} END) + {jitter} ELSE {uniform} END"
-
-
-def geotag_lon_sql(key_expr: str, dialect: str) -> str:
-    ha = hash8_sql(key_expr, dialect, salt="geo-a")
-    hb = hash8_sql(key_expr, dialect, salt="geo-b")
-    hd = hash8_sql(key_expr, dialect, salt="geo-d")
-    hotspot_case = " ".join(
-        f"WHEN ({hb}) % 5 = {i} THEN {dbl(lon)}" for i, (_lat, lon) in enumerate(HOTSPOTS)
-    )
-    jitter = f"(({hd}) % 1000) / {dbl(1000.0)} - {dbl(0.5)}"
-    uniform = f"(({hd}) % 3500000) / {dbl(10000.0)} - {dbl(175.0)}"
-    return f"CASE WHEN ({ha}) % 100 < {HOTSPOT_PCT} THEN (CASE {hotspot_case} END) + {jitter} ELSE {uniform} END"
-
-
 def synth_value_sql(key_expr: str, dialect: str) -> str:
     """Backscatter-power analogue: right-skewed positive double."""
     h = hash8_sql(key_expr, dialect, salt="val")
     u = f"(({h}) % 1000000) / {dbl(1000000.0)}"
     return f"POWER({u}, {dbl(3.0)}) * {dbl(2.0)} + {dbl(0.000001)}"
-
-
-def synth_hand_sql(lat_expr: str, lon_expr: str, key_expr: str, dialect: str) -> str:
-    """HAND analogue: smooth spatial field + hash noise (meters, >= 0)."""
-    h = hash8_sql(key_expr, dialect, salt="hand")
-    noise = f"(({h}) % 1000) / {dbl(200.0)}"
-    return (
-        f"GREATEST({dbl(15.0)} * ({dbl(1.0)} + SIN(({lat_expr}) * {dbl(0.2)})"
-        f" * COS(({lon_expr}) * {dbl(0.2)})) + {noise} - {dbl(2.5)}, {dbl(0.0)})"
-    )
 
 
 def cell_sql(lat_expr: str, lon_expr: str, res: int) -> str:

@@ -100,23 +100,21 @@ def make_water_map_grid(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    _stats_pool = ThreadPoolExecutor(max_workers=1)
-    _stats_fut = _stats_pool.submit(_hand_stats)
-
-    # tile selection (VH only, reused for VV — ref :291-293); overlaps the
-    # hand-stats thread above
+    # tile selection (VH only, reused for VV — ref :291-293) overlaps the
+    # hand-stats thread; leaving the block joins that thread on every path,
+    # so a failed selection does not leave it running
     bs_vh = vh_grid.withColumn("valid_bs", F.col("valid") & (F.col("value") > 0.0))
-    if hand_candidates is not None:
-        selected_tiles = tiling.select_backscatter_tiles(bs_vh, hand_candidates, tile_shape, n_tiles)
-    else:
-        sel = tiling.backscatter_selection_df(
-            tiling.backscatter_tile_stats(bs_vh, tile_shape), hand_df
-        )
-        selected_tiles = np.array([int(r.tile_id) for r in sel.collect()], dtype=np.int64)
-    out["selected_tiles"] = selected_tiles
-
-    scalars, limit_stats = _stats_fut.result()
-    _stats_pool.shutdown()
+    with ThreadPoolExecutor(max_workers=1) as stats_pool:
+        stats_fut = stats_pool.submit(_hand_stats)
+        if hand_candidates is not None:
+            selected_tiles = tiling.select_backscatter_tiles(bs_vh, hand_candidates, tile_shape, n_tiles)
+        else:
+            sel = tiling.backscatter_selection_df(
+                tiling.backscatter_tile_stats(bs_vh, tile_shape), hand_df
+            )
+            selected_tiles = np.array([int(r.tile_id) for r in sel.collect()], dtype=np.int64)
+        out["selected_tiles"] = selected_tiles
+        scalars, limit_stats = stats_fut.result()
     hand_limits = (float(limit_stats.med), float(limit_stats.med) + 3.0 * float(limit_stats.sd) + 5.0)
     out["hand_limits"] = hand_limits
     hand_minmax = (scalars.h_lo, scalars.h_hi)

@@ -5,10 +5,13 @@ come from one emitter (asf_tools_spark.oracle) so both sides agree
 bit-for-bit; float aggregates are rounded identically on both sides.
 
 Each entry cites the reference operator it re-expresses (SURVEY §2 ids).
+``REGISTRY`` at the bottom lists every row of every ``queries*`` module in
+driver order; ``queries()`` and ``oracle_sql()`` are derived from it.
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -357,23 +360,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.withColumn("fp", F.md5("text"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_dups"))
-    )
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text analysis: whitespace token count + char stats per doc."""
-    _register(spark, sf_dir, "documents")
-    d = spark.table("documents")
-    # tokens = spaces+1 on trimmed single-spaced text — avoids regex-engine
-    # differences between Spark (Java) and DuckDB (RE2)
-    norm = F.regexp_replace(F.trim(F.col("text")), "\\s+", " ")
-    n_tokens = F.when(F.length(norm) == 0, 0).otherwise(
-        F.length(norm) - F.length(F.regexp_replace(norm, " ", "")) + 1
-    )
-    return d.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        F.length("text").alias("n_chars_actual"),
     )
 
 
@@ -1329,17 +1315,6 @@ def _oracle_sqls() -> dict[str, str]:
               ON l.l_orderkey = o.o_orderkey
             GROUP BY l.l_returnflag
         """,
-        "token_count": """
-            WITH norm AS (
-              SELECT doc_id, text, regexp_replace(TRIM(text), '\\s+', ' ', 'g') AS t
-              FROM documents
-            )
-            SELECT doc_id,
-                   CASE WHEN LENGTH(t) = 0 THEN 0
-                        ELSE LENGTH(t) - LENGTH(REPLACE(t, ' ', '')) + 1 END AS n_tokens,
-                   LENGTH(text) AS n_chars_actual
-            FROM norm
-        """,
         "flood_depth_simple": f"""
             SELECT b.poly_id,
                    ROUND(AVG(p.hand) + 3.0 * STDDEV_POP(p.hand), 6) AS wh_numpy,
@@ -1388,150 +1363,220 @@ def _oracle_sqls() -> dict[str, str]:
     }
 
 
-# The driver records the FIRST 50 registry entries in CORRECTNESS_r{N}.json
-# (observed r1-r3). Round-4 policy (VERDICT r3 item 6 / ADVICE r3): NEWEST
-# queries go FIRST — they are the least externally verified and need the
-# driver row most; rows that have been driver-green in multiple rounds (and
-# rows-only-by-design rows, which only get the weaker count check anyway)
-# rotate to the tail. The judge's full battery (scripts/check_correctness.py,
-# all queries) remains the canonical record for tail rows; rotation history:
-# r3 window = raster-core grid family (all green in CORRECTNESS_r03), now
-# partially rotated out as multiply-green.
-_REGISTRY_HEAD = [
-    # round-5 additions (never driver-seen):
-    "quadkey_rollup", "geohash_rollup", "track_stats", "od_matrix",
-    "trip_segments", "colocation_pairs", "bearing_rose", "geofence_events",
-    "emerging_hotspots", "domain_geo_spread", "polygon_raster", "geofence_dwell", "vector_tiles", "zonal_stats", "spatial_split", "track_similarity", "gi_star_spacetime", "fence_distance", "hilbert_rollup", "label_boundaries", "cell_top_sources", "tile_decay_rank",
-    "ppr_scores", "clustering_coeff", "kcore_nodes", "moving_avg_7d", "pip_strtree",
-    "media_dedup", "event_pivot",
-    "wow_growth",
-    "embedding_cov",
-    "extract_text_parity",
-    "value_anomalies", "tile_pyramid", "aspect_grid",
-    "morans_i", "gi_star", "distance_pairs", "convex_hull",
-    "shortest_paths", "scd2_history", "rrf_fusion", "hillshade_grid",
-    "json_extract_stats", "transition_probs", "cohort_retention",
-    "lpa_communities", "nb_classify", "dq_checks",
-    "shipping_priority", "region_supplier_volume", "textrank_terms",
-    "gap_fill_days",
-    "zipf_slope", "domain_quality", "simplify_rings", "containment_pairs",
-    "idw_grid", "pip_page_counts",
-    "hotspot_clusters", "editsim_pairs",
-    "polygon_stats", "chi2_terms",
-    "pareto_frontier", "trend_ols",
-    "interval_merge", "triangle_counts", "morph_open_grid",
-    "hits_scores", "chunk_passages", "bfs_hops", "char_entropy",
-    "event_funnel",
-    "setsim_join", "phrase_search", "sliding_windows",
-    "heavy_hitters", "histogram_quantile", "cube_stats", "sorted_neighborhood",
-    "lm_perplexity", "kmv_distinct", "merge_upsert", "weighted_sample",
-    "classifier_score", "tfidf_terms", "bm25_search", "cooccur_pmi",
-    "pagerank_domains",
-    # round-4 additions (driver-green once, r4):
-    "bpe_tokens", "substring_dedup", "bloom_join", "domain_stats",
-    "corpus_budget_bpe",
-    # round-3 additions — oracled + judge-battery green in r3, but no
-    # driver row yet:
-    "repetition_signals", "pii_scrub", "line_dedup", "corpus_sample",
-    "top_ngrams", "asof_join", "range_join_counts", "corpus_budget",
-    "decontaminate", "corpus_funnel", "snapshot_diff", "split_leakage",
-    "sequence_packing",
-    # grid/raster core family — driver-green once (r3); keep in-window for
-    # a second D row:
-    "segment_areas_grid", "label_bboxes", "em_fixture_thresholds",
-    "gaussian_infill", "flow_direction_grid", "flow_accum_grid", "hand_grid",
-    "flood_depth_grid", "mask_union_grid", "scaling_factor",
-    "event_sessions", "confusion_counts",
-    "threshold_water_map", "slope_rows", "grid_labels",
-]
-_REGISTRY_TAIL = [
-    # driver-green in r1+r2+r3 — rotated out as multiply-verified:
-    "reverse_cdf_threshold", "label_stats_nmad", "mosaic_weighted", "gaussian_scale", "zmf_membership", "simhash", "hamming_pairs",
-    "lang_id", "quality_score", "bpe_token_count", "winnow_fingerprint",
-    "ann_cosine_topk", "ann_topk_int8", "bbox_filename_filter",
-    "rgb_decomp", "log_diff", "cell_rollup", "fill_missing_tiles",
-    # trivial string fns / generic TPC-H demos, D-green twice (r1+r2):
-    "tile_name", "area_raster_name", "convert_scale",
-    "orders_by_segment", "pricing_summary",
-    # rows-only by design (seeded hyperplanes / k-means / codec stub /
-    # 64-bit xxhash64 simhash):
-    "ivf_topk", "embedding_near_dup", "media_features", "simhash64_pairs",
-    "pq_topk", "hll_distinct", "ivfpq_topk", "ivfpq_rerank",
-]
-# Retired as redundant (VERDICT r2): "token_count" duplicated
-# bpe_token_count's ws_tokens column; "fingerprint" overlapped
-# winnow_fingerprint. Both operators stay implemented and pytest-covered.
-_RETIRED = {"token_count", "fingerprint"}
+# The registry: one line per row, in driver order. A line (name, module)
+# names the builder ``q_<name>`` in ``asf_tools_spark.<module>``; its oracle
+# is the entry of that module's ``_oracle_sqls()``. A rows-only line carries
+# a third field, the reason it has no oracle. The family of a row is its
+# module.
+#
+# Window policy: the driver records the FIRST 50 rows in
+# CORRECTNESS_r{N}.json, so the order is part of the contract. The newest
+# rows go first, because they are the least externally verified and need the
+# driver row most. Rows that have been driver-green in several rounds, and
+# rows-only rows (which only get the weaker count check), rotate to the tail.
+# The full battery (scripts/check_correctness.py) remains the canonical
+# record for tail rows.
+REGISTRY = (
+    # round-5 additions
+    ("quadkey_rollup", "queries_geo"),
+    ("geohash_rollup", "queries_geo"),
+    ("track_stats", "queries_geo"),
+    ("od_matrix", "queries_geo"),
+    ("trip_segments", "queries_geo"),
+    ("colocation_pairs", "queries_geo"),
+    ("bearing_rose", "queries_geo"),
+    ("geofence_events", "queries_geo"),
+    ("emerging_hotspots", "queries_geo"),
+    ("domain_geo_spread", "queries_geo"),
+    ("polygon_raster", "queries_geo"),
+    ("geofence_dwell", "queries_geo"),
+    ("vector_tiles", "queries_geo"),
+    ("zonal_stats", "queries_geo"),
+    ("spatial_split", "queries_geo"),
+    ("track_similarity", "queries_geo"),
+    ("gi_star_spacetime", "queries_geo"),
+    ("fence_distance", "queries_geo"),
+    ("hilbert_rollup", "queries_geo"),
+    ("label_boundaries", "queries_grid"),
+    ("cell_top_sources", "queries_geo"),
+    ("tile_decay_rank", "queries_geo"),
+    ("ppr_scores", "queries_text"),
+    ("clustering_coeff", "queries_text"),
+    ("kcore_nodes", "queries_events"),
+    ("moving_avg_7d", "queries_events"),
+    ("pip_strtree", "queries"),
+    ("media_dedup", "queries_raster"),
+    ("event_pivot", "queries_events"),
+    ("wow_growth", "queries_events"),
+    ("embedding_cov", "queries_text"),
+    ("extract_text_parity", "queries"),
+    ("value_anomalies", "queries_events"),
+    ("tile_pyramid", "queries"),
+    ("aspect_grid", "queries_grid"),
+    ("morans_i", "queries"),
+    ("gi_star", "queries"),
+    ("distance_pairs", "queries"),
+    ("convex_hull", "queries"),
+    ("shortest_paths", "queries_text"),
+    ("scd2_history", "queries_text"),
+    ("rrf_fusion", "queries_text"),
+    ("hillshade_grid", "queries_grid"),
+    ("json_extract_stats", "queries_events"),
+    ("transition_probs", "queries_events"),
+    ("cohort_retention", "queries_events"),
+    ("lpa_communities", "queries_events"),
+    ("nb_classify", "queries_text"),
+    ("dq_checks", "queries"),
+    ("shipping_priority", "queries"),
+    ("region_supplier_volume", "queries"),
+    ("textrank_terms", "queries_text"),
+    ("gap_fill_days", "queries_events"),
+    ("zipf_slope", "queries_text"),
+    ("domain_quality", "queries"),
+    ("simplify_rings", "queries"),
+    ("containment_pairs", "queries_text"),
+    ("idw_grid", "queries"),
+    ("pip_page_counts", "queries"),
+    ("hotspot_clusters", "queries"),
+    ("editsim_pairs", "queries_text"),
+    ("polygon_stats", "queries"),
+    ("chi2_terms", "queries_text"),
+    ("pareto_frontier", "queries_text"),
+    ("trend_ols", "queries_text"),
+    ("interval_merge", "queries_text"),
+    ("triangle_counts", "queries_text"),
+    ("morph_open_grid", "queries_grid"),
+    ("hits_scores", "queries_text"),
+    ("chunk_passages", "queries_text"),
+    ("bfs_hops", "queries_text"),
+    ("char_entropy", "queries_text"),
+    ("event_funnel", "queries_text"),
+    ("setsim_join", "queries_text"),
+    ("phrase_search", "queries_text"),
+    ("sliding_windows", "queries_text"),
+    ("heavy_hitters", "queries_text"),
+    ("histogram_quantile", "queries_text"),
+    ("cube_stats", "queries_text"),
+    ("sorted_neighborhood", "queries_text"),
+    ("lm_perplexity", "queries_text"),
+    ("kmv_distinct", "queries_text"),
+    ("merge_upsert", "queries_text"),
+    ("weighted_sample", "queries_text"),
+    ("classifier_score", "queries_text"),
+    ("tfidf_terms", "queries_text"),
+    ("bm25_search", "queries_text"),
+    ("cooccur_pmi", "queries_text"),
+    ("pagerank_domains", "queries_text"),
+    # round-4 additions (driver-green once, r4)
+    ("bpe_tokens", "queries_text"),
+    ("substring_dedup", "queries_text"),
+    ("bloom_join", "queries"),
+    ("domain_stats", "queries"),
+    ("corpus_budget_bpe", "queries_text"),
+    # round-3 additions (battery-green in r3, no driver row yet)
+    ("repetition_signals", "queries_text"),
+    ("pii_scrub", "queries_text"),
+    ("line_dedup", "queries_text"),
+    ("corpus_sample", "queries_text"),
+    ("top_ngrams", "queries_text"),
+    ("asof_join", "queries_text"),
+    ("range_join_counts", "queries_text"),
+    ("corpus_budget", "queries_text"),
+    ("decontaminate", "queries_text"),
+    ("corpus_funnel", "queries_text"),
+    ("snapshot_diff", "queries_text"),
+    ("split_leakage", "queries_text"),
+    ("sequence_packing", "queries_text"),
+    # grid/raster core family (driver-green once, r3): in-window for a
+    # second driver row
+    ("segment_areas_grid", "queries_grid"),
+    ("label_bboxes", "queries_grid"),
+    ("em_fixture_thresholds", "queries_grid"),
+    ("gaussian_infill", "queries_grid"),
+    ("flow_direction_grid", "queries_grid"),
+    ("flow_accum_grid", "queries_grid"),
+    ("hand_grid", "queries_grid"),
+    ("flood_depth_grid", "queries_grid"),
+    ("mask_union_grid", "queries_grid"),
+    ("scaling_factor", "queries_grid"),
+    ("event_sessions", "queries_raster"),
+    ("confusion_counts", "queries_raster"),
+    ("threshold_water_map", "queries_grid"),
+    ("slope_rows", "queries_grid"),
+    ("grid_labels", "queries_grid"),
+    # older oracled rows that the rotation has not moved
+    ("cell_assign_counts", "queries"),
+    ("tile_assignments", "queries"),
+    ("knn_pages", "queries"),
+    ("tile_median", "queries"),
+    ("subtile_mean_std", "queries"),
+    ("top5_variance_tiles", "queries"),
+    ("candidate_intersection", "queries"),
+    ("remove_small_segments", "queries"),
+    ("dedup_exact", "queries"),
+    ("flood_depth_simple", "queries"),
+    ("minhash_signatures", "queries_text"),
+    ("lsh_pairs", "queries_text"),
+    ("lsh_recall_report", "queries_text"),
+    ("jaccard_pairs", "queries_text"),
+    ("dedup_clusters", "queries_text"),
+    ("epsg_vote", "queries_raster"),
+    ("histogram_smooth", "queries_raster"),
+    # driver-green in r1+r2+r3: rotated out as multiply-verified
+    ("reverse_cdf_threshold", "queries_raster"),
+    ("label_stats_nmad", "queries_raster"),
+    ("mosaic_weighted", "queries_raster"),
+    ("gaussian_scale", "queries"),
+    ("zmf_membership", "queries"),
+    ("simhash", "queries_text"),
+    ("hamming_pairs", "queries_text"),
+    ("lang_id", "queries_text"),
+    ("quality_score", "queries_text"),
+    ("bpe_token_count", "queries_text"),
+    ("winnow_fingerprint", "queries_text"),
+    ("ann_cosine_topk", "queries_text"),
+    ("ann_topk_int8", "queries_text"),
+    ("bbox_filename_filter", "queries_raster"),
+    ("rgb_decomp", "queries_raster"),
+    ("log_diff", "queries_raster"),
+    ("cell_rollup", "queries_raster"),
+    ("fill_missing_tiles", "queries_raster"),
+    # trivial string functions / generic TPC-H demos, driver-green twice
+    ("tile_name", "queries_raster"),
+    ("area_raster_name", "queries_raster"),
+    ("convert_scale", "queries"),
+    ("orders_by_segment", "queries_raster"),
+    ("pricing_summary", "queries"),
+    # rows-only rows, and three (embedding_near_dup, media_features,
+    # simhash64_pairs) that gained VALUES-replay oracles in r5
+    ("ivf_topk", "queries_text", "sample-trained centroids are driver state"),
+    ("embedding_near_dup", "queries_text"),
+    ("media_features", "queries_raster"),
+    ("simhash64_pairs", "queries_text"),
+    ("pq_topk", "queries_text", "sample-trained codebooks are driver state"),
+    ("hll_distinct", "queries_text",
+     "DuckDB approx_count_distinct is a different estimator"),
+    ("ivfpq_topk", "queries_text",
+     "driver-state centroids/codebooks, like pq_topk"),
+    ("ivfpq_rerank", "queries_text",
+     "same driver-state codebooks (two-stage refine)"),
+)
+
+# oracle_sql() concatenates the module oracle dicts in this order; its key
+# order is pinned with the registry's (tests/test_oracle_types.py)
+_ORACLE_MODULES = (
+    "queries", "queries_text", "queries_raster", "queries_grid",
+    "queries_events", "queries_geo",
+)
 
 
-def _reorder(out: dict) -> dict:
-    for k in _RETIRED:
-        out.pop(k, None)
-    head = {k: out[k] for k in _REGISTRY_HEAD if k in out}
-    tail = {k: out[k] for k in _REGISTRY_TAIL if k in out}
-    mid = {k: v for k, v in out.items() if k not in head and k not in tail}
-    return {**head, **mid, **tail}
+def _module(name: str):
+    return importlib.import_module(f"{__package__}.{name}")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from . import queries_events, queries_geo, queries_grid, queries_raster, queries_text
-
-    out = _base_queries()
-    out.update(queries_text.queries())
-    out.update(queries_raster.queries())
-    out.update(queries_grid.queries())
-    out.update(queries_events.queries())
-    out.update(queries_geo.queries())
-    return _reorder(out)
-
-
-def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "cell_assign_counts": q_cell_assign_counts,
-        "tile_assignments": q_tile_assignments,
-        "knn_pages": q_knn_pages,
-        "convert_scale": q_convert_scale,
-        "gaussian_scale": q_gaussian_scale,
-        "tile_median": q_tile_median,
-        "subtile_mean_std": q_subtile_mean_std,
-        "top5_variance_tiles": q_top5_variance_tiles,
-        "zmf_membership": q_zmf_membership,
-        "candidate_intersection": q_candidate_intersection,
-        "remove_small_segments": q_remove_small_segments,
-        "pricing_summary": q_pricing_summary,
-        "dq_checks": q_dq_checks,
-        "shipping_priority": q_shipping_priority,
-        "region_supplier_volume": q_region_supplier_volume,
-        "dedup_exact": q_dedup_exact,
-        "bloom_join": q_bloom_join,
-        "domain_stats": q_domain_stats,
-        "polygon_stats": q_polygon_stats,
-        "hotspot_clusters": q_hotspot_clusters,
-        "pip_page_counts": q_pip_page_counts,
-        "pip_strtree": q_pip_strtree,
-        "idw_grid": q_idw_grid,
-        "tile_pyramid": q_tile_pyramid,
-        "extract_text_parity": q_extract_text_parity,
-        "simplify_rings": q_simplify_rings,
-        "domain_quality": q_domain_quality,
-        "morans_i": q_morans_i,
-        "gi_star": q_gi_star,
-        "distance_pairs": q_distance_pairs,
-        "convex_hull": q_convex_hull,
-        "token_count": q_token_count,
-        "flood_depth_simple": q_flood_depth_simple,
-    }
+    return {name: getattr(_module(mod), f"q_{name}") for name, mod, *_ in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    from . import queries_events, queries_geo, queries_grid, queries_raster, queries_text
-
-    out = _oracle_sqls()
-    out.update(queries_text.oracle_sql())
-    out.update(queries_raster.oracle_sql())
-    out.update(queries_grid.oracle_sql())
-    out.update(queries_events.oracle_sql())
-    out.update(queries_geo.oracle_sql())
-    for k in _RETIRED:
-        out.pop(k, None)
-    return out
+    return {k: v for mod in _ORACLE_MODULES for k, v in _module(mod)._oracle_sqls().items()}

@@ -523,22 +523,3 @@ def _oracle_sqls() -> dict[str, str]:
           ON d.user_id = g.user_id AND d.day = g.day
     """
     return sqls
-
-
-def queries() -> dict:
-    return {
-        "json_extract_stats": q_json_extract_stats,
-        "transition_probs": q_transition_probs,
-        "cohort_retention": q_cohort_retention,
-        "gap_fill_days": q_gap_fill_days,
-        "lpa_communities": q_lpa_communities,
-        "value_anomalies": q_value_anomalies,
-        "event_pivot": q_event_pivot,
-        "wow_growth": q_wow_growth,
-        "moving_avg_7d": q_moving_avg_7d,
-        "kcore_nodes": q_kcore_nodes,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return _oracle_sqls()

@@ -505,10 +505,12 @@ def _daily_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate column it gets column-pruned by the very next select and
     # never evaluates (ADVICE r5). assert_true returns NULL (or throws),
     # so when(assert_true(cond).isNull(), hi) IS hi — but the assertion
-    # now sits inside the expression the explode consumes
+    # now sits inside the expression the explode consumes. An empty events
+    # table leaves lo/hi NULL: the coalesce passes that case through to an
+    # empty calendar instead of failing the assertion on a NULL condition
     guarded_hi = F.when(
         F.assert_true(
-            F.datediff("hi", "lo") < 10000,
+            F.coalesce(F.datediff("hi", "lo") < 10000, F.lit(True)),
             F.lit("daily cube: event span exceeds the oracle's 10000-day calendar bound"),
         ).isNull(),
         F.col("hi"),
@@ -1504,33 +1506,7 @@ def _domain_spread_oracle() -> str:
     """
 
 
-def queries() -> dict:
-    return {
-        "quadkey_rollup": q_quadkey_rollup,
-        "geohash_rollup": q_geohash_rollup,
-        "track_stats": q_track_stats,
-        "od_matrix": q_od_matrix,
-        "trip_segments": q_trip_segments,
-        "colocation_pairs": q_colocation_pairs,
-        "bearing_rose": q_bearing_rose,
-        "geofence_events": q_geofence_events,
-        "emerging_hotspots": q_emerging_hotspots,
-        "gi_star_spacetime": q_gi_star_spacetime,
-        "polygon_raster": q_polygon_raster,
-        "geofence_dwell": q_geofence_dwell,
-        "vector_tiles": q_vector_tiles,
-        "zonal_stats": q_zonal_stats,
-        "spatial_split": q_spatial_split,
-        "track_similarity": q_track_similarity,
-        "domain_geo_spread": q_domain_geo_spread,
-        "fence_distance": q_fence_distance,
-        "hilbert_rollup": q_hilbert_rollup,
-        "cell_top_sources": q_cell_top_sources,
-        "tile_decay_rank": q_tile_decay_rank,
-    }
-
-
-def oracle_sql() -> dict:
+def _oracle_sqls() -> dict[str, str]:
     out = {
         "quadkey_rollup": _quadkey_oracle(),
         "geohash_rollup": _geohash_oracle(),

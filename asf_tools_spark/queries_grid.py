@@ -3,7 +3,7 @@
 Round-1 verdict: W3 labeling, W1 slope, A11 segment areas, P4/P5 threshold
 classify and A12 EM were pytest-verified only — these are the operators the
 reference tests hardest (ref tests/hydrosar/test_water_map.py:41-66 golden
-raster; test_threshold.py:6-10). This module gives each a queries() entry
+raster; test_threshold.py:6-10). This module gives each a registry row
 whose result the driver compares row-for-row against an ANSI-SQL oracle:
 
 - the dense synthetic grid is emitted by one shared emitter in BOTH dialects
@@ -685,29 +685,3 @@ def q_morph_open_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     opened = binary_open(wg, "water", _H, _W).withColumnRenamed("water", "opened")
     closed = binary_close(wg, "water", _H, _W).withColumnRenamed("water", "closed")
     return wg.join(opened, ["row", "col"]).join(closed, ["row", "col"])
-
-
-def queries() -> dict:
-    return {
-        "morph_open_grid": q_morph_open_grid,
-        "threshold_water_map": q_threshold_water_map,
-        "slope_rows": q_slope_rows,
-        "hillshade_grid": q_hillshade_grid,
-        "aspect_grid": q_aspect_grid,
-        "grid_labels": q_grid_labels,
-        "label_boundaries": q_label_boundaries,
-        "segment_areas_grid": q_segment_areas_grid,
-        "label_bboxes": q_label_bboxes,
-        "em_fixture_thresholds": q_em_fixture_thresholds,
-        "gaussian_infill": q_gaussian_infill,
-        "flow_direction_grid": q_flow_direction_grid,
-        "flow_accum_grid": q_flow_accum_grid,
-        "hand_grid": q_hand_grid,
-        "flood_depth_grid": q_flood_depth_grid,
-        "mask_union_grid": q_mask_union_grid,
-        "scaling_factor": q_scaling_factor,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return _oracle_sqls()

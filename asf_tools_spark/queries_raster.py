@@ -685,31 +685,3 @@ def _oracle_sqls() -> dict[str, str]:
         WHERE lat_deg BETWEEN -30 AND 30 AND lon_deg BETWEEN -90 AND 90
     """
     return sqls
-
-
-def queries() -> dict:
-    return {
-        "tile_name": q_tile_name,
-        "area_raster_name": q_area_raster_name,
-        "bbox_filename_filter": q_bbox_filename_filter,
-        "rgb_decomp": q_rgb_decomp,
-        "log_diff": q_log_diff,
-        "orders_by_segment": q_orders_by_segment,
-        "event_sessions": q_event_sessions,
-        "cell_rollup": q_cell_rollup,
-        "epsg_vote": q_epsg_vote,
-        "histogram_smooth": q_histogram_smooth,
-        "reverse_cdf_threshold": q_reverse_cdf_threshold,
-        "confusion_counts": q_confusion_counts,
-        "label_stats_nmad": q_label_stats_nmad,
-        "mosaic_weighted": q_mosaic_weighted,
-        "fill_missing_tiles": q_fill_missing_tiles,
-        # oracled since r5 by pure-Python VALUES replays (DuckDB 1.0 sha256
-        # is VARCHAR-only, so the digests are replayed with hashlib instead)
-        "media_features": q_media_features,
-        "media_dedup": q_media_dedup,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return _oracle_sqls()

@@ -675,11 +675,6 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.winnow_fingerprints(d, "doc_id", k=8, window=4)
 
 
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register(spark, sf_dir, "documents")
-    return text.fingerprint(spark.table("documents"), "doc_id")
-
-
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _register(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings")
@@ -1207,16 +1202,6 @@ def _oracle_sqls() -> dict[str, str]:
           FROM grams
         )
         SELECT DISTINCT doc_id, wmin AS fp FROM wins WHERE pos <= ng - 4 + 1
-    """
-    sqls["fingerprint"] = f"""
-        SELECT doc_id, md5(nt) AS md5_fp,
-               MIN({_hash8("w", "fp-")}) AS min_shingle_fp
-        FROM (
-          SELECT doc_id, {_norm_sql("text")} AS nt,
-                 unnest(string_split({_norm_sql("text")}, ' ')) AS w
-          FROM documents
-        ) t
-        GROUP BY doc_id, md5(nt)
     """
     sqls["ann_topk_int8"] = """
         WITH base AS (
@@ -3656,86 +3641,3 @@ def q_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("intercept", 6).alias("intercept"),
         F.round("r", 6).alias("r"),
     )
-
-
-def queries() -> dict:
-    return {
-        "zipf_slope": q_zipf_slope,
-        "containment_pairs": q_containment_pairs,
-        "editsim_pairs": q_editsim_pairs,
-        "chi2_terms": q_chi2_terms,
-        "pareto_frontier": q_pareto_frontier,
-        "trend_ols": q_trend_ols,
-        "interval_merge": q_interval_merge,
-        "triangle_counts": q_triangle_counts,
-        "clustering_coeff": q_clustering_coeff,
-        "ppr_scores": q_ppr_scores,
-        "ivfpq_rerank": q_ivfpq_rerank,  # rows-only (driver-state codebooks)
-        "hits_scores": q_hits_scores,
-        "chunk_passages": q_chunk_passages,
-        "bfs_hops": q_bfs_hops,
-        "shortest_paths": q_shortest_paths,
-        "scd2_history": q_scd2_history,
-        "rrf_fusion": q_rrf_fusion,
-        "nb_classify": q_nb_classify,
-        "textrank_terms": q_textrank_terms,
-        "char_entropy": q_char_entropy,
-        "event_funnel": q_event_funnel,
-        "setsim_join": q_setsim_join,
-        "phrase_search": q_phrase_search,
-        "sliding_windows": q_sliding_windows,
-        "heavy_hitters": q_heavy_hitters,
-        "histogram_quantile": q_histogram_quantile,
-        "cube_stats": q_cube_stats,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "lm_perplexity": q_lm_perplexity,
-        "kmv_distinct": q_kmv_distinct,
-        "merge_upsert": q_merge_upsert,
-        "weighted_sample": q_weighted_sample,
-        "minhash_signatures": q_minhash_signatures,
-        "lsh_pairs": q_lsh_pairs,
-        "lsh_recall_report": q_lsh_recall_report,
-        "jaccard_pairs": q_jaccard_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "simhash": q_simhash,
-        "hamming_pairs": q_hamming_pairs,
-        "lang_id": q_lang_id,
-        "quality_score": q_quality_score,
-        "bpe_token_count": q_bpe_token_count,
-        "winnow_fingerprint": q_winnow_fingerprint,
-        "fingerprint": q_fingerprint,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "embedding_cov": q_embedding_cov,
-        "ann_topk_int8": q_ann_topk_int8,
-        "ivf_topk": q_ivf_topk,  # rows-only (centroids are driver values)
-        "embedding_near_dup": q_embedding_near_dup,  # VALUES oracle: numpy replay
-        "simhash64_pairs": q_simhash64_pairs,  # VALUES oracle: pure-python replay
-        "repetition_signals": q_repetition_signals,
-        "pii_scrub": q_pii_scrub,
-        "line_dedup": q_line_dedup,
-        "corpus_sample": q_corpus_sample,
-        "top_ngrams": q_top_ngrams,
-        "pq_topk": q_pq_topk,  # rows-only (sample-trained codebooks are driver state)
-        "asof_join": q_asof_join,
-        "range_join_counts": q_range_join_counts,
-        "hll_distinct": q_hll_distinct,  # rows-only (estimator differs from DuckDB)
-        "corpus_budget": q_corpus_budget,
-        "corpus_budget_bpe": q_corpus_budget_bpe,
-        "substring_dedup": q_substring_dedup,
-        "bpe_tokens": q_bpe_tokens,
-        "corpus_funnel": q_corpus_funnel,
-        "snapshot_diff": q_snapshot_diff,
-        "split_leakage": q_split_leakage,
-        "sequence_packing": q_sequence_packing,
-        "decontaminate": q_decontaminate,
-        "ivfpq_topk": q_ivfpq_topk,  # rows-only (driver-state centroids/codebooks)
-        "classifier_score": q_classifier_score,
-        "tfidf_terms": q_tfidf_terms,
-        "bm25_search": q_bm25_search,
-        "cooccur_pmi": q_cooccur_pmi,
-        "pagerank_domains": q_pagerank_domains,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return _oracle_sqls()

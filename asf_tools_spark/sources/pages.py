@@ -30,14 +30,6 @@ _WORDS = [
 ]
 
 
-def _h8(key: Column, salt: str) -> Column:
-    """First 8 hex digits of md5(salt || key) as BIGINT — the Column twin of
-    oracle.hash8_sql, same values. Used ONLY on oracle-checked paths: JVM
-    md5 throughput is serialized (~7M hashes/s regardless of cores), so the
-    bulk generator uses :func:`_h8xx` instead."""
-    return F.conv(F.substring(F.md5(F.concat(F.lit(salt), key.cast("string"))), 1, 8), 16, 10).cast("long")
-
-
 def _h8xx(key: Column, salt: str) -> Column:
     """xxhash64-based uniform BIGINT in [0, 2^32) — lock-free and ~10x the
     md5 throughput; same distributional role, different values (fine for the

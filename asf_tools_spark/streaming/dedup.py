@@ -39,14 +39,3 @@ def stream_dedup(
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["fp"])
     )
-
-
-def start_dedup_sink(deduped: DataFrame, out_dir: str, checkpoint_dir: str):
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

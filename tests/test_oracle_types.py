@@ -8,10 +8,15 @@ fails on any HUGEINT/DECIMAL output column — catching the trap at pytest
 speed instead of at driver-gate time.
 """
 
+import hashlib
+import importlib
+import json
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from asf_tools_spark.queries import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -70,6 +75,31 @@ def test_every_query_has_oracle_or_documented_rows_only(con):
     assert qs - os_ == rows_only_by_design, (
         f"undocumented rows-only queries: {(qs - os_) - rows_only_by_design}"
     )
+
+
+# sha256 of json.dumps(list(keys)) for queries() and oracle_sql(): the
+# driver records the first 50 rows, so the key order is part of the contract
+QUERY_KEYS_SHA256 = "83a30c04eb1fa661fd490b64ff7f0c50cb96ef12c26e625b9c42b5f5646681ec"
+ORACLE_KEYS_SHA256 = "6b35d115fde095aad27bc8a87349b6a91d2bea07916e98872990a653a8751491"
+
+
+def _keys_sha256(d: dict) -> str:
+    return hashlib.sha256(json.dumps(list(d)).encode()).hexdigest()
+
+
+def test_registry_keys_and_order_are_pinned():
+    qs, os_ = entry.queries(), entry.oracle_sql()
+    assert (len(qs), len(os_)) == (170, 165)
+    assert _keys_sha256(qs) == QUERY_KEYS_SHA256
+    assert _keys_sha256(os_) == ORACLE_KEYS_SHA256
+
+
+def test_registry_table_rows_only_reasons_and_builders():
+    rows_only = {name for name, _mod, *reason in REGISTRY if reason}
+    assert rows_only == set(entry.queries()) - set(entry.oracle_sql())
+    for name, mod, *_ in REGISTRY:
+        fn = getattr(importlib.import_module(f"asf_tools_spark.{mod}"), f"q_{name}")
+        assert (fn.__module__, fn.__name__) == (f"asf_tools_spark.{mod}", f"q_{name}")
 
 
 def test_testdata_word_count_under_oracle_cap():

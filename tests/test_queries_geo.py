@@ -7,10 +7,12 @@ import hashlib
 import math
 
 import pyarrow.parquet as pq
+import pytest
 
 from asf_tools_spark import oracle as O
 from asf_tools_spark.queries_geo import (
-    _MK_RES, q_domain_geo_spread, q_emerging_hotspots,
+    _MK_RES, _emerging_oracle, _gi_spacetime_oracle, q_domain_geo_spread,
+    q_emerging_hotspots, q_gi_star_spacetime,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -81,3 +83,28 @@ def test_domain_geo_spread_invariants(spark):
         if r.n_cells == 1:
             assert r.entropy == 0.0 and r.top_cell_share == 1.0
         assert 0.0 < r.top_cell_share <= 1.0
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_daily_cube_rows_on_empty_events(spark, tmp_path, aqe):
+    """Zero events leave the calendar bounds NULL: both daily-cube rows
+    (and their oracles) must return no rows instead of tripping the
+    calendar-span assertion. Adaptive execution may cancel the calendar
+    broadcast once the occupied-cell side comes up empty, so the check
+    also runs with it off, where the broadcast is always built."""
+    import duckdb
+
+    schema = pq.read_schema(f"{SF_DIR}/events.parquet")
+    pq.write_table(schema.empty_table(), tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        for q, oracle in ((q_emerging_hotspots, _emerging_oracle),
+                          (q_gi_star_spacetime, _gi_spacetime_oracle)):
+            assert q(spark, str(tmp_path)).collect() == []
+            assert con.execute(oracle()).fetchall() == []
+    finally:
+        spark.conf.set(key, prev)

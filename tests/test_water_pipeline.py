@@ -93,6 +93,27 @@ def test_final_water_map_matches(mirror_result, spark_result):
     assert np.array_equal(got, exp)
 
 
+def test_failed_tile_selection_joins_stats_thread(spark, scene, monkeypatch):
+    """An error in tile selection propagates, and the hand-stats helper
+    thread that overlaps it is joined rather than left running."""
+    import threading
+
+    from asf_tools_spark.operators import tiling
+
+    def boom(*_a, **_kw):
+        raise RuntimeError("tile selection failed")
+
+    monkeypatch.setattr(tiling, "select_backscatter_tiles", boom)
+    vv, vh, hand = scene
+    grids = [long_grid_df(spark, a, TILE, pad_value=p)
+             for a, p in ((vv, 0.0), (vh, 0.0), (hand, np.nan))]
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="tile selection failed"):
+        make_water_map_grid(*grids, SHAPE, tile_shape=TILE, pixel_size=30.0)
+    leaked = [t.name for t in threading.enumerate()
+              if t not in before and t.name.startswith("ThreadPoolExecutor")]
+    assert leaked == []
+
 def test_distributed_labeling_matches_core(spark):
     """Cross-tile component merge vs single-array labeling on random flags."""
     rng = np.random.default_rng(7)
