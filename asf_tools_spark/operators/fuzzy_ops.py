@@ -12,13 +12,43 @@ from pyspark.sql.window import Window
 from ..functions.membership import zmf_col
 
 
+def _zmf(x: float, a: float, b: float) -> float:
+    """``zmf_col`` on one Python float, with its exact operation order (so
+    a value computed here equals the Catalyst expression bit for bit)."""
+    if b == a:
+        return 1.0 if x <= a else 0.0
+    if x <= a:
+        return 1.0
+    if x <= (a + b) / 2.0:
+        t = (x - a) / (b - a)
+        return 1.0 - (t * 2.0) * t
+    if x < b:
+        u = (x - b) / (b - a)
+        return (u * 2.0) * u
+    return 0.0
+
+
+def _double_array(values: list[float]) -> Column:
+    """A literal array<double> built from ONE SQL expression — a single
+    py4j call however long the list (``F.lit(list)`` costs one per element).
+    ``repr`` round-trips every finite double exactly."""
+    return F.expr("array(" + ", ".join(f"{v!r}D" for v in values) + ")")
+
+
 def interp_membership_col(
     x: Column, start: float, stop: float, step: float, a: float, b: float
 ) -> Column:
-    """np.interp(x, arange(start, stop, step), zmf(grid, a, b)) as a pure
-    Catalyst expression (ref water_map.py:110-114 ``min_max_membership``:
+    """np.interp(x, arange(start, stop, step), zmf(grid, a, b)) as a
+    Catalyst table lookup (ref water_map.py:110-114 ``min_max_membership``:
     the reference interpolates zmf sampled on a quantized grid rather than
     evaluating the closed form — we reproduce the sampled-grid values).
+
+    zmf is evaluated once per grid point ``g_k = start + k*step`` on the
+    driver (``_zmf``, same float operations as ``zmf_col``) into two
+    literal arrays: ``zmf(g_k)`` and ``zmf(g_k + step)`` — the latter, not
+    ``zmf(g_{k+1})``, because the two can differ in the last bit. Each
+    value then costs one bucket index and two array reads. With fewer
+    than two grid points the closed form is used.
 
     ``start/stop/step`` come from global min/max aggregates (tiny scalars
     collected by the driver, like the reference's array.min()/max()).
@@ -26,22 +56,26 @@ def interp_membership_col(
     npts = len(np.arange(start, stop, step))
     if npts < 2:
         return zmf_col(x, a, b)
+    start, step, a, b = float(start), float(step), float(a), float(b)
     last = start + (npts - 1) * step
+    grid = [start + k * step for k in range(npts - 1)]
+    act = _double_array([_zmf(g, a, b) for g in grid])
+    nxt = _double_array([_zmf(g + step, a, b) for g in grid])
     i = F.least(
         F.greatest(F.floor((x - F.lit(start)) / F.lit(step)), F.lit(0)), F.lit(npts - 2)
-    ).cast("double")
-    g_i = F.lit(start) + i * F.lit(step)
-    act_i = zmf_col(g_i, a, b)
-    act_j = zmf_col(g_i + F.lit(step), a, b)
+    )
+    g_i = F.lit(start) + i.cast("double") * F.lit(step)
+    k = (i + 1).cast("int")
+    act_i = F.element_at(act, k)
     t = (x - g_i) / F.lit(step)
-    interp = act_i + t * (act_j - act_i)
+    interp = act_i + t * (F.element_at(nxt, k) - act_i)
     # NaN guard first: Spark orders NaN greater than everything (x >= last
     # would fire), numpy comparisons with NaN are all False and the pixel is
     # dropped downstream — NULL here reproduces the numpy outcome
     return (
         F.when(F.isnan(x), F.lit(None).cast("double"))
-        .when(x <= F.lit(start), zmf_col(F.lit(float(start)), a, b))
-        .when(x >= F.lit(last), zmf_col(F.lit(float(last)), a, b))
+        .when(x <= F.lit(start), F.lit(_zmf(start, a, b)))
+        .when(x >= F.lit(last), F.lit(_zmf(last, a, b)))
         .otherwise(interp)
     )
 

@@ -138,7 +138,12 @@ def pip_refine(
     """The exact crossing-number refine over (poly_id, key, lat, lon)
     candidates — shared by the cover-cell prune (pip_candidates) and the
     STRtree probe (operators.strtree.strtree_candidates): broadcast edge
-    join + upward-ray parity, all whole-stage codegen."""
+    join + upward-ray parity, all whole-stage codegen.
+
+    Precondition: every candidate's ``poly_id`` has at least one row in
+    ``edges``. The candidate set is recovered from the edge join's groups,
+    so a candidate whose polygon has no edges is dropped from the output
+    instead of coming out ``inside = false``."""
     crossing = (
         (F.col("y1") > F.col(lat)) != (F.col("y2") > F.col(lat))
     ) & (

@@ -5,7 +5,7 @@ Spark mapping of skimage.measure.label(connectivity=2) / ndimage.label
 operator): no Catalyst primitive exists, so:
 
 1. per-tile labeling in a grouped-map pandas UDF (core.labeling,
-   vectorized min-propagation) — global provisional label =
+   min sweeps + pointer jumping) — global provisional label =
    ``tile_id * (tile_pixels + 1) + local_label``;
 2. tile-boundary pixels (a tiny fraction) self-join against the four
    forward neighbor offsets that cross tile edges -> equivalence edges;
@@ -53,11 +53,13 @@ def label_connected(
 
     Small-grid guard (the repo's near_dup_clusters/k_core discipline):
     when the flagged set AND its bounding box fit under ``local_max_px``,
-    the pixels are collected once and labeled with the same vectorized
-    core.labeling kernel on the driver — the distributed path costs three
-    serial jobs (pandas tile labeling + eager checkpoint + boundary-edge
-    collect), pure launch overhead below cluster scale (it was ~11 s of
-    the 25 s water-map pipeline at 300k px). Label ids are arbitrary but
+    the pixels are collected by one job (bounded at ``local_max_px + 1``
+    rows) and labeled with the same core.labeling kernel on the driver —
+    the distributed path costs three serial jobs (pandas tile labeling +
+    eager checkpoint + boundary-edge collect), pure launch overhead below
+    cluster scale (it was ~11 s of the 25 s water-map pipeline at 300k
+    px). More rows than ``local_max_px`` or a sparse bounding box fall
+    through to the distributed path. Label ids are arbitrary but
     consistent either way (module docstring); every oracle-checked
     consumer canonicalizes to min-pixel-id components. Set
     ``local_max_px=0`` to force the distributed path (tests do)."""
@@ -65,42 +67,31 @@ def label_connected(
     k = tr * tc + 1
 
     if local_max_px:
-        flagged = grid.where(F.col(flag_col)).select("row", "col").persist()
-        n_px = flagged.count()
-        if n_px == 0:
-            flagged.unpersist()
+        # one bounded collect: more than local_max_px rows means "too big"
+        pdf = (grid.where(F.col(flag_col)).select("row", "col")
+               .limit(local_max_px + 1).toPandas())
+        if pdf.empty:
             return grid.sparkSession.createDataFrame([], _LABEL_SCHEMA)
-        if n_px <= local_max_px:
-            pdf = flagged.toPandas()
-            flagged.unpersist()
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            r0, c0 = int(rows.min()), int(cols.min())
-            h, w = int(rows.max()) - r0 + 1, int(cols.max()) - c0 + 1
-            if h * w <= max(local_max_px * 4, 8 * n_px):
-                dense = np.zeros((h, w), dtype=bool)
-                dense[rows - r0, cols - c0] = True
-                lab = label_components(dense)
-                out = pd.DataFrame({
-                    "row": rows.astype(np.int32),
-                    "col": cols.astype(np.int32),
-                    "label": lab[rows - r0, cols - c0].astype(np.int64),
-                })
-                # checkpoint: as a bare LocalRelation the labeled pixels
-                # would be re-serialized into every consuming branch of
-                # the plan (segment areas + relabel join + boundaries)
-                return grid.sparkSession.createDataFrame(
-                    out, _LABEL_SCHEMA
-                ).localCheckpoint(eager=True)
-            # sparse bbox: fall through to the distributed path
-            grid = flagged.withColumn(flag_col, F.lit(True))
-            _guard_cache = flagged
-        else:
-            # too big to collect; reuse the materialized flagged set
-            grid = flagged.withColumn(flag_col, F.lit(True))
-            _guard_cache = flagged
-    else:
-        _guard_cache = None
+        rows = pdf["row"].to_numpy()
+        cols = pdf["col"].to_numpy()
+        r0, c0 = int(rows.min()), int(cols.min())
+        h, w = int(rows.max()) - r0 + 1, int(cols.max()) - c0 + 1
+        # too many pixels, or a sparse bounding box: distributed path
+        if len(pdf) <= local_max_px and h * w <= max(local_max_px * 4, 8 * len(pdf)):
+            dense = np.zeros((h, w), dtype=bool)
+            dense[rows - r0, cols - c0] = True
+            lab = label_components(dense)
+            out = pd.DataFrame({
+                "row": rows.astype(np.int32),
+                "col": cols.astype(np.int32),
+                "label": lab[rows - r0, cols - c0].astype(np.int64),
+            })
+            # checkpoint: as a bare LocalRelation the labeled pixels
+            # would be re-serialized into every consuming branch of
+            # the plan (segment areas + relabel join + boundaries)
+            return grid.sparkSession.createDataFrame(
+                out, _LABEL_SCHEMA
+            ).localCheckpoint(eager=True)
 
     g = grid.withColumn(
         "_lt",
@@ -131,8 +122,6 @@ def label_connected(
     # branches race and re-execute the (expensive) upstream chain up to 5x.
     # The checkpoint also truncates lineage before the iterative merge.
     labeled = labeled.localCheckpoint(eager=True)
-    if _guard_cache is not None:
-        _guard_cache.unpersist()  # checkpoint holds the data now
 
     # boundary pixels: on any tile edge (pmod: Java % is negative for
     # negative coordinates and would miss edges of negative-index tiles)

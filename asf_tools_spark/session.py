@@ -9,8 +9,12 @@ Settings chosen for the 100 TB design point and exercised locally:
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the asf_tools_spark package
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(
@@ -71,6 +75,9 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers import this package to run its UDFs; without this
+        # they find it only when the process cwd is the repository root
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

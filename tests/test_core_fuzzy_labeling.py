@@ -1,6 +1,9 @@
 """Fuzzy membership + connected-component cores."""
 
+import math
+
 import numpy as np
+import pytest
 
 from asf_tools_spark.core.fuzzy import (
     calculate_slope_magnitude,
@@ -106,3 +109,65 @@ def test_union_find_deterministic():
     assert uf.find(9) == 3
     assert uf.find(5) == 3
     assert uf.find(2) == 1
+
+
+def _zmf_ref(x, a, b):
+    """zmf_col's formula on one Python float."""
+    if a == b:
+        return 1.0 if x <= a else 0.0
+    if x <= a:
+        return 1.0
+    if x <= (a + b) / 2.0:
+        t = (x - a) / (b - a)
+        return 1.0 - 2.0 * t * t
+    if x < b:
+        u = (x - b) / (b - a)
+        return 2.0 * u * u
+    return 0.0
+
+
+def _membership_ref(x, start, stop, step, a, b):
+    """np.interp over zmf sampled at start + k*step, clamped at the grid
+    ends; NaN maps to None (NULL). Fewer than two samples: closed form."""
+    npts = len(np.arange(start, stop, step))
+    if npts < 2:
+        return _zmf_ref(x, a, b)
+    if math.isnan(x):
+        return None
+    last = start + (npts - 1) * step
+    if x <= start:
+        return _zmf_ref(start, a, b)
+    if x >= last:
+        return _zmf_ref(last, a, b)
+    i = min(max(math.floor((x - start) / step), 0), npts - 2)
+    g = start + i * step
+    lo, hi = _zmf_ref(g, a, b), _zmf_ref(g + step, a, b)
+    return lo + (x - g) / step * (hi - lo)
+
+
+@pytest.mark.parametrize("start,stop,step,a,b", [
+    (0.3, 2.7, 0.005, 0.8, 2.1),     # gaussian-style grid
+    (-3.2, 11.9, 0.1, 0.0, 15.0),    # slope-style grid, b beyond the grid
+    (0.0, 40.3, 0.1, 2.2, 17.6),     # hand-style grid
+    (1.0, 6.0, 0.1, 2.5, 2.5),       # a == b
+    (1.0, 1.004, 0.005, 0.5, 2.0),   # one sample: closed form
+    (2.0, 2.0, 0.1, 1.0, 3.0),       # no samples: closed form
+])
+def test_interp_membership_col_exact(spark, start, stop, step, a, b):
+    """The Spark table lookup equals the sampled-grid formula bit for bit
+    (==, not isclose), including NaN and both clamped ends."""
+    from pyspark.sql import functions as F
+
+    from asf_tools_spark.operators.fuzzy_ops import interp_membership_col
+
+    rng = np.random.default_rng(17)
+    npts = len(np.arange(start, stop, step))
+    last = start + (npts - 1) * step
+    xs = [float(v) for v in rng.uniform(start - 1.0, stop + 1.0, 400)]
+    xs += [math.nan, start, stop, last, start - 1.0, stop + 1.0, a, b, (a + b) / 2.0]
+    xs += [start + k * step for k in range(0, max(npts, 1), max(npts // 7, 1))]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    got = [r.m for r in df.select(
+        "i", interp_membership_col(F.col("x"), start, stop, step, a, b).alias("m")
+    ).orderBy("i").collect()]
+    assert got == [_membership_ref(x, start, stop, step, a, b) for x in xs]

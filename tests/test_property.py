@@ -1,6 +1,9 @@
 """Property-based invariants (hypothesis) for the pure core."""
 
+from collections import deque
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -73,6 +76,62 @@ def test_label_components_random_grids(seed):
         b = lab[max(0, dr): h + min(0, dr) or h, max(0, dc): w + min(0, dc) or w]
         both = (a > 0) & (b > 0)
         assert (a[both] == b[both]).all()
+
+
+def _bfs_labels(flag: np.ndarray) -> np.ndarray:
+    """Reference labeling: breadth-first flood fill, 8-connectivity,
+    components numbered in scan order of their first pixel."""
+    h, w = flag.shape
+    out = np.zeros((h, w), dtype=np.int64)
+    n = 0
+    for r in range(h):
+        for c in range(w):
+            if not flag[r, c] or out[r, c]:
+                continue
+            n += 1
+            out[r, c] = n
+            queue = deque([(r, c)])
+            while queue:
+                y, x = queue.popleft()
+                for yy in range(max(y - 1, 0), min(y + 2, h)):
+                    for xx in range(max(x - 1, 0), min(x + 2, w)):
+                        if flag[yy, xx] and not out[yy, xx]:
+                            out[yy, xx] = n
+                            queue.append((yy, xx))
+    return out
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=40),
+    st.integers(min_value=1, max_value=40),
+    st.floats(min_value=0.0, max_value=1.0),
+    st.integers(min_value=0, max_value=2**32),
+)
+def test_label_components_equals_bfs_reference(h, w, density, seed):
+    flag = np.random.default_rng(seed).random((h, w)) < density
+    assert np.array_equal(label_components(flag), _bfs_labels(flag))
+
+
+def _serpentine(n: int) -> np.ndarray:
+    flag = np.zeros((n, n), dtype=bool)
+    flag[::2, :] = True
+    flag[1::4, -1] = True
+    flag[3::4, 0] = True
+    return flag
+
+
+@pytest.mark.parametrize("flag", [
+    _serpentine(31),
+    (np.indices((17, 23)).sum(axis=0) % 2 == 0),   # checkerboard: one component
+    (np.indices((17, 23)).sum(axis=0) % 3 == 0),   # diagonal stripes
+    np.random.default_rng(1).random((1, 50)) < 0.5,
+    np.random.default_rng(2).random((50, 1)) < 0.5,
+    np.zeros((9, 13), dtype=bool),
+    np.ones((9, 13), dtype=bool),
+], ids=["serpentine", "checkerboard", "stripes", "1xN", "Nx1", "all_false", "all_true"])
+def test_label_components_structured_grids(flag):
+    assert np.array_equal(label_components(flag), _bfs_labels(flag))
 
 
 @settings(max_examples=25, deadline=None)

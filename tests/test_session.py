@@ -1,0 +1,40 @@
+"""SparkSession factory: the package must reach Python workers from any
+working directory."""
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+
+_SCRIPT = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+import pandas as pd
+from asf_tools_spark.session import get_spark
+from asf_tools_spark.operators.labeling import label_connected
+
+spark = get_spark("cwd-independence", master="local[2]", shuffle_partitions=2)
+base = spark.createDataFrame(pd.DataFrame({{
+    "row": pd.Series([0, 0, 1, 6], dtype="int32"),
+    "col": pd.Series([0, 1, 2, 6], dtype="int32"),
+    "flag": True,
+}}))
+out = label_connected(base, "flag", (4, 4), local_max_px=0)
+print("components", out.select("label").distinct().count())
+spark.stop()
+"""
+
+
+def test_udf_runs_outside_repo_root(tmp_path):
+    """The pandas-UDF labeling path imports asf_tools_spark in the Python
+    workers; with PYTHONPATH unset and the cwd elsewhere, only the
+    session's executor environment tells them where the package is."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", _SCRIPT], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "components 2" in r.stdout

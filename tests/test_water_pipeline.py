@@ -252,3 +252,41 @@ def test_labeling_local_guard_matches_distributed(spark):
     pd_ = {(r.row, r.col): r.label for r in dist.collect()}
     assert pl.keys() == pd_.keys()
     assert canon(pl) == canon(pd_)
+
+
+def _canon_partition(df) -> list:
+    """Component partition of a (row, col, label) frame, label ids dropped."""
+    groups = {}
+    for r in df.collect():
+        groups.setdefault(r.label, set()).add((r.row, r.col))
+    return sorted(tuple(sorted(s)) for s in groups.values())
+
+
+def _flag_frame(spark, pts):
+    return spark.createDataFrame(pd.DataFrame({
+        "row": pts[:, 0].astype("int32"), "col": pts[:, 1].astype("int32"), "flag": True
+    }))
+
+
+def test_labeling_local_guard_falls_through_over_limit(spark):
+    """More flagged pixels than local_max_px: the bounded collect sees
+    local_max_px + 1 rows and the distributed path labels the whole set."""
+    flag = np.random.default_rng(21).random((40, 40)) < 0.35
+    base = _flag_frame(spark, np.argwhere(flag))
+    over = label_connected(base, "flag", (8, 8), local_max_px=int(flag.sum()) // 3)
+    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
+    assert over.count() == int(flag.sum())
+    assert _canon_partition(over) == _canon_partition(dist)
+
+
+def test_labeling_local_guard_falls_through_on_sparse_bbox(spark):
+    """Two clusters far apart: few pixels, but a bounding box far larger
+    than the guard allows, so the distributed path runs."""
+    rng = np.random.default_rng(22)
+    blob = np.argwhere(rng.random((12, 12)) < 0.5)
+    pts = np.concatenate([blob, blob + 3000])
+    base = _flag_frame(spark, pts)
+    sparse = label_connected(base, "flag", (8, 8), local_max_px=1000)
+    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
+    assert sparse.count() == len(pts)
+    assert _canon_partition(sparse) == _canon_partition(dist)
