@@ -35,7 +35,9 @@ def zmf(x: np.ndarray, a: float, b: float) -> np.ndarray:
     # RuntimeWarning so real warnings stay visible in the test suite
     with np.errstate(over="ignore"):
         out = np.where((a <= x) & (x <= mid), 1.0 - 2.0 * t * t, out)
-        out = np.where((mid <= x) & (x <= b), 2.0 * u * u, out)
+        # a < x: when a and b are adjacent doubles, mid can round down to a,
+        # and x == a must still get 1 (zmf_col's when-chain order)
+        out = np.where((a < x) & (mid <= x) & (x <= b), 2.0 * u * u, out)
     out = np.where(x >= b, 0.0, out)
     return out
 

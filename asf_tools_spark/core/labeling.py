@@ -68,7 +68,8 @@ def label_components(flag: np.ndarray) -> np.ndarray:
 
 
 class UnionFind:
-    """Small driver-side union-find for cross-tile label equivalences."""
+    """Small driver-side union-find for label equivalences (cross-tile
+    raster labels, near-dup pair graphs); any orderable ids."""
 
     def __init__(self) -> None:
         self.parent: dict[int, int] = {}

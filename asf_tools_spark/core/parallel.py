@@ -15,23 +15,14 @@ row order within a partition (aggregates, joins, explode->aggregate).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` up to session default parallelism if (and only
     if) it currently has fewer partitions — the guard makes this a no-op
-    at cluster scale, where scans already carry enough splits.
-
-    ``multiplier`` > 1 requests extra slices for stages whose per-row cost
-    is very uneven (e.g. documents of wildly different lengths).
-    """
-    if os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":  # ops/A-B escape hatch
-        return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiplier
+    at cluster scale, where scans already carry enough splits."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:  # never let the optimization break the plan

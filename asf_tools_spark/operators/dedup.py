@@ -12,7 +12,7 @@ no Python workers anywhere in this module. Two hash families (see
   pigeonhole (max_distance+1)-block joins
 - n-gram Jaccard: exact verification on LSH candidate pairs
 - near_dup_clusters: verified pairs (+ identical-signature rep edges) ->
-  BSP connected components -> keep-list
+  connected components (labeling.merge_labels) -> keep-list
 - embedding near-dup: banded multi-table hyperplane LSH -> exact cosine
 """
 
@@ -22,6 +22,8 @@ import os
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
+
+from .labeling import merge_labels
 
 
 def default_hash_family() -> str:
@@ -217,88 +219,26 @@ def containment_on_pairs(pairs: DataFrame, shingles: DataFrame, key: str) -> Dat
 
 def near_dup_clusters(
     docs: DataFrame, pairs: DataFrame, key: str,
-    key_a: str = "key_a", key_b: str = "key_b", local_max_edges: int = 200_000,
+    key_a: str = "key_a", key_b: str = "key_b",
 ) -> DataFrame:
     """Transitive near-dup clusters + keep-list — the step that turns
     verified pairs into an actual dedup decision.
 
     Connected components over the pair graph; docs in no pair are their
     own singleton cluster. Output: (key, cluster_id, keep) where
-    cluster_id = min key in the component and keep marks the
-    representative.
+    cluster_id = min key in the component (same type as ``key``) and keep
+    marks the representative.
 
-    Small-graph guard (same pattern as kmeans_fit / the W8 driver path):
-    a near-dup pair graph of <= ``local_max_edges`` edges is union-found
-    on the driver from ONE limited collect and broadcast-joined back —
-    each BSP round otherwise costs several jobs + a localCheckpoint, pure
-    launch overhead below cluster scale (measured: the rounds dominate
-    corpus_funnel at sf0.1). Above the guard, the BSP min-label
-    propagation + pointer jumping shared with raster labeling
-    (labeling._merge_labels_distributed, O(log diameter) rounds) runs on
-    the cluster; both paths produce identical min-key components. Note the
-    guard bounds EDGES (the verified near-dup pairs — tiny relative to the
+    The pair graph goes through labeling.merge_labels, the merge raster
+    labeling uses: a driver union-find while the distinct pairs number at
+    most ``labeling.DRIVER_MAX_EDGES``, the BSP merge above it. The guard
+    bounds EDGES (the verified near-dup pairs — tiny relative to the
     corpus), never the doc count: singletons are labeled by the broadcast
-    join, not collected. Set local_max_edges=0 to force the BSP path.
+    join, not collected.
     """
-    edges = pairs.select(F.col(key_a).alias("label"), F.col(key_b).alias("nbr_label")).distinct()
-    # Size the graph with persist + count instead of limit(n+1).collect():
-    # CollectLimit escalates through SERIALIZED single-task result stages,
-    # each re-running the verify chain on a growing partition subset
-    # (measured: ~8 s of 1-task stages inside corpus_funnel at sf0.1,
-    # guide §5 driver notes). count() runs the same upstream once, wide;
-    # collect() then reads the cached edges. Map-side shuffle work is paid
-    # in full by either form, so this is never worse at scale.
-    sample = None
-    if local_max_edges > 0:
-        edges = edges.persist()
-        if edges.count() <= local_max_edges:
-            sample = edges.collect()
-    if sample is not None and len(sample) <= local_max_edges:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in sample:
-            ra, rb = find(r[0]), find(r[1])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp: dict = {}
-        for r in sample:
-            for node in (r[0], r[1]):
-                comp.setdefault(find(node), set()).add(node)
-        rows = [
-            (node, min(members))
-            for root, members in comp.items() for node in members
-        ]
-        spark = docs.sparkSession
-        ktype = docs.select(key).schema[0].dataType.simpleString()
-        mapping = spark.createDataFrame(
-            rows or [(None, None)], f"_mk {ktype}, _mc {ktype}"
-        ).where(F.col("_mk").isNotNull())
-        edges.unpersist()  # mapping is driver-built; edges has no consumer
-        return (
-            docs.select(F.col(key).alias("_k"))
-            .join(F.broadcast(mapping), F.col("_k") == F.col("_mk"), "left")
-            .select(
-                F.col("_k").alias(key),
-                F.coalesce("_mc", "_k").alias("cluster_id"),
-                (F.col("_k") == F.coalesce("_mc", "_k")).alias("keep"),
-            )
-        )
-
-    from .labeling import _merge_labels_distributed
-
     labeled = docs.select(F.col(key).alias("_k"), F.col(key).alias("label"))
-    merged = _merge_labels_distributed(labeled, edges)
-    if local_max_edges > 0:
-        edges.unpersist()  # sym is eagerly localCheckpointed inside _merge
-    return merged.select(
+    edges = pairs.select(F.col(key_a).alias("label"), F.col(key_b).alias("nbr_label"))
+    return merge_labels(labeled, edges).select(
         F.col("_k").alias(key),
         F.col("label").alias("cluster_id"),
         (F.col("_k") == F.col("label")).alias("keep"),

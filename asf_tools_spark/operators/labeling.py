@@ -9,10 +9,13 @@ operator): no Catalyst primitive exists, so:
    ``tile_id * (tile_pixels + 1) + local_label``;
 2. tile-boundary pixels (a tiny fraction) self-join against the four
    forward neighbor offsets that cross tile edges -> equivalence edges;
-3. union-find over the edge table; the merge runs on the driver while the
-   edge table fits (it is proportional to *water pixels on tile borders*,
-   not the grid), with an iterative distributed fallback
-   (``merge_labels_distributed``) for adversarial inputs;
+3. ``merge_labels`` merges the edge table into min-label components: a
+   driver union-find while the distinct table has at most
+   ``DRIVER_MAX_EDGES`` rows (it is proportional to *water pixels on tile
+   borders*, not the grid), else an iterative distributed BSP merge for
+   adversarial inputs; the choice is made by edge count, never by a flag.
+   Near-dup dedup (operators/dedup.near_dup_clusters) ends with the same
+   merge over its pair graph;
 4. broadcast relabel join.
 
 Label ids are arbitrary but consistent; canonicalize before comparing.
@@ -37,13 +40,13 @@ _TILE_STRIDE = 1 << 31  # labeling tile key = trow * stride + tcol
 
 
 DRIVER_EXACT_MAX_PX = 2_000_000  # flagged-pixel guard for the local path
+DRIVER_MAX_EDGES = 200_000  # distinct-edge guard for the driver merge
 
 
 def label_connected(
     grid: DataFrame,
     flag_col: str,
     tile_shape: tuple[int, int],
-    merge_on_driver: bool = True,
     local_max_px: int = DRIVER_EXACT_MAX_PX,
 ) -> DataFrame:
     """(row,col,<flag>) -> (row,col,label) for flagged pixels; labels
@@ -55,8 +58,8 @@ def label_connected(
     when the flagged set AND its bounding box fit under ``local_max_px``,
     the pixels are collected by one job (bounded at ``local_max_px + 1``
     rows) and labeled with the same core.labeling kernel on the driver —
-    the distributed path costs three serial jobs (pandas tile labeling +
-    eager checkpoint + boundary-edge collect), pure launch overhead below
+    the distributed path costs serial jobs (pandas tile labeling + eager
+    checkpoint + the boundary-edge merge), pure launch overhead below
     cluster scale (it was ~11 s of the 25 s water-map pipeline at 300k
     px). More rows than ``local_max_px`` or a sparse bounding box fall
     through to the distributed path. Label ids are arbitrary but
@@ -143,25 +146,54 @@ def label_connected(
         # already merged locally — but keeping them is harmless dedup work
         e = b.join(n, ["row", "col"]).where(F.col("label") != F.col("nbr_label"))
         edges = e if edges is None else edges.unionByName(e)
-    edge_pairs = edges.select("label", "nbr_label").distinct()
+    return merge_labels(labeled, edges.select("label", "nbr_label"))
 
-    if merge_on_driver:
-        uf = UnionFind()
-        for r in edge_pairs.collect():
-            uf.union(int(r.label), int(r.nbr_label))
-        mapping = [(x, uf.find(x)) for x in list(uf.parent)]
-        if mapping:
-            spark = grid.sparkSession
-            map_df = F.broadcast(spark.createDataFrame(mapping, "label long, root long"))
-            out = (
-                labeled.join(map_df, "label", "left")
-                .withColumn("label", F.coalesce("root", "label"))
-                .drop("root")
-            )
-        else:
-            out = labeled
-        return out
-    return _merge_labels_distributed(labeled, edge_pairs)
+
+def merge_labels(labeled: DataFrame, edges: DataFrame) -> DataFrame:
+    """Merge an equivalence edge table ``(label, nbr_label)`` into
+    ``labeled``: every label becomes the smallest label of its connected
+    component. ``label`` keeps its type (long pixel labels, or a doc key
+    of any orderable type); labels in no edge are unchanged, and with no
+    edges ``labeled`` is returned as is.
+
+    The distinct edge table is union-found on the driver
+    (core.labeling.UnionFind, smaller id wins) and broadcast-joined back
+    when it has at most ``DRIVER_MAX_EDGES`` rows; each BSP round
+    otherwise costs several jobs + a localCheckpoint, pure launch overhead
+    below cluster scale (measured: the rounds dominate corpus_funnel at
+    sf0.1). Above the constant the BSP merge runs on the cluster; both
+    paths give identical min-label components."""
+    # Size the table with persist + count instead of limit(n+1).collect():
+    # CollectLimit escalates through SERIALIZED single-task result stages,
+    # each re-running the upstream chain on a growing partition subset
+    # (measured: ~8 s of 1-task stages inside corpus_funnel at sf0.1,
+    # guide §5 driver notes). count() runs the same upstream once, wide;
+    # collect() then reads the cached edges. Map-side shuffle work is paid
+    # in full by either form, so this is never worse at scale.
+    edges = edges.distinct().persist()
+    try:
+        n = edges.count()
+        if n > DRIVER_MAX_EDGES:
+            # sym is eagerly localCheckpointed inside, so edges may go
+            return _merge_labels_distributed(labeled, edges)
+        rows = edges.collect() if n else []
+    finally:
+        edges.unpersist()
+    if not rows:
+        return labeled
+    uf = UnionFind()
+    for a, b in rows:
+        uf.union(a, b)
+    mapping = [(x, r) for x in list(uf.parent) if (r := uf.find(x)) != x]
+    ktype = labeled.schema["label"].dataType
+    map_df = labeled.sparkSession.createDataFrame(
+        mapping, StructType([StructField("label", ktype), StructField("_root", ktype)])
+    )
+    return (
+        labeled.join(F.broadcast(map_df), "label", "left")
+        .withColumn("label", F.coalesce("_root", "label"))
+        .drop("_root")
+    )
 
 
 def _merge_labels_distributed(labeled: DataFrame, edge_pairs: DataFrame) -> DataFrame:

@@ -15,10 +15,8 @@ Spark-first shape (designed for the 10^12-page table):
 - LM training is two partial/final hash aggregates keyed by word /
   word-pair — the same shape as word-count, no skew beyond natural Zipf
   (handled by partial aggregation: the mapper pre-combines hot words);
-- scoring joins each document bigram against the bigram/unigram count
-  tables. The LM is broadcast when it fits (default; a pruned LM for a
-  100-language web corpus is ~10^7 rows), else a shuffled hash join with
-  AQE skew splitting takes over (``broadcast_lm=False``);
+- scoring joins each document bigram against the broadcast bigram/unigram
+  count tables (a pruned LM for a 100-language web corpus is ~10^7 rows);
 - the per-document reduction is ONE groupBy(key) aggregate.
 
 Smoothing: add-alpha over the training vocabulary,
@@ -86,13 +84,10 @@ def perplexity(
     lm: dict[str, DataFrame],
     text_col: str = "text",
     alpha: float = DEFAULT_ALPHA,
-    broadcast_lm: bool = True,
 ) -> DataFrame:
     """(key, n_bigrams, ppl): add-alpha bigram perplexity per document.
 
-    ``broadcast_lm=True`` broadcasts the count tables (the common case: a
-    top-pruned web LM is MBs); with ``False`` the bigram join shuffles on
-    (w1, w2) — the natural Zipf skew on stop-word pairs is split by AQE.
+    The count tables are broadcast (a top-pruned web LM is MBs).
     """
     bg = (
         docs.select(key, _tokens(F.col(text_col)).alias("ws"))
@@ -108,9 +103,7 @@ def perplexity(
         )
         .select(key, "bg.w1", "bg.w2")
     )
-    bi, uni = lm["bigrams"], lm["unigrams"]
-    if broadcast_lm:
-        bi, uni = F.broadcast(bi), F.broadcast(uni)
+    bi, uni = F.broadcast(lm["bigrams"]), F.broadcast(lm["unigrams"])
     a = F.lit(float(alpha))
     # V as a 1-row broadcast cross join: stays cluster-side and lazy (no
     # driver collect), constant-folds into every partition.

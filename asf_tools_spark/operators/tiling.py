@@ -65,18 +65,17 @@ def select_hand_tiles(grid: DataFrame, hand_threshold: float, hand_fraction: flo
 
 
 def hand_candidate_tiles_df(grid: DataFrame, hand_threshold: float, hand_fraction: float,
-                            tile_pixels: int, check_all_zero: bool = True) -> DataFrame:
+                            tile_pixels: int) -> DataFrame:
     """Distributed select_hand_tiles: candidate tile ids as a DataFrame —
     no O(n_tiles) collect. The reference's all-zero guard costs one scalar
-    aggregate job when enabled."""
+    aggregate job."""
     stats = hand_tile_stats(grid, hand_threshold, tile_pixels)
-    if check_all_zero:
-        nz = stats.agg(F.max("any_nonzero").alias("nz")).collect()[0].nz
-        if not nz:
-            raise ValueError(
-                "All pixels in scene have a HAND value of 0.0 (all water); "
-                "scene is not a good candidate for water mapping."
-            )
+    nz = stats.agg(F.max("any_nonzero").alias("nz")).collect()[0].nz
+    if not nz:
+        raise ValueError(
+            "All pixels in scene have a HAND value of 0.0 (all water); "
+            "scene is not a good candidate for water mapping."
+        )
     return stats.where(F.col("low_frac") > F.lit(hand_fraction)).select("tile_id")
 
 

@@ -49,7 +49,6 @@ class LineageWriter:
         df: DataFrame,
         partition_col: str,
         job_id: str | None = None,
-        shuffle_to_partitions: bool = True,
     ) -> dict:
         """Write df partitioned by ``partition_col``, skipping partitions the
         lineage already marks committed for this job. Returns metrics."""
@@ -70,11 +69,9 @@ class LineageWriter:
             .collect()
         ]
         if counts:
-            writer = pending
-            if shuffle_to_partitions:
-                writer = pending.repartition(partition_col)  # one file set per partition
             (
-                writer.write.partitionBy(partition_col)
+                pending.repartition(partition_col)  # one file set per partition
+                .write.partitionBy(partition_col)
                 .mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .parquet(self.table_path)

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from asf_tools_spark.operators import dedup, similarity, text
+from asf_tools_spark.operators import dedup, labeling, similarity, text
 from asf_tools_spark.operators.multimodal import decode_and_featurize, sniff_media_type, synth_media
 from asf_tools_spark.sources.lineage import LineageWriter
 
@@ -97,7 +97,7 @@ def test_near_dup_clusters_include_collapsed_signature_members(spark):
     assert out[2] == (2, True)
 
 
-def test_near_dup_clusters_local_guard_matches_bsp(spark):
+def test_near_dup_clusters_local_guard_matches_bsp(spark, monkeypatch):
     """The small-graph union-find path must produce exactly the BSP
     min-label components — including transitive chains and singletons."""
     docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
@@ -108,12 +108,40 @@ def test_near_dup_clusters_local_guard_matches_bsp(spark):
     )
     local = {r.doc_id: (r.cluster_id, r.keep)
              for r in dedup.near_dup_clusters(docs, edges, "doc_id").collect()}
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)  # force BSP
     bsp = {r.doc_id: (r.cluster_id, r.keep)
-           for r in dedup.near_dup_clusters(
-               docs, edges, "doc_id", local_max_edges=0).collect()}
+           for r in dedup.near_dup_clusters(docs, edges, "doc_id").collect()}
     assert local == bsp
     assert local[3] == (0, False) and local[0] == (0, True)  # transitive
     assert local[9] == (7, False) and local[8] == (8, True)
+
+
+def test_near_dup_clusters_string_keys(spark, monkeypatch):
+    """The shared merge keeps the key's type: string doc keys give string
+    cluster ids (min key in lexicographic order), identically on the
+    driver union-find and the BSP merge."""
+    docs = spark.createDataFrame([(k,) for k in "abcdefgh"], "doc_id string")
+    # chain d-b-a-c, pair (h, f); e, g singletons
+    edges = spark.createDataFrame(
+        [("d", "b"), ("b", "a"), ("c", "a"), ("h", "f")],
+        "key_a string, key_b string",
+    )
+
+    def run():
+        out = dedup.near_dup_clusters(docs, edges, "doc_id")
+        assert [f.dataType.simpleString() for f in out.schema.fields] == [
+            "string", "string", "boolean"
+        ]
+        return {r.doc_id: (r.cluster_id, r.keep) for r in out.collect()}
+
+    local = run()
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)  # force BSP
+    bsp = run()
+    assert local == bsp
+    assert local == {
+        "a": ("a", True), "b": ("a", False), "c": ("a", False), "d": ("a", False),
+        "e": ("e", True), "f": ("f", True), "g": ("g", True), "h": ("f", False),
+    }
 
 
 def test_winnowing_shared_substring_guarantee(spark):

@@ -4,7 +4,7 @@ from collections import deque
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from asf_tools_spark.core import cells, tiles
@@ -48,6 +48,8 @@ def test_cell_parent_contains_child(lat, lon, res, parent_res):
 
 @settings(max_examples=30, deadline=None)
 @given(st.floats(-100, 100), st.floats(-100, 100), st.floats(-200, 200))
+@example(a=0.0, b=5e-324, x=0.0)  # adjacent doubles: (a + b) / 2 rounds to a
+@example(a=1.0, b=1.0000000000000002, x=1.0)
 def test_zmf_bounds_and_monotone(a, b, x):
     lo, hi = min(a, b), max(a, b)
     v = zmf(np.array([x]), lo, hi)[0]

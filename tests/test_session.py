@@ -1,6 +1,7 @@
 """SparkSession factory: the package must reach Python workers from any
 working directory."""
 
+import ast
 import os
 import subprocess
 import sys
@@ -38,3 +39,38 @@ def test_udf_runs_outside_repo_root(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert "components 2" in r.stdout
+
+
+def _env_names_read(tree: ast.AST) -> set:
+    """Names passed to os.environ.get / os.getenv / os.environ[...]; a
+    non-literal name is reported as its source text."""
+    def is_environ(node):
+        return (isinstance(node, ast.Attribute) and node.attr == "environ"
+                and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+    def name(node):
+        return node.value if isinstance(node, ast.Constant) else ast.unparse(node)
+
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and node.args and isinstance(node.func, ast.Attribute):
+            f = node.func
+            if (f.attr == "get" and is_environ(f.value)) or (
+                f.attr == "getenv" and isinstance(f.value, ast.Name) and f.value.id == "os"
+            ):
+                names.add(name(node.args[0]))
+        elif isinstance(node, ast.Subscript) and is_environ(node.value):
+            names.add(name(node.slice))
+    return names
+
+
+def test_no_new_environment_switches():
+    """The package reads exactly these environment variables; a new
+    behaviour switch must come with a reviewed edit of this set."""
+    names = set()
+    for path in (REPO / "asf_tools_spark").rglob("*.py"):
+        names |= _env_names_read(ast.parse(path.read_text(), str(path)))
+    assert names == {
+        "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY",
+        "SPARK_DRIVER_JAVA_OPTS", "SPARK_GRAFT_HASH_FAMILY",
+    }

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from asf_tools_spark.core import watermap_mirror as mirror
+from asf_tools_spark.operators import labeling
 from asf_tools_spark.operators.labeling import label_connected
 from asf_tools_spark.operators.tiling import long_grid_df
 from asf_tools_spark.plans.water_map import make_water_map_grid
@@ -175,7 +176,7 @@ def test_labeling_negative_coordinates(spark):
     assert canon(got) == canon(exp_p)
 
 
-def test_distributed_merge_stress_10k_equivalences(spark):
+def test_distributed_merge_stress_10k_equivalences(spark, monkeypatch):
     """Stress the no-driver merge: 256x256 at 30% water over 8x8 tiles
     (1,024 tiles) produces >10k cross-tile boundary equivalences; the
     iterative min-propagation must produce exactly the numpy components."""
@@ -190,9 +191,11 @@ def test_distributed_merge_stress_10k_equivalences(spark):
         "row": pts[:, 0].astype("int32"), "col": pts[:, 1].astype("int32"), "flag": True
     })
     base = spark.createDataFrame(pdf)
-    # local_max_px=0 forces the distributed path (the r6 small-grid
-    # guard would otherwise label this on the driver)
-    out = label_connected(base, "flag", (8, 8), merge_on_driver=False, local_max_px=0)
+    # local_max_px=0 forces the distributed path (the small-grid guard
+    # would otherwise label this on the driver); DRIVER_MAX_EDGES=0 forces
+    # the BSP merge (the edge table would otherwise fit the driver merge)
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
+    out = label_connected(base, "flag", (8, 8), local_max_px=0)
     got = {(r.row, r.col): r.label for r in out.collect()}
     assert len(got) == int(flag.sum())
 
@@ -206,16 +209,17 @@ def test_distributed_merge_stress_10k_equivalences(spark):
     assert canon(got) == canon(exp_p)
 
 
-def test_distributed_labeling_distributed_merge(spark):
+def test_distributed_labeling_distributed_merge(spark, monkeypatch):
     """The no-driver merge path (iterative min propagation) agrees."""
     rng = np.random.default_rng(11)
     flag = rng.random((40, 40)) < 0.4
     arr = np.ma.MaskedArray(flag.astype(float), mask=~flag)
     g = long_grid_df(spark, arr, (10, 10), pad_value=0.0)
     base = g.withColumn("flag", g["valid"] & (g["value"] > 0)).where("flag")
-    a = label_connected(base, "flag", (10, 10), merge_on_driver=True, local_max_px=0)
-    b = label_connected(base, "flag", (10, 10), merge_on_driver=False, local_max_px=0)
+    a = label_connected(base, "flag", (10, 10), local_max_px=0)
     pa = {(r.row, r.col): r.label for r in a.collect()}
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
+    b = label_connected(base, "flag", (10, 10), local_max_px=0)
     pb = {(r.row, r.col): r.label for r in b.collect()}
     assert pa.keys() == pb.keys()
     # identical partitions (relabel both canonically)
@@ -290,3 +294,29 @@ def test_labeling_local_guard_falls_through_on_sparse_bbox(spark):
     dist = label_connected(base, "flag", (8, 8), local_max_px=0)
     assert sparse.count() == len(pts)
     assert _canon_partition(sparse) == _canon_partition(dist)
+
+
+def test_labeling_falls_back_to_bsp_by_edge_count(spark, monkeypatch):
+    """The merge is chosen by the size of the boundary-edge table: below
+    DRIVER_MAX_EDGES the driver union-find runs, above it the BSP merge
+    runs once — and either way the partition is the local guard's."""
+    flag = np.random.default_rng(31).random((40, 40)) < 0.4
+    base = _flag_frame(spark, np.argwhere(flag))
+    local = _canon_partition(label_connected(base, "flag", (8, 8)))
+
+    calls = []
+    bsp = labeling._merge_labels_distributed
+
+    def counted(*args):
+        calls.append(1)
+        return bsp(*args)
+
+    monkeypatch.setattr(labeling, "_merge_labels_distributed", counted)
+    driver = label_connected(base, "flag", (8, 8), local_max_px=0)
+    assert calls == []
+    assert _canon_partition(driver) == local
+    # a 40x40 grid at 40% over 8x8 tiles has far more than 4 cross-tile edges
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 4)
+    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
+    assert calls == [1]
+    assert _canon_partition(dist) == local
