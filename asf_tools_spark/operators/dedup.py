@@ -231,10 +231,10 @@ def near_dup_clusters(
 
     The pair graph goes through labeling.merge_labels, the merge raster
     labeling uses: a driver union-find while the distinct pairs number at
-    most ``labeling.DRIVER_MAX_EDGES``, the BSP merge above it. The guard
-    bounds EDGES (the verified near-dup pairs — tiny relative to the
-    corpus), never the doc count: singletons are labeled by the broadcast
-    join, not collected.
+    most ``labeling.DRIVER_MAX_EDGES``, the distributed merge above it.
+    The guard bounds EDGES (the verified near-dup pairs — tiny relative to
+    the corpus), never the doc count: singletons are labeled by the
+    broadcast join, not collected.
     """
     labeled = docs.select(F.col(key).alias("_k"), F.col(key).alias("label"))
     edges = pairs.select(F.col(key_a).alias("label"), F.col(key_b).alias("nbr_label"))

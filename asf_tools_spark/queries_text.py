@@ -69,8 +69,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup dedup DECISION: MinHash -> LSH candidates ->
-    exact-Jaccard verify (>= 0.8) -> transitive clusters (BSP connected
-    components) -> keep-list. Every document gets (cluster_id, keep).
+    exact-Jaccard verify (>= 0.8) -> transitive clusters (connected
+    components, labeling.merge_labels) -> keep-list. Every document gets (cluster_id, keep).
 
     Identical-signature groups are added back as rep->member edges:
     lsh_candidate_pairs deliberately collapses them before the bucket join,

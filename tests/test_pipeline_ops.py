@@ -98,8 +98,8 @@ def test_near_dup_clusters_include_collapsed_signature_members(spark):
 
 
 def test_near_dup_clusters_local_guard_matches_bsp(spark, monkeypatch):
-    """The small-graph union-find path must produce exactly the BSP
-    min-label components — including transitive chains and singletons."""
+    """The small-graph union-find path must produce exactly the distributed
+    merge's min-label components — including transitive chains and singletons."""
     docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
     # chain 0-1-2-3, pair (7,9), star 4-{5,6}; 8,10,11 singletons
     edges = spark.createDataFrame(
@@ -108,7 +108,7 @@ def test_near_dup_clusters_local_guard_matches_bsp(spark, monkeypatch):
     )
     local = {r.doc_id: (r.cluster_id, r.keep)
              for r in dedup.near_dup_clusters(docs, edges, "doc_id").collect()}
-    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)  # force BSP
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)  # force the distributed merge
     bsp = {r.doc_id: (r.cluster_id, r.keep)
            for r in dedup.near_dup_clusters(docs, edges, "doc_id").collect()}
     assert local == bsp
@@ -119,7 +119,7 @@ def test_near_dup_clusters_local_guard_matches_bsp(spark, monkeypatch):
 def test_near_dup_clusters_string_keys(spark, monkeypatch):
     """The shared merge keeps the key's type: string doc keys give string
     cluster ids (min key in lexicographic order), identically on the
-    driver union-find and the BSP merge."""
+    driver union-find and the distributed merge."""
     docs = spark.createDataFrame([(k,) for k in "abcdefgh"], "doc_id string")
     # chain d-b-a-c, pair (h, f); e, g singletons
     edges = spark.createDataFrame(
@@ -135,7 +135,7 @@ def test_near_dup_clusters_string_keys(spark, monkeypatch):
         return {r.doc_id: (r.cluster_id, r.keep) for r in out.collect()}
 
     local = run()
-    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)  # force BSP
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)  # force the distributed merge
     bsp = run()
     assert local == bsp
     assert local == {

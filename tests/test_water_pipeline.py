@@ -179,7 +179,7 @@ def test_labeling_negative_coordinates(spark):
 def test_distributed_merge_stress_10k_equivalences(spark, monkeypatch):
     """Stress the no-driver merge: 256x256 at 30% water over 8x8 tiles
     (1,024 tiles) produces >10k cross-tile boundary equivalences; the
-    iterative min-propagation must produce exactly the numpy components."""
+    distributed merge must produce exactly the numpy components."""
     from asf_tools_spark.core.labeling import label_components
 
     rng = np.random.default_rng(4)
@@ -193,7 +193,7 @@ def test_distributed_merge_stress_10k_equivalences(spark, monkeypatch):
     base = spark.createDataFrame(pdf)
     # local_max_px=0 forces the distributed path (the small-grid guard
     # would otherwise label this on the driver); DRIVER_MAX_EDGES=0 forces
-    # the BSP merge (the edge table would otherwise fit the driver merge)
+    # the distributed merge (the edge table would otherwise fit the driver)
     monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
     out = label_connected(base, "flag", (8, 8), local_max_px=0)
     got = {(r.row, r.col): r.label for r in out.collect()}
@@ -209,27 +209,62 @@ def test_distributed_merge_stress_10k_equivalences(spark, monkeypatch):
     assert canon(got) == canon(exp_p)
 
 
+def _canon_partition(df) -> list:
+    """Component partition of a (row, col, label) frame, label ids dropped."""
+    groups = {}
+    for r in df.collect():
+        groups.setdefault(r.label, set()).add((r.row, r.col))
+    return sorted(tuple(sorted(s)) for s in groups.values())
+
+
+def _flag_frame(spark, pts):
+    return spark.createDataFrame(pd.DataFrame({
+        "row": pts[:, 0].astype("int32"), "col": pts[:, 1].astype("int32"), "flag": True
+    }))
+
+
 def test_distributed_labeling_distributed_merge(spark, monkeypatch):
-    """The no-driver merge path (iterative min propagation) agrees."""
+    """The merge is chosen by the size of the boundary-edge table: below
+    DRIVER_MAX_EDGES the driver union-find runs, above it the distributed
+    merge runs once; both give the local guard's partition."""
     rng = np.random.default_rng(11)
     flag = rng.random((40, 40)) < 0.4
     arr = np.ma.MaskedArray(flag.astype(float), mask=~flag)
     g = long_grid_df(spark, arr, (10, 10), pad_value=0.0)
     base = g.withColumn("flag", g["valid"] & (g["value"] > 0)).where("flag")
+    local = _canon_partition(label_connected(base, "flag", (10, 10)))
+
+    calls = []
+    distributed = labeling._merge_labels_distributed
+
+    def counted(*args):
+        calls.append(1)
+        return distributed(*args)
+
+    monkeypatch.setattr(labeling, "_merge_labels_distributed", counted)
     a = label_connected(base, "flag", (10, 10), local_max_px=0)
-    pa = {(r.row, r.col): r.label for r in a.collect()}
+    assert calls == []
     monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
     b = label_connected(base, "flag", (10, 10), local_max_px=0)
-    pb = {(r.row, r.col): r.label for r in b.collect()}
-    assert pa.keys() == pb.keys()
-    # identical partitions (relabel both canonically)
-    def canon(p):
-        groups = {}
-        for k, v in p.items():
-            groups.setdefault(v, set()).add(k)
-        return sorted(tuple(sorted(s)) for s in groups.values())
+    assert calls == [1]
+    assert _canon_partition(a) == _canon_partition(b) == local
 
-    assert canon(pa) == canon(pb)
+
+def test_distributed_merge_long_u_shape(spark, monkeypatch):
+    """A 1-px-wide U whose arms span 60 tile rows: provisional labels grow
+    with the tile row, so the right arm's top tile is a local minimum and
+    the global minimum (top of the left arm) reaches the arm only through
+    the bottom row, 120 tiles away. The distributed merge must still give
+    one component."""
+    h, w = 120, 6
+    flag = np.zeros((h, w), dtype=bool)
+    flag[:, 0] = flag[:, w - 1] = flag[h - 1, :] = True
+    base = _flag_frame(spark, np.argwhere(flag))
+    local = _canon_partition(label_connected(base, "flag", (2, 2)))
+    assert len(local) == 1
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
+    dist = label_connected(base, "flag", (2, 2), local_max_px=0)
+    assert _canon_partition(dist) == local
 
 
 def test_labeling_local_guard_matches_distributed(spark):
@@ -258,20 +293,6 @@ def test_labeling_local_guard_matches_distributed(spark):
     assert canon(pl) == canon(pd_)
 
 
-def _canon_partition(df) -> list:
-    """Component partition of a (row, col, label) frame, label ids dropped."""
-    groups = {}
-    for r in df.collect():
-        groups.setdefault(r.label, set()).add((r.row, r.col))
-    return sorted(tuple(sorted(s)) for s in groups.values())
-
-
-def _flag_frame(spark, pts):
-    return spark.createDataFrame(pd.DataFrame({
-        "row": pts[:, 0].astype("int32"), "col": pts[:, 1].astype("int32"), "flag": True
-    }))
-
-
 def test_labeling_local_guard_falls_through_over_limit(spark):
     """More flagged pixels than local_max_px: the bounded collect sees
     local_max_px + 1 rows and the distributed path labels the whole set."""
@@ -296,27 +317,22 @@ def test_labeling_local_guard_falls_through_on_sparse_bbox(spark):
     assert _canon_partition(sparse) == _canon_partition(dist)
 
 
-def test_labeling_falls_back_to_bsp_by_edge_count(spark, monkeypatch):
-    """The merge is chosen by the size of the boundary-edge table: below
-    DRIVER_MAX_EDGES the driver union-find runs, above it the BSP merge
-    runs once — and either way the partition is the local guard's."""
-    flag = np.random.default_rng(31).random((40, 40)) < 0.4
-    base = _flag_frame(spark, np.argwhere(flag))
-    local = _canon_partition(label_connected(base, "flag", (8, 8)))
-
-    calls = []
-    bsp = labeling._merge_labels_distributed
-
-    def counted(*args):
-        calls.append(1)
-        return bsp(*args)
-
-    monkeypatch.setattr(labeling, "_merge_labels_distributed", counted)
-    driver = label_connected(base, "flag", (8, 8), local_max_px=0)
-    assert calls == []
-    assert _canon_partition(driver) == local
-    # a 40x40 grid at 40% over 8x8 tiles has far more than 4 cross-tile edges
-    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 4)
-    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
-    assert calls == [1]
-    assert _canon_partition(dist) == local
+def test_distributed_merge_long_shuffled_path(spark, monkeypatch):
+    """merge_labels on a 400-node path with shuffled labels plus random
+    small components: the distributed merge gives the driver union-find's
+    min-label components (plain min-label propagation would need ~400
+    rounds)."""
+    rng = np.random.default_rng(41)
+    path = rng.permutation(400) + 1
+    pairs = list(zip(path[:-1].tolist(), path[1:].tolist()))
+    extra = rng.integers(1000, 1300, size=(150, 2)).tolist()
+    pairs += [(int(a), int(b)) for a, b in extra if a != b]
+    nodes = sorted({x for p in pairs for x in p} | {5000, 5001})
+    labeled = spark.createDataFrame([(int(x), int(x)) for x in nodes], "key long, label long")
+    edges = spark.createDataFrame(pairs, "label long, nbr_label long")
+    driver = {r.key: r.label for r in labeling.merge_labels(labeled, edges).collect()}
+    monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
+    dist = {r.key: r.label for r in labeling.merge_labels(labeled, edges).collect()}
+    assert dist == driver
+    assert {driver[int(x)] for x in path} == {1}
+    assert driver[5000] == 5000
