@@ -9,14 +9,15 @@ batched cell-indexed DataFrame operators over web-page-style tables:
   via cell-ring expansion)
 - EM tile classifier (water-extent thresholding), fuzzy refinement
 - flood-depth estimators (nmad / numpy / logstat / iterative)
-- HAND-style neighborhood accumulation (D8 fixpoint on a long-form grid)
+- HAND chain on a long-form DEM (conditioning, D8 direction, accumulation)
 - local-resolution-weighted compositing
 - training-data pipeline ops: dedup (exact/minhash/simhash), ANN similarity,
   text quality/language/tokens, multimodal binary-column plumbing
 
 Architecture is Spark-first: DataFrame/SQL plans optimized by Catalyst, with
 vectorized pandas/Arrow UDFs only where built-ins cannot express the
-semantics (per-tile EM, point-in-polygon, connected-component labeling).
+semantics (per-tile EM, point-in-polygon, connected-component labeling,
+the tile-local HAND passes).
 """
 
 __version__ = "0.1.0"

@@ -1,4 +1,5 @@
-"""DEM conditioning core: epsilon priority-flood depression filling.
+"""DEM core: epsilon priority-flood depression filling, D8 steepest
+descent, and the forest kernel behind flow accumulation and HAND.
 
 Plays the role of the pysheds chain fill_pits -> fill_depressions ->
 resolve_flats (ref: src/asf_tools/hydrosar/hand/calculate.py:108-118) in one
@@ -18,6 +19,10 @@ Exact single-array implementation (heapq Dijkstra on the minimax metric
 
 The relaxation is order-independent (settled in increasing F), so tiled
 iteration converges to exactly the full-array answer.
+
+``forest_sum`` and ``first_marked`` run pointer doubling over a D8 flow
+forest given as a parent-pointer array: ceil(log2(longest path)) + 1
+vectorized rounds, not one round per hop.
 """
 
 from __future__ import annotations
@@ -26,8 +31,8 @@ import heapq
 
 import numpy as np
 
-# D8 neighbor offsets — keep identical to operators.hand.D8
-_D8 = [(0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1)]
+# D8 neighbor offsets in priority order (E, SE, S, SW, W, NW, N, NE)
+D8 = [(0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1)]
 
 
 def priority_flood_fill(
@@ -67,7 +72,7 @@ def priority_flood_fill(
         f, r, c = heapq.heappop(heap)
         if f > F[r, c]:
             continue  # stale entry
-        for dr, dc in _D8:
+        for dr, dc in D8:
             rr, cc = r + dr, c + dc
             if 0 <= rr < h and 0 <= cc < w and np.isfinite(elev[rr, cc]):
                 nf = max(float(elev[rr, cc]), f + eps)
@@ -75,3 +80,58 @@ def priority_flood_fill(
                     F[rr, cc] = nf
                     heapq.heappush(heap, (nf, rr, cc))
     return F
+
+
+def steepest_d8(elev: np.ndarray) -> np.ndarray:
+    """Steepest-descent D8 direction of every cell of ``elev[1:-1, 1:-1]``
+    (the array carries a one-cell halo ring): the index into ``D8`` of the
+    neighbor with the largest drop ``(elev - nelev) / dist`` (dist = sqrt(2)
+    on diagonals), ties to the lowest index; -1 where no neighbor is
+    strictly lower. NaN cells neither drain nor receive."""
+    h, w = elev.shape[0] - 2, elev.shape[1] - 2
+    c = elev[1:-1, 1:-1]
+    best = np.zeros((h, w))
+    out = np.full((h, w), -1)
+    with np.errstate(invalid="ignore"):
+        for i, (dr, dc) in enumerate(D8):
+            dist = 1.4142135623730951 if dr and dc else 1.0
+            drop = (c - elev[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]) / dist
+            better = drop > best  # False for NaN
+            best = np.where(better, drop, best)
+            out[better] = i
+    return out
+
+
+def forest_sum(nxt: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """Subtree sums over a parent-pointer forest (``nxt[v]`` = parent of v,
+    -1 at a root): ``out[v]`` = sum of ``w[u]`` over every u whose path
+    reaches v, v included.
+
+    After round k, ``a[v]`` sums the u within 2^k - 1 hops upstream of v
+    and ``j[v]`` is v's 2^k-th successor; a round adds every ``a[m]`` into
+    ``a[j[m]]`` and replaces ``j`` by ``j[j]``."""
+    a = np.asarray(w, dtype=np.float64).copy()
+    j = np.asarray(nxt, dtype=np.int64).copy()
+    for _ in range(len(j).bit_length() + 1):
+        live = j >= 0
+        if not live.any():
+            return a
+        a = a + np.bincount(j[live], weights=a[live], minlength=len(a))
+        j[live] = j[j[live]]
+    raise ValueError("parent pointers contain a cycle")
+
+
+def first_marked(nxt: np.ndarray, mark: np.ndarray) -> np.ndarray:
+    """First marked node on each node's path through a parent-pointer
+    forest, the node itself included; -1 where the path has none.
+    ``first_marked(nxt, nxt < 0)`` is each node's root."""
+    hit = np.where(mark, np.arange(len(mark)), -1)
+    j = np.asarray(nxt, dtype=np.int64).copy()
+    for _ in range(len(j).bit_length() + 1):
+        live = (hit < 0) & (j >= 0)
+        if not live.any():
+            return hit
+        jl = j[live]
+        hit[live] = hit[jl]
+        j[live] = j[jl]
+    raise ValueError("parent pointers contain a cycle")

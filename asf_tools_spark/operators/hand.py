@@ -1,22 +1,27 @@
-"""HAND-style neighborhood accumulation: D8 flow direction, iterative flow
-accumulation, and height-above-nearest-drainage as DataFrame fixpoints.
+"""The HAND chain on a long-form DEM ``(row, col, elev)``: DEM
+conditioning, D8 flow direction, flow accumulation and height above
+nearest drainage.
 
 Spark re-expression of the pysheds chain in
 ref: src/asf_tools/hydrosar/hand/calculate.py:57-142 (``calculate_hand``:
-flowdir -> accumulation -> compute_hand; SURVEY §2.5 W6 — the one genuinely
-iterative distributed algorithm). The grid is a table ``(row,col,elev)``;
-every step is a neighbor equi-join; the driver loop runs to convergence with
-``localCheckpoint`` every round to cut lineage (the north_rule's
-checkpointed-lineage requirement).
+condition -> flowdir -> accumulation -> compute_hand; SURVEY §2.5 W6).
+Every step groups cells by their ``TILE_SHAPE`` tile into Arrow
+grouped-map passes that run the numpy kernels of core.dem on whole tiles:
 
-Pit/depression filling and flat resolution are upstream conditioning steps
-in pysheds; here, cells with no lower neighbor are sinks (flow_dir NULL),
-which on the synthetic/test terrains plays the same role. NaN elevations are
-treated as nodata (no flow in or out).
+- ``condition_dem`` and ``flow_direction`` give each tile the ring of
+  cells around it (its halo); conditioning repeats that until the fill
+  stops falling.
+- ``flow_accumulation`` and ``compute_hand`` use that the D8 flow graph is
+  a forest (one downstream cell each, elevation strictly falling along
+  every edge): a tile pass solves each tile's part of the forest and
+  reports its tile-edge cells, the driver solves the forest of edge
+  cells, and a second tile pass folds that answer into every cell. The
+  number of jobs does not depend on the length of flow paths. The driver
+  sees only tile-edge cells, (2 tr + 2 tc - 4) / (tr tc) of the grid:
+  124/1024 < 1/8 at 32x32 (the next rung for larger grids is to solve
+  the edge forest by the same passes over tiles of tiles).
 
-``condition_dem`` converges to the serial priority-flood fill to within its
-convergence tolerance ``conv_tol`` (default eps*1e-6; pass 0 for the exact
-fixpoint) — see its docstring for the near-tied-spill caveat.
+NaN elevations are nodata: no flow in or out.
 """
 
 from __future__ import annotations
@@ -24,34 +29,45 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
-# D8 neighbor offsets in priority order (E, SE, S, SW, W, NW, N, NE)
-D8 = [(0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1)]
+from ..core.dem import D8, first_marked, forest_sum, priority_flood_fill, steepest_d8
+from .tiling import on_tile_edge, tile_key
 
-_COND_SCHEMA = StructType([
-    StructField("row", IntegerType()),
-    StructField("col", IntegerType()),
-    StructField("elev", DoubleType()),
-    StructField("f", DoubleType()),
-    # per-pixel convergence flag computed inside solve_tile: the old
-    # plan re-joined new state vs old state every round just to probe
-    # for any drop > tol — one whole join+shuffle of pure bookkeeping
-    StructField("dropped", BooleanType()),
-])
+TILE_SHAPE = (32, 32)  # the tiles of every HAND step
 
-_TILE_STRIDE = 1 << 31
+# dropped: per-pixel convergence flag computed inside solve_tile, so a
+# round needs no join of new state against old
+_COND_SCHEMA = "row int, col int, elev double, f double, dropped boolean"
 
 
-def condition_dem(
-    grid: DataFrame,
-    tile_shape: tuple[int, int] = (32, 32),
-    eps: float = 1e-5,
-    max_rounds: int | None = None,
-    coarse_init: bool = True,
-    stats: dict | None = None,
-    conv_tol: float | None = None,
-) -> DataFrame:
+def _with_halo(cells: DataFrame, tile_shape: tuple[int, int]) -> DataFrame:
+    """``cells`` keyed by their tile (``_lt``, ``is_halo`` false) plus a
+    copy of each tile-edge cell keyed to every other tile among its 8
+    neighbors' (``is_halo`` true): grouped by ``_lt``, each tile meets its
+    own cells and the ring of cells around it."""
+    row, col = F.col("row"), F.col("col")
+    own = tile_key(row, col, tile_shape)
+    # the neighbor tiles dedup within the row, so the grouping shuffle is
+    # the only exchange
+    nbrs = F.array_distinct(F.array(*[tile_key(row + dr, col + dc, tile_shape) for dr, dc in D8]))
+    halo = (
+        cells.where(on_tile_edge(row, col, tile_shape))
+        .select("*", F.explode(nbrs).alias("_lt"))
+        .where(F.col("_lt") != own)
+        .withColumn("is_halo", F.lit(True))
+    )
+    return cells.select("*", own.alias("_lt"), F.lit(False).alias("is_halo")).unionByName(halo)
+
+
+def _padded(pdf: pd.DataFrame, own: np.ndarray, tile_shape: tuple[int, int]):
+    """Row/col indices of a halo pass's rows in their tile's (tr + 2,
+    tc + 2) array, halo ring included; ``own`` marks the tile's cells."""
+    tr, tc = tile_shape
+    rows, cols = pdf["row"].to_numpy(np.int64), pdf["col"].to_numpy(np.int64)
+    return rows - rows[own].min() // tr * tr + 1, cols - cols[own].min() // tc * tc + 1
+
+
+def condition_dem(grid: DataFrame, eps: float = 1e-5) -> DataFrame:
     """Distributed DEM conditioning: epsilon priority-flood depression
     filling, the Spark stand-in for the pysheds chain fill_pits ->
     fill_depressions -> resolve_flats
@@ -65,184 +81,95 @@ def condition_dem(
       cells around it (only tile-EDGE cells cross tiles — a tiny fraction),
       then re-solves the tile-local fill exactly with core.dem
       ``priority_flood_fill`` seeded at every current upper bound;
-    - ``f`` is monotonically nonincreasing and converges to exactly the
-      full-array answer in O(tile-graph diameter) rounds — each round is one
-      halo shuffle + one Arrow-batched grouped-map, NOT one round per cell.
+    - ``f`` is monotonically nonincreasing and converges to the full-array
+      answer in O(tile-graph diameter) rounds — each round is one halo
+      shuffle + one Arrow-batched grouped-map, NOT one round per cell.
 
     Returns (row, col, elev) with the FILLED elevations: every interior cell
     gains a strictly lower neighbor (the +eps ramp), so ``flow_direction``
     finds no spurious interior sinks and no flats. The reference likewise
     computes flowdir and HAND on the inflated DEM (calculate.py:119-129).
 
-    ``coarse_init``: hierarchical border-graph pass (VERDICT r2 item 5),
-    the shape of Barnes 2016's *parallel priority-flood* (public
-    literature). One grouped-map job summarizes each tile by its
-    border-to-border spill functions (for border cells a,b: the realized
-    fill level A and hop count L of a local flood seeded at a — any seed
-    level s then fills b at <= max(A, s + eps*L)); the driver runs ONE
-    exact Dijkstra over the border-cell graph (within-tile summary edges +
-    one-hop cross-tile edges, global-border cells as sources), producing a
-    tight upper bound g on every border cell's true fill. Seeding ``f`` at
-    g lets long-range fill information arrive before the first halo round,
-    so the fixpoint is local cleanup only: measured 2-3 rounds instead of
-    O(tile-graph semi-perimeter). The seed does not change the fixpoint —
-    ``f`` decreases monotonically from any upper bound to the unique
-    fixpoint (= the global priority flood), reached to within ``conv_tol``
-    (exactly, when ``conv_tol=0``). Only border cells (cells/tile_perimeter
-    fraction) ever reach the driver; guarded to the plain fixpoint when
-    the border graph itself would be too big (the next rung is recursing
-    the same summarization over tiles-of-tiles).
+    A border-graph pass (``_border_graph_seed``) first seeds ``f`` with a
+    tight upper bound on every tile-border cell, so the fixpoint is local
+    cleanup: measured 2-3 rounds instead of O(tile-graph semi-perimeter).
 
-    ``stats``: pass a dict to receive {"rounds": int, "coarse": bool}.
-
-    ``conv_tol`` (default ``eps * 1e-6``): the convergence gate stops when
-    no cell's ``f`` drops by more than this between rounds. The default
-    sits ~3 orders above the measured float-resummation noise floor and 6
-    below eps, but it makes the stopping rule a TOLERANCE: two competing
-    spill paths within conv_tol of each other may freeze at the higher
-    elevation, so parity with a serial priority flood holds only outside
-    near-tied spill configurations. Pass ``conv_tol=0`` for the exact
-    fixpoint (every improvement counts; costs O(diameter) extra rounds of
-    ~1e-14 noise chasing on large grids).
+    The rounds stop when no cell's ``f`` drops by more than ``eps * 1e-6``
+    (~3 orders above the measured float-resummation noise floor, 6 below
+    eps). That makes the stopping rule a tolerance: two competing spill
+    paths within it of each other may freeze at the higher elevation, so
+    parity with a serial priority flood holds outside near-tied spill
+    configurations. Raises RuntimeError if the tile-graph semi-perimeter
+    bound on rounds is reached first.
     """
-    from ..core.dem import priority_flood_fill
-
-    tol = eps * 1e-6 if conv_tol is None else conv_tol
-    tr, tc = tile_shape
+    tol = eps * 1e-6
+    tr, tc = tile_shape = TILE_SHAPE
     ext = grid.agg(
         F.min("row").alias("r0"), F.max("row").alias("r1"),
         F.min("col").alias("c0"), F.max("col").alias("c1"),
     ).collect()[0]
+    if ext.r0 is None:  # empty grid
+        return grid.select("row", "col", F.col("elev").cast("double").alias("elev"))
     rmin, rmax, cmin, cmax = int(ext.r0), int(ext.r1), int(ext.c0), int(ext.c1)
-    if max_rounds is None:
-        # fill information crosses one tile layer per round: the tile-graph
-        # semi-perimeter bounds border-to-anywhere propagation
-        max_rounds = ((rmax - rmin) // tr + 1) + ((cmax - cmin) // tc + 1) + 2
+    # fill information crosses one tile layer per round: the tile-graph
+    # semi-perimeter bounds border-to-anywhere propagation
+    max_rounds = ((rmax - rmin) // tr + 1) + ((cmax - cmin) // tc + 1) + 2
 
     on_border = (
         (F.col("row") == rmin) | (F.col("row") == rmax)
         | (F.col("col") == cmin) | (F.col("col") == cmax)
-    )
-    tile_key = (
-        F.floor(F.col("row") / tr).cast("long") * _TILE_STRIDE
-        + F.floor(F.col("col") / tc).cast("long")
     )
     state = grid.select(
         "row", "col", F.col("elev").cast("double").alias("elev"),
         F.when(on_border, F.col("elev").cast("double"))
         .otherwise(F.lit(float("inf"))).alias("f"),
     )
-    if coarse_init:
-        state = _border_graph_seed(state, tile_shape, eps, (rmin, rmax, cmin, cmax))
+    state = _border_graph_seed(state, tile_shape, eps, (rmin, rmax, cmin, cmax))
     state = state.localCheckpoint(eager=True)
 
-    def solve_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        own = pdf[~pdf["is_halo"]]
-        if own.empty:
+    def solve_tile(key, pdf):
+        own = ~pdf["is_halo"].to_numpy()
+        if not own.any():
             return pd.DataFrame(columns=["row", "col", "elev", "f", "dropped"])
-        t0r = int(own["row"].min()) // tr * tr
-        t0c = int(own["col"].min()) // tc * tc
-        e = np.full((tr + 2, tc + 2), np.nan)
+        rr, cc = _padded(pdf, own, tile_shape)
         fc = np.full((tr + 2, tc + 2), np.inf)
-        rr = pdf["row"].to_numpy() - t0r + 1
-        cc = pdf["col"].to_numpy() - t0c + 1
-        e[rr, cc] = pdf["elev"].to_numpy()
         fc[rr, cc] = pdf["f"].to_numpy()
         # halo cells are fixed boundary conditions: pin elev to their current
         # f so local relaxation can read through but never lower them
-        halo = pdf["is_halo"].to_numpy()
-        e[rr[halo], cc[halo]] = fc[rr[halo], cc[halo]]
-        seeds = [
-            (int(r), int(c), float(fc[r, c]))
-            for r, c in zip(rr, cc)
-            if np.isfinite(fc[r, c])
-        ]
-        filled = priority_flood_fill(e, eps=eps, seeds=seeds)
-        orow = own["row"].to_numpy()
-        ocol = own["col"].to_numpy()
-        newf = filled[orow - t0r + 1, ocol - t0c + 1]
-        oldf = own["f"].to_numpy()
-        outf = np.minimum(newf, oldf)
+        e = np.full((tr + 2, tc + 2), np.nan)
+        e[rr, cc] = np.where(own, pdf["elev"].to_numpy(), fc[rr, cc])
+        seeds = [(r, c, fc[r, c]) for r, c in zip(*np.nonzero(np.isfinite(fc)))]
+        oldf = fc[rr, cc][own]
+        newf = np.minimum(priority_flood_fill(e, eps=eps, seeds=seeds)[rr, cc][own], oldf)
         return pd.DataFrame({
-            "row": orow, "col": ocol,
-            "elev": own["elev"].to_numpy(),
-            "f": outf,
-            "dropped": outf < oldf - tol,
+            "row": pdf["row"][own], "col": pdf["col"][own], "elev": pdf["elev"][own],
+            "f": newf, "dropped": newf < oldf - tol,
         })
 
-    converged = False
-    rounds = 0
     for _ in range(max_rounds):
-        rounds += 1
-        # pmod, not %: Java % is negative for negative coordinates, which
-        # would silently stop tiles at negative row/col from exporting halos
-        edge = state.where(
-            (F.pmod(F.col("row"), tr).isin(0, tr - 1) | F.pmod(F.col("col"), tc).isin(0, tc - 1))
-            & ~F.isnull("f") & (F.col("f") != float("inf"))
-        )
-        # per-row array_distinct explode instead of an 8-way union +
-        # distinct SHUFFLE of the halo rows every round: the candidate
-        # target-tile set dedups locally, so the only exchange left is
-        # the groupBy placement shuffle (guide §2.3/2.4); the same
-        # (tile, pixel) halo rows reach solve_tile
-        tgt = F.array_distinct(F.array(*[
-            (F.floor((F.col("row") + dr) / tr).cast("long") * _TILE_STRIDE
-             + F.floor((F.col("col") + dc) / tc).cast("long"))
-            for dr, dc in D8
-        ]))
-        halos = (
-            edge.select(
-                "row", "col", F.lit(None).cast("double").alias("elev"), "f",
-                F.explode(tgt).alias("_lt"), tile_key.alias("_own"),
-            )
-            .where(F.col("_lt") != F.col("_own"))
-            .drop("_own").withColumn("is_halo", F.lit(True))
-        )
-        own = state.withColumn("_lt", tile_key).withColumn("is_halo", F.lit(False))
         new_state = (
-            own.unionByName(halos)
+            _with_halo(state, tile_shape)
             .groupBy("_lt")
             .applyInPandas(solve_tile, schema=_COND_SCHEMA)
             .localCheckpoint(eager=True)
         )
-        # convergence ignores drops below eps*1e-6: re-solving a tile
-        # re-evaluates the same eps-add chains in a different summation
-        # order, producing ~1e-14 float dribbles that otherwise drag the
-        # fixpoint on for O(diameter) pure-noise rounds (measured: rounds
-        # 2-17 of the 256x256 test were all <= 1.1e-14 'improvements').
-        # NOTE this is a TOLERANCE, not exactness: a genuine improvement is
-        # the gap between two competing spill elevations, which can be an
-        # arbitrarily small real — two spills within eps*1e-6 (1e-11 at the
-        # default eps) freeze at the higher one. The gate sits ~3 orders
-        # above the measured noise floor and 6 below eps, so only
-        # pathologically near-tied spill paths are affected; the priority-
-        # flood oracle tests cover the realistic regime.
+        # the tolerance: re-solving a tile re-evaluates the same eps-add
+        # chains in a different summation order, and the ~1e-14 float
+        # dribbles that produces would otherwise drag the fixpoint on for
+        # O(diameter) pure-noise rounds (measured: rounds 2-17 of a 256x256
+        # DEM were all <= 1.1e-14 'improvements')
         changed = new_state.where("dropped").limit(1).count()
         state = new_state.drop("dropped")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"condition_dem did not converge within max_rounds={max_rounds}; "
-            "a partially-filled DEM (interior f may still be +inf) would "
-            "silently corrupt flow_direction/HAND — raise max_rounds or "
-            "enlarge tile_shape"
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["coarse"] = coarse_init
-    return state.select("row", "col", F.col("f").alias("elev"))
+            return state.select("row", "col", F.col("f").alias("elev"))
+    raise RuntimeError(
+        f"condition_dem did not converge within {max_rounds} rounds; "
+        "a partially-filled DEM (interior f may still be +inf) would "
+        "silently corrupt flow_direction/HAND"
+    )
 
 
-_EDGE_SCHEMA = StructType([
-    StructField("ar", IntegerType()),
-    StructField("ac", IntegerType()),
-    StructField("br", IntegerType()),
-    StructField("bc", IntegerType()),
-    StructField("a", DoubleType()),
-    StructField("l", IntegerType()),
-])
+_FRONT_SCHEMA = "ar int, ac int, br int, bc int, a double, l int"
 
 
 def _tile_transfer_fronts(
@@ -338,7 +265,6 @@ def _border_graph_seed(
 
     tr, tc = tile_shape
     rmin, rmax, cmin, cmax = extent
-    spark = state.sparkSession
 
     n_tiles_est = ((rmax - rmin) // tr + 1) * ((cmax - cmin) // tc + 1)
     p = 2 * (tr + tc)
@@ -346,15 +272,8 @@ def _border_graph_seed(
         return state
 
     border_pred = (
-        F.pmod(F.col("row"), tr).isin(0, tr - 1)
-        | F.pmod(F.col("col"), tc).isin(0, tc - 1)
-        | F.col("row").isin(rmin, rmax)
-        | F.col("col").isin(cmin, cmax)
-    )
-
-    tile_key = (
-        F.floor(F.col("row") / tr).cast("long") * _TILE_STRIDE
-        + F.floor(F.col("col") / tc).cast("long")
+        on_tile_edge(F.col("row"), F.col("col"), tile_shape)
+        | F.col("row").isin(rmin, rmax) | F.col("col").isin(cmin, cmax)
     )
 
     def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -375,25 +294,15 @@ def _border_graph_seed(
         if len(bi) == 0:
             return pd.DataFrame({c: [] for c in ["ar", "ac", "br", "bc", "a", "l"]})
         fronts = _tile_transfer_fronts(e, eps, bi, bj)
-        ar_, ac_, br_, bc_, a_, l_ = [], [], [], [], [], []
-        for (s, t), bps in fronts.items():
-            for k, aval in bps:
-                ar_.append(bi[s] + t0r)
-                ac_.append(bj[s] + t0c)
-                br_.append(bi[t] + t0r)
-                bc_.append(bj[t] + t0c)
-                a_.append(aval)
-                l_.append(k)
-        return pd.DataFrame({
-            "ar": np.array(ar_, dtype=np.int64), "ac": np.array(ac_, dtype=np.int64),
-            "br": np.array(br_, dtype=np.int64), "bc": np.array(bc_, dtype=np.int64),
-            "a": np.array(a_, dtype=np.float64), "l": np.array(l_, dtype=np.int64),
-        })
+        return pd.DataFrame(
+            [(bi[s] + t0r, bj[s] + t0c, bi[t] + t0r, bj[t] + t0c, a, k)
+             for (s, t), bps in fronts.items() for k, a in bps],
+            columns=["ar", "ac", "br", "bc", "a", "l"],
+        )
 
     edges = (
-        state.withColumn("_lt", tile_key)
-        .groupBy("_lt")
-        .applyInPandas(lambda k, pdf: summarize(pdf), schema=_EDGE_SCHEMA)
+        state.groupBy(tile_key(F.col("row"), F.col("col"), tile_shape))
+        .applyInPandas(summarize, schema=_FRONT_SCHEMA)
         .collect()
     )
     bcells = state.where(border_pred).select("row", "col", "elev", "f").collect()
@@ -439,13 +348,8 @@ def _border_graph_seed(
 
     if not g:
         return state
-    gdf = spark.createDataFrame(
-        pd.DataFrame({
-            "row": np.array([k[0] for k in g], dtype=np.int32),
-            "col": np.array([k[1] for k in g], dtype=np.int32),
-            "gb": np.array(list(g.values()), dtype=np.float64),
-        })
-    )
+    rows = [(r, c, v) for (r, c), v in g.items()]
+    gdf = state.sparkSession.createDataFrame(rows, "row int, col int, gb double")
     return (
         state.join(F.broadcast(gdf), ["row", "col"], "left")
         .select("row", "col", "elev", F.least(F.col("f"), F.col("gb")).alias("f"))
@@ -453,149 +357,201 @@ def _border_graph_seed(
 
 
 def flow_direction(grid: DataFrame) -> DataFrame:
-    """Steepest-descent D8 direction: (row,col,elev) ->
-    (row,col,elev,to_row,to_col). Ties break by D8 priority order; cells
-    with no strictly lower neighbor are sinks (to_row/to_col NULL)."""
-    spark = grid.sparkSession
-    offsets = spark.createDataFrame(
-        [(i, dr, dc) for i, (dr, dc) in enumerate(D8)], "d8 int, dr int, dc int"
+    """Steepest-descent D8 direction (ref pysheds ``flowdir``):
+    (row, col, elev) -> (row, col, elev, to_row, to_col), by one tile pass
+    over each tile and its halo (core.dem ``steepest_d8``). Ties break by
+    D8 priority order; cells with no strictly lower neighbor are sinks
+    (to_row/to_col NULL)."""
+    tr, tc = tile_shape = TILE_SHAPE
+    offsets = np.array(D8)
+
+    def directions(key, pdf):
+        own = ~pdf["is_halo"].to_numpy()
+        if not own.any():
+            return pd.DataFrame(columns=["row", "col", "elev", "to_row", "to_col"])
+        rr, cc = _padded(pdf, own, tile_shape)
+        e = np.full((tr + 2, tc + 2), np.nan)
+        e[rr, cc] = _f64(pdf["elev"])
+        d = steepest_d8(e)[rr[own] - 1, cc[own] - 1]
+        r, c = pdf["row"].to_numpy()[own], pdf["col"].to_numpy()[own]
+        return pd.DataFrame({
+            "row": r, "col": c, "elev": e[rr, cc][own],
+            "to_row": _nullable_int(r + offsets[d, 0], d < 0),
+            "to_col": _nullable_int(c + offsets[d, 1], d < 0),
+        })
+
+    cells = grid.select("row", "col", F.col("elev").cast("double").alias("elev"))
+    return _with_halo(cells, tile_shape).groupBy("_lt").applyInPandas(
+        directions, "row int, col int, elev double, to_row int, to_col int"
     )
-    nbr = (
-        grid.crossJoin(F.broadcast(offsets))
-        .select(
-            "row", "col", "elev", "d8",
-            (F.col("row") + F.col("dr")).alias("nrow"),
-            (F.col("col") + F.col("dc")).alias("ncol"),
-            # diagonal distance sqrt(2) for slope, like D8
-            F.when((F.col("dr") != 0) & (F.col("dc") != 0), 1.4142135623730951)
-            .otherwise(1.0)
-            .alias("dist"),
-        )
-        .join(
-            grid.select(
-                F.col("row").alias("nrow"), F.col("col").alias("ncol"),
-                F.col("elev").alias("nelev"),
-            ),
-            ["nrow", "ncol"],
-        )
-        .withColumn("drop", (F.col("elev") - F.col("nelev")) / F.col("dist"))
-        .where(F.col("drop") > 0)
+
+
+def _f64(s: pd.Series) -> np.ndarray:
+    return s.to_numpy(np.float64, na_value=np.nan)
+
+
+def _nullable_int(values: np.ndarray, null: np.ndarray) -> pd.arrays.IntegerArray:
+    return pd.arrays.IntegerArray(values.astype(np.int32), null)
+
+
+def _targets(df: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(to_row, to_col, has): int64 targets (0 where NULL) and their mask."""
+    to_r, to_c = _f64(df["to_row"]), _f64(df["to_col"])
+    has = ~np.isnan(to_r)
+    return np.where(has, to_r, 0).astype(np.int64), np.where(has, to_c, 0).astype(np.int64), has
+
+
+# one edge-forest node per tile-edge cell; (to_row, to_col) is its parent
+_NODE_SCHEMA = "row int, col int, to_row int, to_col int, val double"
+# the driver's answer to a second tile pass: the mass flowing into a cell
+# from other tiles, and the drainage elevation that a tile-edge cell's
+# path reaches outside its tile
+_TABLE_SCHEMA = "row int, col int, inflow double, drain double"
+
+
+class _Tile:
+    """One tile of a flow pass as a dense tile-local forest. ``pdf`` holds
+    the tile's flow rows and the driver table's rows for the tile (non-null
+    ``inflow``). Cell (r, c) sits at position ``(r - r0) * tc + c - c0``.
+    ``nxt`` is each position's in-tile downstream position, -1 where there
+    is none or the D8 target lies in another tile (an *exit*); ``end`` is
+    where each position's in-tile path ends; ``acc`` counts the cells
+    draining through each position, the table's inflow included."""
+
+    def __init__(self, pdf: pd.DataFrame, tile_shape: tuple[int, int]):
+        self.tr, self.tc = tr, tc = tile_shape
+        table = pdf["inflow"].notna().to_numpy()
+        own, tab = pdf[~table], pdf[table]
+        self.rows, self.cols = own["row"].to_numpy(np.int64), own["col"].to_numpy(np.int64)
+        self.r0, self.c0 = self.rows.min() // tr * tr, self.cols.min() // tc * tc
+        self.pos = self.at(self.rows, self.cols)
+        self.to_row, self.to_col, has = _targets(own)
+        inside = has & (self.to_row // tr * tr == self.r0) & (self.to_col // tc * tc == self.c0)
+        self.exit = np.zeros(tr * tc, dtype=bool)
+        self.exit[self.pos[has & ~inside]] = True
+        self.nxt = np.full(tr * tc, -1)
+        self.nxt[self.pos[inside]] = self.at(self.to_row[inside], self.to_col[inside])
+        self.end = first_marked(self.nxt, self.nxt < 0)
+        tpos = self.at(tab["row"].to_numpy(np.int64), tab["col"].to_numpy(np.int64))
+        w = np.zeros(tr * tc)
+        w[self.pos] = 1.0
+        np.add.at(w, tpos, _f64(tab["inflow"]))
+        self.acc = forest_sum(self.nxt, w)
+        self.drain_in = np.full(tr * tc, np.nan)
+        np.fmax.at(self.drain_in, tpos, _f64(tab["drain"]))
+        self.elev = np.full(tr * tc, np.nan)
+        if "elev" in own:
+            self.elev[self.pos] = _f64(own["elev"])
+
+    def at(self, r: np.ndarray, c: np.ndarray) -> np.ndarray:
+        return (r - self.r0) * self.tc + (c - self.c0)
+
+    def drains(self, acc_threshold: float) -> np.ndarray:
+        """Elevation of the first drainage cell (acc > threshold) on each
+        position's in-tile path; NaN where the path has none."""
+        hit = first_marked(self.nxt, self.acc > acc_threshold)
+        return np.where(hit >= 0, self.elev[hit], np.nan)
+
+    def nodes(self, val: np.ndarray) -> pd.DataFrame:
+        """The tile's edge cells as edge-forest nodes, with ``val`` per
+        position. An exit's parent is its D8 target; another edge cell's
+        is the exit its in-tile path ends at, if it ends at one."""
+        li, lj = self.rows - self.r0, self.cols - self.c0
+        edge = (li == 0) | (li == self.tr - 1) | (lj == 0) | (lj == self.tc - 1)
+        end, out = self.end[self.pos][edge], self.exit[self.pos][edge]
+        root = ~self.exit[end]
+        return pd.DataFrame({
+            "row": self.rows[edge], "col": self.cols[edge],
+            "to_row": _nullable_int(np.where(out, self.to_row[edge], self.r0 + end // self.tc), root),
+            "to_col": _nullable_int(np.where(out, self.to_col[edge], self.c0 + end % self.tc), root),
+            "val": val[self.pos][edge],
+        })
+
+    def frame(self, name: str, val: np.ndarray) -> pd.DataFrame:
+        return pd.DataFrame({"row": self.rows, "col": self.cols, name: val[self.pos]})
+
+
+def _tile_pass(flow: DataFrame, table: pd.DataFrame, fn, schema: str) -> DataFrame:
+    """Run ``fn(_Tile)`` on every tile of ``flow`` together with the
+    driver ``table``'s rows for the tile (``_TABLE_SCHEMA``; a cell may
+    have several, which add up)."""
+    tile_shape = TILE_SHAPE
+    table = flow.sparkSession.createDataFrame(table, _TABLE_SCHEMA)
+    return (
+        flow.unionByName(table, allowMissingColumns=True)
+        .groupBy(tile_key(F.col("row"), F.col("col"), tile_shape))
+        .applyInPandas(lambda pdf: fn(_Tile(pdf, tile_shape)), schema)
     )
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy("row", "col").orderBy(F.col("drop").desc(), F.col("d8").asc())
-    best = nbr.withColumn("rk", F.row_number().over(w)).where("rk = 1").select(
-        "row", "col", F.col("nrow").alias("to_row"), F.col("ncol").alias("to_col")
+
+def _edge_forest(nodes: pd.DataFrame) -> np.ndarray:
+    """Parent index of every edge-forest node, -1 at a root."""
+    prow, pcol, has = _targets(nodes)
+    index = pd.Index(nodes["row"].to_numpy(np.int64) * (1 << 32) + nodes["col"].to_numpy(np.int64))
+    return np.where(has, index.get_indexer(prow * (1 << 32) + pcol), -1)
+
+
+def _inflow(flow: DataFrame) -> pd.DataFrame:
+    """First tile pass and driver solve of accumulation: table rows with
+    the mass that flows into each cell from other tiles.
+
+    Each tile reports its edge cells with weight 0, except that an exit
+    weighs its in-tile accumulation (>= 1). The subtree sums of the edge
+    forest are then the global accumulations of the exits, exactly: the
+    in-tile subtrees of a tile's exits are disjoint. A cell's inflow sums
+    the exits whose target it is."""
+    empty = pd.DataFrame(columns=["row", "col", "inflow", "drain"])
+    nodes = _tile_pass(flow, empty, lambda t: t.nodes(t.acc * t.exit), _NODE_SCHEMA).toPandas()
+    parent = _edge_forest(nodes)
+    weight = nodes["val"].to_numpy(np.float64)
+    total, out = forest_sum(parent, weight), weight > 0
+    inflow = np.bincount(parent[out], weights=total[out], minlength=len(nodes))
+    return nodes[["row", "col"]].assign(inflow=inflow, drain=np.nan)
+
+
+def flow_accumulation(flow: DataFrame) -> DataFrame:
+    """Cells draining through each cell, itself included (ref pysheds
+    ``accumulation``): flow (row, col, to_row, to_col) -> (row, col, acc).
+    A tile pass and driver solve (``_inflow``), then a tile pass that sums
+    each tile's forest with the inflow added at its entry cells."""
+    flow = flow.select("row", "col", "to_row", "to_col")
+    return _tile_pass(
+        flow, _inflow(flow), lambda t: t.frame("acc", t.acc), "row int, col int, acc double"
     )
-    return grid.join(best, ["row", "col"], "left")
 
 
-def flow_accumulation(flow: DataFrame, max_iters: int = 64, checkpoint_every: int = 1) -> DataFrame:
-    """Cells draining through each cell (incl. itself) in **O(log
-    longest-path) rounds** by pointer-doubling prefix sums over the flow
-    tree (ref pysheds ``accumulation``; SURVEY §2.5 W6).
-
-    Invariant after round k (A = ``acc``, J = ``(to_row,to_col)``):
-
-    - ``A_k(v)`` = mass of cells within the last ``2^k`` upstream hops of v
-      (including v itself), starting from ``A_0(v) = 1``;
-    - ``J_k(u) = f^(2^k)(u)`` — the 2^k-th downstream successor (NULL once
-      the path falls off the tree at a sink).
-
-    Recurrence: ``A_{k+1}(v) = A_k(v) + Σ_{m: J_k(m)=v} A_k(m)`` — each
-    upstream cell u at distance d ∈ [2^k, 2^{k+1}) of v is counted exactly
-    once via the unique m on its path with dist(m, v) = 2^k; and
-    ``J_{k+1} = J_k ∘ J_k``. Terminates when every pointer is NULL, i.e.
-    after ⌈log2(longest flow path)⌉ + 1 rounds — thousands-of-cells drainage
-    paths cost ~12 shuffles instead of thousands. ``localCheckpoint``
-    truncates lineage every ``checkpoint_every`` rounds (resumability per
-    the north_rule); rounds are few, so the default checkpoints each round.
-    """
-    state = flow.select(
-        "row", "col", F.lit(1.0).alias("acc"), "to_row", "to_col"
-    ).localCheckpoint(eager=True)
-    for i in range(max_iters):
-        live = state.where(F.col("to_row").isNotNull())
-        if live.limit(1).count() == 0:
-            break
-        contrib = live.groupBy(
-            F.col("to_row").alias("row"), F.col("to_col").alias("col")
-        ).agg(F.sum("acc").alias("up"))
-        hop = state.select(
-            F.col("row").alias("to_row"), F.col("col").alias("to_col"),
-            F.col("to_row").alias("j_row"), F.col("to_col").alias("j_col"),
-        )
-        new_state = (
-            state.join(contrib, ["row", "col"], "left")
-            .join(hop, ["to_row", "to_col"], "left")
-            .select(
-                "row", "col",
-                (F.col("acc") + F.coalesce("up", F.lit(0.0))).alias("acc"),
-                F.col("j_row").alias("to_row"), F.col("j_col").alias("to_col"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_state = new_state.localCheckpoint(eager=True)
-        state = new_state
-    return state.select("row", "col", "acc")
-
-
-def compute_hand(
-    flow: DataFrame, acc: DataFrame, acc_threshold: float = 100.0, max_iters: int = 200
-) -> DataFrame:
+def compute_hand(flow: DataFrame, acc_threshold: float = 100.0) -> DataFrame:
     """Height above nearest drainage (ref hand/calculate.py:124-129):
-    drainage = cells with accumulation > threshold; every cell inherits the
-    elevation of the drainage cell its flow path reaches, by iterative
-    pointer propagation; HAND = elev - drainage_elev (>= 0)."""
-    base = flow.join(acc, ["row", "col"])
-    state = base.select(
-        "row", "col", "elev", "to_row", "to_col",
-        F.when(F.col("acc") > acc_threshold, F.col("elev")).alias("drain_elev"),
-    ).localCheckpoint(eager=True)
+    drainage = cells whose flow accumulation exceeds ``acc_threshold``;
+    HAND = elev - the elevation of the first drainage cell on the cell's
+    flow path (>= 0), NULL where the path reaches none.
 
-    for _ in range(max_iters):
-        unresolved = state.where(F.col("drain_elev").isNull() & F.col("to_row").isNotNull())
-        if unresolved.limit(1).count() == 0:
-            break
-        downstream = state.select(
-            F.col("row").alias("to_row"), F.col("col").alias("to_col"),
-            F.col("drain_elev").alias("ds_drain"),
-            F.col("to_row").alias("ds_to_row"), F.col("to_col").alias("ds_to_col"),
-        )
-        # resolve one hop AND pointer-double the unresolved chain
-        nxt = (
-            state.join(downstream, ["to_row", "to_col"], "left")
-            .select(
-                "row", "col", "elev",
-                F.coalesce("drain_elev", "ds_drain").alias("drain_elev"),
-                F.when(F.col("drain_elev").isNull() & F.col("ds_drain").isNull(), F.col("ds_to_row"))
-                .otherwise(F.col("to_row")).alias("to_row"),
-                F.when(F.col("drain_elev").isNull() & F.col("ds_drain").isNull(), F.col("ds_to_col"))
-                .otherwise(F.col("to_col")).alias("to_col"),
-            )
-        )
-        state = nxt.localCheckpoint(eager=True)
+    Takes the flow (row, col, elev, to_row, to_col) and accumulates it
+    itself (``_inflow``), since the drainage is defined by the flow. A tile
+    pass finds each cell's first drainage cell within its tile; the driver
+    resolves the edge cells whose in-tile path finds none by
+    ``first_marked`` over the edge forest; a last tile pass gives every
+    cell whose in-tile path ends at such an exit that exit's drainage."""
+    flow = flow.select("row", "col", "elev", "to_row", "to_col")
+    inflow = _inflow(flow)
+    nodes = _tile_pass(flow, inflow, lambda t: t.nodes(t.drains(acc_threshold)), _NODE_SCHEMA).toPandas()
+    val = _f64(nodes["val"])
+    hit = first_marked(_edge_forest(nodes), ~np.isnan(val))
+    drains = nodes[["row", "col"]].assign(inflow=0.0, drain=np.where(hit >= 0, val[hit], np.nan))
+    table = pd.concat([inflow, drains])
 
-    return state.select(
-        "row", "col",
-        F.when(F.col("drain_elev").isNotNull(), F.greatest(F.col("elev") - F.col("drain_elev"), F.lit(0.0)))
-        .alias("hand"),
-    )
+    def hand(t: _Tile) -> pd.DataFrame:
+        d = t.drains(acc_threshold)
+        d = np.where(np.isnan(d), t.drain_in[t.end], d)
+        return t.frame("hand", np.maximum(t.elev - d, 0.0))
+
+    return _tile_pass(flow, table, hand, "row int, col int, hand double")
 
 
-def calculate_hand(
-    grid: DataFrame,
-    acc_threshold: float = 100.0,
-    condition: bool = False,
-    tile_shape: tuple[int, int] = (32, 32),
-) -> DataFrame:
-    """(condition ->) flowdir -> accumulation -> HAND
-    (ref hand/calculate.py:108-129). With ``condition=True`` the DEM is
-    depression-filled/flat-resolved first and — like the reference, which
-    feeds the inflated DEM to flowdir AND compute_hand — all downstream
-    steps use the conditioned elevations."""
-    if condition:
-        grid = condition_dem(grid, tile_shape=tile_shape)
-    flow = flow_direction(grid).localCheckpoint(eager=True)
-    acc = flow_accumulation(flow)
-    return compute_hand(flow, acc, acc_threshold)
+def calculate_hand(grid: DataFrame, acc_threshold: float = 100.0) -> DataFrame:
+    """condition -> flowdir -> accumulation -> HAND
+    (ref hand/calculate.py:108-129). Like the reference, which feeds the
+    inflated DEM to flowdir AND compute_hand, every step after
+    conditioning uses the conditioned elevations."""
+    flow = flow_direction(condition_dem(grid)).localCheckpoint(eager=True)
+    return compute_hand(flow, acc_threshold)

@@ -30,15 +30,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..core.labeling import UnionFind, label_components
+from .tiling import on_tile_edge, tile_key
 
 _LABEL_SCHEMA = StructType([
     StructField("row", IntegerType()),
     StructField("col", IntegerType()),
     StructField("label", LongType()),
 ])
-
-_TILE_STRIDE = 1 << 31  # labeling tile key = trow * stride + tcol
-
 
 DRIVER_EXACT_MAX_PX = 2_000_000  # flagged-pixel guard for the local path
 DRIVER_MAX_EDGES = 200_000  # distinct-edge guard for the driver merge
@@ -97,10 +95,7 @@ def label_connected(
                 out, _LABEL_SCHEMA
             ).localCheckpoint(eager=True)
 
-    g = grid.withColumn(
-        "_lt",
-        F.floor(F.col("row") / tr).cast("long") * _TILE_STRIDE + F.floor(F.col("col") / tc).cast("long"),
-    )
+    g = grid.withColumn("_lt", tile_key(F.col("row"), F.col("col"), tile_shape))
 
     def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = pdf["row"].to_numpy()
@@ -127,13 +122,7 @@ def label_connected(
     # The checkpoint also truncates lineage before the iterative merge.
     labeled = labeled.localCheckpoint(eager=True)
 
-    # boundary pixels: on any tile edge (pmod: Java % is negative for
-    # negative coordinates and would miss edges of negative-index tiles)
-    on_edge = (
-        F.pmod(F.col("row"), tr).isin(0, tr - 1)
-        | F.pmod(F.col("col"), tc).isin(0, tc - 1)
-    )
-    b = labeled.where(on_edge).select("row", "col", "label")
+    b = labeled.where(on_tile_edge(F.col("row"), F.col("col"), tile_shape)).select("row", "col", "label")
 
     # forward neighbor offsets (the reverse pairs are symmetric)
     edges = None

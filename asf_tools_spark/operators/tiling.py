@@ -15,12 +15,32 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..core import tiles as core_tiles
 from ..core.em import em_threshold
 from ..core.selection import select_backscatter_tiles_from_stats, select_hand_tiles_from_stats
+
+
+_TILE_STRIDE = 1 << 31
+
+
+def tile_key(row: Column, col: Column, tile_shape: tuple[int, int]) -> Column:
+    """Key of the ``tile_shape`` tile holding cell (row, col):
+    ``floor(row / tr) * 2^31 + floor(col / tc)``. Floor division keeps
+    negative coordinates in their own tiles. The grouping key of every
+    tile-local pass (raster labeling, the HAND chain)."""
+    tr, tc = tile_shape
+    return F.floor(row / tr).cast("long") * _TILE_STRIDE + F.floor(col / tc).cast("long")
+
+
+def on_tile_edge(row: Column, col: Column, tile_shape: tuple[int, int]) -> Column:
+    """Whether cell (row, col) lies on the edge of its tile. pmod, not %:
+    Java % is negative for negative coordinates and would miss the edges
+    of negative-index tiles."""
+    tr, tc = tile_shape
+    return F.pmod(row, tr).isin(0, tr - 1) | F.pmod(col, tc).isin(0, tc - 1)
 
 
 def long_grid_df(spark: SparkSession, array, tile_shape: tuple[int, int], pad_value=np.nan) -> DataFrame:

@@ -309,8 +309,8 @@ def q_flow_direction_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_flow_accum_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6b (ref calculate.py:122-123 accumulation): cells draining through
-    each cell (incl. itself) — pointer-doubling on the Spark side, recursive
-    path closure + count on the oracle side."""
+    each cell (incl. itself) — tile-local forest sums on the Spark side,
+    recursive path closure + count on the oracle side."""
     from .operators.hand import flow_accumulation
 
     return flow_accumulation(_flow_df(spark)).select(
@@ -322,11 +322,10 @@ def q_hand_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6c (ref calculate.py:129 compute_hand): height above the first
     drainage cell (acc > thr) on each cell's flow path; never-draining
     cells stay NULL."""
-    from .operators.hand import compute_hand, flow_accumulation
+    from .operators.hand import compute_hand
 
     flow = _flow_df(spark).localCheckpoint(eager=True)
-    acc = flow_accumulation(flow)
-    out = compute_hand(flow, acc, acc_threshold=_ACC_THR)
+    out = compute_hand(flow, acc_threshold=_ACC_THR)
     return out.select("row", "col", F.round("hand", 6).alias("hand"))
 
 

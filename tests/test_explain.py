@@ -100,10 +100,9 @@ def test_flood_depth_no_nested_loop(spark, sf_dir):
 #   epsg_vote               1-row x 1-row final combine
 #   histogram_smooth        5-row smoothing-kernel replication
 #   reverse_cdf_threshold   1-row min/max/count scalar join
-#   flow_direction_grid     8-row D8 offset replication (stencil)
 _BNLJ_ALLOWED = {
     "candidate_intersection", "ann_cosine_topk", "ann_topk_int8", "epsg_vote",
-    "histogram_smooth", "reverse_cdf_threshold", "flow_direction_grid",
+    "histogram_smooth", "reverse_cdf_threshold",
     "lsh_recall_report",  # 1-row x 1-row final aggregate combine
     "pq_topk",  # ADC scan: corpus x broadcast 3-row query-LUT frame
     # r5 ranking family: 1-row corpus-stat scalar joins (N, avgdl, token /

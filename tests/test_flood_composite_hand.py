@@ -6,7 +6,10 @@ from pyspark.sql import functions as F
 
 from asf_tools_spark.core.stats import estimate_flood_depth
 from asf_tools_spark.operators.composite import make_composite
-from asf_tools_spark.operators.hand import calculate_hand, flow_accumulation, flow_direction
+from asf_tools_spark.operators import hand
+from asf_tools_spark.operators.hand import (
+    calculate_hand, compute_hand, condition_dem, flow_accumulation, flow_direction,
+)
 from asf_tools_spark.operators.tiling import long_grid_df
 from asf_tools_spark.plans.flood_map import estimate_water_heights, make_flood_map_grid
 
@@ -99,7 +102,8 @@ def test_make_composite_reference_case(spark):
 
 
 def _numpy_accumulation(elev):
-    """Oracle: recursive D8 accumulation (cells draining through + self)."""
+    """Oracle: recursive D8 accumulation (cells draining through + self).
+    NaN cells are nodata: every drop to or from them compares False."""
     from asf_tools_spark.operators.hand import D8
 
     h, w = elev.shape
@@ -116,11 +120,47 @@ def _numpy_accumulation(elev):
                         best, bestdrop = (rr, cc), drop
             to[(r, c)] = best
     acc = np.ones(elev.shape)
-    order = sorted(to, key=lambda rc: -elev[rc])
+    order = sorted(to, key=lambda rc: -np.nan_to_num(elev[rc], nan=-np.inf))
     for rc in order:
         if to[rc] is not None:
             acc[to[rc]] += acc[rc]
     return acc, to
+
+
+def _numpy_hand(elev, acc, to, acc_threshold):
+    """Oracle: walk each cell's flow path to its first cell with
+    acc > threshold; HAND = max(elev - that cell's elev, 0), None where
+    the path has none or the cell is nodata."""
+    out = {}
+    for rc in to:
+        d = rc
+        while d is not None and not acc[d] > acc_threshold:
+            d = to[d]
+        ok = d is not None and not np.isnan(elev[rc])
+        out[rc] = max(elev[rc] - elev[d], 0.0) if ok else None
+    return out
+
+
+def _grid(spark, elev, off=(0, 0)):
+    h, w = elev.shape
+    return spark.createDataFrame(
+        [(r + off[0], c + off[1], float(elev[r, c])) for r in range(h) for c in range(w)],
+        "row int, col int, elev double",
+    )
+
+
+def _check_acc_and_hand(spark, elev, acc_threshold, off=(0, 0)):
+    """flow_accumulation and compute_hand == the numpy oracles, exactly."""
+    expected, to = _numpy_accumulation(elev)
+    flow = flow_direction(_grid(spark, elev, off))
+    got = {(r.row - off[0], r.col - off[1]): r.acc for r in flow_accumulation(flow).collect()}
+    assert len(got) == elev.size
+    for rc, v in np.ndenumerate(expected):
+        assert got[rc] == v, (rc, got[rc], v)
+    want = _numpy_hand(elev, expected, to, acc_threshold)
+    got = {(r.row - off[0], r.col - off[1]): r.hand
+           for r in compute_hand(flow, acc_threshold).collect()}
+    assert got == want
 
 
 def test_flow_accumulation_matches_numpy(spark):
@@ -128,11 +168,7 @@ def test_flow_accumulation_matches_numpy(spark):
     elev = rng.uniform(0, 100, (12, 15))
     expected, to = _numpy_accumulation(elev)
 
-    grid = spark.createDataFrame(
-        [(r, c, float(elev[r, c])) for r in range(12) for c in range(15)],
-        "row int, col int, elev double",
-    )
-    flow = flow_direction(grid)
+    flow = flow_direction(_grid(spark, elev))
     for r in flow.collect():
         t = to[(r.row, r.col)]
         assert (t is None) == (r.to_row is None), (r.row, r.col)
@@ -144,30 +180,81 @@ def test_flow_accumulation_matches_numpy(spark):
         assert got[rc] == v, rc
 
 
-def test_flow_accumulation_log_rounds_on_chain(spark):
-    """Pointer-doubling accumulation converges in O(log path) rounds: a
-    1,000-cell descending chain (longest flow path = 999 hops) must finish
-    within ceil(log2(999)) + 1 = 11 doubling rounds — the old upstream-sum
-    fixpoint needed ~999. acc(col) = col + 1 (everything upstream + self)."""
+def test_flow_accumulation_log_rounds_on_chain(spark, count_jobs):
+    """A 1,000-cell descending chain (longest flow path = 999 hops, across
+    32 tiles) costs a fixed handful of jobs — the old pointer-doubling
+    loop ran ceil(log2(999)) + 1 = 11 rounds of several jobs each.
+    acc(col) = col + 1 (everything upstream + self)."""
     n = 1000
     grid = spark.createDataFrame(
         [(0, c, float(n - c)) for c in range(n)], "row int, col int, elev double"
     )
-    flow = flow_direction(grid)
-    acc = flow_accumulation(flow, max_iters=11)
-    got = {r.col: r.acc for r in acc.collect()}
+    rows, jobs = count_jobs(lambda: flow_accumulation(flow_direction(grid)).collect())
+    got = {r.col: r.acc for r in rows}
     assert got[0] == 1.0 and got[n - 1] == float(n)
     for c in (1, 17, 500, 998):
         assert got[c] == float(c + 1)
+    assert jobs <= 10, jobs
 
 
-def test_condition_dem_matches_priority_flood_oracle(spark):
+def test_serpentine_path_across_tiles(spark, monkeypatch):
+    """One drainage path snaking through every other row of a 40x40 grid
+    of 4x4 tiles, walled in by high ground that drains into it: the
+    781-hop path enters a tile 190 times across all 100 tiles. acc and
+    HAND == the numpy oracles."""
+    monkeypatch.setattr(hand, "TILE_SHAPE", (4, 4))
+    n = 40
+    elev = np.full((n, n), 1e4)
+    path = []
+    for r in range(0, n, 2):
+        cols = range(n) if r % 4 == 0 else range(n - 1, -1, -1)
+        path += [(r, c) for c in cols]
+        if r + 1 < n:
+            path.append((r + 1, n - 1 if r % 4 == 0 else 0))
+    for k, rc in enumerate(path):
+        elev[rc] = float(len(path) - k)
+    _check_acc_and_hand(spark, elev, 50.0)
+
+
+def test_flow_passes_negative_coordinates(spark, monkeypatch):
+    """Negative row/col (tile keys floor, tile origins floor-divide): the
+    same acc and HAND as the coordinate-shifted numpy oracles."""
+    monkeypatch.setattr(hand, "TILE_SHAPE", (8, 8))
+    elev = np.random.default_rng(17).uniform(0, 100, (20, 23))
+    elev[:, 11] -= 60.0  # a channel crossing tiles, so HAND resolves
+    _check_acc_and_hand(spark, elev, 8.0, off=(-37, -29))
+
+
+def test_flow_passes_nan_cells(spark, monkeypatch):
+    """NaN elevations are nodata: nothing drains into or out of them, so
+    they keep acc 1 and a NULL HAND, and their neighbors route around."""
+    monkeypatch.setattr(hand, "TILE_SHAPE", (8, 8))
+    rng = np.random.default_rng(23)
+    elev = rng.uniform(0, 100, (24, 24))
+    elev[:, 7] -= 60.0
+    elev[rng.random(elev.shape) < 0.1] = np.nan
+    _check_acc_and_hand(spark, elev, 6.0)
+
+
+def test_hand_chain_degenerate_grids(spark):
+    """Empty grid: every HAND step returns zero rows (condition_dem used
+    to raise on the NULL extent); a single cell: one row each."""
+    for cells, n in (([], 0), ([(3, -2, 7.5)], 1)):
+        grid = spark.createDataFrame(cells, "row int, col int, elev double")
+        flow = flow_direction(grid)
+        assert condition_dem(grid).count() == n
+        assert flow_accumulation(flow).count() == n
+        assert compute_hand(flow, 100.0).count() == n
+        assert calculate_hand(grid).count() == n
+
+
+def test_condition_dem_matches_priority_flood_oracle(spark, monkeypatch):
     """Distributed tiled halo-merge fill == full-array numpy priority-flood
     on a pitted, flat-riddled synthetic DEM (tiles 8x8 -> real halo merges
     across a 4x4 tile graph)."""
     from asf_tools_spark.core.dem import priority_flood_fill
-    from asf_tools_spark.operators.hand import condition_dem
 
+    monkeypatch.setattr(hand, "TILE_SHAPE", (8, 8))
     rng = np.random.default_rng(11)
     h, w = 32, 32
     elev = rng.uniform(10, 20, (h, w))
@@ -176,53 +263,40 @@ def test_condition_dem_matches_priority_flood_oracle(spark):
     elev[5, 25] = 0.5          # single-cell pit
 
     expected = priority_flood_fill(elev, eps=1e-5)
-    grid = spark.createDataFrame(
-        [(r, c, float(elev[r, c])) for r in range(h) for c in range(w)],
-        "row int, col int, elev double",
-    )
-    got = {(r.row, r.col): r.elev for r in condition_dem(grid, (8, 8), eps=1e-5).collect()}
+    got = {(r.row, r.col): r.elev for r in condition_dem(_grid(spark, elev), eps=1e-5).collect()}
     for (r, c), e in np.ndenumerate(expected):
         assert np.isclose(got[(r, c)], e, rtol=0, atol=1e-12), (r, c, got[(r, c)], e)
 
 
-def test_condition_dem_negative_coordinates(spark):
+def test_condition_dem_negative_coordinates(spark, monkeypatch):
     """Grids with negative row/col (tile keys are floor-based, edge masks
     pmod-based): same fill as the coordinate-shifted numpy oracle — plain
     Java % would stop negative-index tiles from exporting halos."""
     from asf_tools_spark.core.dem import priority_flood_fill
-    from asf_tools_spark.operators.hand import condition_dem
 
+    monkeypatch.setattr(hand, "TILE_SHAPE", (8, 8))
     rng = np.random.default_rng(13)
     h, w = 24, 24
     elev = rng.uniform(10, 20, (h, w))
     elev[9:12, 9:12] = 1.0
     expected = priority_flood_fill(elev, eps=1e-5)
     off = -16  # tiles at indices -2..0 with 8x8 tiles
-    grid = spark.createDataFrame(
-        [(r + off, c + off, float(elev[r, c])) for r in range(h) for c in range(w)],
-        "row int, col int, elev double",
-    )
     got = {(r.row - off, r.col - off): r.elev
-           for r in condition_dem(grid, (8, 8), eps=1e-5).collect()}
+           for r in condition_dem(_grid(spark, elev, (off, off)), eps=1e-5).collect()}
     for (r, c), e in np.ndenumerate(expected):
         assert np.isclose(got[(r, c)], e, rtol=0, atol=1e-12), (r, c)
 
 
-def test_conditioned_dem_has_no_interior_sinks(spark):
+def test_conditioned_dem_has_no_interior_sinks(spark, monkeypatch):
     """After conditioning, every non-border cell has a strictly lower
     neighbor (the +eps ramp) — the pit and the flat both drain."""
-    from asf_tools_spark.operators.hand import condition_dem
-
+    monkeypatch.setattr(hand, "TILE_SHAPE", (8, 8))
     rng = np.random.default_rng(3)
     h, w = 24, 24
     elev = rng.uniform(10, 20, (h, w))
     elev[8:12, 8:12] = 2.0
     elev[15:18, 3:9] = 12.0  # flat
-    grid = spark.createDataFrame(
-        [(r, c, float(elev[r, c])) for r in range(h) for c in range(w)],
-        "row int, col int, elev double",
-    )
-    flow = flow_direction(condition_dem(grid, (8, 8)))
+    flow = flow_direction(condition_dem(_grid(spark, elev)))
     sinks = [
         (r.row, r.col)
         for r in flow.collect()
@@ -236,11 +310,7 @@ def test_calculate_hand_valley(spark):
     above the channel profile."""
     h, w = 10, 21
     elev = np.abs(np.arange(w) - 10)[None, :] * 5.0 + np.arange(h)[:, None][::-1] * 0.1
-    grid = spark.createDataFrame(
-        [(r, c, float(elev[r, c])) for r in range(h) for c in range(w)],
-        "row int, col int, elev double",
-    )
-    out = calculate_hand(grid, acc_threshold=15.0)
+    out = calculate_hand(_grid(spark, elev), acc_threshold=15.0)
     got = {(r.row, r.col): r.hand for r in out.collect()}
     # channel cells (col 10) with high accumulation: HAND == 0
     assert got[(9, 10)] == 0.0
@@ -251,16 +321,18 @@ def test_calculate_hand_valley(spark):
         assert v >= 0.0
 
 
-def test_condition_dem_coarse_init_round_count(spark):
+def test_condition_dem_coarse_init_round_count(spark, monkeypatch, count_jobs):
     """Hierarchical coarse pass (VERDICT r2 item 5): on a pitted 256x256 DEM
     with 16x16 tiles (16x16 tile graph, plain semi-perimeter bound = 34
-    rounds) the coarse-seeded fixpoint converges in <= 2*log2(16) + 2 = 10
-    rounds AND still matches the full-array numpy priority flood exactly."""
+    rounds) the coarse-seeded fixpoint needs only a few rounds of a few
+    jobs each (measured: 15 jobs; 96 without the coarse pass, which the
+    bound rejects) AND still matches the full-array numpy priority flood
+    exactly."""
     import pandas as pd
 
     from asf_tools_spark.core.dem import priority_flood_fill
-    from asf_tools_spark.operators.hand import condition_dem
 
+    monkeypatch.setattr(hand, "TILE_SHAPE", (16, 16))
     rng = np.random.default_rng(42)
     h, w = 256, 256
     elev = rng.uniform(10, 20, (h, w))
@@ -276,10 +348,9 @@ def test_condition_dem_coarse_init_round_count(spark):
     })
     grid = spark.createDataFrame(pdf)
 
-    stats: dict = {}
-    got_df = condition_dem(grid, (16, 16), eps=1e-5, stats=stats)
-    got = {(r.row, r.col): r.elev for r in got_df.collect()}
-    assert stats["coarse"] and stats["rounds"] <= 10, stats
+    out, jobs = count_jobs(lambda: condition_dem(grid, eps=1e-5).collect())
+    got = {(r.row, r.col): r.elev for r in out}
+    assert jobs <= 30, jobs
 
     expected = priority_flood_fill(elev, eps=1e-5)
     for (r, c) in [(35, 45), (105, 205), (185, 65), (225, 225), (130, 128), (0, 0), (255, 255), (128, 0)]:

@@ -142,7 +142,7 @@ def test_priority_flood_fixpoint_properties(seed):
     """eps=0 priority-flood satisfies the depression-fill fixpoint:
     border F == elev; interior F == max(elev, min over D8 neighbors of F);
     and F >= elev everywhere."""
-    from asf_tools_spark.core.dem import _D8, priority_flood_fill
+    from asf_tools_spark.core.dem import D8, priority_flood_fill
 
     rng = np.random.default_rng(seed)
     h, w = int(rng.integers(4, 9)), int(rng.integers(4, 9))
@@ -157,5 +157,5 @@ def test_priority_flood_fixpoint_properties(seed):
             if r in (0, h - 1) or c in (0, w - 1):
                 assert F[r, c] == elev[r, c]
             else:
-                nmin = min(F[r + dr, c + dc] for dr, dc in _D8)
+                nmin = min(F[r + dr, c + dc] for dr, dc in D8)
                 assert np.isclose(F[r, c], max(elev[r, c], nmin)), (r, c)
