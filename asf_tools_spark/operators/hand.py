@@ -18,8 +18,10 @@ grouped-map passes that run the numpy kernels of core.dem on whole tiles:
   cells, and a second tile pass folds that answer into every cell. The
   number of jobs does not depend on the length of flow paths. The driver
   sees only tile-edge cells, (2 tr + 2 tc - 4) / (tr tc) of the grid:
-  124/1024 < 1/8 at 32x32 (the next rung for larger grids is to solve
-  the edge forest by the same passes over tiles of tiles).
+  124/1024 < 1/8 at 32x32. Above ``DRIVER_MAX_EDGE_CELLS`` (a 4096x4096
+  grid's, the largest run) both steps stop their collect and raise
+  ValueError; the next rung for larger grids is to solve the edge forest
+  by the same passes over tiles of tiles.
 
 NaN elevations are nodata: no flow in or out.
 """
@@ -34,6 +36,11 @@ from ..core.dem import D8, first_marked, forest_sum, priority_flood_fill, steepe
 from .tiling import on_tile_edge, tile_key
 
 TILE_SHAPE = (32, 32)  # the tiles of every HAND step
+EPS = 1e-5  # condition_dem's fill ramp: a filled cell rises EPS above its spill
+# the most tile-edge cells flow_accumulation and compute_hand collect: a
+# 4096x4096 grid's at 32x32 tiles, the largest grid run (compute_hand in
+# 92 s at local[4] with the default 8g driver)
+DRIVER_MAX_EDGE_CELLS = 2_031_616
 
 # dropped: per-pixel convergence flag computed inside solve_tile, so a
 # round needs no join of new state against old
@@ -67,7 +74,7 @@ def _padded(pdf: pd.DataFrame, own: np.ndarray, tile_shape: tuple[int, int]):
     return rows - rows[own].min() // tr * tr + 1, cols - cols[own].min() // tc * tc + 1
 
 
-def condition_dem(grid: DataFrame, eps: float = 1e-5) -> DataFrame:
+def condition_dem(grid: DataFrame) -> DataFrame:
     """Distributed DEM conditioning: epsilon priority-flood depression
     filling, the Spark stand-in for the pysheds chain fill_pits ->
     fill_depressions -> resolve_flats
@@ -86,7 +93,7 @@ def condition_dem(grid: DataFrame, eps: float = 1e-5) -> DataFrame:
       shuffle + one Arrow-batched grouped-map, NOT one round per cell.
 
     Returns (row, col, elev) with the FILLED elevations: every interior cell
-    gains a strictly lower neighbor (the +eps ramp), so ``flow_direction``
+    gains a strictly lower neighbor (the +EPS ramp), so ``flow_direction``
     finds no spurious interior sinks and no flats. The reference likewise
     computes flowdir and HAND on the inflated DEM (calculate.py:119-129).
 
@@ -94,15 +101,15 @@ def condition_dem(grid: DataFrame, eps: float = 1e-5) -> DataFrame:
     tight upper bound on every tile-border cell, so the fixpoint is local
     cleanup: measured 2-3 rounds instead of O(tile-graph semi-perimeter).
 
-    The rounds stop when no cell's ``f`` drops by more than ``eps * 1e-6``
+    The rounds stop when no cell's ``f`` drops by more than ``EPS * 1e-6``
     (~3 orders above the measured float-resummation noise floor, 6 below
-    eps). That makes the stopping rule a tolerance: two competing spill
+    EPS). That makes the stopping rule a tolerance: two competing spill
     paths within it of each other may freeze at the higher elevation, so
     parity with a serial priority flood holds outside near-tied spill
     configurations. Raises RuntimeError if the tile-graph semi-perimeter
     bound on rounds is reached first.
     """
-    tol = eps * 1e-6
+    tol = EPS * 1e-6
     tr, tc = tile_shape = TILE_SHAPE
     ext = grid.agg(
         F.min("row").alias("r0"), F.max("row").alias("r1"),
@@ -124,7 +131,7 @@ def condition_dem(grid: DataFrame, eps: float = 1e-5) -> DataFrame:
         F.when(on_border, F.col("elev").cast("double"))
         .otherwise(F.lit(float("inf"))).alias("f"),
     )
-    state = _border_graph_seed(state, tile_shape, eps, (rmin, rmax, cmin, cmax))
+    state = _border_graph_seed(state, tile_shape, EPS, (rmin, rmax, cmin, cmax))
     state = state.localCheckpoint(eager=True)
 
     def solve_tile(key, pdf):
@@ -140,7 +147,7 @@ def condition_dem(grid: DataFrame, eps: float = 1e-5) -> DataFrame:
         e[rr, cc] = np.where(own, pdf["elev"].to_numpy(), fc[rr, cc])
         seeds = [(r, c, fc[r, c]) for r, c in zip(*np.nonzero(np.isfinite(fc)))]
         oldf = fc[rr, cc][own]
-        newf = np.minimum(priority_flood_fill(e, eps=eps, seeds=seeds)[rr, cc][own], oldf)
+        newf = np.minimum(priority_flood_fill(e, eps=EPS, seeds=seeds)[rr, cc][own], oldf)
         return pd.DataFrame({
             "row": pdf["row"][own], "col": pdf["col"][own], "elev": pdf["elev"][own],
             "f": newf, "dropped": newf < oldf - tol,
@@ -173,7 +180,7 @@ _FRONT_SCHEMA = "ar int, ac int, br int, bc int, a double, l int"
 
 
 def _tile_transfer_fronts(
-    e: np.ndarray, eps: float, bi: np.ndarray, bj: np.ndarray, max_bp: int = 8
+    e: np.ndarray, eps: float, bi: np.ndarray, bj: np.ndarray
 ):
     """Exact border-to-border transfer fronts of one tile, all sources at
     once (source-vectorized Bellman-Ford DP over hop budgets).
@@ -190,7 +197,7 @@ def _tile_transfer_fronts(
     DP: A_{k+1}(v) = min(A_k(v), max(elev_v, min_{u in N8(v)} A_k(u) + eps)),
     iterated to convergence, vectorized over all |border| sources as a 3D
     (src, rows, cols) array. Returns per (a_idx, b_idx) the breakpoint list
-    [(L, A), ...], capped at ``max_bp`` per pair (keep min-hop, min-A, and
+    [(L, A), ...], capped at 8 per pair (keep min-hop, min-A, and
     the largest interior drops — dropping points only loosens, never
     invalidates).
     """
@@ -225,6 +232,7 @@ def _tile_transfer_fronts(
         if s == t:
             continue
         fronts.setdefault((s, t), []).append((k, float(H[k, s, t])))
+    max_bp = 8
     for key, bps in fronts.items():
         if len(bps) > max_bp:
             # keep min-hop, min-A, and the largest interior drops
@@ -499,21 +507,34 @@ def _inflow(flow: DataFrame) -> pd.DataFrame:
     weighs its in-tile accumulation (>= 1). The subtree sums of the edge
     forest are then the global accumulations of the exits, exactly: the
     in-tile subtrees of a tile's exits are disjoint. A cell's inflow sums
-    the exits whose target it is."""
+    the exits whose target it is; mass sent to a cell that is not a row
+    of ``flow`` is dropped.
+
+    Raises ValueError when ``flow`` has more than ``DRIVER_MAX_EDGE_CELLS``
+    tile-edge cells; the collect stops one row past that bound."""
     empty = pd.DataFrame(columns=["row", "col", "inflow", "drain"])
-    nodes = _tile_pass(flow, empty, lambda t: t.nodes(t.acc * t.exit), _NODE_SCHEMA).toPandas()
+    nodes = _tile_pass(flow, empty, lambda t: t.nodes(t.acc * t.exit), _NODE_SCHEMA)
+    nodes = nodes.limit(DRIVER_MAX_EDGE_CELLS + 1).toPandas()
+    if len(nodes) > DRIVER_MAX_EDGE_CELLS:
+        raise ValueError(
+            f"more than DRIVER_MAX_EDGE_CELLS = {DRIVER_MAX_EDGE_CELLS} tile-edge "
+            "cells: the driver solve of flow_accumulation and compute_hand "
+            "collects every one"
+        )
     parent = _edge_forest(nodes)
     weight = nodes["val"].to_numpy(np.float64)
-    total, out = forest_sum(parent, weight), weight > 0
+    total, out = forest_sum(parent, weight), (weight > 0) & (parent >= 0)
     inflow = np.bincount(parent[out], weights=total[out], minlength=len(nodes))
-    return nodes[["row", "col"]].assign(inflow=inflow, drain=np.nan)
+    return nodes[["row", "col"]].assign(inflow=inflow, drain=np.nan)[inflow > 0]
 
 
 def flow_accumulation(flow: DataFrame) -> DataFrame:
     """Cells draining through each cell, itself included (ref pysheds
     ``accumulation``): flow (row, col, to_row, to_col) -> (row, col, acc).
     A tile pass and driver solve (``_inflow``), then a tile pass that sums
-    each tile's forest with the inflow added at its entry cells."""
+    each tile's forest with the inflow added at its entry cells. Raises
+    ValueError above ``DRIVER_MAX_EDGE_CELLS`` tile-edge cells, as does
+    ``compute_hand``."""
     flow = flow.select("row", "col", "to_row", "to_col")
     return _tile_pass(
         flow, _inflow(flow), lambda t: t.frame("acc", t.acc), "row int, col int, acc double"
@@ -537,7 +558,9 @@ def compute_hand(flow: DataFrame, acc_threshold: float = 100.0) -> DataFrame:
     nodes = _tile_pass(flow, inflow, lambda t: t.nodes(t.drains(acc_threshold)), _NODE_SCHEMA).toPandas()
     val = _f64(nodes["val"])
     hit = first_marked(_edge_forest(nodes), ~np.isnan(val))
-    drains = nodes[["row", "col"]].assign(inflow=0.0, drain=np.where(hit >= 0, val[hit], np.nan))
+    # only cells whose in-tile path finds no drainage read the solve
+    found = np.isnan(val) & (hit >= 0)
+    drains = nodes[["row", "col"]][found].assign(inflow=0.0, drain=val[hit[found]])
     table = pd.concat([inflow, drains])
 
     def hand(t: _Tile) -> pd.DataFrame:

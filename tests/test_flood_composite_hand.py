@@ -195,6 +195,11 @@ def test_flow_accumulation_log_rounds_on_chain(spark, count_jobs):
     for c in (1, 17, 500, 998):
         assert got[c] == float(c + 1)
     assert jobs <= 10, jobs
+    # HAND: cells from col 100 on have acc > 100 and are drainage
+    rows, jobs = count_jobs(lambda: compute_hand(flow_direction(grid), 100.0).collect())
+    got = {r.col: r.hand for r in rows}
+    assert all(got[c] == max(100.0 - c, 0.0) for c in range(n)), got
+    assert jobs <= 10, jobs
 
 
 def test_serpentine_path_across_tiles(spark, monkeypatch):
@@ -248,6 +253,45 @@ def test_hand_chain_degenerate_grids(spark):
         assert calculate_hand(grid).count() == n
 
 
+def test_registry_flow_queries_job_bound(spark, count_jobs):
+    """The flow_accum_grid and hand_grid registry rows (the 48x48 grid,
+    four 32x32 tiles) each launch at most 10 jobs; the pointer-doubling
+    loops they replaced launched ~49 and 80."""
+    from asf_tools_spark.queries_grid import q_flow_accum_grid, q_hand_grid
+
+    for q in (q_flow_accum_grid, q_hand_grid):
+        rows, jobs = count_jobs(lambda: q(spark, None).collect())
+        assert len(rows) == 48 * 48 and jobs <= 10, (q.__name__, jobs)
+
+
+def test_flow_passes_refuse_large_edge_forest(spark, monkeypatch):
+    """Above DRIVER_MAX_EDGE_CELLS tile-edge cells, accumulation and HAND
+    raise instead of collecting them on the driver."""
+    monkeypatch.setattr(hand, "TILE_SHAPE", (4, 4))
+    monkeypatch.setattr(hand, "DRIVER_MAX_EDGE_CELLS", 12)
+    flow = flow_direction(_grid(spark, np.arange(16.0).reshape(4, 4)))
+    assert flow_accumulation(flow).count() == 16  # 12 edge cells
+    # 4x5: the 12 of tile (0, 0) and all 4 cells of tile (0, 1)
+    flow = flow_direction(_grid(spark, np.arange(20.0).reshape(4, 5)))
+    for run in (lambda: flow_accumulation(flow), lambda: compute_hand(flow, 2.0)):
+        with pytest.raises(ValueError, match="DRIVER_MAX_EDGE_CELLS"):
+            run()
+
+
+def test_flow_passes_drop_mass_to_missing_cells(spark, monkeypatch):
+    """A flow table filtered after flow_direction: mass sent to a cell
+    that is not a row is dropped, whether the missing target lies in
+    another tile (col 8) or the same one (col 14)."""
+    monkeypatch.setattr(hand, "TILE_SHAPE", (4, 4))
+    n = 20
+    grid = spark.createDataFrame([(0, c, float(n - c)) for c in range(n)], "row int, col int, elev double")
+    flow = flow_direction(grid).where(~F.col("col").isin(8, 14))
+    got = {r.col: r.acc for r in flow_accumulation(flow).collect()}
+    want = {c: float(c + 1 if c < 8 else c - 8 if c < 14 else c - 14) for c in range(n) if c not in (8, 14)}
+    assert got == want
+    assert compute_hand(flow, 3.0).count() == n - 2
+
+
 def test_condition_dem_matches_priority_flood_oracle(spark, monkeypatch):
     """Distributed tiled halo-merge fill == full-array numpy priority-flood
     on a pitted, flat-riddled synthetic DEM (tiles 8x8 -> real halo merges
@@ -262,8 +306,8 @@ def test_condition_dem_matches_priority_flood_oracle(spark, monkeypatch):
     elev[20:23, 5:12] = 15.0   # perfectly flat shelf
     elev[5, 25] = 0.5          # single-cell pit
 
-    expected = priority_flood_fill(elev, eps=1e-5)
-    got = {(r.row, r.col): r.elev for r in condition_dem(_grid(spark, elev), eps=1e-5).collect()}
+    expected = priority_flood_fill(elev, eps=hand.EPS)
+    got = {(r.row, r.col): r.elev for r in condition_dem(_grid(spark, elev)).collect()}
     for (r, c), e in np.ndenumerate(expected):
         assert np.isclose(got[(r, c)], e, rtol=0, atol=1e-12), (r, c, got[(r, c)], e)
 
@@ -279,17 +323,17 @@ def test_condition_dem_negative_coordinates(spark, monkeypatch):
     h, w = 24, 24
     elev = rng.uniform(10, 20, (h, w))
     elev[9:12, 9:12] = 1.0
-    expected = priority_flood_fill(elev, eps=1e-5)
+    expected = priority_flood_fill(elev, eps=hand.EPS)
     off = -16  # tiles at indices -2..0 with 8x8 tiles
     got = {(r.row - off, r.col - off): r.elev
-           for r in condition_dem(_grid(spark, elev, (off, off)), eps=1e-5).collect()}
+           for r in condition_dem(_grid(spark, elev, (off, off))).collect()}
     for (r, c), e in np.ndenumerate(expected):
         assert np.isclose(got[(r, c)], e, rtol=0, atol=1e-12), (r, c)
 
 
 def test_conditioned_dem_has_no_interior_sinks(spark, monkeypatch):
     """After conditioning, every non-border cell has a strictly lower
-    neighbor (the +eps ramp) — the pit and the flat both drain."""
+    neighbor (the +EPS ramp) — the pit and the flat both drain."""
     monkeypatch.setattr(hand, "TILE_SHAPE", (8, 8))
     rng = np.random.default_rng(3)
     h, w = 24, 24
@@ -348,11 +392,11 @@ def test_condition_dem_coarse_init_round_count(spark, monkeypatch, count_jobs):
     })
     grid = spark.createDataFrame(pdf)
 
-    out, jobs = count_jobs(lambda: condition_dem(grid, eps=1e-5).collect())
+    out, jobs = count_jobs(lambda: condition_dem(grid).collect())
     got = {(r.row, r.col): r.elev for r in out}
     assert jobs <= 30, jobs
 
-    expected = priority_flood_fill(elev, eps=1e-5)
+    expected = priority_flood_fill(elev, eps=hand.EPS)
     for (r, c) in [(35, 45), (105, 205), (185, 65), (225, 225), (130, 128), (0, 0), (255, 255), (128, 0)]:
         assert np.isclose(got[(r, c)], expected[r, c], rtol=0, atol=1e-12), (r, c)
     # full-array check (cheap: dict lookups)
