@@ -84,10 +84,13 @@ def slope_magnitude_col(grid: DataFrame, value_col: str = "value",
                         pixel_size: float = 30.0, out: str = "slope") -> DataFrame:
     """np.gradient-along-rows slope in degrees (ref water_map.py:93-97,
     including the |d/drow|-only quirk — see core.fuzzy) as window lead/lag
-    partitioned by column: central differences inside, one-sided at edges."""
+    partitioned by column: central differences inside, one-sided at edges.
+    lag/lead are bound to columns first: each use of a windowed Column in
+    the CASE chain would otherwise be its own window expression."""
     w = Window.partitionBy("col").orderBy("row")
     v = F.col(value_col)
-    prev, nxt = F.lag(v).over(w), F.lead(v).over(w)
+    grid = grid.withColumns({"_prev": F.lag(v).over(w), "_nxt": F.lead(v).over(w)})
+    prev, nxt = F.col("_prev"), F.col("_nxt")
     dx = (
         F.when(prev.isNull() & nxt.isNull(), F.lit(0.0))
         .when(prev.isNull(), nxt - v)
@@ -95,7 +98,7 @@ def slope_magnitude_col(grid: DataFrame, value_col: str = "value",
         .otherwise((nxt - prev) / 2.0)
     )
     mag = F.abs(dx) / F.lit(pixel_size)
-    return grid.withColumn(out, F.atan(mag) / float(np.pi) * 180.0)
+    return grid.withColumn(out, F.atan(mag) / float(np.pi) * 180.0).drop("_prev", "_nxt")
 
 
 def horn_derivatives(

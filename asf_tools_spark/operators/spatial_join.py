@@ -9,8 +9,10 @@ lookups (ref: generate_worldcover_tiles.py:143-188, J5):
    (driver-side, layers are small) -> ``broadcast`` DataFrame;
 2. probe side: pages carry ``cell_id`` (pure JVM expression);
 3. equi-join on cell_id (BroadcastHashJoin — no shuffle of the big side);
-4. exact refine: vectorized crossing-number point-in-polygon in an
-   Arrow-batched pandas UDF (only rows that survived the cell filter).
+4. exact refine. Boxes: every cover cell carries its box bounds and the
+   inclusive box test is the join condition, so each page is probed once.
+   Rings: vectorized crossing-number point-in-polygon in an Arrow-batched
+   pandas UDF (only rows that survived the cell filter).
 
 At 10^12 rows the only wide exchange is the optional final aggregate, which
 is salted (``salted_count``) because hotspot mega-cells would otherwise pin
@@ -27,16 +29,28 @@ from pyspark.sql.types import BooleanType
 from ..core import cells, geometry
 
 
+_BOUNDS = ("min_lat", "min_lon", "max_lat", "max_lon")
+
+
 def polygon_cover_df(spark, polygons: list[dict], res: int) -> DataFrame:
-    """(poly_id, cell_id) covering pairs — the broadcast build side."""
-    rows = []
-    for p in polygons:
-        if "ring" in p:
-            cover = geometry.polygon_cover_cells(p["ring"], res)
-        else:
-            cover = cells.cover_bbox(p["min_lat"], p["min_lon"], p["max_lat"], p["max_lon"], res)
-        rows.extend((int(p["poly_id"]), int(c)) for c in cover)
-    return spark.createDataFrame(rows, "poly_id int, cell_id long")
+    """The broadcast build side: one row per covering cell of each polygon.
+
+    Rings give (poly_id, cell_id). Boxes give (poly_id, cell_id, min_lat,
+    min_lon, max_lat, max_lon): each cover cell carries its box's bounds,
+    so the join itself can apply the exact box test."""
+    if "ring" in polygons[0]:
+        rows = [
+            (int(p["poly_id"]), int(c))
+            for p in polygons for c in geometry.polygon_cover_cells(p["ring"], res)
+        ]
+        return spark.createDataFrame(rows, "poly_id int, cell_id long")
+    rows = [
+        (int(p["poly_id"]), int(c), *(float(p[b]) for b in _BOUNDS))
+        for p in polygons for c in cells.cover_bbox(*(p[b] for b in _BOUNDS), res)
+    ]
+    return spark.createDataFrame(
+        rows, "poly_id int, cell_id long, " + ", ".join(f"{b} double" for b in _BOUNDS)
+    )
 
 
 def _pip_udf(polygons: list[dict]):
@@ -63,35 +77,29 @@ def spatial_join_polygons(
 ) -> DataFrame:
     """pages x polygon-layer join (J2 generalized): one output row per
     (page, containing polygon). ``how='left_semi'`` reproduces the boolean
-    existence test of ref vector.py:15-19 (J1)."""
+    existence test of ref vector.py:15-19 (J1).
+
+    Boxes: one BroadcastHashJoin on cell_id against the cover cells, each
+    carrying its box bounds; the inclusive box test is the join condition.
+    Output: poly_id, cell_id, then the other page columns. Rings: the cover
+    join, then the point-in-polygon UDF; output: cell_id, the other page
+    columns, poly_id."""
     spark = pages.sparkSession
     cover = F.broadcast(polygon_cover_df(spark, polygons, res))
-    candidates = pages.join(cover, "cell_id", "inner")
     if "ring" in polygons[0]:
-        refined = candidates.where(_pip_udf(polygons)(F.col("lat"), F.col("lon"), F.col("poly_id")))
-    else:
-        boxes = {int(p["poly_id"]): p for p in polygons}
-        cond = None
-        # boxes are SQL-expressible: refine stays JVM-side via a broadcast
-        # join against the box bounds instead of a Python UDF
-        bounds = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (int(p["poly_id"]), p["min_lat"], p["min_lon"], p["max_lat"], p["max_lon"])
-                    for p in boxes.values()
-                ],
-                "poly_id int, min_lat double, min_lon double, max_lat double, max_lon double",
-            )
+        refined = pages.join(cover, "cell_id", "inner").where(
+            _pip_udf(polygons)(F.col("lat"), F.col("lon"), F.col("poly_id"))
         )
-        refined = (
-            candidates.join(bounds, "poly_id", "inner")
-            .where(
-                (F.col("lat") >= F.col("min_lat"))
-                & (F.col("lat") <= F.col("max_lat"))
-                & (F.col("lon") >= F.col("min_lon"))
-                & (F.col("lon") <= F.col("max_lon"))
-            )
-            .drop("min_lat", "min_lon", "max_lat", "max_lon")
+    else:
+        # boxes are SQL-expressible: the inclusive box test is the condition
+        # of the cell_id BroadcastHashJoin, so each page is probed once and
+        # the refine stays JVM-side
+        in_box = (
+            (F.col("lat") >= F.col("min_lat")) & (F.col("lat") <= F.col("max_lat"))
+            & (F.col("lon") >= F.col("min_lon")) & (F.col("lon") <= F.col("max_lon"))
+        )
+        refined = pages.join(cover, (pages["cell_id"] == cover["cell_id"]) & in_box, "inner").select(
+            cover["poly_id"], pages["cell_id"], *[pages[c] for c in pages.columns if c != "cell_id"]
         )
     if how == "left_semi":
         return pages.join(refined.select("cell_id", "lat", "lon").distinct(), ["cell_id", "lat", "lon"], "left_semi")

@@ -49,6 +49,20 @@ def cell_sql(lat_expr: str, lon_expr: str, res: int) -> str:
     return cells.morton_cell_sql(lat_expr, lon_expr, res)
 
 
+def _never_null(expr: str) -> str:
+    """``COALESCE(expr, 0.0)`` for a geotag coordinate that is never NULL.
+
+    The hashes are in [0, 2^32) and every divisor is a non-zero constant,
+    but Spark types ``%`` and ``/`` as nullable (even under ANSI, and an
+    exhaustive ``ELSE`` does not help). A nullable lat/lon lets any
+    predicate on them (a box test, a join condition) infer
+    ``isnotnull(lat)`` and push it below the staged hash projections, so
+    every row evaluates the md5/xxhash chain twice. The COALESCE types the
+    column non-nullable; its fallback is never taken, so values are
+    unchanged on both engines."""
+    return f"COALESCE({expr}, {dbl(0.0)})"
+
+
 def geotag_lat_from_hashes_sql() -> str:
     """Latitude CASE over pre-computed hash columns _ha/_hb/_hc."""
     hotspot_case = " ".join(
@@ -56,16 +70,21 @@ def geotag_lat_from_hashes_sql() -> str:
     )
     jitter = f"(_hc % 1000) / {dbl(1000.0)} - {dbl(0.5)}"
     uniform = f"(_hc % 1700000) / {dbl(10000.0)} - {dbl(85.0)}"
-    return f"CASE WHEN _ha % 100 < {HOTSPOT_PCT} THEN (CASE {hotspot_case} END) + {jitter} ELSE {uniform} END"
+    return _never_null(
+        f"CASE WHEN _ha % 100 < {HOTSPOT_PCT} THEN (CASE {hotspot_case} END) + {jitter} ELSE {uniform} END"
+    )
 
 
 def geotag_lon_from_hashes_sql() -> str:
+    """Longitude CASE over pre-computed hash columns _ha/_hb/_hd."""
     hotspot_case = " ".join(
         f"WHEN _hb % 5 = {i} THEN {dbl(lon)}" for i, (_lat, lon) in enumerate(HOTSPOTS)
     )
     jitter = f"(_hd % 1000) / {dbl(1000.0)} - {dbl(0.5)}"
     uniform = f"(_hd % 3500000) / {dbl(10000.0)} - {dbl(175.0)}"
-    return f"CASE WHEN _ha % 100 < {HOTSPOT_PCT} THEN (CASE {hotspot_case} END) + {jitter} ELSE {uniform} END"
+    return _never_null(
+        f"CASE WHEN _ha % 100 < {HOTSPOT_PCT} THEN (CASE {hotspot_case} END) + {jitter} ELSE {uniform} END"
+    )
 
 
 def geotagged_documents_sql(res: int, dialect: str, table: str = "documents") -> str:

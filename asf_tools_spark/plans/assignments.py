@@ -7,10 +7,11 @@ tile assignment -> per-tile HAND statistics -> candidate selection
 instead of a raster.
 
 Plan shape (see tests/test_explain.py for the physical-plan assertions):
-scan (columns pruned to what's used) -> JVM cell encode -> broadcast join
-with the polygon-cover build side -> salted partial/final aggregate ->
-candidate filter. No wide exchange of the page table other than the final
-per-(poly,cell) aggregate.
+scan (columns pruned to what's used) -> geotag hashes, once per page ->
+JVM cell encode -> ONE BroadcastHashJoin on cell_id against the box cover
+cells, with the inclusive box test as its join condition (one broadcast)
+-> salted partial/final aggregate -> candidate filter. No wide exchange of
+the page table other than the final per-(poly,cell) aggregate.
 """
 
 from __future__ import annotations

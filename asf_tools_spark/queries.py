@@ -367,11 +367,12 @@ def q_flood_depth_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10/flood estimators (ref flood_map.py:165-180): per-polygon numpy
     (mean + 3*std) and logstat (exp of log-domain stats) water heights.
 
-    Join plan: cover-cell equi-join + bbox refine (spatial_join_polygons) —
-    a BroadcastHashJoin on cell_id, NOT a range-predicate
-    BroadcastNestedLoopJoin: the nested loop scans every page against every
-    box and goes cartesian at 100x polygons. Same rows (a page inside a box
-    always carries a cover cell of that box; the refine drops the rest).
+    Join plan: one cover-cell equi-join carrying the bbox test as its
+    condition (spatial_join_polygons) — a BroadcastHashJoin on cell_id, NOT
+    a range-predicate BroadcastNestedLoopJoin: the nested loop scans every
+    page against every box and goes cartesian at 100x polygons. Same rows
+    (a page inside a box always carries a cover cell of that box; the join
+    condition drops the rest).
     """
     from .operators.spatial_join import spatial_join_polygons
 

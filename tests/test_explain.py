@@ -6,6 +6,8 @@ paths stay JVM-side (no Python eval in the headline pipeline), and the
 salted aggregate is a two-phase partial/final shape.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +16,10 @@ def plan_of(df, mode: str = "formatted") -> str:
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     )
+
+
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -52,6 +58,50 @@ def test_tile_assignments_broadcasts_and_stays_jvm(spark, sf_dir):
     assert "SortMergeJoin" not in plan, "page side must not shuffle for the join"
     for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         assert marker not in plan, f"hot path fell off the JVM: {marker}"
+
+
+def test_box_join_one_probe_one_hash_chain(spark, sf_dir):
+    """The box spatial join is ONE broadcast probe: the box test is the
+    condition of the cell_id BroadcastHashJoin (one BroadcastExchange), and
+    the geotag hash chain runs once per page. A nullable lat/lon would let
+    the box test infer isnotnull(lat) below the geotag projections and
+    evaluate every hash twice (salt ``geo-a`` would appear again)."""
+    from asf_tools_spark.plans.assignments import tile_assignments
+    from asf_tools_spark.queries import q_tile_assignments
+    from asf_tools_spark.sources.pages import synth_pages
+    from asf_tools_spark.sources.polygons import watershed_boxes
+
+    for df in (
+        tile_assignments(synth_pages(spark, 1000), watershed_boxes(), res=8),
+        q_tile_assignments(spark, sf_dir),
+    ):
+        plan = executed_plan(df)
+        assert plan.count("geo-a") == 1, plan
+        assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_tile_assignments_job_bound(spark, count_jobs):
+    """One execution of the flagship plan: at most 4 jobs (5 with a second
+    broadcast join for the box refine)."""
+    from asf_tools_spark.plans.assignments import tile_assignments
+    from asf_tools_spark.sources.pages import synth_pages
+    from asf_tools_spark.sources.polygons import watershed_boxes
+
+    df = tile_assignments(synth_pages(spark, 100_000), watershed_boxes(), res=8)
+    rows, jobs = count_jobs(df.collect)
+    assert rows
+    assert jobs <= 4, jobs
+
+
+def test_slope_window_computes_lag_lead_once(spark):
+    """The slope stencil's Window evaluates one lag and one lead, however
+    often the CASE chain reads them."""
+    from asf_tools_spark.operators.fuzzy_ops import slope_magnitude_col
+
+    grid = spark.range(100).selectExpr("id % 10 AS row", "id div 10 AS col", "CAST(id AS DOUBLE) AS value")
+    windows = [ln for ln in executed_plan(slope_magnitude_col(grid)).splitlines() if "Window [" in ln]
+    assert len(windows) == 1, windows
+    assert len(re.findall(r"\b(?:lag|lead)\(", windows[0])) == 2, windows[0]
 
 
 def test_salted_agg_is_two_phase(spark, sf_dir):

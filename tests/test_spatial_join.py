@@ -70,6 +70,78 @@ def test_spatial_join_boxes_semi(spark):
     assert semi.count() == inner.select("lat", "lon", "cell_id").distinct().count()
 
 
+def _edge_case_pages(spark):
+    """Pages around four boxes: random points plus points exactly on every
+    corner and edge midpoint of every box."""
+    from asf_tools_spark.functions.spatial import with_cell_col
+
+    boxes = [
+        {"poly_id": 1, "min_lat": 10.0, "min_lon": 10.0, "max_lat": 12.0, "max_lon": 12.0},
+        # overlaps box 1 on [11, 12] x [11, 12]
+        {"poly_id": 2, "min_lat": 11.0, "min_lon": 11.0, "max_lat": 13.0, "max_lon": 13.5},
+        # boxes 3 and 4 are disjoint but lie in the same res-8 cell
+        {"poly_id": 3, "min_lat": 20.05, "min_lon": 20.05, "max_lat": 20.15, "max_lon": 20.15},
+        {"poly_id": 4, "min_lat": 20.25, "min_lon": 20.25, "max_lat": 20.35, "max_lon": 20.35},
+    ]
+    rng = np.random.default_rng(7)
+    pts = [(float(a), float(b)) for a, b in rng.uniform(9.0, 14.0, (3000, 2))]
+    pts += [(float(a), float(b)) for a, b in rng.uniform(19.9, 20.5, (1000, 2))]
+    for b in boxes:
+        lat_mid = (b["min_lat"] + b["max_lat"]) / 2
+        lon_mid = (b["min_lon"] + b["max_lon"]) / 2
+        for la in (b["min_lat"], lat_mid, b["max_lat"]):
+            for lo in (b["min_lon"], lon_mid, b["max_lon"]):
+                pts.append((la, lo))
+    rows = [(f"u{i}", la, lo, float(i)) for i, (la, lo) in enumerate(pts)]
+    pages = spark.createDataFrame(rows, "url string, lat double, lon double, value double")
+    return with_cell_col(pages, "lat", "lon", 8, "cell_id"), boxes
+
+
+def test_spatial_join_boxes_equals_bruteforce(spark):
+    """The box branch (one cell_id join carrying the box test) returns
+    exactly the rows of a brute-force inclusive box filter over every
+    (page, box) pair, with columns poly_id, cell_id, then the page columns."""
+    pages, boxes = _edge_case_pages(spark)
+    pages = pages.persist()
+    covers = [set(cells.cover_bbox(b["min_lat"], b["min_lon"], b["max_lat"], b["max_lon"], 8).tolist())
+              for b in boxes]
+    assert covers[2] & covers[3], "boxes 3 and 4 must share a cover cell"
+
+    joined = spatial_join_polygons(pages, boxes, res=8)
+    assert joined.columns == ["poly_id", "cell_id", "url", "lat", "lon", "value"]
+
+    bounds = spark.createDataFrame(
+        [(b["poly_id"], b["min_lat"], b["min_lon"], b["max_lat"], b["max_lon"]) for b in boxes],
+        "poly_id int, b_lat0 double, b_lon0 double, b_lat1 double, b_lon1 double",
+    )
+    brute = pages.crossJoin(bounds).where(
+        (F.col("lat") >= F.col("b_lat0")) & (F.col("lat") <= F.col("b_lat1"))
+        & (F.col("lon") >= F.col("b_lon0")) & (F.col("lon") <= F.col("b_lon1"))
+    ).select(*joined.columns)
+    got = sorted(tuple(r) for r in joined.collect())
+    assert got == sorted(tuple(r) for r in brute.collect())
+
+    pairs = {(r[2], r[0]) for r in got}
+    by_url = {}
+    for url, pid in pairs:
+        by_url.setdefault(url, set()).add(pid)
+    assert any(v == {1, 2} for v in by_url.values()), "overlap must give two rows"
+    # pages exactly on a bound are inside: every corner of every box
+    for b in boxes:
+        for la in (b["min_lat"], b["max_lat"]):
+            for lo in (b["min_lon"], b["max_lon"]):
+                on = pages.where((F.col("lat") == la) & (F.col("lon") == lo)).select("url").collect()
+                assert on and all((r.url, b["poly_id"]) in pairs for r in on)
+    assert {pid for _u, pid in pairs} == {1, 2, 3, 4}
+
+    semi = spatial_join_polygons(pages, boxes, res=8, how="left_semi")
+    assert sorted(semi.columns) == sorted(pages.columns)
+    semi_urls = [r.url for r in semi.select("url").collect()]
+    assert len(semi_urls) == len(set(semi_urls))
+    assert set(semi_urls) == {url for url, _pid in pairs}
+    pages.unpersist()
+
+
 def test_knn_exactness_within_ring(spark):
     pages = synth_pages(spark, 3000, cell_res=8)
     targets = [
