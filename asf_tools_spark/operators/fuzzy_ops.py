@@ -29,10 +29,12 @@ def _zmf(x: float, a: float, b: float) -> float:
 
 
 def _double_array(values: list[float]) -> Column:
-    """A literal array<double> built from ONE SQL expression — a single
-    py4j call however long the list (``F.lit(list)`` costs one per element).
-    ``repr`` round-trips every finite double exactly."""
-    return F.expr("array(" + ", ".join(f"{v!r}D" for v in values) + ")")
+    """A literal array<double> as one string literal split and cast: three
+    expression nodes however long the list, which the optimizer folds to
+    one literal (``array(v1, v2, ...)`` costs the analyzer a node per
+    element, ``F.lit(list)`` a py4j call per element). ``repr`` round-trips
+    every finite double exactly, and the cast parses it back exactly."""
+    return F.split(F.lit(",".join(repr(v) for v in values)), ",").cast("array<double>")
 
 
 def interp_membership_col(

@@ -3,8 +3,9 @@
 Spark re-expression of the tile-stack math in ref water_map.py:
 - ``hand_tile_stats``        (A3, ref water_map.py:43-59)
 - ``backscatter_tile_stats`` (A1/A2, ref water_map.py:34-40,62-68)
-- ``em_thresholds_for_tiles`` (grouped-map EM, ref water_map.py:84-90 +
-  threshold.py:40-133 via core.em)
+- ``select_tiles``           (both selections from one stats collect)
+- ``determine_em_threshold_distributed`` (ref water_map.py:84-90 +
+  threshold.py:40-133 via core.em, fitted on the driver)
 
 Grids are long-form DataFrames ``(tile_id,row,col,value,valid)`` (see
 core.tiles.grid_to_long). Tile ids are derived keys — tiling moves no data;
@@ -16,7 +17,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..core import tiles as core_tiles
 from ..core.em import em_threshold
@@ -72,16 +72,52 @@ def hand_tile_stats(grid: DataFrame, hand_threshold: float, tile_pixels: int) ->
 DRIVER_EXACT_MAX_TILES = 100_000
 
 
+def _hand_selection(stats: list, hand_fraction: float) -> np.ndarray:
+    """Exact driver-side selection over collected ``hand_tile_stats`` rows."""
+    stats = sorted(stats, key=lambda r: r.tile_id)
+    tile_ids = np.array([r.tile_id for r in stats])
+    fracs = np.array([r.low_frac for r in stats])
+    all_zero = not any(r.any_nonzero for r in stats)
+    return select_hand_tiles_from_stats(tile_ids, fracs, all_zero, hand_fraction)
+
+
+def _backscatter_selection(stats: list, hand_candidates: np.ndarray, n_tiles: int) -> np.ndarray:
+    """Exact driver-side ladder over collected ``backscatter_tile_stats``
+    rows; a tile with no row keeps NaN std and a masked median."""
+    sub_std = np.full(n_tiles, np.nan)
+    medians = np.ma.masked_all(n_tiles)
+    for r in stats:
+        sub_std[r.tile_id] = r.sub_std if r.sub_std is not None else np.nan
+        if r.tile_median is not None:
+            medians[r.tile_id] = r.tile_median
+    return select_backscatter_tiles_from_stats(sub_std, medians, hand_candidates)
+
+
 def select_hand_tiles(grid: DataFrame, hand_threshold: float, hand_fraction: float,
                       tile_pixels: int, n_tiles: int | None = None) -> np.ndarray:
     """Distributed stats + exact driver-side selection (one row per tile).
     Above DRIVER_EXACT_MAX_TILES callers should switch to
     ``hand_candidate_tiles_df`` and keep the candidate set distributed."""
-    stats = hand_tile_stats(grid, hand_threshold, tile_pixels).orderBy("tile_id").collect()
-    tile_ids = np.array([r.tile_id for r in stats])
-    fracs = np.array([r.low_frac for r in stats])
-    all_zero = not any(r.any_nonzero for r in stats)
-    return select_hand_tiles_from_stats(tile_ids, fracs, all_zero, hand_fraction)
+    return _hand_selection(hand_tile_stats(grid, hand_threshold, tile_pixels).collect(), hand_fraction)
+
+
+def select_tiles(hand_grid: DataFrame, bs_grid: DataFrame, hand_threshold: float,
+                 hand_fraction: float, tile_shape: tuple[int, int], n_tiles: int) -> tuple:
+    """HAND candidates + the <=5 selected backscatter tiles, as
+    (hand_candidates, hand_candidates_df, selected). Up to
+    DRIVER_EXACT_MAX_TILES: ONE collect of the two per-tile stats tables
+    full-joined on tile_id feeds both exact ladders (the df is None).
+    Above it the candidates stay a DataFrame and only the winners are
+    collected (hand_candidates is None)."""
+    tile_pixels = tile_shape[0] * tile_shape[1]
+    bs_stats = backscatter_tile_stats(bs_grid, tile_shape)
+    if n_tiles > DRIVER_EXACT_MAX_TILES:
+        hand_df = hand_candidate_tiles_df(hand_grid, hand_threshold, hand_fraction, tile_pixels)
+        sel = backscatter_selection_df(bs_stats, hand_df).collect()
+        return None, hand_df, np.array([int(r.tile_id) for r in sel], dtype=np.int64)
+    stats = hand_tile_stats(hand_grid, hand_threshold, tile_pixels).join(bs_stats, "tile_id", "full").collect()
+    hand = _hand_selection([r for r in stats if r.low_frac is not None], hand_fraction)
+    return hand, None, _backscatter_selection(stats, hand, n_tiles)
 
 
 def hand_candidate_tiles_df(grid: DataFrame, hand_threshold: float, hand_fraction: float,
@@ -130,14 +166,8 @@ def select_backscatter_tiles(grid: DataFrame, hand_candidates: np.ndarray,
     guard: the distributed re-expression (``backscatter_selection_df``) —
     only the <=5 winning rows ever reach the driver."""
     if n_tiles <= DRIVER_EXACT_MAX_TILES:
-        stats = backscatter_tile_stats(grid, tile_shape).collect()
-        sub_std = np.full(n_tiles, np.nan)
-        medians = np.ma.masked_all(n_tiles)
-        for r in stats:
-            sub_std[r.tile_id] = r.sub_std if r.sub_std is not None else np.nan
-            if r.tile_median is not None:
-                medians[r.tile_id] = r.tile_median
-        return select_backscatter_tiles_from_stats(sub_std, medians, hand_candidates)
+        return _backscatter_selection(backscatter_tile_stats(grid, tile_shape).collect(),
+                                      hand_candidates, n_tiles)
     spark = grid.sparkSession
     hand = spark.createDataFrame(
         pd.DataFrame({"tile_id": np.asarray(hand_candidates, dtype=np.int64)})
@@ -208,51 +238,31 @@ def backscatter_selection_df(stats: DataFrame, hand: DataFrame) -> DataFrame:
     )
 
 
-_EM_SCHEMA = StructType([
-    StructField("tile_id", LongType()),
-    StructField("threshold", DoubleType()),
-])
-
-
-def em_thresholds_for_tiles(grid: DataFrame, selected: np.ndarray, scaling: float,
-                            tile_shape: tuple[int, int]) -> DataFrame:
-    """Grouped-map EM over the selected tiles. Only the <=5 selected tiles
-    reach the Python worker (semi-join prunes first — the reference's
-    'compute EM only on selected tiles' optimization, SURVEY §4), and they
-    ship as ONE group (<= 5 x tile_pixels rows): five separate groups paid
-    five Python worker round-trips for ~100 ms of numpy each."""
-    tr, tc = tile_shape
-    sel = [int(t) for t in selected]
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        tids, thrs = [], []
-        for tid, g in pdf.groupby("tile_id"):
-            vals = np.full((tr, tc), np.nan)
-            mask = np.ones((tr, tc), dtype=bool)
-            r_in = g["row"].to_numpy() % tr
-            c_in = g["col"].to_numpy() % tc
-            vals[r_in, c_in] = g["value"].to_numpy()
-            mask[r_in, c_in] = ~g["valid"].to_numpy()
-            tile = np.ma.MaskedArray(vals, mask=mask)
-            test_tile = np.ma.around(tile * scaling).astype(int)
-            tids.append(int(tid))
-            thrs.append(em_threshold(test_tile) / scaling)
-        return pd.DataFrame({"tile_id": tids, "threshold": thrs})
-
-    return (
-        grid.where(F.col("tile_id").isin(sel))
-        .groupBy(F.lit(1).alias("_all"))
-        .applyInPandas(fit, schema=_EM_SCHEMA)
-    )
-
-
 def determine_em_threshold_distributed(
     grid: DataFrame, selected: np.ndarray, scaling: float, tile_shape: tuple[int, int]
 ) -> float:
-    """Median of the 4 lowest per-tile EM thresholds
-    (ref water_map.py:84-90); the <=5 thresholds collect to the driver."""
-    rows = em_thresholds_for_tiles(grid, selected, scaling, tile_shape).collect()
-    thresholds = [r.threshold for r in rows]
+    """Median of the 4 lowest per-tile EM thresholds (ref water_map.py:84-90).
+    Only the <=5 selected tiles reach the driver (SURVEY §4): ONE Arrow
+    collect of at most 5 x tile_pixels rows, whatever the scene size, then
+    the per-tile numpy fit — a grouped-map UDF paid a shuffle and a Python
+    worker round trip for ~20 ms of numpy per tile."""
+    tr, tc = tile_shape
+    pdf = (
+        grid.where(F.col("tile_id").isin([int(t) for t in selected]))
+        .select("tile_id", "row", "col", "value", "valid")
+        .toPandas()
+    )
+    thresholds = []
+    for _, t in pdf.groupby("tile_id"):
+        vals = np.full((tr, tc), np.nan)
+        mask = np.ones((tr, tc), dtype=bool)
+        r_in = t["row"].to_numpy() % tr
+        c_in = t["col"].to_numpy() % tc
+        vals[r_in, c_in] = t["value"].to_numpy()
+        mask[r_in, c_in] = ~t["valid"].to_numpy()
+        tile = np.ma.MaskedArray(vals, mask=mask)
+        test_tile = np.ma.around(tile * scaling).astype(int)
+        thresholds.append(em_threshold(test_tile) / scaling)
     return float(np.median(np.sort(thresholds)[:4]))
 
 

@@ -91,3 +91,46 @@ def test_guard_dispatch_avoids_full_collect(spark, monkeypatch):
     monkeypatch.setattr(tiling, "select_backscatter_tiles_from_stats", _boom)
     got = tiling.select_backscatter_tiles(bs, cand, tile, n_tiles)
     assert [int(t) for t in got] == [int(t) for t in expected]
+
+
+@pytest.mark.parametrize("seed,shape", [(123, (120, 160)), (7, (120, 160)), (7, (130, 170))])
+def test_fused_selection_matches_separate(spark, monkeypatch, seed, shape):
+    """select_tiles (one collect of both stats tables) picks what
+    select_hand_tiles + select_backscatter_tiles pick, also when the scene
+    is not a whole number of tiles; above the guard it picks the same
+    tiles and keeps the candidates a DataFrame."""
+    tile = (20, 20)
+    vh, hand = _scene(seed, shape)
+    n_tiles = tiling.core_tiles.n_tiles(shape, tile)
+    hand_g = tiling.long_grid_df(spark, hand, tile, pad_value=np.nan)
+    vh_g = tiling.long_grid_df(spark, vh, tile, pad_value=0.0)
+    cand = tiling.select_hand_tiles(hand_g, 15.0, 0.8, tile[0] * tile[1])
+    sel = tiling.select_backscatter_tiles(vh_g, cand, tile, n_tiles)
+    got_cand, got_df, got_sel = tiling.select_tiles(hand_g, vh_g, 15.0, 0.8, tile, n_tiles)
+    assert got_df is None
+    assert np.array_equal(got_cand, cand)
+    assert np.array_equal(got_sel, sel)
+    if seed == 7:
+        assert sel.size == 5  # the ladder picks tiles on these scenes
+
+    monkeypatch.setattr(tiling, "DRIVER_EXACT_MAX_TILES", 1)
+    none, cand_df, dist_sel = tiling.select_tiles(hand_g, vh_g, 15.0, 0.8, tile, n_tiles)
+    assert none is None
+    assert sorted(r.tile_id for r in cand_df.collect()) == sorted(int(t) for t in cand)
+    assert np.array_equal(dist_sel, sel)
+
+
+def test_em_threshold_one_job(spark, em_tiles, count_jobs):
+    """The EM fit is one bounded collect of the selected tiles, and its
+    median equals the per-tile numpy fit exactly."""
+    from asf_tools_spark.core.em import determine_em_threshold
+
+    scaling = 8.732284197109262
+    tile = (100, 100)
+    scene = np.ma.concatenate(list(em_tiles), axis=1)  # (100, 500): tiles 0..4
+    grid = tiling.long_grid_df(spark, scene, tile).localCheckpoint(eager=True)
+    got, jobs = count_jobs(
+        lambda: tiling.determine_em_threshold_distributed(grid, np.arange(5), scaling, tile)
+    )
+    assert jobs == 1
+    assert got == determine_em_threshold(em_tiles, scaling)

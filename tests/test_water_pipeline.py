@@ -11,6 +11,7 @@ from asf_tools_spark.operators import labeling
 from asf_tools_spark.operators.labeling import label_connected
 from asf_tools_spark.operators.tiling import long_grid_df
 from asf_tools_spark.plans.water_map import make_water_map_grid
+from scripts.bench_watermap import synth_scene
 
 SHAPE = (120, 160)
 TILE = (20, 20)
@@ -94,26 +95,73 @@ def test_final_water_map_matches(mirror_result, spark_result):
     assert np.array_equal(got, exp)
 
 
-def test_failed_tile_selection_joins_stats_thread(spark, scene, monkeypatch):
-    """An error in tile selection propagates, and the hand-stats helper
-    thread that overlaps it is joined rather than left running."""
+def _scene_grids(spark, vv, vh, hand):
+    return [long_grid_df(spark, a, TILE, pad_value=p)
+            for a, p in ((vv, 0.0), (vh, 0.0), (hand, np.nan))]
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _assert_fails_cleanly(spark, grids, exc, match):
+    """The map raises ``exc``, every pool thread it started is joined and
+    every cache it made is released."""
     import threading
 
-    from asf_tools_spark.operators import tiling
-
-    def boom(*_a, **_kw):
-        raise RuntimeError("tile selection failed")
-
-    monkeypatch.setattr(tiling, "select_backscatter_tiles", boom)
-    vv, vh, hand = scene
-    grids = [long_grid_df(spark, a, TILE, pad_value=p)
-             for a, p in ((vv, 0.0), (vh, 0.0), (hand, np.nan))]
+    spark.catalog.clearCache()
     before = set(threading.enumerate())
-    with pytest.raises(RuntimeError, match="tile selection failed"):
+    with pytest.raises(exc, match=match):
         make_water_map_grid(*grids, SHAPE, tile_shape=TILE, pixel_size=30.0)
     leaked = [t.name for t in threading.enumerate()
               if t not in before and t.name.startswith("ThreadPoolExecutor")]
     assert leaked == []
+    assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("stage", ["select_tiles", "determine_em_threshold_distributed"])
+def test_failed_stage_joins_pool_threads(spark, monkeypatch, stage):
+    """An error in tile selection or in the EM fit propagates, and the
+    pool tasks that overlap it are joined rather than left running."""
+    from asf_tools_spark.operators import tiling
+
+    def boom(*_a, **_kw):
+        raise RuntimeError(f"{stage} failed")
+
+    monkeypatch.setattr(tiling, stage, boom)
+    # the bench scene's construction: unlike ``scene`` it selects
+    # backscatter tiles at this tile size, so the EM fit runs
+    vv, vh, hand = (np.ma.MaskedArray(a, mask=np.zeros(SHAPE, dtype=bool))
+                    for a in synth_scene(*SHAPE, seed=1))
+    _assert_fails_cleanly(spark, _scene_grids(spark, vv, vh, hand), RuntimeError, f"{stage} failed")
+
+
+def test_all_zero_hand_raises_reference_error(spark, scene):
+    """An all-zero HAND scene surfaces the reference's ValueError, not the
+    hand-stats task's failure on its empty (None) median."""
+    vv, vh, hand = scene
+    zero = np.ma.MaskedArray(np.zeros(SHAPE), mask=np.zeros(SHAPE, dtype=bool))
+    _assert_fails_cleanly(spark, _scene_grids(spark, vv, vh, zero), ValueError,
+                          "All pixels in scene have a HAND value of 0.0")
+
+
+def test_water_map_releases_caches(spark, scene):
+    spark.catalog.clearCache()
+    out = make_water_map_grid(*_scene_grids(spark, *scene), SHAPE, tile_shape=TILE, pixel_size=30.0)
+    assert _cache_empty(spark)
+    assert out["water_map"].count() > 0
+
+
+def test_water_map_job_bound(spark, count_jobs):
+    """Whole-map job count on the 300x400 bench scene with 50x50 tiles.
+    Pool tasks inherit the caller's job group, so helper-thread jobs are
+    counted too."""
+    shape, tile = (300, 400), (50, 50)
+    grids = [long_grid_df(spark, a, tile).localCheckpoint(eager=True) for a in synth_scene(*shape, seed=1)]
+    n, jobs = count_jobs(lambda: make_water_map_grid(*grids, shape, tile_shape=tile)["water_map"].count())
+    assert n > 0
+    assert jobs <= 47, jobs
+
 
 def test_distributed_labeling_matches_core(spark):
     """Cross-tile component merge vs single-array labeling on random flags."""
