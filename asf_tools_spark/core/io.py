@@ -7,26 +7,45 @@ bench run. One scan DataFrame per (session, path) is built and reused;
 this memoizes the PLAN handle only (an immutable logical scan), never any
 computed data, so every query still computes from the parquet inputs.
 
-Keyed by applicationId: a stopped session's Python id() can be reused by
-a fresh session, and a handle bound to a dead SparkContext must never be
-handed out (same discipline as the IVF driver-state cache).
+Parquet inputs are treated as immutable within a session: a file
+rewritten under the same path while the session lives may be served
+from the memoized scan (stale file listing). A new session reads afresh.
+
+The memos hold the handles of ONE application at a time: a stopped
+session's Python id() can be reused by a fresh session, and a handle
+bound to a dead SparkContext must never be handed out (same discipline
+as the IVF driver-state cache). When the applicationId differs from the
+one the memos were filled under, both memos are cleared, so the handles
+of stopped sessions do not accumulate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SCANS: dict[tuple[str, str], DataFrame] = {}
-_VIEWS: dict[tuple[str, str], str] = {}
+_APP: str | None = None  # the applicationId the memos below belong to
+_SCANS: dict[str, DataFrame] = {}  # parquet path -> scan
+_VIEWS: dict[str, str] = {}  # view name -> sf_dir it was registered from
+
+
+def _own(spark: SparkSession) -> None:
+    """Clear both memos if they were filled under another application."""
+    global _APP
+    app = spark.sparkContext.applicationId
+    if app != _APP:
+        _SCANS.clear()
+        _VIEWS.clear()
+        _APP = app
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The (memoized) parquet scan for ``{sf_dir}/{name}.parquet``."""
-    ck = (spark.sparkContext.applicationId, f"{sf_dir}/{name}.parquet")
-    df = _SCANS.get(ck)
+    _own(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    df = _SCANS.get(path)
     if df is None:
-        df = spark.read.parquet(ck[1])
-        _SCANS[ck] = df
+        df = spark.read.parquet(path)
+        _SCANS[path] = df
     return df
 
 
@@ -34,9 +53,9 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     """createOrReplaceTempView for each table, skipping names already
     registered from the SAME sf_dir in this session (a different sf_dir
     re-registers, so mixed-scale test sessions stay correct)."""
-    app = spark.sparkContext.applicationId
+    _own(spark)
     for n in names:
-        if _VIEWS.get((app, n)) == sf_dir:
+        if _VIEWS.get(n) == sf_dir:
             continue
         read_table(spark, sf_dir, n).createOrReplaceTempView(n)
-        _VIEWS[(app, n)] = sf_dir
+        _VIEWS[n] = sf_dir

@@ -28,57 +28,64 @@ def _zmf(x: float, a: float, b: float) -> float:
     return 0.0
 
 
-def _double_array(values: list[float]) -> Column:
-    """A literal array<double> as one string literal split and cast: three
-    expression nodes however long the list, which the optimizer folds to
-    one literal (``array(v1, v2, ...)`` costs the analyzer a node per
-    element, ``F.lit(list)`` a py4j call per element). ``repr`` round-trips
-    every finite double exactly, and the cast parses it back exactly."""
-    return F.split(F.lit(",".join(repr(v) for v in values)), ",").cast("array<double>")
+def _d(v: float) -> str:
+    """A Spark SQL double literal: ``repr`` round-trips every finite double
+    exactly, and the ``D`` suffix keeps it DOUBLE (a bare ``1.5`` parses
+    as DECIMAL)."""
+    return f"({v!r}D)"
+
+
+def _double_array(values: list[float]) -> str:
+    """A literal array<double> in SQL as one string literal split and cast:
+    three expression nodes however long the list, which the optimizer
+    folds to one literal; the cast parses each ``repr`` back exactly."""
+    return f"CAST(split('{','.join(repr(v) for v in values)}', ',') AS ARRAY<DOUBLE>)"
 
 
 def interp_membership_col(
-    x: Column, start: float, stop: float, step: float, a: float, b: float
+    x: str, start: float, stop: float, step: float, a: float, b: float
 ) -> Column:
-    """np.interp(x, arange(start, stop, step), zmf(grid, a, b)) as a
-    Catalyst table lookup (ref water_map.py:110-114 ``min_max_membership``:
-    the reference interpolates zmf sampled on a quantized grid rather than
-    evaluating the closed form — we reproduce the sampled-grid values).
+    """np.interp(x, arange(start, stop, step), zmf(grid, a, b)) over the
+    column named ``x``, as a Catalyst table lookup (ref
+    water_map.py:110-114 ``min_max_membership``: the reference
+    interpolates zmf sampled on a quantized grid rather than evaluating
+    the closed form — we reproduce the sampled-grid values).
 
     zmf is evaluated once per grid point ``g_k = start + k*step`` on the
     driver (``_zmf``, same float operations as ``zmf_col``) into two
     literal arrays: ``zmf(g_k)`` and ``zmf(g_k + step)`` — the latter, not
     ``zmf(g_{k+1})``, because the two can differ in the last bit. Each
     value then costs one bucket index and two array reads. With fewer
-    than two grid points the closed form is used.
+    than two grid points the closed form is used. The expression is one
+    SQL string, so building it is one ``F.expr`` call (a tree of Column
+    calls costs a py4j round trip per node, ~290 per membership).
 
     ``start/stop/step`` come from global min/max aggregates (tiny scalars
     collected by the driver, like the reference's array.min()/max()).
     """
     npts = len(np.arange(start, stop, step))
     if npts < 2:
-        return zmf_col(x, a, b)
+        return zmf_col(F.col(x), a, b)
     start, step, a, b = float(start), float(step), float(a), float(b)
     last = start + (npts - 1) * step
     grid = [start + k * step for k in range(npts - 1)]
     act = _double_array([_zmf(g, a, b) for g in grid])
     nxt = _double_array([_zmf(g + step, a, b) for g in grid])
-    i = F.least(
-        F.greatest(F.floor((x - F.lit(start)) / F.lit(step)), F.lit(0)), F.lit(npts - 2)
-    )
-    g_i = F.lit(start) + i.cast("double") * F.lit(step)
-    k = (i + 1).cast("int")
-    act_i = F.element_at(act, k)
-    t = (x - g_i) / F.lit(step)
-    interp = act_i + t * (F.element_at(nxt, k) - act_i)
+    x = f"`{x}`"
+    i = f"least(greatest(floor(({x} - {_d(start)}) / {_d(step)}), 0), {npts - 2})"
+    g_i = f"({_d(start)} + (CAST({i} AS DOUBLE) * {_d(step)}))"
+    k = f"CAST(({i} + 1) AS INT)"
+    act_i = f"element_at({act}, {k})"
+    t = f"(({x} - {g_i}) / {_d(step)})"
+    interp = f"({act_i} + ({t} * (element_at({nxt}, {k}) - {act_i})))"
     # NaN guard first: Spark orders NaN greater than everything (x >= last
     # would fire), numpy comparisons with NaN are all False and the pixel is
     # dropped downstream — NULL here reproduces the numpy outcome
-    return (
-        F.when(F.isnan(x), F.lit(None).cast("double"))
-        .when(x <= F.lit(start), F.lit(_zmf(start, a, b)))
-        .when(x >= F.lit(last), F.lit(_zmf(last, a, b)))
-        .otherwise(interp)
+    return F.expr(
+        f"CASE WHEN isnan({x}) THEN CAST(NULL AS DOUBLE)"
+        f" WHEN {x} <= {_d(start)} THEN {_d(_zmf(start, a, b))}"
+        f" WHEN {x} >= {_d(last)} THEN {_d(_zmf(last, a, b))}"
+        f" ELSE {interp} END"
     )
 
 

@@ -46,7 +46,6 @@ def label_connected(
     grid: DataFrame,
     flag_col: str,
     tile_shape: tuple[int, int],
-    local_max_px: int = DRIVER_EXACT_MAX_PX,
 ) -> DataFrame:
     """(row,col,<flag>) -> (row,col,label) for flagged pixels; labels
     globally merged across tile boundaries, 8-connectivity. The labeling
@@ -54,24 +53,26 @@ def label_connected(
     and callers need not align it with the engine's tile ids.
 
     Small-grid guard (the repo's near_dup_clusters/k_core discipline):
-    when the flagged set AND its bounding box fit under ``local_max_px``,
-    the pixels are collected by one job (bounded at ``local_max_px + 1``
-    rows) and labeled with the same core.labeling kernel on the driver —
-    the distributed path costs serial jobs (pandas tile labeling + eager
-    checkpoint + the boundary-edge merge), pure launch overhead below
-    cluster scale (it was ~11 s of the 25 s water-map pipeline at 300k
-    px). More rows than ``local_max_px`` or a sparse bounding box fall
-    through to the distributed path. Label ids are arbitrary but
+    when the flagged set AND its bounding box fit under
+    ``DRIVER_EXACT_MAX_PX``, the pixels are collected by one job (bounded
+    at ``DRIVER_EXACT_MAX_PX + 1`` rows) and labeled with the same
+    core.labeling kernel on the driver — the distributed path costs
+    serial jobs (pandas tile labeling + eager checkpoint + the
+    boundary-edge merge), pure launch overhead below cluster scale (it
+    was ~11 s of the 25 s water-map pipeline at 300k px). More rows than
+    the constant or a sparse bounding box fall through to the
+    distributed path. Label ids are arbitrary but
     consistent either way (module docstring); every oracle-checked
-    consumer canonicalizes to min-pixel-id components. Set
-    ``local_max_px=0`` to force the distributed path (tests do)."""
+    consumer canonicalizes to min-pixel-id components. Tests force the
+    distributed path by setting ``DRIVER_EXACT_MAX_PX`` to 0."""
     tr, tc = tile_shape
     k = tr * tc + 1
 
-    if local_max_px:
-        # one bounded collect: more than local_max_px rows means "too big"
+    max_px = DRIVER_EXACT_MAX_PX
+    if max_px:
+        # one bounded collect: more than max_px rows means "too big"
         pdf = (grid.where(F.col(flag_col)).select("row", "col")
-               .limit(local_max_px + 1).toPandas())
+               .limit(max_px + 1).toPandas())
         if pdf.empty:
             return grid.sparkSession.createDataFrame([], _LABEL_SCHEMA)
         rows = pdf["row"].to_numpy()
@@ -79,7 +80,7 @@ def label_connected(
         r0, c0 = int(rows.min()), int(cols.min())
         h, w = int(rows.max()) - r0 + 1, int(cols.max()) - c0 + 1
         # too many pixels, or a sparse bounding box: distributed path
-        if len(pdf) <= local_max_px and h * w <= max(local_max_px * 4, 8 * len(pdf)):
+        if len(pdf) <= max_px and h * w <= max(max_px * 4, 8 * len(pdf)):
             dense = np.zeros((h, w), dtype=bool)
             dense[rows - r0, cols - c0] = True
             lab = label_components(dense)

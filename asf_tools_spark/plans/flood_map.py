@@ -128,7 +128,9 @@ def make_flood_map_grid(
     (ref flood_map.py:273) never reaches the last label, silently leaving
     its depth 0 — an upstream off-by-one (labels are 1..num_labels
     inclusive), not a semantic choice, so we do not replicate it."""
-    labeled = flood_labels(water, known_water, vv_valid, tile_shape).persist()
+    # read twice (the heights and the depth join): materialized once, and
+    # a checkpoint is no cache entry that would outlive the call
+    labeled = flood_labels(water, known_water, vv_valid, tile_shape).localCheckpoint(eager=True)
     heights = estimate_water_heights(
         labeled, hand, estimator, water_level_sigma, iterative_bounds
     )

@@ -96,12 +96,12 @@ def make_water_map_grid(
         med, sd = float(limit_stats.med), float(limit_stats.sd)
         hand_limits = (med, med + 3.0 * sd + 5.0)
         # the hand and slope membership expressions need nothing else:
-        # built here (hundreds of py4j calls), off the branches' path
+        # built here, off the branches' path
         return hand_limits, {
             "h_mem": interp_membership_col(
-                F.col("hand"), float(scalars.h_lo), float(scalars.h_hi), 0.1, hand_limits[0], hand_limits[1]
+                "hand", float(scalars.h_lo), float(scalars.h_hi), 0.1, hand_limits[0], hand_limits[1]
             ),
-            "s_mem": interp_membership_col(F.col("slope"), float(scalars.s_lo), float(scalars.s_hi), 0.1, 0.0, 15.0),
+            "s_mem": interp_membership_col("slope", float(scalars.s_lo), float(scalars.s_hi), 0.1, 0.0, 15.0),
         }
 
     def g_stats(pol: str):
@@ -228,7 +228,7 @@ def _fuzzy_refinement(
     # 2-4. gaussian / hand / slope memberships (quantized-grid interp);
     # grid ranges are precomputed scalars — no extra aggregate jobs here
     px = px.join(hand_sloped.select("row", "col", "hand", "slope"), ["row", "col"], "left").withColumns({
-        "g_mem": interp_membership_col(F.col("g"), float(gstats.glo), float(gstats.ghi), 0.005, glower, gthr),
+        "g_mem": interp_membership_col("g", float(gstats.glo), float(gstats.ghi), 0.005, glower, gthr),
         **hand_mems,
     })
 

@@ -3036,6 +3036,21 @@ def q_cooccur_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _domain_link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic source-domain link graph of pagerank_domains,
+    ppr_scores and hits_scores: every doc_id % 3 == 0 doc links its
+    source to 'src' || (doc_id % 13), distinct edges."""
+    _register(spark, sf_dir, "documents")
+    return (
+        spark.table("documents").where(F.col("doc_id") % 3 == 0)
+        .select(
+            F.col("source").alias("src"),
+            F.concat(F.lit("src"), (F.col("doc_id") % 13).cast("string")).alias("dst"),
+        )
+        .distinct()
+    )
+
+
 def q_pagerank_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (10 power iterations, d=0.85, classic simplified
     formulation) over a deterministic source-domain link graph derived
@@ -3046,17 +3061,7 @@ def q_pagerank_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive term)."""
     from .operators.graph import pagerank
 
-    _register(spark, sf_dir, "documents")
-    docs = spark.table("documents")
-    edges = (
-        docs.where(F.col("doc_id") % 3 == 0)
-        .select(
-            F.col("source").alias("src"),
-            F.concat(F.lit("src"), (F.col("doc_id") % 13).cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    pr = pagerank(edges, n_iters=10, damping=0.85)
+    pr = pagerank(_domain_link_edges(spark, sf_dir), n_iters=10, damping=0.85)
     return pr.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -3064,22 +3069,13 @@ def q_ppr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank / random walk with restart (Haveliwala 2002)
     over the same domain link graph, restart mass pinned to the 'src1'
     hub — seed-set proximity scoring, the related-domain retrieval
-    primitive. Operator graph.personalized_pagerank (pagerank's plan
-    shape + seed restart vector, same small-graph guard); oracle = the
+    primitive. Operator graph.pagerank with ``seeds`` (the same power
+    iteration with the restart mass on the seeds); oracle = the
     identical 10 iterations unrolled with a seeds CTE."""
-    from .operators.graph import personalized_pagerank
+    from .operators.graph import pagerank
 
-    _register(spark, sf_dir, "documents")
-    docs = spark.table("documents")
-    edges = (
-        docs.where(F.col("doc_id") % 3 == 0)
-        .select(
-            F.col("source").alias("src"),
-            F.concat(F.lit("src"), (F.col("doc_id") % 13).cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    pr = personalized_pagerank(edges, seeds=["src1"], n_iters=10, damping=0.85)
+    pr = pagerank(_domain_link_edges(spark, sf_dir), n_iters=10, damping=0.85,
+                  seeds=["src1"])
     return pr.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -3286,17 +3282,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate the prior level per reference)."""
     from .operators.graph import hits
 
-    _register(spark, sf_dir, "documents")
-    docs = spark.table("documents")
-    edges = (
-        docs.where(F.col("doc_id") % 3 == 0)
-        .select(
-            F.col("source").alias("src"),
-            F.concat(F.lit("src"), (F.col("doc_id") % 13).cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    out = hits(edges, n_iters=8)
+    out = hits(_domain_link_edges(spark, sf_dir), n_iters=8)
     return out.select(
         "node", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
     )

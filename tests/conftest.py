@@ -76,3 +76,20 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def no_cache_leak(spark):
+    """``no_cache_leak(fn)`` clears the cache, runs ``fn()`` and asserts,
+    whether ``fn`` returns or raises, that the CacheManager is empty: all
+    that ``fn`` persisted it released. Returns ``fn()``'s result."""
+
+    def run(fn):
+        spark.catalog.clearCache()
+        try:
+            return fn()
+        finally:
+            assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), \
+                "a cache entry outlived the call"
+
+    return run

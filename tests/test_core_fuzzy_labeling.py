@@ -156,8 +156,6 @@ def _membership_ref(x, start, stop, step, a, b):
 def test_interp_membership_col_exact(spark, start, stop, step, a, b):
     """The Spark table lookup equals the sampled-grid formula bit for bit
     (==, not isclose), including NaN and both clamped ends."""
-    from pyspark.sql import functions as F
-
     from asf_tools_spark.operators.fuzzy_ops import interp_membership_col
 
     rng = np.random.default_rng(17)
@@ -168,6 +166,6 @@ def test_interp_membership_col_exact(spark, start, stop, step, a, b):
     xs += [start + k * step for k in range(0, max(npts, 1), max(npts // 7, 1))]
     df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
     got = [r.m for r in df.select(
-        "i", interp_membership_col(F.col("x"), start, stop, step, a, b).alias("m")
+        "i", interp_membership_col("x", start, stop, step, a, b).alias("m")
     ).orderBy("i").collect()]
     assert got == [_membership_ref(x, start, stop, step, a, b) for x in xs]

@@ -69,6 +69,23 @@ def test_flood_map_grid_depths(spark, hand_window, flood_window, flood_fixture_d
         assert np.isclose(r.flood_depth, expected, atol=1e-9)
 
 
+@pytest.mark.parametrize("labeling_path", ["driver", "distributed"])
+def test_flood_map_releases_caches(spark, monkeypatch, flood_window, flood_fixture_dfs,
+                                   no_cache_leak, labeling_path):
+    """The flood map leaves no cache entry behind, whichever labeling path
+    runs."""
+    from asf_tools_spark.operators import labeling
+
+    if labeling_path == "distributed":
+        monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
+    hand_g, water_px = flood_fixture_dfs
+    vv_valid = hand_g.select("row", "col", F.lit(True).alias("valid"))
+    rows = no_cache_leak(lambda: make_flood_map_grid(
+        water_px, None, vv_valid, hand_g, (16, 16), estimator="numpy"
+    ).collect())
+    assert len(rows) == int((flood_window == 1).sum())
+
+
 def test_make_composite_reference_case(spark):
     """The 2-raster offset mosaic of ref tests/test_composite.py:92-153:
     expected 3x5 weighted mosaic [[1,1,1,1,0],[1,2,1,1.5,3],[0,3,0,3,3]]."""

@@ -77,9 +77,7 @@ def test_pagerank_star_vs_uniform(spark):
     # 40 iterations: the hub/leaf0 pair oscillates early (mass bounces
     # between them each step) and needs ~30 steps to settle near the
     # fixed point h = 2.3784, l0 = 2.1716
-    got = {r.node: r.rank for r in graph.pagerank(
-        edges, n_iters=40, checkpoint_interval=10
-    ).collect()}
+    got = {r.node: r.rank for r in graph.pagerank(edges, n_iters=40).collect()}
     assert got["hub"] == pytest.approx(2.3784, abs=5e-3)
     assert got["leaf0"] == pytest.approx(2.1716, abs=5e-3)
     assert got["hub"] > got["leaf0"] > got["leaf1"]  # leaf0 gets hub's mass
@@ -121,7 +119,7 @@ def test_hits_hub_authority_structure(spark):
     assert got["h1"][1] == 0.0  # no in-edges: zero auth
 
 
-def test_hits_distributed_equals_local(spark):
+def test_hits_distributed_equals_local(spark, monkeypatch):
     import random
 
     rng = random.Random(7)
@@ -130,8 +128,8 @@ def test_hits_distributed_equals_local(spark):
         "src string, dst string",
     )
     local = {r.node: (r.hub, r.auth) for r in graph.hits(edges, n_iters=5).collect()}
-    dist = {r.node: (r.hub, r.auth)
-            for r in graph.hits(edges, n_iters=5, local_threshold=0).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    dist = {r.node: (r.hub, r.auth) for r in graph.hits(edges, n_iters=5).collect()}
     assert local.keys() == dist.keys()
     for n in local:
         assert local[n][0] == pytest.approx(dist[n][0], abs=1e-9)
@@ -156,7 +154,7 @@ def test_bfs_hops_min_distance_and_bound(spark):
     assert got2 == {"a": 0, "e": 0, "b": 1, "c": 1, "d": 2}
 
 
-def test_bfs_distributed_equals_local(spark):
+def test_bfs_distributed_equals_local(spark, monkeypatch):
     import random
 
     rng = random.Random(11)
@@ -166,8 +164,8 @@ def test_bfs_distributed_equals_local(spark):
     )
     seeds = spark.createDataFrame([("s0",), ("s7",)], "node string")
     local = {r.node: r.hops for r in graph.bfs_hops(edges, seeds, max_hops=5).collect()}
-    dist = {r.node: r.hops
-            for r in graph.bfs_hops(edges, seeds, max_hops=5, local_threshold=0).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    dist = {r.node: r.hops for r in graph.bfs_hops(edges, seeds, max_hops=5).collect()}
     assert local == dist
 
 
@@ -204,7 +202,7 @@ def test_chi2_min_df_and_top_k(spark):
     assert len(top) == 1
 
 
-def test_lpa_distributed_equals_local(spark):
+def test_lpa_distributed_equals_local(spark, monkeypatch):
     import random
 
     rng = random.Random(11)
@@ -214,8 +212,9 @@ def test_lpa_distributed_equals_local(spark):
     edges = spark.createDataFrame(sorted(sym), "src string, dst string")
     local = {r.node: r.label
              for r in graph.label_propagation(edges, n_iters=4).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
     dist = {r.node: r.label
-            for r in graph.label_propagation(edges, n_iters=4, local_threshold=0).collect()}
+            for r in graph.label_propagation(edges, n_iters=4).collect()}
     assert local == dist and len(local) > 0
 
 
@@ -232,7 +231,7 @@ def test_lpa_two_cliques_converge(spark):
     assert all(got[f"b{i}"] == "b0" for i in range(1, 4))
 
 
-def test_pagerank_distributed_equals_local(spark):
+def test_pagerank_distributed_equals_local(spark, monkeypatch):
     import random
 
     rng = random.Random(3)
@@ -241,8 +240,8 @@ def test_pagerank_distributed_equals_local(spark):
         "src string, dst string",
     )
     local = {r.node: r.rank for r in graph.pagerank(edges, n_iters=10).collect()}
-    dist = {r.node: r.rank
-            for r in graph.pagerank(edges, n_iters=10, local_threshold=0).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    dist = {r.node: r.rank for r in graph.pagerank(edges, n_iters=10).collect()}
     assert local.keys() == dist.keys()
     for n in local:
         assert local[n] == pytest.approx(dist[n], abs=1e-9)
@@ -257,7 +256,7 @@ def test_kcore_hand_case(spark):
     assert got == {"a": 2, "b": 2, "c": 2}
 
 
-def test_kcore_distributed_equals_local(spark):
+def test_kcore_distributed_equals_local(spark, monkeypatch):
     import random
 
     rng = random.Random(11)
@@ -266,17 +265,19 @@ def test_kcore_distributed_equals_local(spark):
     e = e + [(v, u) for u, v in e]
     edges = spark.createDataFrame(e, "src long, dst long").distinct()
     local = {tuple(r) for r in graph.k_core(edges, 3).collect()}
-    dist = {tuple(r) for r in graph.k_core(edges, 3, local_threshold=0).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    dist = {tuple(r) for r in graph.k_core(edges, 3).collect()}
     assert local == dist
 
 
-def test_kcore_empty_core(spark):
+def test_kcore_empty_core(spark, monkeypatch):
     # a pure cycle has max degree 2 -> k=3 peels everything
     e = [(i, (i + 1) % 10) for i in range(10)]
     e = e + [(v, u) for u, v in e]
     edges = spark.createDataFrame(e, "src long, dst long")
     assert graph.k_core(edges, 3).count() == 0
-    assert graph.k_core(edges, 3, local_threshold=0).count() == 0
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    assert graph.k_core(edges, 3).count() == 0
 
 
 def test_kcore_extra_rounds_idempotent(spark):
@@ -309,17 +310,16 @@ def test_clustering_coefficient_hand_case(spark):
     assert got["d"] == (1, 0, 0.0)
 
 
-def test_ppr_distributed_equals_local_and_seeds_dominate(spark):
+def test_ppr_distributed_equals_local_and_seeds_dominate(spark, monkeypatch):
     import random
 
     rng = random.Random(5)
     e = list({(f"s{rng.randrange(12)}", f"d{rng.randrange(8)}") for _ in range(60)})
     edges = spark.createDataFrame(e, "src string, dst string")
     seeds = ["s0", "s1"]
-    local = {r.node: r.rank
-             for r in graph.personalized_pagerank(edges, seeds).collect()}
-    dist = {r.node: r.rank
-            for r in graph.personalized_pagerank(edges, seeds, local_threshold=0).collect()}
+    local = {r.node: r.rank for r in graph.pagerank(edges, seeds=seeds).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    dist = {r.node: r.rank for r in graph.pagerank(edges, seeds=seeds).collect()}
     assert local.keys() == dist.keys()
     for n in local:
         assert local[n] == pytest.approx(dist[n], abs=1e-9)
@@ -330,9 +330,11 @@ def test_ppr_distributed_equals_local_and_seeds_dominate(spark):
     assert all(local[s] >= 0.15 * 0.5 - 1e-12 for s in seeds if s in local)
 
 
-def test_kcore_random_differential(spark):
+def test_kcore_random_differential(spark, monkeypatch):
     """k_core distributed path vs an independent python peel, 3 seeds x 2 k."""
     import random
+
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
 
     for seed in (2, 9):
         rng = random.Random(seed)
@@ -354,38 +356,85 @@ def test_kcore_random_differential(spark):
                     break
                 live -= drop
             expect = {(n, deg[n]) for n in live}
-            got = {tuple(r) for r in graph.k_core(edges, k, local_threshold=0).collect()}
+            got = {tuple(r) for r in graph.k_core(edges, k).collect()}
             assert got == expect, (seed, k)
 
 
-def test_graph_local_guards_accept_int_nodes(spark):
-    # int-keyed graphs must work through the driver-local guards (the
-    # distributed paths always did) and keep the node type on empty output
-    e = [(1, 2), (2, 3), (3, 1)]
-    e = e + [(v, u) for u, v in e]
-    edges = spark.createDataFrame(e, "src long, dst long")
-    pr = graph.pagerank(edges, n_iters=3)
-    assert pr.schema["node"].dataType.simpleString() == "bigint"
-    assert pr.count() == 3
-    ppr = graph.personalized_pagerank(edges, seeds=[1], n_iters=3)
-    assert ppr.schema["node"].dataType.simpleString() == "bigint"
-    assert {r.node for r in ppr.collect()} == {1, 2, 3}
+def test_graph_local_guards_accept_int_nodes(spark, monkeypatch):
+    # int-keyed graphs come back int-keyed on the driver-local path and
+    # the distributed one, and the local path keeps the node type on an
+    # empty output
     # empty k-core on a STRING graph keeps node:string on the local path
     se = [("a", "b"), ("b", "a")]
     sedges = spark.createDataFrame(se, "src string, dst string")
     out = graph.k_core(sedges, 3)
     assert out.count() == 0
     assert out.schema["node"].dataType.simpleString() == "string"
+    e = [(1, 2), (2, 3), (3, 1)]
+    e = e + [(v, u) for u, v in e]
+    edges = spark.createDataFrame(e, "src long, dst long")
+    weighted = edges.withColumn("w", F.lit(1.0))
+    seeds = spark.createDataFrame([(1,)], "node long")
+    for limit in (graph.DRIVER_MAX_GRAPH_EDGES, 0):
+        monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", limit)
+        outs = {
+            "pagerank": graph.pagerank(edges, n_iters=3),
+            "ppr": graph.pagerank(edges, n_iters=3, seeds=[1]),
+            "hits": graph.hits(edges, n_iters=3),
+            "bfs_hops": graph.bfs_hops(edges, seeds),
+            "shortest_paths": graph.shortest_paths(weighted, seeds),
+            "lpa": graph.label_propagation(edges, n_iters=2),
+            "k_core": graph.k_core(edges, 2),
+        }
+        for name, out in outs.items():
+            assert out.schema["node"].dataType.simpleString() == "bigint", (name, limit)
+            assert sorted(r.node for r in out.collect()) == [1, 2, 3], (name, limit)
 
 
-def test_kcore_raises_when_unconverged(spark):
+_ITERATIVE = {
+    "pagerank": lambda e, w, s: graph.pagerank(e, n_iters=3),
+    "ppr": lambda e, w, s: graph.pagerank(e, n_iters=3, seeds=["a"]),
+    "hits": lambda e, w, s: graph.hits(e, n_iters=3),
+    "bfs_hops": lambda e, w, s: graph.bfs_hops(e, s, max_hops=3),
+    "shortest_paths": lambda e, w, s: graph.shortest_paths(w, s, max_hops=3),
+    "lpa": lambda e, w, s: graph.label_propagation(e, n_iters=3),
+    "k_core": lambda e, w, s: graph.k_core(e, 2),
+}
+_ONE_PASS = {
+    "triangle_count": lambda e, w, s: graph.triangle_count(e),
+    "clustering_coefficient": lambda e, w, s: graph.clustering_coefficient(e),
+}
+
+
+@pytest.mark.parametrize("op,path", [
+    *((op, path) for op in _ITERATIVE for path in ("driver", "distributed")),
+    *((op, "one-pass") for op in _ONE_PASS),
+])
+def test_graph_operators_release_caches(spark, monkeypatch, no_cache_leak, op, path):
+    """Every graph operator leaves no cache entry behind on either path."""
+    if path == "distributed":
+        monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    e = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "b")]
+    e = e + [(v, u) for u, v in e]
+    edges = spark.createDataFrame(e, "src string, dst string")
+    weighted = edges.withColumn("w", F.lit(2.0))
+    seeds = spark.createDataFrame([("a",)], "node string")
+    run = {**_ITERATIVE, **_ONE_PASS}[op]
+    rows = no_cache_leak(lambda: run(edges, weighted, seeds).collect())
+    assert rows
+
+
+def test_kcore_raises_when_unconverged(spark, monkeypatch, no_cache_leak):
     import pytest as _pt
+
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
 
     # a 14-node path at k=2 needs ~7 peel rounds from both ends
     e = [(i, i + 1) for i in range(13)]
     e = e + [(v, u) for u, v in e]
     edges = spark.createDataFrame(e, "src long, dst long")
     with _pt.raises(RuntimeError, match="did not converge"):
-        graph.k_core(edges, 2, max_rounds=2, local_threshold=0)
+        # the raise releases the persisted edges too
+        no_cache_leak(lambda: graph.k_core(edges, 2, max_rounds=2))
     # with enough rounds the same input converges (to empty: a path has no 2-core)
-    assert graph.k_core(edges, 2, max_rounds=20, local_threshold=0).count() == 0
+    assert graph.k_core(edges, 2, max_rounds=20).count() == 0

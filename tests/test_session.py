@@ -14,7 +14,7 @@ import sys
 sys.path.insert(0, {str(REPO)!r})
 import pandas as pd
 from asf_tools_spark.session import get_spark
-from asf_tools_spark.operators.labeling import label_connected
+from asf_tools_spark.operators import labeling
 
 spark = get_spark("cwd-independence", master="local[2]", shuffle_partitions=2)
 base = spark.createDataFrame(pd.DataFrame({{
@@ -22,7 +22,8 @@ base = spark.createDataFrame(pd.DataFrame({{
     "col": pd.Series([0, 1, 2, 6], dtype="int32"),
     "flag": True,
 }}))
-out = label_connected(base, "flag", (4, 4), local_max_px=0)
+labeling.DRIVER_EXACT_MAX_PX = 0  # the distributed (pandas-UDF) path
+out = labeling.label_connected(base, "flag", (4, 4))
 print("components", out.select("label").distinct().count())
 spark.stop()
 """
@@ -74,3 +75,21 @@ def test_no_new_environment_switches():
         "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY",
         "SPARK_DRIVER_JAVA_OPTS", "SPARK_GRAFT_HASH_FAMILY",
     }
+
+
+def test_scan_memo_evicts_other_sessions(spark, tmp_path):
+    """Accessing the parquet-scan memo drops every entry of another
+    applicationId (a stopped session's handles must not accumulate)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from asf_tools_spark.core import io
+
+    pq.write_table(pa.table({"x": [1, 2]}), tmp_path / "memo_t.parquet")
+    io._APP = "app-stopped"
+    io._SCANS["elsewhere/memo_t.parquet"] = None
+    io._VIEWS["memo_t"] = "elsewhere"
+    assert io.read_table(spark, str(tmp_path), "memo_t").count() == 2
+    assert io._APP == spark.sparkContext.applicationId
+    assert list(io._SCANS) == [f"{tmp_path}/memo_t.parquet"]
+    assert io._VIEWS == {}

@@ -5,6 +5,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from asf_tools_spark.operators import graph
 from asf_tools_spark.operators.diff import scd2_history
 from asf_tools_spark.operators.graph import shortest_paths
 
@@ -41,16 +42,17 @@ def test_multi_source_and_cycle(spark):
     assert got == {"a": 0.0, "s": 0.0, "b": 1.0}
 
 
-def test_distributed_path_matches_local(spark):
+def test_distributed_path_matches_local(spark, monkeypatch):
     rows = [
         (f"v{i}", f"v{(3 * i + 1) % 23}", float(i % 4 + 1)) for i in range(23)
     ] + [
         (f"v{i}", f"v{(5 * i + 2) % 23}", float(i % 3 + 2)) for i in range(23)
     ]
     e = _edges(spark, rows).groupBy("src", "dst").agg(F.min("w").alias("w"))
-    a = {r.node: r.cost for r in
-         shortest_paths(e, _seeds(spark, "v0"), local_threshold=0).collect()}
     b = {r.node: r.cost for r in
+         shortest_paths(e, _seeds(spark, "v0")).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_GRAPH_EDGES", 0)
+    a = {r.node: r.cost for r in
          shortest_paths(e, _seeds(spark, "v0")).collect()}
     assert a == b and a["v0"] == 0.0 and len(a) > 5
 

@@ -239,11 +239,13 @@ def test_distributed_merge_stress_10k_equivalences(spark, monkeypatch):
         "row": pts[:, 0].astype("int32"), "col": pts[:, 1].astype("int32"), "flag": True
     })
     base = spark.createDataFrame(pdf)
-    # local_max_px=0 forces the distributed path (the small-grid guard
-    # would otherwise label this on the driver); DRIVER_MAX_EDGES=0 forces
-    # the distributed merge (the edge table would otherwise fit the driver)
+    # DRIVER_EXACT_MAX_PX=0 forces the distributed path (the small-grid
+    # guard would otherwise label this on the driver); DRIVER_MAX_EDGES=0
+    # forces the distributed merge (the edge table would otherwise fit the
+    # driver)
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
     monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
-    out = label_connected(base, "flag", (8, 8), local_max_px=0)
+    out = label_connected(base, "flag", (8, 8))
     got = {(r.row, r.col): r.label for r in out.collect()}
     assert len(got) == int(flag.sum())
 
@@ -290,10 +292,11 @@ def test_distributed_labeling_distributed_merge(spark, monkeypatch):
         return distributed(*args)
 
     monkeypatch.setattr(labeling, "_merge_labels_distributed", counted)
-    a = label_connected(base, "flag", (10, 10), local_max_px=0)
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
+    a = label_connected(base, "flag", (10, 10))
     assert calls == []
     monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
-    b = label_connected(base, "flag", (10, 10), local_max_px=0)
+    b = label_connected(base, "flag", (10, 10))
     assert calls == [1]
     assert _canon_partition(a) == _canon_partition(b) == local
 
@@ -311,11 +314,12 @@ def test_distributed_merge_long_u_shape(spark, monkeypatch):
     local = _canon_partition(label_connected(base, "flag", (2, 2)))
     assert len(local) == 1
     monkeypatch.setattr(labeling, "DRIVER_MAX_EDGES", 0)
-    dist = label_connected(base, "flag", (2, 2), local_max_px=0)
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
+    dist = label_connected(base, "flag", (2, 2))
     assert _canon_partition(dist) == local
 
 
-def test_labeling_local_guard_matches_distributed(spark):
+def test_labeling_local_guard_matches_distributed(spark, monkeypatch):
     """r6 small-grid guard: the driver-local labeling path must produce
     the same component PARTITION as the distributed tile+merge path
     (label ids are arbitrary-but-consistent by contract)."""
@@ -327,7 +331,8 @@ def test_labeling_local_guard_matches_distributed(spark):
     })
     base = spark.createDataFrame(pdf)
     local = label_connected(base, "flag", (8, 8))  # guard fires (n << 2M)
-    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
+    dist = label_connected(base, "flag", (8, 8))
 
     def canon(p):
         groups = {}
@@ -341,26 +346,31 @@ def test_labeling_local_guard_matches_distributed(spark):
     assert canon(pl) == canon(pd_)
 
 
-def test_labeling_local_guard_falls_through_over_limit(spark):
-    """More flagged pixels than local_max_px: the bounded collect sees
-    local_max_px + 1 rows and the distributed path labels the whole set."""
+def test_labeling_local_guard_falls_through_over_limit(spark, monkeypatch):
+    """More flagged pixels than DRIVER_EXACT_MAX_PX: the bounded collect
+    sees DRIVER_EXACT_MAX_PX + 1 rows and the distributed path labels the
+    whole set."""
     flag = np.random.default_rng(21).random((40, 40)) < 0.35
     base = _flag_frame(spark, np.argwhere(flag))
-    over = label_connected(base, "flag", (8, 8), local_max_px=int(flag.sum()) // 3)
-    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", int(flag.sum()) // 3)
+    over = label_connected(base, "flag", (8, 8))
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
+    dist = label_connected(base, "flag", (8, 8))
     assert over.count() == int(flag.sum())
     assert _canon_partition(over) == _canon_partition(dist)
 
 
-def test_labeling_local_guard_falls_through_on_sparse_bbox(spark):
+def test_labeling_local_guard_falls_through_on_sparse_bbox(spark, monkeypatch):
     """Two clusters far apart: few pixels, but a bounding box far larger
     than the guard allows, so the distributed path runs."""
     rng = np.random.default_rng(22)
     blob = np.argwhere(rng.random((12, 12)) < 0.5)
     pts = np.concatenate([blob, blob + 3000])
     base = _flag_frame(spark, pts)
-    sparse = label_connected(base, "flag", (8, 8), local_max_px=1000)
-    dist = label_connected(base, "flag", (8, 8), local_max_px=0)
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 1000)
+    sparse = label_connected(base, "flag", (8, 8))
+    monkeypatch.setattr(labeling, "DRIVER_EXACT_MAX_PX", 0)
+    dist = label_connected(base, "flag", (8, 8))
     assert sparse.count() == len(pts)
     assert _canon_partition(sparse) == _canon_partition(dist)
 
