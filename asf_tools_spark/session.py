@@ -4,6 +4,10 @@ Settings chosen for the 100 TB design point and exercised locally:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
 - Arrow transport for every pandas UDF stage
 - explicit shuffle partitioning (caller-tunable; local default = cores)
+- a generated-code cache sized to the water map's working set
+  (``STATIC_CONF``), so a repeated map reuses its compiled classes
+  instead of recompiling them; ``jobs/geo_serving_job.py`` applies it
+  too, for its repeated micro-batch plans
 """
 
 from __future__ import annotations
@@ -15,6 +19,18 @@ from pyspark.sql import SparkSession
 
 # the directory that holds the asf_tools_spark package
 _PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
+
+# Static SQL confs: read only when a session is created, so each session
+# builder that wants them (get_spark, jobs/geo_serving_job.py) applies
+# this one mapping.
+# codegen.cache.maxEntries bounds Spark's LRU of generated classes, keyed
+# on their source. One water map needs 121 classes (133 with set-up): at
+# the default of 100 each was evicted before its next use, so every map
+# re-ran ~121 Janino compiles and the JIT started over on the new classes.
+# At 256 a repeated map compiles none and a new scene 17 (plans that
+# inline scene values as literals), while the cache still bounds how many
+# dead classes a long session keeps.
+STATIC_CONF = {"spark.sql.codegen.cache.maxEntries": "256"}
 
 
 def get_spark(
@@ -74,6 +90,7 @@ def get_spark(
                 "-XX:+ExplicitGCInvokesConcurrent -XX:ReservedCodeCacheSize=1g",
             ),
         )
+        .config(map=STATIC_CONF)
         .config("spark.ui.enabled", "false")
         # Python workers import this package to run its UDFs; without this
         # they find it only when the process cwd is the repository root

@@ -37,6 +37,14 @@ def _fs_and_path(spark: SparkSession, path: str):
     return fs, hpath
 
 
+def _dir_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop-FS existence check: os.path.isdir is scheme-blind (an
+    hdfs://, s3a://, or even file:// store would read as absent forever,
+    silently disabling every cross-batch lookup of a streaming store)."""
+    fs, hpath = _fs_and_path(spark, path)
+    return fs.exists(hpath)
+
+
 def small_file_report(spark: SparkSession, table_path: str) -> list[dict]:
     """Per partition directory (or the table root for unpartitioned
     tables): file count, total bytes, average file bytes."""

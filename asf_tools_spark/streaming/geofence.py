@@ -33,8 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.geometry import pip_candidates
-from ..sources.maintenance import _fs_and_path
-from .near_dup import _dir_exists
+from ..sources.maintenance import _dir_exists, _fs_and_path
 
 
 def fence_cover_df(spark: SparkSession, polys: list[dict], res: int = 8) -> DataFrame:

@@ -47,19 +47,9 @@ from ..operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
 )
+from ..sources.maintenance import _dir_exists
 
 N_STORE_BUCKETS = 64
-
-
-def _dir_exists(spark, path: str) -> bool:
-    """Hadoop-FS existence check: os.path.isdir is scheme-blind (an
-    hdfs://, s3a://, or even file:// store would read as absent forever,
-    silently disabling every cross-batch lookup). Same FS discipline as
-    sources/maintenance.py."""
-    from ..sources.maintenance import _fs_and_path
-
-    fs, hpath = _fs_and_path(spark, path)
-    return fs.exists(hpath)
 
 
 def _with_bucket(bands: DataFrame) -> DataFrame:
@@ -97,75 +87,76 @@ class NearDupIndexer:
         new_bands = _with_bucket(
             band_rows(sigs, self.key, self.bands, self.rows_per_band)
         ).persist()
-
-        # within-batch pairs: the batch pipeline + the identical-signature
-        # rep->member pairs the candidate join collapses away
-        pairs = (
-            lsh_candidate_pairs(sigs, self.key, self.bands, self.rows_per_band)
-            .unionByName(identical_signature_edges(sigs, self.key))
-            .distinct()
-        )
-
-        # cross-batch pairs: new bands vs the accumulated store; the bucket
-        # join key prunes the partitioned store scan, batch_id < current
-        # keeps a replayed batch from joining its own already-landed bands
-        if _dir_exists(spark, self.store_dir):
-            store = spark.read.parquet(self.store_dir)
-            # schema guard first: a store from an older layout (no family/
-            # batch_id partitions) must fail with a clear rebuild message,
-            # not an unresolved-column AnalysisException mid-stream
-            missing = {"family", "batch_id"} - set(store.columns)
-            if missing:
-                raise ValueError(
-                    f"band store {self.store_dir} lacks column(s) {sorted(missing)} "
-                    "— written by a pre-family/batch_id layout; rebuild the store "
-                    "before resuming the stream"
-                )
-            # family check via partition pruning (family is a partition col:
-            # this lists directories, it does not scan the store's rows) and
-            # only until first confirmation — not a full rescan every batch
-            if not self._family_checked:
-                fams = {r.family for r in store.select("family").distinct().collect()}
-                if fams - {self.hash_family}:
-                    raise ValueError(
-                        f"band store {self.store_dir} was written under hash family "
-                        f"{sorted(fams)}, indexer is pinned to {self.hash_family!r} — "
-                        "joining across families silently yields zero candidates"
-                    )
-                self._family_checked = True
-            store = store.where(
-                (F.col("family") == self.hash_family)
-                & (F.col("batch_id") < F.lit(batch_id))
-            )
-            cross = (
-                new_bands.alias("n")
-                .join(store.alias("s"), ["band_id", "bucket", "band_val"])
-                .where(F.col(f"n.{self.key}") != F.col(f"s.{self.key}"))
-                .select(
-                    F.least(F.col(f"n.{self.key}"), F.col(f"s.{self.key}")).alias("key_a"),
-                    F.greatest(F.col(f"n.{self.key}"), F.col(f"s.{self.key}")).alias("key_b"),
-                )
+        try:
+            # within-batch pairs: the batch pipeline + the identical-signature
+            # rep->member pairs the candidate join collapses away
+            pairs = (
+                lsh_candidate_pairs(sigs, self.key, self.bands, self.rows_per_band)
+                .unionByName(identical_signature_edges(sigs, self.key))
                 .distinct()
             )
-            pairs = pairs.unionByName(cross).distinct()
 
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.pairs_dir)
-        )
-        (
-            new_bands
-            .withColumn("family", F.lit(self.hash_family))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("family", "batch_id", "band_id", "bucket")
-            .parquet(self.store_dir)
-        )
-        new_bands.unpersist()
+            # cross-batch pairs: new bands vs the accumulated store; the bucket
+            # join key prunes the partitioned store scan, batch_id < current
+            # keeps a replayed batch from joining its own already-landed bands
+            if _dir_exists(spark, self.store_dir):
+                store = spark.read.parquet(self.store_dir)
+                # schema guard first: a store from an older layout (no family/
+                # batch_id partitions) must fail with a clear rebuild message,
+                # not an unresolved-column AnalysisException mid-stream
+                missing = {"family", "batch_id"} - set(store.columns)
+                if missing:
+                    raise ValueError(
+                        f"band store {self.store_dir} lacks column(s) {sorted(missing)} "
+                        "— written by a pre-family/batch_id layout; rebuild the store "
+                        "before resuming the stream"
+                    )
+                # family check via partition pruning (family is a partition col:
+                # this lists directories, it does not scan the store's rows) and
+                # only until first confirmation — not a full rescan every batch
+                if not self._family_checked:
+                    fams = {r.family for r in store.select("family").distinct().collect()}
+                    if fams - {self.hash_family}:
+                        raise ValueError(
+                            f"band store {self.store_dir} was written under hash family "
+                            f"{sorted(fams)}, indexer is pinned to {self.hash_family!r} — "
+                            "joining across families silently yields zero candidates"
+                        )
+                    self._family_checked = True
+                store = store.where(
+                    (F.col("family") == self.hash_family)
+                    & (F.col("batch_id") < F.lit(batch_id))
+                )
+                cross = (
+                    new_bands.alias("n")
+                    .join(store.alias("s"), ["band_id", "bucket", "band_val"])
+                    .where(F.col(f"n.{self.key}") != F.col(f"s.{self.key}"))
+                    .select(
+                        F.least(F.col(f"n.{self.key}"), F.col(f"s.{self.key}")).alias("key_a"),
+                        F.greatest(F.col(f"n.{self.key}"), F.col(f"s.{self.key}")).alias("key_b"),
+                    )
+                    .distinct()
+                )
+                pairs = pairs.unionByName(cross).distinct()
+
+            (
+                pairs.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(self.pairs_dir)
+            )
+            (
+                new_bands
+                .withColumn("family", F.lit(self.hash_family))
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("family", "batch_id", "band_id", "bucket")
+                .parquet(self.store_dir)
+            )
+        finally:
+            new_bands.unpersist()
 
 
 def start_near_dup(

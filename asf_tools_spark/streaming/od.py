@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.spatial import with_cell_col
-from .near_dup import _dir_exists
+from ..sources.maintenance import _dir_exists
 
 
 class ODIndexer:

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core import cells as C
 from ..operators.tiling import pyramid_from_base
-from .near_dup import _dir_exists
+from ..sources.maintenance import _dir_exists
 
 
 class PyramidIndexer:

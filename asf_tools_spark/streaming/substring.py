@@ -46,19 +46,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..operators.substring import gram_occurrences, substring_dedup
+from ..sources.maintenance import _dir_exists
 
 N_STORE_BUCKETS = 64
-
-
-def _dir_exists(spark, path: str) -> bool:
-    """Hadoop-FS existence check: os.path.isdir is scheme-blind (an
-    hdfs://, s3a://, or even file:// store would read as absent forever,
-    silently disabling every cross-batch lookup). Same FS discipline as
-    sources/maintenance.py."""
-    from ..sources.maintenance import _fs_and_path
-
-    fs, hpath = _fs_and_path(spark, path)
-    return fs.exists(hpath)
 
 
 class SubstringDedupIndexer:

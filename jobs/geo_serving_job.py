@@ -50,6 +50,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from asf_tools_spark.session import STATIC_CONF
     from asf_tools_spark.sources.maintenance import compact_batch_store
     from asf_tools_spark.sources.polygons import (
         bbox_cover_df, polygon_edges_df, watershed_polygons,
@@ -62,7 +63,14 @@ def main() -> None:
     builder = SparkSession.builder.appName("geo-serving")
     if args.master:
         builder = builder.master(args.master)
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
+    # STATIC_CONF sizes the codegen cache: each micro-batch replays the
+    # same plans, and at Spark's default of 100 entries the two sinks'
+    # classes evicted each other, so every batch recompiled most of them
+    spark = (
+        builder.config("spark.sql.adaptive.enabled", "true")
+        .config(map=STATIC_CONF)
+        .getOrCreate()
+    )
 
     polys = watershed_polygons()
     edges = polygon_edges_df(spark, polys)

@@ -79,6 +79,23 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn)`` runs ``fn()`` and returns ``(result,
+    compiles)``, where ``compiles`` is the number of generated classes
+    Spark compiled meanwhile: the count delta of ``CodegenMetrics``'
+    compilation-time histogram. A class served from the codegen cache is
+    not compiled. The metric is JVM-wide, so nothing else may run."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn):
+        before = metric.getCount()
+        out = fn()
+        return out, metric.getCount() - before
+
+    return run
+
+
+@pytest.fixture
 def no_cache_leak(spark):
     """``no_cache_leak(fn)`` clears the cache, runs ``fn()`` and asserts,
     whether ``fn`` returns or raises, that the CacheManager is empty: all

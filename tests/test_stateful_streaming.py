@@ -177,9 +177,10 @@ def test_near_dup_indexer_idempotent_on_replay(spark, tmp_path):
     assert bands_again == bands_once  # store did not inflate
 
 
-def test_near_dup_indexer_rejects_family_mismatch(spark, tmp_path):
+def test_near_dup_indexer_rejects_family_mismatch(spark, tmp_path, no_cache_leak):
     """A band store written under one hash family must not be silently
-    joined under another (zero-candidate trap) — the indexer raises."""
+    joined under another (zero-candidate trap) — the indexer raises, and
+    releases the batch's persisted bands on the way out."""
     from asf_tools_spark.streaming.near_dup import NearDupIndexer
 
     df = spark.createDataFrame(pd.DataFrame({
@@ -188,7 +189,7 @@ def test_near_dup_indexer_rejects_family_mismatch(spark, tmp_path):
     store, pairs = str(tmp_path / "store"), str(tmp_path / "pairs")
     NearDupIndexer(store, pairs, key="url", hash_family="md5")(df, 0)
     with pytest.raises(ValueError, match="hash family"):
-        NearDupIndexer(store, pairs, key="url", hash_family="xxhash64")(df, 1)
+        no_cache_leak(lambda: NearDupIndexer(store, pairs, key="url", hash_family="xxhash64")(df, 1))
 
 
 def test_curate_stream_quality_scrub_dedup(spark, tmp_path):

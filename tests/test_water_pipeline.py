@@ -163,6 +163,32 @@ def test_water_map_job_bound(spark, count_jobs):
     assert jobs <= 47, jobs
 
 
+def test_water_map_compiles_once(spark, count_compiles):
+    """On the bench scene, a second map of the same grids compiles (almost)
+    no class: the session's codegen cache holds the map's working set
+    (~133 classes, over Spark's default of 100 entries, where every map
+    recompiled ~121). Almost: adaptive execution numbers the codegen stages
+    of a query in the order its stages get planned, which is
+    timing-dependent, so a repeat now and then compiles a plan's classes
+    again under swapped stage ids (4 compiles in 2 of 12 repeats, 0 in
+    the rest). A new scene compiles only the plans that inline its values
+    as literals (17 measured)."""
+    shape, tile = (300, 400), (50, 50)
+
+    def water_map(seed):
+        grids = [long_grid_df(spark, a, tile).localCheckpoint(eager=True) for a in synth_scene(*shape, seed=seed)]
+        return lambda: make_water_map_grid(*grids, shape, tile_shape=tile)["water_map"].count()
+
+    seed1 = water_map(1)
+    seed1()
+    n, compiles = count_compiles(seed1)
+    assert n > 0
+    assert compiles <= 8, compiles
+    n, compiles = count_compiles(water_map(2))
+    assert n > 0
+    assert compiles <= 25, compiles
+
+
 def test_distributed_labeling_matches_core(spark):
     """Cross-tile component merge vs single-array labeling on random flags."""
     rng = np.random.default_rng(7)
