@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.membership import zmf_col
+from . import tiling
 
 
 def _zmf(x: float, a: float, b: float) -> float:
@@ -120,46 +121,32 @@ def horn_derivatives(
         dz/dx = ((c + 2f + i) - (a + 2d + g)) / (8 * pixel)
         dz/dy = ((g + 2h + i) - (a + 2b + c)) / (8 * pixel)
 
-    Shape: scatter-stencil — each pixel is exploded to the 9 windows it
-    participates in (one narrow shuffle keyed by target cell), the 3x3
-    window is rebuilt by conditional aggregation (each slot has exactly
-    one contributor, so max() is the identity pick). No UDF, and no
-    BETWEEN self-join (which would plan BNLJ). Interior cells only
-    (count(*) = 9): edge conventions vary per tool, and at 100 TB the
-    halo exchange for tile borders is this same explode with tile-id
-    keys. Expected rows per input row: exactly 9 — linear, skew-free
-    (grid keys are unique). Returns (trow, tcol, _dzdx, _dzdy)."""
+    One ``tiling.halo_pass`` over ``tiling.HALO_TILE`` tiles with a
+    one-cell halo; a numpy kernel evaluates both sums in this operation
+    order. Cells whose nine window cells are all present (rows of
+    ``grid``, unique per cell) only: edge conventions vary per tool. A
+    NaN in the window gives NaN derivatives, a NULL gives NULL ones.
+    Returns (row, col, _dzdx, _dzdy)."""
     v = F.col(value_col).cast("double")
-    offs = F.explode(F.array(*[
-        F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-        for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-    ])).alias("o")
-    # source sits at relative offset (dr, dc) FROM the target window center
-    cand = grid.select(F.col("row"), F.col("col"), v.alias("_v"), offs).select(
-        (F.col("row") - F.col("o.dr")).alias("trow"),
-        (F.col("col") - F.col("o.dc")).alias("tcol"),
-        F.col("o.dr").alias("_dr"), F.col("o.dc").alias("_dc"), "_v",
-    )
+    cells = grid.select("row", "col", v.alias("v"), v.isNull().cast("double").alias("null"))
+    eight_px = 8.0 * pixel_size
 
-    def slot(dr: int, dc: int) -> Column:
-        return F.max(
-            F.when((F.col("_dr") == dr) & (F.col("_dc") == dc), F.col("_v"))
-        )
+    def derivatives(core, arrays, present):
+        tr, tc = core[0].shape
 
-    nine = cand.groupBy("trow", "tcol").agg(
-        slot(-1, -1).alias("_a"), slot(-1, 0).alias("_b"), slot(-1, 1).alias("_c"),
-        slot(0, -1).alias("_d"), slot(0, 1).alias("_f"),
-        slot(1, -1).alias("_g"), slot(1, 0).alias("_h"), slot(1, 1).alias("_i"),
-        F.count(F.lit(1)).alias("_n"),
-    ).where(F.col("_n") == 9)
-    eight_px = F.lit(8.0 * pixel_size)
-    dzdx = ((F.col("_c") + 2.0 * F.col("_f") + F.col("_i"))
-            - (F.col("_a") + 2.0 * F.col("_d") + F.col("_g"))) / eight_px
-    dzdy = ((F.col("_g") + 2.0 * F.col("_h") + F.col("_i"))
-            - (F.col("_a") + 2.0 * F.col("_b") + F.col("_c"))) / eight_px
-    return nine.select(
-        "trow", "tcol", dzdx.alias("_dzdx"), dzdy.alias("_dzdy")
-    )
+        def window(x):  # the nine (tr, tc) views a..i, row-major around each centre e
+            return [x[dr:dr + tr, dc:dc + tc] for dr in range(3) for dc in range(3)]
+
+        a, b, c, d, _, f, g, h, i = window(arrays["v"])
+        na, nb, nc, nd, _, nf, ng, nh, ni = window(arrays["null"] == 1.0)
+        dzdx = ((c + 2.0 * f + i) - (a + 2.0 * d + g)) / eight_px
+        dzdy = ((g + 2.0 * h + i) - (a + 2.0 * b + c)) / eight_px
+        return np.logical_and.reduce(window(present)), {
+            "_dzdx": np.ma.array(dzdx, mask=nc | nf | ni | na | nd | ng),
+            "_dzdy": np.ma.array(dzdy, mask=ng | nh | ni | na | nb | nc),
+        }
+
+    return tiling.halo_pass(cells, 1, tiling.HALO_TILE, derivatives, "row int, col int, _dzdx double, _dzdy double")
 
 
 def hillshade_horn(
@@ -176,9 +163,10 @@ def hillshade_horn(
     with slope = atan(z * hypot(dz/dx, dz/dy)), aspect = atan2(dzdy,
     -dzdx), zen = radians(90 - altitude), az_math = radians(360 -
     azimuth + 90), clamped at 0 (GDAL/ESRI convention; cos is even and
-    periodic so aspect needs no branch normalization). Pure
-    whole-stage-codegen expression on top of the stencil aggregate."""
-    nine = horn_derivatives(grid, value_col, pixel_size)
+    periodic so aspect needs no branch normalization). A Spark
+    expression over the derivatives, so its transcendentals are the
+    JVM's, as in the SQL oracle."""
+    deriv = horn_derivatives(grid, value_col, pixel_size)
     slope_r = F.atan(F.lit(z_factor) * F.sqrt(
         F.col("_dzdx") * F.col("_dzdx") + F.col("_dzdy") * F.col("_dzdy")))
     aspect_r = F.atan2(F.col("_dzdy"), -F.col("_dzdx"))
@@ -188,10 +176,7 @@ def hillshade_horn(
         F.lit(float(np.cos(zen))) * F.cos(slope_r)
         + F.lit(float(np.sin(zen))) * F.sin(slope_r) * F.cos(F.lit(azm) - aspect_r)
     )
-    return nine.select(
-        F.col("trow").alias("row"), F.col("tcol").alias("col"),
-        F.greatest(F.lit(0.0), shade).alias(out),
-    )
+    return deriv.select("row", "col", F.greatest(F.lit(0.0), shade).alias(out))
 
 
 def aspect_horn(
@@ -209,11 +194,8 @@ def aspect_horn(
     any engine) mapped to ``flat_sentinel`` (GDAL emits nodata there).
     The double-% keeps the result in [0, 360) under Java's and DuckDB's
     shared sign-of-dividend fmod semantics."""
-    nine = horn_derivatives(grid, value_col, pixel_size)
+    deriv = horn_derivatives(grid, value_col, pixel_size)
     deg = F.lit(90.0) - F.degrees(F.atan2(F.col("_dzdy"), -F.col("_dzdx")))
     az = (deg % F.lit(360.0) + F.lit(360.0)) % F.lit(360.0)
     flat = (F.col("_dzdx") == 0.0) & (F.col("_dzdy") == 0.0)
-    return nine.select(
-        F.col("trow").alias("row"), F.col("tcol").alias("col"),
-        F.when(flat, F.lit(flat_sentinel)).otherwise(az).alias(out),
-    )
+    return deriv.select("row", "col", F.when(flat, F.lit(flat_sentinel)).otherwise(az).alias(out))

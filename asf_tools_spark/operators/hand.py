@@ -8,9 +8,11 @@ condition -> flowdir -> accumulation -> compute_hand; SURVEY §2.5 W6).
 Every step groups cells by their ``TILE_SHAPE`` tile into Arrow
 grouped-map passes that run the numpy kernels of core.dem on whole tiles:
 
-- ``condition_dem`` and ``flow_direction`` give each tile the ring of
-  cells around it (its halo); conditioning repeats that until the fill
-  stops falling.
+- ``condition_dem`` and ``flow_direction`` are ``tiling.halo_pass``
+  kernels with a one-cell halo: each tile is solved as one (tr + 2,
+  tc + 2) array that holds the ring of cells around it. Conditioning
+  repeats the pass (``tiling.halo_fixpoint``) until the fill stops
+  falling.
 - ``flow_accumulation`` and ``compute_hand`` use that the D8 flow graph is
   a forest (one downstream cell each, elevation strictly falling along
   every edge): a tile pass solves each tile's part of the forest and
@@ -33,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.dem import D8, first_marked, forest_sum, priority_flood_fill, steepest_d8
-from .tiling import on_tile_edge, tile_key
+from .tiling import halo_fixpoint, halo_pass, on_tile_edge, tile_key
 
 TILE_SHAPE = (32, 32)  # the tiles of every HAND step
 EPS = 1e-5  # condition_dem's fill ramp: a filled cell rises EPS above its spill
@@ -42,36 +44,9 @@ EPS = 1e-5  # condition_dem's fill ramp: a filled cell rises EPS above its spill
 # 92 s at local[4] with the default 8g driver)
 DRIVER_MAX_EDGE_CELLS = 2_031_616
 
-# dropped: per-pixel convergence flag computed inside solve_tile, so a
+# changed: per-cell convergence flag computed inside solve_tile, so a
 # round needs no join of new state against old
-_COND_SCHEMA = "row int, col int, elev double, f double, dropped boolean"
-
-
-def _with_halo(cells: DataFrame, tile_shape: tuple[int, int]) -> DataFrame:
-    """``cells`` keyed by their tile (``_lt``, ``is_halo`` false) plus a
-    copy of each tile-edge cell keyed to every other tile among its 8
-    neighbors' (``is_halo`` true): grouped by ``_lt``, each tile meets its
-    own cells and the ring of cells around it."""
-    row, col = F.col("row"), F.col("col")
-    own = tile_key(row, col, tile_shape)
-    # the neighbor tiles dedup within the row, so the grouping shuffle is
-    # the only exchange
-    nbrs = F.array_distinct(F.array(*[tile_key(row + dr, col + dc, tile_shape) for dr, dc in D8]))
-    halo = (
-        cells.where(on_tile_edge(row, col, tile_shape))
-        .select("*", F.explode(nbrs).alias("_lt"))
-        .where(F.col("_lt") != own)
-        .withColumn("is_halo", F.lit(True))
-    )
-    return cells.select("*", own.alias("_lt"), F.lit(False).alias("is_halo")).unionByName(halo)
-
-
-def _padded(pdf: pd.DataFrame, own: np.ndarray, tile_shape: tuple[int, int]):
-    """Row/col indices of a halo pass's rows in their tile's (tr + 2,
-    tc + 2) array, halo ring included; ``own`` marks the tile's cells."""
-    tr, tc = tile_shape
-    rows, cols = pdf["row"].to_numpy(np.int64), pdf["col"].to_numpy(np.int64)
-    return rows - rows[own].min() // tr * tr + 1, cols - cols[own].min() // tc * tc + 1
+_COND_SCHEMA = "row int, col int, elev double, f double, changed boolean"
 
 
 def condition_dem(grid: DataFrame) -> DataFrame:
@@ -132,48 +107,28 @@ def condition_dem(grid: DataFrame) -> DataFrame:
         .otherwise(F.lit(float("inf"))).alias("f"),
     )
     state = _border_graph_seed(state, tile_shape, EPS, (rmin, rmax, cmin, cmax))
-    state = state.localCheckpoint(eager=True)
 
-    def solve_tile(key, pdf):
-        own = ~pdf["is_halo"].to_numpy()
-        if not own.any():
-            return pd.DataFrame(columns=["row", "col", "elev", "f", "dropped"])
-        rr, cc = _padded(pdf, own, tile_shape)
-        fc = np.full((tr + 2, tc + 2), np.inf)
-        fc[rr, cc] = pdf["f"].to_numpy()
+    def solve_tile(core, a, present):
+        fc = np.where(present, a["f"], np.inf)
         # halo cells are fixed boundary conditions: pin elev to their current
         # f so local relaxation can read through but never lower them
-        e = np.full((tr + 2, tc + 2), np.nan)
-        e[rr, cc] = np.where(own, pdf["elev"].to_numpy(), fc[rr, cc])
+        ring = present.copy()
+        ring[1:-1, 1:-1] = False
+        e = np.where(ring, fc, a["elev"])
         seeds = [(r, c, fc[r, c]) for r, c in zip(*np.nonzero(np.isfinite(fc)))]
-        oldf = fc[rr, cc][own]
-        newf = np.minimum(priority_flood_fill(e, eps=EPS, seeds=seeds)[rr, cc][own], oldf)
-        return pd.DataFrame({
-            "row": pdf["row"][own], "col": pdf["col"][own], "elev": pdf["elev"][own],
-            "f": newf, "dropped": newf < oldf - tol,
-        })
-
-    for _ in range(max_rounds):
-        new_state = (
-            _with_halo(state, tile_shape)
-            .groupBy("_lt")
-            .applyInPandas(solve_tile, schema=_COND_SCHEMA)
-            .localCheckpoint(eager=True)
-        )
+        oldf = fc[1:-1, 1:-1]
+        newf = np.minimum(priority_flood_fill(e, eps=EPS, seeds=seeds)[1:-1, 1:-1], oldf)
         # the tolerance: re-solving a tile re-evaluates the same eps-add
         # chains in a different summation order, and the ~1e-14 float
         # dribbles that produces would otherwise drag the fixpoint on for
         # O(diameter) pure-noise rounds (measured: rounds 2-17 of a 256x256
         # DEM were all <= 1.1e-14 'improvements')
-        changed = new_state.where("dropped").limit(1).count()
-        state = new_state.drop("dropped")
-        if changed == 0:
-            return state.select("row", "col", F.col("f").alias("elev"))
-    raise RuntimeError(
-        f"condition_dem did not converge within {max_rounds} rounds; "
-        "a partially-filled DEM (interior f may still be +inf) would "
-        "silently corrupt flow_direction/HAND"
-    )
+        return present[1:-1, 1:-1], {
+            "elev": a["elev"][1:-1, 1:-1], "f": newf, "changed": newf < oldf - tol,
+        }
+
+    state = halo_fixpoint(state, 1, tile_shape, solve_tile, _COND_SCHEMA, max_rounds)
+    return state.select("row", "col", F.col("f").alias("elev"))
 
 
 _FRONT_SCHEMA = "ar int, ac int, br int, bc int, a double, l int"
@@ -370,28 +325,19 @@ def flow_direction(grid: DataFrame) -> DataFrame:
     over each tile and its halo (core.dem ``steepest_d8``). Ties break by
     D8 priority order; cells with no strictly lower neighbor are sinks
     (to_row/to_col NULL)."""
-    tr, tc = tile_shape = TILE_SHAPE
     offsets = np.array(D8)
 
-    def directions(key, pdf):
-        own = ~pdf["is_halo"].to_numpy()
-        if not own.any():
-            return pd.DataFrame(columns=["row", "col", "elev", "to_row", "to_col"])
-        rr, cc = _padded(pdf, own, tile_shape)
-        e = np.full((tr + 2, tc + 2), np.nan)
-        e[rr, cc] = _f64(pdf["elev"])
-        d = steepest_d8(e)[rr[own] - 1, cc[own] - 1]
-        r, c = pdf["row"].to_numpy()[own], pdf["col"].to_numpy()[own]
-        return pd.DataFrame({
-            "row": r, "col": c, "elev": e[rr, cc][own],
-            "to_row": _nullable_int(r + offsets[d, 0], d < 0),
-            "to_col": _nullable_int(c + offsets[d, 1], d < 0),
-        })
+    def directions(core, a, present):
+        d = steepest_d8(a["elev"])
+        sink = d < 0
+        return present[1:-1, 1:-1], {
+            "elev": a["elev"][1:-1, 1:-1],
+            "to_row": np.ma.array(core[0] + offsets[d, 0], mask=sink),
+            "to_col": np.ma.array(core[1] + offsets[d, 1], mask=sink),
+        }
 
     cells = grid.select("row", "col", F.col("elev").cast("double").alias("elev"))
-    return _with_halo(cells, tile_shape).groupBy("_lt").applyInPandas(
-        directions, "row int, col int, elev double, to_row int, to_col int"
-    )
+    return halo_pass(cells, 1, TILE_SHAPE, directions, "row int, col int, elev double, to_row int, to_col int")
 
 
 def _f64(s: pd.Series) -> np.ndarray:

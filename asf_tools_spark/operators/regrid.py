@@ -6,20 +6,19 @@
   (scale + offset) mapping; overlaps aggregate (mean for 'average',
   closest-center for 'nearest'). A groupBy on the destination key — no
   indexed join.
-- ``fill_nan_distributed``: per-tile Gaussian infill with halo exchange
-  (ref calculate.py:25-37 ``fill_nan``, SURVEY §2.5 W2): each round ships
-  every tile plus a ``halo``-pixel border from its neighbors to a grouped
-  UDF running the core kernel pass; the driver loops until no NaNs remain.
+- ``fill_nan_distributed``: per-tile Gaussian infill (ref
+  calculate.py:25-37 ``fill_nan``, SURVEY §2.5 W2): rounds of the core
+  kernel pass over each tile and its halo (``tiling.halo_fixpoint``)
+  until the fill stops.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..core.infill import gaussian_kernel, interpolate_replace_nans
+from . import tiling
 
 
 def regrid(
@@ -111,95 +110,38 @@ def _regrid_lanczos(
     )
 
 
-_FILL_SCHEMA = StructType([
-    StructField("row", IntegerType()),
-    StructField("col", IntegerType()),
-    StructField("value", DoubleType()),
-])
+def fill_nan_distributed(grid: DataFrame, grid_shape: tuple[int, int], stddev: float = 3.0) -> DataFrame:
+    """Gaussian NaN infill of the (row, col, value) grid with extent
+    ``grid_shape`` = (H, W): ``core.infill.fill_nan``'s rounds as a
+    ``tiling.halo_fixpoint`` over ``tiling.HALO_TILE`` tiles whose halo is
+    the kernel radius (4 ``stddev``, at most the tile edge). Each round
+    runs one ``interpolate_replace_nans`` pass per tile and emits every
+    in-extent cell of each tile that has input; NULL and missing cells
+    count as NaN. The output does not depend on the tile shape.
 
-
-def fill_nan_distributed(
-    grid: DataFrame,
-    grid_shape: tuple[int, int],
-    tile_shape: tuple[int, int] = (64, 64),
-    stddev: float = 3.0,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Iterative per-tile Gaussian infill with halo replication.
-
-    Each round: every pixel is exploded into the core tile it belongs to
-    plus any neighbor tiles whose ``halo`` band contains it; the grouped UDF
-    rebuilds tile+halo, runs one kernel pass, emits core pixels; the driver
-    re-checks the NaN count. NaN regions wider than the kernel need more
-    rounds, exactly like the reference's while-loop.
-    """
-    tr, tc = tile_shape
-    halo = int(4 * stddev)
+    A round fills every NaN within the radius of a value, so the rounds
+    stop when no tile that filled a cell still holds a NaN in the extent,
+    and at once when a round fills nothing (an all-NaN grid comes back
+    all NaN, as from ``fill_nan``). The fill front moves at least one
+    radius per round: more than ceil(max(H, W) / radius) + 1 rounds
+    raises RuntimeError."""
     rows_n, cols_n = grid_shape
     kernel = gaussian_kernel(stddev)
+    halo = kernel.shape[0] // 2
 
-    current = grid.select("row", "col", F.col("value").cast("double"))
-    # value NULL encodes NaN on the Spark side
-    current = current.withColumn(
-        "value", F.when(F.isnan("value"), None).otherwise(F.col("value"))
-    ).localCheckpoint(eager=True)
+    def fill_tile(core, a, present):
+        v = a["value"]
+        out = interpolate_replace_nans(v, kernel)
+        pr = np.arange(v.shape[0]) + core[0][0, 0] - halo
+        pc = np.arange(v.shape[1]) + core[1][0, 0] - halo
+        inside = ((pr >= 0) & (pr < rows_n))[:, None] & ((pc >= 0) & (pc < cols_n))[None, :]
+        c = slice(halo, v.shape[0] - halo), slice(halo, v.shape[1] - halo)
+        filled = np.isnan(v[c]) & ~np.isnan(out[c])
+        return inside[c], {"value": out[c], "changed": filled & np.isnan(out[inside]).any()}
 
-    offsets = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
-
-    def fill_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        t_r, t_c = int(pdf["_tr"].iloc[0]), int(pdf["_tc"].iloc[0])
-        r0, c0 = t_r * tr - halo, t_c * tc - halo
-        arr = np.full((tr + 2 * halo, tc + 2 * halo), np.nan)
-        rr = pdf["row"].to_numpy() - r0
-        cc = pdf["col"].to_numpy() - c0
-        vals = pdf["value"].to_numpy(dtype=float)
-        arr[rr, cc] = vals
-        # outside-extent positions stay NaN but must not block convergence:
-        # only in-extent core pixels are emitted
-        out = interpolate_replace_nans(arr, kernel)
-        core = out[halo : halo + tr, halo : halo + tc]
-        gr, gc = np.mgrid[0:tr, 0:tc]
-        gr, gc = gr + t_r * tr, gc + t_c * tc
-        keep = (gr < rows_n) & (gc < cols_n)
-        return pd.DataFrame({
-            "row": gr[keep].astype(np.int32),
-            "col": gc[keep].astype(np.int32),
-            "value": core[keep],
-        })
-
-    for _ in range(max_rounds):
-        n_nan = current.where(F.col("value").isNull()).limit(1).count()
-        if n_nan == 0:
-            break
-        # one per-row array_distinct explode instead of a 9-way union +
-        # distinct: the union shipped 9x the pixels into a dedup SHUFFLE
-        # every round (288 tiny tasks/round at 32 partitions); the per-row
-        # candidate-tile array dedups locally, so the only exchange left
-        # is the groupBy placement shuffle and it carries ~1.2x the pixels
-        # (guide §2.3/2.4). Same (tile, pixel) pairs reach fill_tile.
-        cand = F.array_distinct(F.array(*[
-            F.struct(
-                F.floor((F.col("row") + dr * halo) / tr).cast("long").alias("_tr"),
-                F.floor((F.col("col") + dc * halo) / tc).cast("long").alias("_tc"),
-            )
-            for dr, dc in offsets
-        ]))
-        exploded = (
-            current.select(
-                "row", "col",
-                F.coalesce(F.col("value"), F.lit(float("nan"))).alias("value"),
-                F.explode(cand).alias("_t"),
-            )
-            .select(
-                "row", "col", "value",
-                F.col("_t._tr").alias("_tr"), F.col("_t._tc").alias("_tc"),
-            )
-            .where((F.col("_tr") >= 0) & (F.col("_tc") >= 0))
-        )
-        filled = exploded.groupBy("_tr", "_tc").applyInPandas(fill_tile, schema=_FILL_SCHEMA)
-        # multiple tiles may emit the same core pixel only if keys collide —
-        # they cannot (core assignment is unique); halo copies are inputs only
-        current = filled.withColumn(
-            "value", F.when(F.isnan("value"), None).otherwise(F.col("value"))
-        ).localCheckpoint(eager=True)
-    return current.select("row", "col", F.coalesce(F.col("value"), F.lit(float("nan"))).alias("value"))
+    cells = grid.select("row", "col", F.col("value").cast("double"))
+    max_rounds = -(-max(rows_n, cols_n) // max(halo, 1)) + 1
+    out = tiling.halo_fixpoint(
+        cells, halo, tiling.HALO_TILE, fill_tile, "row int, col int, value double, changed boolean", max_rounds
+    )
+    return out.select("row", "col", F.coalesce(F.col("value"), F.lit(float("nan"))).alias("value"))

@@ -7,6 +7,10 @@ Spark re-expression of the tile-stack math in ref water_map.py:
 - ``determine_em_threshold_distributed`` (ref water_map.py:84-90 +
   threshold.py:40-133 via core.em, fitted on the driver)
 
+and the one tile+halo mechanism of every grid neighbourhood operator
+(HAND conditioning and D8, Gaussian infill, Horn derivatives,
+morphology): ``halo_pass`` and its round loop ``halo_fixpoint``.
+
 Grids are long-form DataFrames ``(tile_id,row,col,value,valid)`` (see
 core.tiles.grid_to_long). Tile ids are derived keys — tiling moves no data;
 aggregation is the only shuffle and is partial/final (map-side combine).
@@ -30,7 +34,7 @@ def tile_key(row: Column, col: Column, tile_shape: tuple[int, int]) -> Column:
     """Key of the ``tile_shape`` tile holding cell (row, col):
     ``floor(row / tr) * 2^31 + floor(col / tc)``. Floor division keeps
     negative coordinates in their own tiles. The grouping key of every
-    tile-local pass (raster labeling, the HAND chain)."""
+    tile-local pass (raster labeling, the HAND chain, ``halo_pass``)."""
     tr, tc = tile_shape
     return F.floor(row / tr).cast("long") * _TILE_STRIDE + F.floor(col / tc).cast("long")
 
@@ -41,6 +45,84 @@ def on_tile_edge(row: Column, col: Column, tile_shape: tuple[int, int]) -> Colum
     of negative-index tiles."""
     tr, tc = tile_shape
     return F.pmod(row, tr).isin(0, tr - 1) | F.pmod(col, tc).isin(0, tc - 1)
+
+
+HALO_TILE = (128, 128)  # the tiles of the stencil passes: Horn, morphology, infill
+
+
+def halo_pass(cells: DataFrame, halo: int, tile_shape: tuple[int, int], kernel, schema: str) -> DataFrame:
+    """One grouped-map pass over the ``tile_shape`` tiles of the long-form
+    grid ``cells`` (``row, col`` and value columns; one row per cell), each
+    tile seen together with the ring of cells within ``halo`` of it.
+
+    Each cell goes to the distinct tiles of (row ± halo, col ± halo): its
+    own and, near a tile edge, each neighbour whose ring holds it (at most
+    4 tiles while 2 halo <= the tile edge, else up to 9). One shuffle
+    groups them.
+    Per tile, ``kernel(core, arrays, present)`` gets ``core`` = (rows,
+    cols), the (tr, tc) coordinates of the tile's cells (the origin is
+    ``rows[0, 0], cols[0, 0]``), and per value column a (tr + 2 halo,
+    tc + 2 halo) float64 array whose ``[halo, halo]`` is the origin, NaN
+    where ``present`` is false (no row) or the value is NULL. It returns
+    ``(keep, out)``: a (tr, tc) mask of the cells to emit and one (tr, tc)
+    array per output column after ``row, col``, in ``schema`` order. A
+    plain array's NaN come out NULL; a masked array's masked cells come
+    out NULL and its NaN stay NaN. Tiles that only hold ring cells run the
+    kernel too. Tile keys decode while |col / tc| < 2^30."""
+    if not 0 <= halo <= min(tile_shape):
+        raise ValueError(f"halo {halo} must lie in [0, {min(tile_shape)}], the tile edge")
+    tr, tc = tile_shape
+    names = [c for c in cells.columns if c not in ("row", "col")]
+    offsets = np.indices((tr, tc))
+
+    def run(key, pdf):
+        ti = (int(key[0]) + _TILE_STRIDE // 2) // _TILE_STRIDE
+        r0, c0 = ti * tr, (int(key[0]) - ti * _TILE_STRIDE) * tc
+        r = pdf["row"].to_numpy(np.int64) - (r0 - halo)
+        c = pdf["col"].to_numpy(np.int64) - (c0 - halo)
+        present = np.zeros((tr + 2 * halo, tc + 2 * halo), dtype=bool)
+        present[r, c] = True
+        arrays = {}
+        for name in names:
+            arrays[name] = np.full(present.shape, np.nan)
+            arrays[name][r, c] = pdf[name].to_numpy(np.float64, na_value=np.nan)
+        rows, cols = offsets[0] + r0, offsets[1] + c0
+        keep, out = kernel((rows, cols), arrays, present)
+        return pd.DataFrame({"row": rows[keep], "col": cols[keep], **{k: _column(v[keep]) for k, v in out.items()}})
+
+    row, col = F.col("row"), F.col("col")
+    keys = F.array_distinct(F.array(*[
+        tile_key(row + dr, col + dc, tile_shape) for dr in (-halo, 0, halo) for dc in (-halo, 0, halo)
+    ]))
+    return cells.select("*", F.explode(keys).alias("_tile")).groupBy("_tile").applyInPandas(run, schema)
+
+
+def _column(v: np.ndarray):
+    """A kernel output column: a masked array becomes a pandas nullable
+    array (masked = NULL, NaN kept); a plain one passes through."""
+    if not isinstance(v, np.ma.MaskedArray):
+        return v
+    mask = np.ma.getmaskarray(v)
+    if v.dtype.kind == "f":
+        return pd.arrays.FloatingArray(v.data.astype(np.float64), mask)
+    return pd.arrays.IntegerArray(v.data.astype(np.int32), mask)
+
+
+def halo_fixpoint(cells: DataFrame, halo: int, tile_shape: tuple[int, int], kernel, schema: str,
+                  max_rounds: int) -> DataFrame:
+    """``halo_pass`` repeated on its own output until a round changes
+    nothing: the kernel emits a boolean ``changed`` column last, and the
+    output without it is the next round's input. Each round is one
+    ``localCheckpoint`` and one ``limit(1).count()`` of ``changed``.
+    Raises RuntimeError when ``max_rounds`` rounds all changed a cell: a
+    caller's bound on rounds is an invariant, and a half-converged grid
+    must not pass for a result."""
+    for _ in range(max_rounds):
+        out = halo_pass(cells, halo, tile_shape, kernel, schema).localCheckpoint(eager=True)
+        cells = out.drop("changed")
+        if out.where("changed").limit(1).count() == 0:
+            return cells
+    raise RuntimeError(f"halo_fixpoint did not converge within {max_rounds} rounds")
 
 
 def long_grid_df(spark: SparkSession, array, tile_shape: tuple[int, int], pad_value=np.nan) -> DataFrame:

@@ -99,12 +99,13 @@ def q_hillshade_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Horn (1981) hillshade over the synthetic DEM-ish grid — the GDAL
     `gdaldem hillshade` companion to W1 slope (the reference's DEM stack
     consumes GDAL derivatives; slope half is ref water_map.py:93-97).
-    Scatter-stencil: 9-way offset explode + ONE hash aggregate rebuilds
-    each 3x3 window (no UDF, no BETWEEN self-join/BNLJ); interior cells
-    only. Oracle replays the identical stencil + closed form in SQL; the
-    azimuth/zenith trig factors are shared python-double literals, so
-    the only per-row transcendentals are the same ATAN/SIN/COS/ATAN2
-    tree both engines evaluate (rounded 6dp per the parity rule)."""
+    The Horn derivatives come from one tile+halo pass (a numpy kernel
+    per 128x128 tile with its one-cell ring; no BETWEEN self-join/BNLJ);
+    interior cells only. Oracle replays the stencil + closed form in SQL;
+    the azimuth/zenith trig factors are shared python-double literals,
+    and the closed form stays a Spark expression, so the only per-row
+    transcendentals are the same ATAN/SIN/COS/ATAN2 tree both engines
+    evaluate (rounded 6dp per the parity rule)."""
     from .operators.fuzzy_ops import hillshade_horn
 
     g = _grid_df(spark).select("row", "col", F.col("v").alias("value"))
@@ -115,11 +116,11 @@ def q_hillshade_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_aspect_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`gdaldem aspect` over the same DEM-ish grid — compass azimuth of
     steepest descent from the SAME Horn stencil hillshade rides
-    (operators.fuzzy_ops.horn_derivatives: 9-way scatter explode + ONE
-    hash aggregate; no UDF, no BNLJ). Exactly-flat cells (both Horn
-    derivatives 0.0 — an exact double test, identical in both engines)
-    get the -1.0 sentinel, as GDAL emits nodata. Oracle replays the
-    stencil + closed form over the shared CTE text."""
+    (operators.fuzzy_ops.horn_derivatives: one tile+halo pass; no BNLJ).
+    Exactly-flat cells (both Horn derivatives 0.0 — an exact double
+    test, identical in both engines) get the -1.0 sentinel, as GDAL
+    emits nodata. Oracle replays the stencil + closed form over the
+    shared CTE text."""
     from .operators.fuzzy_ops import aspect_horn
 
     g = _grid_df(spark).select("row", "col", F.col("v").alias("value"))
@@ -219,10 +220,11 @@ def q_label_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gaussian_infill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 (ref hand/calculate.py:25-37 fill_nan / astropy
     interpolate_replace_nans): Gaussian-kernel weighted-mean NaN infill via
-    the distributed per-tile + halo operator. Holes are scattered single
-    pixels (density 1/37), so ONE kernel pass fills everything and the
-    fixpoint equals the single-pass SQL oracle (join against the kernel
-    offsets, Σw·v/Σw over non-NaN neighbors)."""
+    tiling.halo_fixpoint rounds of the core kernel pass over each tile and
+    its 4-sigma halo. Holes are scattered single pixels (density 1/37), so
+    ONE round fills everything and stops, and the fixpoint equals the
+    single-pass SQL oracle (join against the kernel offsets, Σw·v/Σw over
+    non-NaN neighbors)."""
     from .operators.regrid import fill_nan_distributed
 
     g = _grid_df(spark)
@@ -231,7 +233,7 @@ def q_gaussian_infill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row", "col",
         F.when(hole, F.lit(float("nan"))).otherwise(F.col("v")).alias("value"),
     )
-    out = fill_nan_distributed(grid, (_H, _W), tile_shape=(16, 16), stddev=1.0)
+    out = fill_nan_distributed(grid, (_H, _W), stddev=1.0)
     return out.select("row", "col", F.round("value", 6).alias("value"))
 
 
@@ -672,10 +674,10 @@ def q_morph_open_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary morphology on the thresholded water mask (3x3 element, zero
     padding): opening drops sub-element speckle (the pixel-scale sibling
     of remove_small_segments, ref water_map.py:145-147), closing fills
-    pinholes before segmentation. Spark side is the explode-stencil +
-    hash-aggregate shape (one Generate + one shuffle per pass, no 9-way
-    self-join); the oracle is the INDEPENDENT neighbor-join formulation,
-    so the stencil algebra is cross-verified."""
+    pinholes before segmentation. Spark side is one tile+halo pass per
+    erosion or dilation (a numpy 3x3 kernel per tile, one shuffle per
+    pass, no 9-way self-join); the oracle is the INDEPENDENT
+    neighbor-join formulation, so the stencil algebra is cross-verified."""
     from .operators.morphology import binary_close, binary_open
 
     g = _grid_df(spark)

@@ -104,6 +104,24 @@ def test_slope_window_computes_lag_lead_once(spark):
     assert len(re.findall(r"\b(?:lag|lead)\(", windows[0])) == 2, windows[0]
 
 
+@pytest.mark.parametrize("name,passes", [("hillshade_grid", 1), ("aspect_grid", 1), ("morph_open_grid", 4)])
+def test_stencils_are_halo_passes(spark, sf_dir, name, passes):
+    """Each Horn or morphology pass is one tile+halo grouped map: one
+    shuffle Exchange into one FlatMapGroupsInPandas, and its one Generate
+    sends a cell to its distinct halo tiles (~1.03x the cells). A 9x
+    scatter stencil (an explode of the 3x3 offsets into a hash aggregate
+    per target cell) fails this."""
+    from asf_tools_spark.queries import queries
+
+    plan = plan_of(queries()[name](spark, sf_dir), "simple")
+    generates = [ln for ln in plan.splitlines() if "Generate " in ln]
+    assert len(generates) == passes, plan
+    assert all("explode(array_distinct(array(" in ln for ln in generates), generates
+    assert plan.count("Exchange hashpartitioning") == passes, plan
+    assert plan.count("FlatMapGroupsInPandas") == passes, plan
+    assert "HashAggregate" not in plan, plan
+
+
 def test_salted_agg_is_two_phase(spark, sf_dir):
     from asf_tools_spark.queries import q_cell_assign_counts
 

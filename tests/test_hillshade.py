@@ -1,9 +1,39 @@
 """hillshade_horn / aspect_horn vs independent pure-numpy Horn replays."""
 
+import itertools
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
+from asf_tools_spark.operators import tiling
 from asf_tools_spark.operators.fuzzy_ops import aspect_horn, hillshade_horn
+
+
+# the default tile (the 12x15 grid fits in one) and 4x5 tiles, whose edges
+# and corners the 3x3 windows straddle
+_TILES = [tiling.HALO_TILE, (4, 5)]
+
+
+def _interior(spark, fn, arr, col, expect):
+    """``fn`` over the dense grid ``arr`` (its NaN kept: pandas NaN arrive
+    NULL) as an array over the interior, after checking that there is one
+    row per interior cell and that a present NaN cell gives its windows a
+    NaN row, not a NULL one."""
+    h, w = arr.shape
+    rows, cols = np.mgrid[0:h, 0:w]
+    pdf = pd.DataFrame({
+        "row": rows.ravel().astype(np.int32),
+        "col": cols.ravel().astype(np.int32),
+        "value": arr.ravel(),
+    })
+    sdf = fn(spark.createDataFrame(pdf).withColumn("value", F.coalesce("value", F.lit(float("nan")))), "value")
+    out = sdf.toPandas()
+    assert len(out) == (h - 2) * (w - 2)  # interior only
+    assert sdf.where(F.isnan(col)).count() == np.isnan(expect).sum()
+    got = np.full((h - 2, w - 2), np.nan)
+    got[out["row"].to_numpy() - 1, out["col"].to_numpy() - 1] = out[col]
+    return got
 
 
 def _numpy_hillshade(arr, pixel=30.0, az=315.0, alt=45.0, z=1.0):
@@ -23,21 +53,15 @@ def _numpy_hillshade(arr, pixel=30.0, az=315.0, alt=45.0, z=1.0):
     return np.maximum(hs, 0.0)
 
 
-def test_hillshade_matches_numpy(spark):
-    rng = np.random.default_rng(7)
-    arr = rng.normal(0.0, 5.0, (12, 15))
-    rows, cols = np.mgrid[0:12, 0:15]
-    pdf = pd.DataFrame({
-        "row": rows.ravel().astype(np.int32),
-        "col": cols.ravel().astype(np.int32),
-        "value": arr.ravel(),
-    })
-    out = hillshade_horn(spark.createDataFrame(pdf), "value").toPandas()
-    assert len(out) == 10 * 13  # interior only
-    expect = _numpy_hillshade(arr)
-    got = np.full((10, 13), np.nan)
-    got[out["row"].to_numpy() - 1, out["col"].to_numpy() - 1] = out["hillshade"]
-    np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-9)
+def test_hillshade_matches_numpy(spark, monkeypatch):
+    for tile, nan_at in itertools.product(_TILES, [None, (5, 7)]):
+        monkeypatch.setattr(tiling, "HALO_TILE", tile)
+        arr = np.random.default_rng(7).normal(0.0, 5.0, (12, 15))
+        if nan_at:
+            arr[nan_at] = np.nan
+        expect = _numpy_hillshade(arr)
+        got = _interior(spark, hillshade_horn, arr, "hillshade", expect)
+        np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-9)
 
 
 def test_hillshade_flat_is_constant(spark):
@@ -64,22 +88,16 @@ def _numpy_aspect(arr, pixel=30.0):
     return np.where((dzdx == 0.0) & (dzdy == 0.0), -1.0, az)
 
 
-def test_aspect_matches_numpy(spark):
-    rng = np.random.default_rng(11)
-    arr = rng.normal(0.0, 5.0, (12, 15))
-    rows, cols = np.mgrid[0:12, 0:15]
-    pdf = pd.DataFrame({
-        "row": rows.ravel().astype(np.int32),
-        "col": cols.ravel().astype(np.int32),
-        "value": arr.ravel(),
-    })
-    out = aspect_horn(spark.createDataFrame(pdf), "value").toPandas()
-    assert len(out) == 10 * 13
-    expect = _numpy_aspect(arr)
-    got = np.full((10, 13), np.nan)
-    got[out["row"].to_numpy() - 1, out["col"].to_numpy() - 1] = out["aspect"]
-    np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-9)
-    assert (out["aspect"].to_numpy() >= 0.0).all()  # nothing flat here
+def test_aspect_matches_numpy(spark, monkeypatch):
+    for tile, nan_at in itertools.product(_TILES, [None, (0, 14)]):
+        monkeypatch.setattr(tiling, "HALO_TILE", tile)
+        arr = np.random.default_rng(11).normal(0.0, 5.0, (12, 15))
+        if nan_at:
+            arr[nan_at] = np.nan
+        expect = _numpy_aspect(arr)
+        got = _interior(spark, aspect_horn, arr, "aspect", expect)
+        np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-9)
+        assert (got[~np.isnan(got)] >= 0.0).all()  # nothing flat here
 
 
 def test_aspect_flat_and_cardinal(spark):

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from asf_tools_spark.operators import tiling
 from asf_tools_spark.operators.graph import triangle_count
 from asf_tools_spark.operators.intervals import merge_intervals
 from asf_tools_spark.operators.morphology import (
@@ -100,17 +101,22 @@ def speck_grid(spark):
     (binary_open, ["erode", "dilate"]),
     (binary_close, ["dilate", "erode"]),
 ])
-def test_morphology_matches_numpy(spark, speck_grid, fn, ops):
+def test_morphology_matches_numpy(spark, speck_grid, monkeypatch, fn, ops):
+    """On the default tile (one tile holds the grid) and on small tiles
+    whose edges the 3x3 windows straddle: 16 is a multiple of 4, not of
+    5 or 3."""
     arr, df = speck_grid
     expect = arr
     for op in ops:
         expect = _np_morph(expect, op)
-    out = fn(df, "water", 16, 16).collect()
-    assert len(out) == 256
-    got = np.zeros_like(arr)
-    for r in out:
-        got[r["row"], r["col"]] = r["water"]
-    np.testing.assert_array_equal(got, expect)
+    for tile in (tiling.HALO_TILE, (4, 4), (5, 3)):
+        monkeypatch.setattr(tiling, "HALO_TILE", tile)
+        out = fn(df, "water", 16, 16).collect()
+        assert len(out) == 256
+        got = np.zeros_like(arr)
+        for r in out:
+            got[r["row"], r["col"]] = r["water"]
+        np.testing.assert_array_equal(got, expect)
 
 
 def test_opening_and_closing_semantics(spark, speck_grid):

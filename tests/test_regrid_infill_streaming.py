@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from asf_tools_spark.core.infill import fill_hand, fill_nan, gaussian_kernel, interpolate_replace_nans
+from asf_tools_spark.operators import tiling
 from asf_tools_spark.operators.regrid import fill_nan_distributed, regrid
 
 
@@ -41,7 +42,9 @@ def test_fill_hand_semantics():
     assert (out >= 0).all()
 
 
-def test_fill_nan_distributed_matches_core(spark):
+def test_fill_nan_distributed_matches_core(spark, monkeypatch):
+    """On the default tile (one tile holds the grid) and on 16x16 tiles,
+    which the blob crosses: the output does not depend on the tile."""
     rng = np.random.default_rng(3)
     arr = rng.uniform(0, 50, (40, 50))
     arr[12:18, 28:37] = np.nan  # blob crossing the 16x16 tile boundary
@@ -49,12 +52,29 @@ def test_fill_nan_distributed_matches_core(spark):
 
     rows = [(int(r), int(c), float(arr[r, c])) for r in range(40) for c in range(50)]
     grid = spark.createDataFrame(rows, "row int, col int, value double")
-    out = fill_nan_distributed(grid, (40, 50), tile_shape=(16, 16), stddev=2.0)
-    got = np.full((40, 50), np.nan)
-    for r in out.collect():
-        got[r.row, r.col] = r.value
-    assert not np.isnan(got).any()
-    assert np.allclose(got, expected, atol=1e-9)
+    for tile in (tiling.HALO_TILE, (16, 16)):
+        monkeypatch.setattr(tiling, "HALO_TILE", tile)
+        out = fill_nan_distributed(grid, (40, 50), stddev=2.0)
+        got = np.full((40, 50), np.nan)
+        for r in out.collect():
+            got[r.row, r.col] = r.value
+        assert not np.isnan(got).any()
+        assert np.allclose(got, expected, atol=1e-9)
+
+
+def test_fill_nan_distributed_all_nan_stops(spark, count_jobs):
+    """An all-NaN grid has nothing to fill from: the first round fills
+    nothing, so the rounds stop there and every cell stays NaN, as in
+    core fill_nan (the rounds used to run on to a 50-round cap)."""
+    h, w = 20, 30
+    assert np.isnan(fill_nan(np.full((h, w), np.nan), stddev=1.0)).all()
+    grid = spark.createDataFrame(
+        [(r, c, float("nan")) for r in range(h) for c in range(w)], "row int, col int, value double"
+    )
+    rows, jobs = count_jobs(lambda: fill_nan_distributed(grid, (h, w), stddev=1.0).collect())
+    assert len(rows) == h * w and all(np.isnan(r.value) for r in rows)
+    # one round (its shuffle stage, its checkpoint, its count) and the collect
+    assert jobs <= 6, jobs
 
 
 def test_regrid_average_downsample(spark):
