@@ -23,7 +23,8 @@ from asf_tools_spark.sources.pages import geotagged_documents  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: geotag the page table,
     broadcast-join it against the watershed layer, aggregate per (polygon,
-    cell) with salting, and flag HAND water-candidate tiles."""
+    cell) in one partial/final aggregate, and flag HAND water-candidate
+    tiles."""
     pages = geotagged_documents(spark, "/root/testdata/sf0.001", cell_res=8)
     return tile_assignments(pages, res=8)
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..core.io import local_frame
 from .dedup import normalize_text
 
 
@@ -147,9 +148,7 @@ def score_quality_frozen(
     if n_features != len(weights):
         raise ValueError(f"n_features={n_features} != len(weights)={len(weights)}")
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
-        [(i, float(x)) for i, x in enumerate(weights)], "_fidx int, _w double"
-    )
+    wdf = local_frame(spark, [(i, float(x)) for i, x in enumerate(weights)], "_fidx int, _w double")
     feats = _token_features(docs, text_col)
     toks = feats.select(key, F.explode("_toks").alias("_tok")).select(
         key, hashed_token_index(F.col("_tok"), n_features).alias("_fidx")

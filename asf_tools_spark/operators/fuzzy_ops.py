@@ -163,9 +163,11 @@ def hillshade_horn(
     with slope = atan(z * hypot(dz/dx, dz/dy)), aspect = atan2(dzdy,
     -dzdx), zen = radians(90 - altitude), az_math = radians(360 -
     azimuth + 90), clamped at 0 (GDAL/ESRI convention; cos is even and
-    periodic so aspect needs no branch normalization). A Spark
-    expression over the derivatives, so its transcendentals are the
-    JVM's, as in the SQL oracle."""
+    periodic so aspect needs no branch normalization). A window holding a
+    NULL elevation shades NULL, as its aspect is NULL (``greatest`` alone
+    would skip the NULL and shade it 0). A Spark expression over the
+    derivatives, so its transcendentals are the JVM's, as in the SQL
+    oracle."""
     deriv = horn_derivatives(grid, value_col, pixel_size)
     slope_r = F.atan(F.lit(z_factor) * F.sqrt(
         F.col("_dzdx") * F.col("_dzdx") + F.col("_dzdy") * F.col("_dzdy")))
@@ -176,7 +178,7 @@ def hillshade_horn(
         F.lit(float(np.cos(zen))) * F.cos(slope_r)
         + F.lit(float(np.sin(zen))) * F.sin(slope_r) * F.cos(F.lit(azm) - aspect_r)
     )
-    return deriv.select("row", "col", F.greatest(F.lit(0.0), shade).alias(out))
+    return deriv.select("row", "col", F.when(shade.isNotNull(), F.greatest(F.lit(0.0), shade)).alias(out))
 
 
 def aspect_horn(

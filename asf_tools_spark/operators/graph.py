@@ -40,6 +40,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..core.io import local_frame
+
 DRIVER_MAX_GRAPH_EDGES = 100_000  # edge-row guard for the driver-local replays
 
 
@@ -56,7 +58,7 @@ def _iterate(e: DataFrame, schema: str, local, distributed,
         rows = e.take(DRIVER_MAX_GRAPH_EDGES + 1)
         if len(rows) <= DRIVER_MAX_GRAPH_EDGES:
             node = e.schema[0].dataType.simpleString()
-            return e.sparkSession.createDataFrame(local(rows), schema.format(node=node))
+            return local_frame(e.sparkSession, local(rows), schema.format(node=node))
     cached = layout(e).persist()
     try:
         return distributed(cached).localCheckpoint(eager=True)

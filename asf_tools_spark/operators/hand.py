@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.dem import D8, first_marked, forest_sum, priority_flood_fill, steepest_d8
+from ..core.io import local_frame
 from .tiling import halo_fixpoint, halo_pass, on_tile_edge, tile_key
 
 TILE_SHAPE = (32, 32)  # the tiles of every HAND step
@@ -312,7 +313,7 @@ def _border_graph_seed(
     if not g:
         return state
     rows = [(r, c, v) for (r, c), v in g.items()]
-    gdf = state.sparkSession.createDataFrame(rows, "row int, col int, gb double")
+    gdf = local_frame(state.sparkSession, rows, "row int, col int, gb double")
     return (
         state.join(F.broadcast(gdf), ["row", "col"], "left")
         .select("row", "col", "elev", F.least(F.col("f"), F.col("gb")).alias("f"))
@@ -430,7 +431,7 @@ def _tile_pass(flow: DataFrame, table: pd.DataFrame, fn, schema: str) -> DataFra
     driver ``table``'s rows for the tile (``_TABLE_SCHEMA``; a cell may
     have several, which add up)."""
     tile_shape = TILE_SHAPE
-    table = flow.sparkSession.createDataFrame(table, _TABLE_SCHEMA)
+    table = local_frame(flow.sparkSession, table, _TABLE_SCHEMA)
     return (
         flow.unionByName(table, allowMissingColumns=True)
         .groupBy(tile_key(F.col("row"), F.col("col"), tile_shape))

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..core.io import local_frame
 from ..core.labeling import UnionFind, label_components
 from .tiling import on_tile_edge, tile_key
 
@@ -74,7 +75,7 @@ def label_connected(
         pdf = (grid.where(F.col(flag_col)).select("row", "col")
                .limit(max_px + 1).toPandas())
         if pdf.empty:
-            return grid.sparkSession.createDataFrame([], _LABEL_SCHEMA)
+            return local_frame(grid.sparkSession, [], _LABEL_SCHEMA)
         rows = pdf["row"].to_numpy()
         cols = pdf["col"].to_numpy()
         r0, c0 = int(rows.min()), int(cols.min())
@@ -92,9 +93,7 @@ def label_connected(
             # checkpoint: as a bare LocalRelation the labeled pixels
             # would be re-serialized into every consuming branch of
             # the plan (segment areas + relabel join + boundaries)
-            return grid.sparkSession.createDataFrame(
-                out, _LABEL_SCHEMA
-            ).localCheckpoint(eager=True)
+            return local_frame(grid.sparkSession, out, _LABEL_SCHEMA).localCheckpoint(eager=True)
 
     g = grid.withColumn("_lt", tile_key(F.col("row"), F.col("col"), tile_shape))
 
@@ -178,8 +177,8 @@ def merge_labels(labeled: DataFrame, edges: DataFrame) -> DataFrame:
         uf.union(a, b)
     mapping = [(x, r) for x in list(uf.parent) if (r := uf.find(x)) != x]
     ktype = labeled.schema["label"].dataType
-    map_df = labeled.sparkSession.createDataFrame(
-        mapping, StructType([StructField("label", ktype), StructField("_root", ktype)])
+    map_df = local_frame(
+        labeled.sparkSession, mapping, StructType([StructField("label", ktype), StructField("_root", ktype)])
     )
     return (
         labeled.join(F.broadcast(map_df), "label", "left")

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..core.io import local_frame
+
 
 def _code_types(ksub: int) -> tuple[str, "np.dtype"]:
     """Spark/numpy storage for code indices: tinyint holds 0..127 only —
@@ -215,9 +217,7 @@ def ivfpq_topk(
             probe_rows.append((r[0], int(lid), lut))
     spark = codes.sparkSession
     probes = F.broadcast(
-        spark.createDataFrame(
-            probe_rows, "q_id long, list_id int, lut array<array<double>>"
-        )
+        local_frame(spark, probe_rows, "q_id long, list_id int, lut array<array<double>>")
     )
     adc = F.aggregate(
         F.zip_with(
@@ -300,7 +300,7 @@ def pq_topk(
         ]
         lut_rows.append((r[0], lut))
     q = F.broadcast(
-        spark.createDataFrame(lut_rows, "q_id long, lut array<array<double>>")
+        local_frame(spark, lut_rows, "q_id long, lut array<array<double>>")
     )
     adc = F.aggregate(
         F.zip_with(

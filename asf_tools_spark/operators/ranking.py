@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..core.io import local_frame
 from .dedup import normalize_text
 
 
@@ -105,7 +106,7 @@ def bm25_scores(
         F.avg("_dl").alias("_avgdl"),
     )
     q = F.broadcast(
-        tc.sparkSession.createDataFrame([(t,) for t in query_terms], ["term"])
+        local_frame(tc.sparkSession, [(t,) for t in query_terms], "term string")
     )
     matched = tc.join(q, "term")
     dfreq = matched.groupBy("term").agg(

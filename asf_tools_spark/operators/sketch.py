@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import oracle as _oracle
+from ..core.io import local_frame
 
 
 def distinct_sketch(
@@ -182,9 +183,7 @@ def histogram_quantiles(
         "total", F.sum("cnt").over(Window.partitionBy("grp"))
     )
     qdf = F.broadcast(
-        cum.sparkSession.createDataFrame(
-            [(float(q),) for q in qs], "q double"
-        )
+        local_frame(cum.sparkSession, [(float(q),) for q in qs], "q double")
     )
     hit = cum.crossJoin(qdf).where(
         (F.col("cum") >= F.col("q") * F.col("total"))

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..core import tiles as core_tiles
 from ..core.em import em_threshold
+from ..core.io import local_frame
 from ..core.selection import select_backscatter_tiles_from_stats, select_hand_tiles_from_stats
 
 
@@ -128,13 +129,8 @@ def halo_fixpoint(cells: DataFrame, halo: int, tile_shape: tuple[int, int], kern
 def long_grid_df(spark: SparkSession, array, tile_shape: tuple[int, int], pad_value=np.nan) -> DataFrame:
     """2D (masked) numpy array -> long-form grid DataFrame (test/bench aid)."""
     cols = core_tiles.grid_to_long(array, tile_shape, pad_value)
-    pdf = pd.DataFrame(cols)
-    return spark.createDataFrame(pdf).select(
-        F.col("tile_id").cast("long"),
-        F.col("row").cast("int"),
-        F.col("col").cast("int"),
-        F.col("value").cast("double"),
-        F.col("valid").cast("boolean"),
+    return local_frame(
+        spark, pd.DataFrame(cols), "tile_id long, row int, col int, value double, valid boolean"
     )
 
 
@@ -251,9 +247,7 @@ def select_backscatter_tiles(grid: DataFrame, hand_candidates: np.ndarray,
         return _backscatter_selection(backscatter_tile_stats(grid, tile_shape).collect(),
                                       hand_candidates, n_tiles)
     spark = grid.sparkSession
-    hand = spark.createDataFrame(
-        pd.DataFrame({"tile_id": np.asarray(hand_candidates, dtype=np.int64)})
-    )
+    hand = local_frame(spark, [(int(t),) for t in hand_candidates], "tile_id long")
     sel = backscatter_selection_df(backscatter_tile_stats(grid, tile_shape), hand)
     return np.array([int(r.tile_id) for r in sel.collect()], dtype=np.int64)
 

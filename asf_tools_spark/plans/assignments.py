@@ -9,9 +9,10 @@ instead of a raster.
 Plan shape (see tests/test_explain.py for the physical-plan assertions):
 scan (columns pruned to what's used) -> geotag hashes, once per page ->
 JVM cell encode -> ONE BroadcastHashJoin on cell_id against the box cover
-cells, with the inclusive box test as its join condition (one broadcast)
--> salted partial/final aggregate -> candidate filter. No wide exchange of
-the page table other than the final per-(poly,cell) aggregate.
+cells (an Arrow LocalTableScan built on the driver), with the inclusive box
+test as its join condition (one broadcast) -> partial/final aggregate
+around the plan's one Exchange -> candidate filter. No Python runs in any
+execution of the plan.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ def tile_assignments(
     res: int = 8,
     hand_threshold: float = 15.0,
     hand_fraction: float = 0.8,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Per-(polygon, cell) page counts + HAND candidate flag.
 
@@ -38,28 +38,22 @@ def tile_assignments(
     re-expressed per cell over page HAND values; the candidate predicate is
     ``fraction > hand_fraction``.
 
-    The aggregation is two-phase salted: hotspot mega-cells (30% of pages in
-    5 cells) would otherwise serialize into single reducers at 10^12 rows.
+    The aggregation is one groupBy, planned as a map-side partial and a
+    final aggregate around one Exchange. Hotspot mega-cells (30% of pages
+    in 5 cells) need no salt: the partial aggregate already sends each
+    (poly_id, cell_id) at most one row per map task, so a salt would only
+    add a second exchange.
     """
     if polygons is None:
         polygons = watershed_boxes()
     joined = spatial_join_polygons(pages, polygons, res=res, how="inner")
-
-    partial = (
-        joined.withColumn("_salt", F.pmod(F.hash("lat", "lon"), F.lit(salt_buckets)))
-        .groupBy("poly_id", "cell_id", "_salt")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("value").alias("_sv"),
-            F.sum((F.col("hand") < F.lit(hand_threshold)).cast("long")).alias("_low"),
-        )
-    )
+    n = F.count(F.lit(1))
     return (
-        partial.groupBy("poly_id", "cell_id")
+        joined.groupBy("poly_id", "cell_id")
         .agg(
-            F.sum("_n").alias("n_pages"),
-            (F.sum("_sv") / F.sum("_n")).alias("mean_value"),
-            (F.sum("_low") / F.sum("_n")).alias("low_hand_fraction"),
+            n.alias("n_pages"),
+            (F.sum("value") / n).alias("mean_value"),
+            (F.sum((F.col("hand") < F.lit(hand_threshold)).cast("long")) / n).alias("low_hand_fraction"),
         )
         .withColumn("hand_candidate", F.col("low_hand_fraction") > F.lit(hand_fraction))
     )

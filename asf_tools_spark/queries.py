@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 from . import oracle
 from .core import tiles
 from .functions.membership import zmf_sql
-from .operators.spatial_join import knn_join, salted_count
+from .operators.spatial_join import knn_join
 from .plans.assignments import tile_assignments
 from .sources.pages import geotagged_documents
 from .sources.polygons import boxes_values_sql, watershed_boxes
@@ -61,15 +61,13 @@ def _grid_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_cell_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1+P-family+A-family: geotag -> cell encode -> salted count + mean
-    per cell in ONE pass — sum(value) rides in the salted partials and the
-    mean falls out at the final phase (a separate means groupBy would scan
-    the page table twice)."""
+    """S1+P-family+A-family: geotag -> cell encode -> count + mean per
+    cell in ONE groupBy: a map-side partial aggregate, one Exchange, the
+    final aggregate (the partial already cuts a mega-cell to one row per
+    map task, so no salt)."""
     pages = geotagged_documents(spark, sf_dir, cell_res=8)
-    out = salted_count(pages, "cell_id", salt_buckets=16, salt_by="doc_id",
-                       sum_cols={"_sv": "value"})
-    return out.select(
-        "cell_id", "n_pages", F.round(F.col("_sv") / F.col("n_pages"), 6).alias("mean_value")
+    return pages.groupBy("cell_id").agg(
+        F.count(F.lit(1)).alias("n_pages"), F.round(F.avg("value"), 6).alias("mean_value")
     )
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import oracle
-from .core.io import read_table
+from .core.io import local_frame, read_table
 from .core import cells
 from .functions import geocode
 from .sources.pages import _with_geotag, geotagged_documents
@@ -765,7 +765,7 @@ def q_polygon_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         x, y, _ = cells.decode_xy(np.asarray(cover))
         for xi, yi in zip(x.tolist(), y.tolist()):
             rows.append((int(p["poly_id"]), int(yi), int(xi)))
-    cand = spark.createDataFrame(rows, "poly_id int, row long, col long")
+    cand = local_frame(spark, rows, "poly_id int, row long, col long")
     cand = cand.select(
         "poly_id", "row", "col",
         (F.col("row") * n + F.col("col")).alias("cell_key"),
@@ -1038,24 +1038,15 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine); the value joins back on the page key (co-partitioned at
     scale); variance via explicit sum/sumsq algebra — identical text
     both engines, no stddev built-in semantics to reconcile."""
-    from .core import cells as C
     from .operators.geometry import pip_candidates
-    from .sources.polygons import polygon_edges_df, watershed_polygons
+    from .sources.polygons import bbox_cover_df, polygon_edges_df, watershed_polygons
 
     from .functions.spatial import with_cell_col
     from .sources.pages import _with_geotag
 
     polys = watershed_polygons()
     edges = polygon_edges_df(spark, polys)
-    cover_rows = [
-        (int(p["poly_id"]), int(c))
-        for p in polys
-        for c in C.cover_bbox(
-            float(p["ring"][:, 1].min()), float(p["ring"][:, 0].min()),
-            float(p["ring"][:, 1].max()), float(p["ring"][:, 0].max()), 8,
-        )
-    ]
-    cover = spark.createDataFrame(cover_rows, "poly_id int, cell_id long")
+    cover = bbox_cover_df(spark, polys, 8)
     # events, not documents: 20x the points at every sf — the zonal means
     # rest on a non-trivial population per zone. fan_out: broadcast PIP
     # keeps the stream side's partitioning, so a single-file scan would
@@ -1380,7 +1371,7 @@ def q_fence_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(p["ring"][:, 1].max()) + m, float(p["ring"][:, 0].max()) + m, 8,
         )
     ]
-    cover = spark.createDataFrame(cover_rows, "poly_id int, cell_id long")
+    cover = local_frame(spark, cover_rows, "poly_id int, cell_id long")
     pages = geotagged_documents(spark, sf_dir, cell_res=8)
     cand = (
         pages.select("doc_id", "lat", "lon", "cell_id")

@@ -646,10 +646,11 @@ def _oracle_sqls() -> dict[str, str]:
     sqls["hillshade_grid"] = f"""
         {horn_ctes}
         SELECT trow AS row, tcol AS col,
+               CASE WHEN dzdx IS NOT NULL AND dzdy IS NOT NULL THEN
                ROUND(GREATEST(CAST(0 AS DOUBLE),
                  255.0 * ({cz} * COS(ATAN(SQRT(dzdx*dzdx + dzdy*dzdy)))
                         + {sz} * SIN(ATAN(SQRT(dzdx*dzdx + dzdy*dzdy)))
-                             * COS({az} - ATAN2(dzdy, -dzdx)))), 6) AS hillshade
+                             * COS({az} - ATAN2(dzdy, -dzdx)))), 6) END AS hillshade
         FROM deriv
     """
     sqls["aspect_grid"] = f"""

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from .core.io import local_frame
 from .operators.multimodal import decode_and_featurize, sniff_media_type, synth_media
 
 _NMAD_SCALE = 0.6744897501960817
@@ -66,7 +67,7 @@ def q_histogram_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("c.bin"), F.col("c.w"))
     hist = contrib.groupBy("bin").agg(F.sum("w").alias("mass"))
     kernel = [(-2, 1.0), (-1, 2.0), (0, 3.0), (1, 2.0), (2, 1.0)]
-    kdf = spark.createDataFrame(kernel, "off int, kw double")
+    kdf = local_frame(spark, kernel, "off int, kw double")
     smoothed = (
         hist.crossJoin(F.broadcast(kdf))
         .select((F.col("bin") + F.col("off")).alias("sbin"), (F.col("mass") * F.col("kw")).alias("m"))

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import oracle
+from .core.io import local_frame
 from .operators import dedup, similarity, text
 
 
@@ -328,8 +329,6 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays every stage in one DuckDB WITH RECURSIVE — the funnel counts
     must agree stage by stage. This is the one row that verifies the
     stages COMPOSE correctly, not just that each passes alone."""
-    import pandas as pd
-
     from .plans.corpus_pipeline import CorpusPipelineConfig, curate_corpus
 
     _register(spark, sf_dir, "documents")
@@ -340,12 +339,10 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one final action materializes the corpus and fires the tail observes
     # (near_dedup, sampled); funnel() then reads all six stage metrics
     res["corpus"].write.format("noop").mode("overwrite").save()
-    pdf = pd.DataFrame(res["funnel"](), columns=["stage", "n_docs"])
+    funnel = res["funnel"]()
     res["release"]()  # counts are collected; don't hold stage caches for
     # the remaining 70+ battery queries of this session
-    return spark.createDataFrame(pdf).select(
-        "stage", F.col("n_docs").cast("long").alias("n_docs")
-    )
+    return local_frame(spark, funnel, "stage string, n_docs long")
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3328,7 +3325,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    seeds = spark.createDataFrame([("n0",)], "node string")
+    seeds = local_frame(spark, [("n0",)], "node string")
     return bfs_hops(edges, seeds, max_hops=6)
 
 
@@ -3357,7 +3354,7 @@ def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         e1.unionByName(e2).groupBy("src", "dst").agg(F.min("w").alias("w"))
     )
-    seeds = spark.createDataFrame([("n0",)], "node string")
+    seeds = local_frame(spark, [("n0",)], "node string")
     return shortest_paths(edges, seeds, max_hops=6)
 
 

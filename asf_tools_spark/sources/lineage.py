@@ -18,6 +18,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..core.io import local_frame
+
 LINEAGE_SCHEMA = "job_id string, partition_value string, n_rows long, wall_sec double, committed_at double, status string"
 
 
@@ -83,7 +85,7 @@ class LineageWriter:
             for pv, n in counts
         ]
         if lineage_rows:
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+            local_frame(spark, lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(self.lineage_path)
         return {

@@ -87,7 +87,9 @@ def synth_pages(
     """Deterministic page table with geotags, cell ids and synthetic fields.
 
     30% of pages land in 5 hotspot cells (oracle.HOTSPOTS) — deliberate
-    mega-cell skew so the salted aggregation paths are actually exercised.
+    mega-cell skew, so every per-cell aggregate over these pages meets
+    keys far heavier than the rest (the map-side partial aggregate is
+    what bounds them).
     """
     if partitions is None:
         partitions = max(int(spark.sparkContext.defaultParallelism), 1)

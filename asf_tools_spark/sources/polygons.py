@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..core.io import local_frame
+
 
 def watershed_boxes(n: int = 24, seed: int = 42) -> list[dict]:
     """Deterministic lat/lon boxes: [{poly_id, min_lat, min_lon, max_lat,
@@ -75,7 +77,7 @@ def polygon_vertices_df(spark, polys: list[dict]):
         for p in polys
         for i, v in enumerate(p["ring"])
     ]
-    return spark.createDataFrame(rows, "poly_id int, idx int, lon double, lat double")
+    return local_frame(spark, rows, "poly_id int, idx int, lon double, lat double")
 
 
 def vertices_values_sql(polys: list[dict]) -> str:
@@ -105,9 +107,7 @@ def polygon_edges_df(spark, polys: list[dict]):
             rows.append(
                 (p["poly_id"], float(a[0]), float(a[1]), float(b[0]), float(b[1]))
             )
-    return spark.createDataFrame(
-        rows, "poly_id int, x1 double, y1 double, x2 double, y2 double"
-    )
+    return local_frame(spark, rows, "poly_id int, x1 double, y1 double, x2 double, y2 double")
 
 
 def edges_values_sql(polys: list[dict]) -> str:
@@ -368,7 +368,7 @@ def bbox_cover_df(spark, polys: list[dict], res: int = 8):
             float(p["ring"][:, 1].max()), float(p["ring"][:, 0].max()), res,
         )
     ]
-    return spark.createDataFrame(rows, "poly_id int, cell_id long")
+    return local_frame(spark, rows, "poly_id int, cell_id long")
 
 
 # the strict-inequality upward-ray crossing rule — ONE definition shared by

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..core.io import local_frame
 from ..operators.geometry import pip_candidates
 from ..sources.maintenance import _dir_exists, _fs_and_path
 
@@ -163,11 +164,11 @@ def read_alerts(spark: SparkSession, alerts_dir: str, key_type: str = "long") ->
     that case instead."""
     schema = ALERTS_SCHEMA.replace("user_id long", f"user_id {key_type}")
     if not _dir_exists(spark, alerts_dir):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     try:
         return spark.read.parquet(alerts_dir)
     except Exception:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def prune_snapshots(spark: SparkSession, state_dir: str, keep: int = 2) -> list[int]:

@@ -35,7 +35,7 @@ def _materialize(df) -> int:
 
 def bench_headline(spark, n_pages: int, trials: int) -> dict:
     """Generate -> geotag -> cell-encode -> broadcast spatial join ->
-    salted aggregate -> candidate flag, end to end.
+    partial/final aggregate -> candidate flag, end to end.
 
     The plan is built once and re-executed per trial: plan construction,
     codegen compilation and broadcast build are one-time driver costs on a

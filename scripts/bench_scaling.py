@@ -56,7 +56,7 @@ def main() -> None:
     md = f"""# BENCH — measured baseline & scaling efficiency
 
 Date: {date.today().isoformat()}. Headline job: synthetic page generation ->
-geotag -> cell encode -> broadcast spatial join vs watershed layer -> salted
+geotag -> cell encode -> broadcast spatial join vs watershed layer ->
 per-(polygon,cell) aggregation -> HAND-candidate flag (bench.py), identical
 input ({n_pages:,} pages, seed-deterministic), median of {trials} trials per
 level, fresh JVM per level.
@@ -74,7 +74,7 @@ level, fresh JVM per level.
 Machine: {ncpu} cores; substitution note: "executors" are local[] threads in
 this sandbox — partitioning is identical to a multi-executor layout (the
 generator emits {hi} input partitions; the aggregation shuffles on
-(poly_id, cell_id, salt)).
+(poly_id, cell_id)).
 
 ## Headline throughput (local[{hi}])
 

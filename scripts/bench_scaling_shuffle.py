@@ -1,6 +1,6 @@
 """Two-cluster-size scaling protocol on a SHUFFLE-HEAVY job (r4 verdict
 item 6: the headline tile-assignment job is nearly map-only — broadcast
-join + salted agg — i.e. the strongest possible scaling case; this
+join + one aggregate — i.e. the strongest possible scaling case; this
 datapoint exercises real exchanges).
 
 Job: the full corpus-curation funnel (plans/corpus_pipeline.curate_corpus:

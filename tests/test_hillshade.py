@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from asf_tools_spark.core.io import local_frame
 from asf_tools_spark.operators import tiling
 from asf_tools_spark.operators.fuzzy_ops import aspect_horn, hillshade_horn
 
@@ -75,6 +76,26 @@ def test_hillshade_flat_is_constant(spark):
     # flat terrain: slope 0 -> shade = 255 * cos(zen) everywhere
     expect = 255.0 * np.cos(np.radians(45.0))
     np.testing.assert_allclose(out["hillshade"], expect, rtol=1e-12)
+
+
+def test_hillshade_null_window_is_null(spark):
+    """A window holding a NULL elevation shades NULL, as its aspect is
+    NULL: ``greatest(0, NULL)`` alone would skip the NULL and shade 0.
+    Horn never reads a window's centre, so the NULL cell's own window
+    still shades."""
+    arr = np.random.default_rng(3).normal(0.0, 5.0, (6, 7))
+    rows = [(r, c, None if (r, c) == (2, 3) else float(arr[r, c])) for r in range(6) for c in range(7)]
+    grid = local_frame(spark, rows, "row int, col int, value double")
+    shade = hillshade_horn(grid, "value").toPandas()
+    aspect = aspect_horn(grid, "value").toPandas()
+    assert len(shade) == 4 * 5  # interior only
+    dr, dc = (shade["row"] - 2).abs(), (shade["col"] - 3).abs()
+    near = (dr <= 1) & (dc <= 1) & (dr + dc > 0)
+    assert near.sum() == 8
+    assert shade["hillshade"][near].isna().all(), shade[near]
+    assert shade["hillshade"][~near].notna().all()
+    both = shade.merge(aspect, on=["row", "col"])
+    assert (both["hillshade"].isna() == both["aspect"].isna()).all()
 
 
 def _numpy_aspect(arr, pixel=30.0):
