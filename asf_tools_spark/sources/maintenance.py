@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -35,14 +35,6 @@ def _fs_and_path(spark: SparkSession, path: str):
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
-
-
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence check: os.path.isdir is scheme-blind (an
-    hdfs://, s3a://, or even file:// store would read as absent forever,
-    silently disabling every cross-batch lookup of a streaming store)."""
-    fs, hpath = _fs_and_path(spark, path)
-    return fs.exists(hpath)
 
 
 def small_file_report(spark: SparkSession, table_path: str) -> list[dict]:
@@ -139,111 +131,3 @@ def compact_table(
         fs.delete(p_old, True)
         rewritten[d["partition"]] = (d["n_files"], n_out)
     return rewritten
-
-
-def compact_batch_store(
-    spark: SparkSession, store_dir: str, partition_cols: list[str],
-    keep_latest: int = 1, age_out_below: int | None = None,
-) -> dict:
-    """Compact a STREAMING LOOKUP STORE partitioned by (…, batch_id, …) —
-    the LSH band store (family/batch_id/band_id/bucket) and the substring
-    gram-postings store (gram_n/batch_id/bucket). A long-running stream
-    accretes one partition tree per micro-batch; every probe join then
-    lists and opens all of them. This merges old per-batch partitions into
-    one, and optionally ages out batches below a watermark.
-
-    Correctness contract (why this is safe for exactly-once replay):
-
-    - merged rows are restamped with the MAX merged batch_id, which is
-      strictly < every future batch id — the store lookup's
-      ``batch_id < current`` filter still includes them for all new
-      batches;
-    - the newest ``keep_latest`` batches are NEVER merged: after a
-      checkpoint-recovery replay, foreachBatch re-runs the LAST batch,
-      whose lookup must exclude its own grams — folding them into an
-      older-stamped partition would make the replayed batch treat its own
-      writes as earlier duplicates (a nondeterministic rewrite);
-    - a replayed batch dynamic-overwrites only its OWN batch_id partition,
-      which compaction left in place.
-
-    ``age_out_below`` drops batches below the watermark entirely: for the
-    gram store that is the documented semantic lever — a span whose only
-    earlier sighting was aged out becomes a NEW canonical copy (bounded
-    memory in exchange for re-admitting ancient duplicates), exactly the
-    TTL trade of every windowed dedup.
-
-    Crash-safety: same staging discipline as compact_table (write the
-    merged copy durable under a '_'-hidden dir, then swap via FS renames).
-    Run while the stream is quiesced — between the rename steps a probe
-    would briefly miss the merged batches; a crash leaves the originals
-    recoverable under ``_compact_old``.
-
-    Returns {"aged_out": [...], "merged": [...], "target_batch": int|None,
-    "partitions_before": int, "partitions_after": int}.
-    """
-    if "batch_id" not in partition_cols:
-        raise ValueError("partition_cols must include 'batch_id'")
-    depth = partition_cols.index("batch_id")
-    fs, root = _fs_and_path(spark, store_dir)
-    jvm = spark._jvm
-    root_q = fs.makeQualified(root).toString().rstrip("/")
-
-    def batch_dirs(batch: int | None = None):
-        pat = "/".join(["*"] * depth + [f"batch_id={'*' if batch is None else batch}"])
-        glob = jvm.org.apache.hadoop.fs.Path(f"{root_q}/{pat}")
-        return [st.getPath() for st in fs.globStatus(glob) or []]
-
-    n_before = len(batch_dirs())
-    df = spark.read.parquet(store_dir)
-    batches = sorted(r.batch_id for r in df.select("batch_id").distinct().collect())
-    aged = [b for b in batches if age_out_below is not None and b < age_out_below]
-    live = [b for b in batches if b not in aged]
-    merge = live[: len(live) - keep_latest] if keep_latest > 0 else list(live)
-    out = {"aged_out": aged, "merged": [], "target_batch": None,
-           "partitions_before": n_before}
-
-    if len(merge) >= 2:
-        target = max(merge)
-        tmp = f"{root_q}/_compact_tmp"
-        merged_df = (
-            df.where(F.col("batch_id").isin([int(b) for b in merge]))
-            .withColumn("batch_id", F.lit(int(target)).cast(df.schema["batch_id"].dataType))
-        )
-        # one output file per leaf partition: the whole point is fewer
-        # files. Staged BEFORE any deletion — the merge job must never
-        # depend on paths the age-out below is about to remove.
-        merged_df.repartition(*partition_cols).write.mode("overwrite").partitionBy(
-            *partition_cols
-        ).parquet(tmp)
-
-    for b in aged:
-        for p in batch_dirs(b):
-            fs.delete(p, True)
-
-    if len(merge) >= 2:
-        old_root = jvm.org.apache.hadoop.fs.Path(f"{root_q}/_compact_old")
-        fs.delete(old_root, True)
-        for b in merge:
-            for p in batch_dirs(b):
-                rel = p.toString()[len(root_q):].lstrip("/")
-                dest = jvm.org.apache.hadoop.fs.Path(f"{root_q}/_compact_old/{rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"compact_batch_store: rename {p} failed")
-        # move the merged batch partitions into place (tmp mirrors the
-        # store layout: <p1=v1>/.../batch_id=target/...)
-        pat = "/".join(["*"] * depth + [f"batch_id={target}"])
-        for p in fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{tmp}/{pat}")) or []:
-            src = p.getPath()
-            rel = src.toString()[len(tmp):].lstrip("/")
-            dest = jvm.org.apache.hadoop.fs.Path(f"{root_q}/{rel}")
-            fs.mkdirs(dest.getParent())
-            if not fs.rename(src, dest):
-                raise IOError(f"compact_batch_store: rename {src} failed")
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-        fs.delete(old_root, True)
-        out["merged"] = [int(b) for b in merge]
-        out["target_batch"] = int(target)
-
-    out["partitions_after"] = len(batch_dirs())
-    return out

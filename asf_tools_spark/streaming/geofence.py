@@ -14,14 +14,14 @@ Semantics (batch-granularity presence, documented honestly):
   ping-level transitions (pinned by test).
 
 State discipline: the open-visit set is written as a FULL SNAPSHOT per
-batch (partition batch_id=N, dynamic overwrite). A checkpoint-recovery
-replay of batch k reads snapshot k-1 and rewrites exactly snapshot k and
-alerts partition k — idempotent, exactly-once. Snapshots are SMALL
+batch into a ``streaming.store.BatchStore``, as are the alerts. A
+checkpoint-recovery replay of batch k reads the newest snapshot below k
+and rewrites exactly snapshot k and alerts batch k — exactly-once. An
+all-visits-closed snapshot is an empty frame, which still lands a
+schema-only file, so it stays the newest snapshot. Snapshots are SMALL
 (bounded by concurrently-open visits, not by pings), and
 :func:`prune_snapshots` deletes all but the newest ``keep`` snapshots
-(safe: a replayed batch only ever reads the immediately-preceding one;
-pruning never merges, so the band-store compactor's restamping rules
-don't apply here).
+(safe: a replayed batch only ever reads the immediately-preceding one).
 
 The per-batch spatial work is the SAME broadcast cover-prune +
 crossing-parity refine as the batch path (operators.geometry
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import local_frame
 from ..operators.geometry import pip_candidates
-from ..sources.maintenance import _dir_exists, _fs_and_path
+from .store import BatchStore
 
 
 def fence_cover_df(spark: SparkSession, polys: list[dict], res: int = 8) -> DataFrame:
@@ -61,31 +61,16 @@ class GeofenceAlertIndexer:
     ):
         self.edges = edges
         self.cover = cover
-        self.state_dir = state_dir
-        self.alerts_dir = alerts_dir
+        self.state = BatchStore(state_dir)
+        self.alerts = BatchStore(alerts_dir)
         self.key = key
         self.ts = ts
 
-    def _latest_state(self, spark: SparkSession, batch_id: int) -> DataFrame | None:
-        """Newest snapshot strictly before ``batch_id``. Every snapshot
-        carries a SENTINEL row (user -1 / poly -1), so an all-visits-closed
-        snapshot is still visible to the row-level max — without it, an
-        empty snapshot contributes no rows and the reader would silently
-        fall back to a STALE predecessor and suppress re-entry alerts."""
-        if not _dir_exists(spark, self.state_dir):
-            return None
-        st = spark.read.parquet(self.state_dir).where(F.col("batch_id") < batch_id)
-        latest = st.agg(F.max("batch_id").alias("b")).collect()[0].b
-        if latest is None:
-            return None
-        return (
-            st.where(F.col("batch_id") == latest)
-            .where(~((F.col(self.key) == -1) & (F.col("poly_id") == -1)))
-            .drop("batch_id")
-        )
+    def _previous(self, batch_id: int) -> int | None:
+        """The newest snapshot's batch id below ``batch_id`` (a listing)."""
+        return max((b for b in self.state.batches() if b < batch_id), default=None)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         key, ts = self.key, self.ts
         batch_df = batch_df.localCheckpoint(eager=True)  # 3 consumers below
 
@@ -98,13 +83,16 @@ class GeofenceAlertIndexer:
             .agg(F.min(ts).alias("first_ts"))
         )
         users = batch_df.groupBy(key).agg(F.max(ts).alias("last_ts"))
-        state = self._latest_state(spark, batch_id)
+        prev = self._previous(batch_id)
 
-        if state is None:
+        if prev is None:
             entries = hits.select(key, "poly_id", F.col("first_ts").alias("alert_ts"))
             exits = entries.limit(0)
             new_state = hits.select(key, "poly_id", F.col("first_ts").alias("since_ts"))
         else:
+            state = (
+                self.state.before(batch_id).where(F.col("batch_id") == prev).drop("batch_id")
+            )
             entries = (
                 hits.join(state, [key, "poly_id"], "left_anti")
                 .select(key, "poly_id", F.col("first_ts").alias("alert_ts"))
@@ -130,45 +118,21 @@ class GeofenceAlertIndexer:
         alerts = entries.withColumn("kind", F.lit("entry")).unionByName(
             exits.withColumn("kind", F.lit("exit"))
         )
-        (
-            alerts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.alerts_dir)
-        )
-        # the sentinel row keeps an all-visits-closed snapshot non-empty
-        # (see _latest_state); the direct per-partition path write makes
-        # the snapshot dir itself unconditional too, and a replayed batch
-        # still rewrites exactly its own dir
-        sentinel = new_state.limit(0).unionByName(
-            new_state.sparkSession.range(1).select(
-                F.lit(-1).cast(dict(new_state.dtypes)[self.key]).alias(self.key),
-                F.lit(-1).cast(dict(new_state.dtypes)["poly_id"]).alias("poly_id"),
-                F.lit(None).cast(dict(new_state.dtypes)["since_ts"]).alias("since_ts"),
-            )
-        )
-        new_state.unionByName(sentinel).write.mode("overwrite").parquet(
-            f"{self.state_dir}/batch_id={batch_id}"
-        )
+        self.alerts.write(alerts, batch_id)
+        self.state.write(new_state, batch_id)
 
 
 ALERTS_SCHEMA = "user_id long, poly_id int, alert_ts timestamp, kind string, batch_id int"
 
 
 def read_alerts(spark: SparkSession, alerts_dir: str, key_type: str = "long") -> DataFrame:
-    """Schema-safe alerts reader: quiet batches write NO partition under
-    dynamic overwrite, so before any alert ever fires the directory is
-    absent (or file-less) and a bare spark.read.parquet crashes with
-    'unable to infer schema'. Returns a correctly-typed empty frame in
-    that case instead."""
-    schema = ALERTS_SCHEMA.replace("user_id long", f"user_id {key_type}")
-    if not _dir_exists(spark, alerts_dir):
-        return local_frame(spark, [], schema)
-    try:
-        return spark.read.parquet(alerts_dir)
-    except Exception:
-        return local_frame(spark, [], schema)
+    """The alerts table; a correctly-typed empty frame before the first
+    batch lands (a bare spark.read.parquet would fail with 'unable to
+    infer schema')."""
+    alerts = BatchStore(alerts_dir).before()
+    if alerts is None:
+        return local_frame(spark, [], ALERTS_SCHEMA.replace("user_id long", f"user_id {key_type}"))
+    return alerts
 
 
 def prune_snapshots(spark: SparkSession, state_dir: str, keep: int = 2) -> list[int]:
@@ -177,18 +141,11 @@ def prune_snapshots(spark: SparkSession, state_dir: str, keep: int = 2) -> list[
     recovery-safe). Returns the pruned batch ids."""
     if keep < 2:
         raise ValueError("keep >= 2: a replayed batch must find its predecessor")
-    if not _dir_exists(spark, state_dir):
+    store = BatchStore(state_dir)
+    ids = store.batches()
+    if len(ids) <= keep:
         return []
-    ids = sorted(
-        r.batch_id
-        for r in spark.read.parquet(state_dir).select("batch_id").distinct().collect()
-    )
-    doomed = ids[:-keep] if len(ids) > keep else []
-    fs, root = _fs_and_path(spark, state_dir)
-    for b in doomed:
-        sub = root.suffix(f"/batch_id={b}")  # type: ignore[attr-defined]
-        fs.delete(sub, True)
-    return doomed
+    return store.compact(keep_latest=keep, age_out_below=ids[-keep])["aged_out"]
 
 
 def start_geofence_alerts(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.pages import geotag_pages
+from .near_dup import NearDupIndexer
+from .store import BatchStore
 
 
 def stream_pages(spark: SparkSession, source_dir: str, schema: str | None = None) -> DataFrame:
@@ -84,6 +86,29 @@ def curate_stream(
     return stream_dedup(scrubbed, ts_col=ts_col, text_col=text_col, watermark=watermark)
 
 
+class CuratedIngestIndexer:
+    """foreachBatch sink: lands the curated batch in a
+    ``streaming.store.BatchStore`` and feeds the same batch to a
+    NearDupIndexer, so the corpus and the LSH band store advance in
+    lockstep — a batch can never land in one sink and miss the other, and
+    a replayed batch rewrites both."""
+
+    def __init__(self, out_dir: str, near_dup_store_dir: str, near_dup_pairs_dir: str,
+                 key: str = "url"):
+        self.out = BatchStore(out_dir)
+        self.near_dup = NearDupIndexer(near_dup_store_dir, near_dup_pairs_dir, key=key)
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.persist()  # two consumers: corpus write + indexer
+        try:
+            self.out.write(batch_df, batch_id)
+            self.near_dup(batch_df, batch_id)
+        finally:
+            # a throwing sink is retried with a FRESH DataFrame — without
+            # this, every failed attempt strands another cached batch copy
+            batch_df.unpersist()
+
+
 def start_curated_ingest(
     pages: DataFrame,
     out_dir: str,
@@ -95,44 +120,19 @@ def start_curated_ingest(
     min_quality: float = 0.5,
     watermark: str = "24 hours",
 ):
-    """The full streaming curation entry point: ONE foreachBatch sink that
-    (a) lands the curated survivors (quality screen + PII scrub +
-    watermarked exact dedup — curate_stream) partitioned and
-    dynamic-overwritten by batch_id (exactly-once under replay, same
-    contract as the band store), and (b) feeds the same batch to the
-    NearDupIndexer so the LSH band store and cross-batch candidate pairs
-    advance in lockstep with the corpus — a batch can never land in one
-    sink and miss the other direction of the near-dup index, and a
-    replayed batch rewrites both.
+    """The full streaming curation entry point: curate_stream (quality
+    screen + PII scrub + watermarked exact dedup) into one
+    CuratedIngestIndexer sink.
 
     Downstream, near_dup_pairs feed the batch verify/cluster operators
     (jaccard_on_pairs -> near_dup_clusters) exactly like the batch
     pipeline's tail."""
-    from .near_dup import NearDupIndexer
-
-    indexer = NearDupIndexer(near_dup_store_dir, near_dup_pairs_dir, key=key)
+    sink = CuratedIngestIndexer(out_dir, near_dup_store_dir, near_dup_pairs_dir, key=key)
     curated = curate_stream(
         pages, ts_col=ts_col, min_quality=min_quality, watermark=watermark
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()  # two consumers: corpus write + indexer
-        try:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-            indexer(batch_df, batch_id)
-        finally:
-            # a throwing sink is retried with a FRESH DataFrame — without
-            # this, every failed attempt strands another cached batch copy
-            batch_df.unpersist()
-
     return (
-        curated.writeStream.foreachBatch(_sink)
+        curated.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -1,13 +1,13 @@
 """Incremental (streaming) origin-destination matrix — the readStream twin
-of operators.trajectory.od_matrix, on the batch-partial store discipline
-(streaming.pyramid's shape).
+of operators.trajectory.od_matrix, on a ``streaming.store.BatchStore`` of
+per-batch partials (streaming.pyramid's shape).
 
 The per-(user, day) trip endpoints are ASSOCIATIVE: the day's first ping
 is the min of per-batch firsts under the (ts, tiebreak) order, and the
 last is the max of per-batch lasts — so each micro-batch reduces to ONE
 row per (user, day) seen in the batch (bounded by active user-days, never
-by pings), partials land under batch_id partitions (dynamic overwrite =
-exactly-once replay), and the reader merges partials with the SAME
+by pings), partials land under the batch's id (exactly-once replay),
+and the reader merges partials with the SAME
 struct-ordered min/max before the flow rollup. Stream-end state equals
 the batch operator on the union of all batches BY the associativity
 argument and BY test.
@@ -22,19 +22,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.spatial import with_cell_col
-from ..sources.maintenance import _dir_exists
+from .store import BatchStore
 
 
 class ODIndexer:
     """foreachBatch sink: reduce the batch to per-(user, day) endpoint
-    partials and land them under partition batch_id=N (idempotent)."""
+    partials and land them under the batch's id."""
 
     def __init__(
         self, store_dir: str, res: int = 4,
         key: str = "user_id", ts: str = "ts", tiebreak: str = "event_id",
         lat: str = "lat", lon: str = "lon",
     ):
-        self.store_dir = store_dir
+        self.store = BatchStore(store_dir)
         self.res = res
         self.key, self.ts, self.tiebreak = key, ts, tiebreak
         self.lat, self.lon = lat, lon
@@ -53,13 +53,7 @@ class ODIndexer:
                                F.col("_cell").alias("cell"))).alias("last"),
             )
         )
-        (
-            partials.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.store_dir)
-        )
+        self.store.write(partials, batch_id)
 
 
 def read_od(spark: SparkSession, store_dir: str, key: str = "user_id") -> DataFrame:
@@ -67,9 +61,9 @@ def read_od(spark: SparkSession, store_dir: str, key: str = "user_id") -> DataFr
     endpoint partials with the same struct-ordered min/max (associative —
     exact regardless of how pings were split across batches), then the
     batch operator's flow rollup."""
-    if not _dir_exists(spark, store_dir):
+    store = BatchStore(store_dir).before()
+    if store is None:
         raise FileNotFoundError(f"OD store {store_dir} does not exist")
-    store = spark.read.parquet(store_dir)
     trips = (
         store.groupBy(key, "_day")
         .agg(

@@ -4,30 +4,23 @@ maintenance'; the batch operator is the hypertable-rollup shape, this is
 its continuous-ingest counterpart — a tile server whose zoom aggregates
 stay fresh as the crawl lands, without ever rescanning the corpus).
 
-Design (the repo's batch-partial store discipline, same as the LSH band
-store and the substring gram store):
+Design (the package's batch-partial store, same as the LSH band store and
+the substring gram store):
 
 - each micro-batch is reduced to BASE-RES CELL PARTIALS (row, col, _n, _s)
   — the only state kept is bounded by occupied base cells (<= 4^base_res),
   never by point count, and the per-batch write is one map-side-combined
   aggregate over just that batch's rows;
-- partials land in a parquet store partitioned by ``batch_id`` with
-  dynamic partition overwrite: a checkpoint-recovery replay of batch k
-  rewrites exactly partition batch_id=k — idempotent, exactly-once;
+- partials land in a ``streaming.store.BatchStore`` stamped with
+  ``base_res`` (exactly-once per batch; partials at different resolutions
+  never merge: a store of another base_res is refused);
 - :func:`read_pyramid` serves the pyramid by re-aggregating the partials
   to base cells (counts/sums are associative — partial merge is exact)
   and rolling ancestors with THE SAME ``pyramid_from_base`` plan the
   batch operator uses, so stream-end state == tile_pyramid(all points)
   by construction (pinned by test, not by trust);
-- long streams accrete one partition per batch: compact with
-  ``sources.maintenance.compact_batch_store(store, ["batch_id"])`` — the
-  merge restamps to the max merged batch_id, which stays invisible to the
-  exactly-once contract here because the reader never filters on
-  batch_id and a replayed batch only overwrites its own partition (which
-  compaction's ``keep_latest`` left in place).
-
-``base_res`` is pinned into the store (a ``base_res`` column checked on
-read): partials at different resolutions must never silently merge.
+- long streams accrete one directory per batch: compact with
+  ``PyramidIndexer.store.compact()``.
 """
 
 from __future__ import annotations
@@ -36,12 +29,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core import cells as C
 from ..operators.tiling import pyramid_from_base
-from ..sources.maintenance import _dir_exists
+from .store import BatchStore
 
 
 class PyramidIndexer:
     """foreachBatch sink: reduce the batch to base-res cell partials and
-    land them under partition batch_id=N (idempotent per batch_id)."""
+    land them under the batch's id."""
 
     def __init__(
         self, store_dir: str, base_res: int,
@@ -49,7 +42,7 @@ class PyramidIndexer:
     ):
         if not 0 <= base_res <= 16:
             raise ValueError(f"base_res {base_res} not in [0, 16]")
-        self.store_dir = store_dir
+        self.store = BatchStore(store_dir, {"base_res": base_res})
         self.base_res = base_res
         self.lat, self.lon, self.value_col = lat, lon, value_col
 
@@ -63,14 +56,7 @@ class PyramidIndexer:
             .groupBy("row", "col")
             .agg(F.count(F.lit(1)).alias("_n"), F.sum("_v").alias("_s"))
         )
-        (
-            partials.withColumn("base_res", F.lit(self.base_res))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.store_dir)
-        )
+        self.store.write(partials, batch_id)
 
 
 def read_pyramid(
@@ -79,23 +65,9 @@ def read_pyramid(
     """Serve the full pyramid from the partial store. Exact: count/sum
     partials merge associatively; the ancestor rollup is the SAME plan as
     the batch operator's."""
-    if not _dir_exists(spark, store_dir):
+    store = BatchStore(store_dir, {"base_res": base_res}).before()
+    if store is None:
         raise FileNotFoundError(f"pyramid store {store_dir} does not exist")
-    store = spark.read.parquet(store_dir)
-    if "base_res" not in store.columns:
-        raise ValueError(
-            f"pyramid store {store_dir} lacks a base_res column — written by "
-            "an incompatible layout; rebuild the store"
-        )
-    wrong = store.select("base_res").where(
-        F.col("base_res") != base_res
-    ).limit(1).collect()
-    if wrong:
-        raise ValueError(
-            f"pyramid store {store_dir} holds base_res={wrong[0].base_res} "
-            f"partials; reader asked for base_res={base_res} — refusing to "
-            "merge mixed-resolution partials"
-        )
     base = (
         store.groupBy("row", "col")
         .agg(F.sum("_n").alias("_n"), F.sum("_s").alias("_s"))

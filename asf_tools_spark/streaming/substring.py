@@ -1,6 +1,6 @@
 """Incremental substring-level exact dedup over a page stream — the
 cross-batch twin of ``operators.substring`` (Lee et al. 2022 ExactSubstr),
-built on the same store discipline as the LSH band store
+built on the same batch store as the LSH band store
 (streaming/near_dup.py).
 
 Keep-first semantics align naturally with stream order: the FIRST batch
@@ -18,9 +18,9 @@ Per micro-batch:
      their canonical copy in an earlier batch -> every occurrence in this
      batch drops (``substring_dedup(external_dup_grams=...)``);
      within-batch duplicates keep the batch-local first copy;
-  3. rewritten pages land partitioned by batch_id;
-  4. the batch's distinct gram hashes append to the store, PARTITIONED BY
-     (gram_n, batch_id, bucket = pmod(_gh, n_buckets)) — the bucket rides
+  3. rewritten pages land under the batch's id;
+  4. the batch's distinct gram hashes land in the store, PARTITIONED BY
+     (bucket = pmod(_gh, N_STORE_BUCKETS)) — the bucket rides
      the lookup join key so a batch's store probe prunes to matching
      partitions.
 
@@ -31,13 +31,10 @@ cross-batch span dedup (the batch operator's postings table, made
 persistent), same order as the suffix/fingerprint indexes the literature
 uses.
 
-Exactly-once (same contract as the band store): both sinks are
-dynamic-partition-overwritten by batch_id, and the store lookup reads only
-``batch_id < current`` — a replayed batch rewrites its own partitions and
-never treats its already-landed grams as earlier duplicates. The gram
-width ``gram_n`` is pinned at construction and stamped into the store; a
-store written under a different n is rejected instead of silently
-mis-deduplicating.
+Both sinks are ``streaming.store.BatchStore`` s (exactly-once per batch).
+The gram store is stamped with the gram width ``n``, pinned at
+construction; its bucket count N_STORE_BUCKETS is fixed, because a store
+bucketed another way silently misses earlier duplicates.
 """
 
 from __future__ import annotations
@@ -46,54 +43,26 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..operators.substring import gram_occurrences, substring_dedup
-from ..sources.maintenance import _dir_exists
+from .store import BatchStore
 
 N_STORE_BUCKETS = 64
 
 
 class SubstringDedupIndexer:
     """foreachBatch sink: maintains the gram postings store and the
-    rewritten-page output table. Idempotent per batch_id."""
+    rewritten-page output table."""
 
     def __init__(
         self, store_dir: str, out_dir: str, key: str = "url",
-        text_col: str = "text", n: int = 8, n_buckets: int = N_STORE_BUCKETS,
+        text_col: str = "text", n: int = 8,
     ):
-        self.store_dir = store_dir
-        self.out_dir = out_dir
         self.key = key
         self.text_col = text_col
         self.n = n
-        self.n_buckets = n_buckets
-        self._n_checked = False
-
-    def _store_grams(self, spark, batch_gh: DataFrame, batch_id: int) -> DataFrame:
-        store = spark.read.parquet(self.store_dir)
-        missing = {"gram_n", "batch_id", "bucket", "_gh"} - set(store.columns)
-        if missing:
-            raise ValueError(
-                f"gram store {self.store_dir} lacks column(s) {sorted(missing)} "
-                "— written by an incompatible layout; rebuild before resuming"
-            )
-        if not self._n_checked:
-            # partition listing only, no row scan
-            ns = {r.gram_n for r in store.select("gram_n").distinct().collect()}
-            if ns - {self.n}:
-                raise ValueError(
-                    f"gram store {self.store_dir} was built with n={sorted(ns)}, "
-                    f"indexer is pinned to n={self.n} — mixed widths silently "
-                    "mis-deduplicate"
-                )
-            self._n_checked = True
-        store = store.where(
-            (F.col("gram_n") == self.n) & (F.col("batch_id") < F.lit(batch_id))
-        )
-        # (bucket, _gh) equi-join: bucket is a partition column, so the
-        # probe prunes the store scan to the batch's buckets
-        return store.join(batch_gh, ["bucket", "_gh"], "left_semi").select("_gh")
+        self.store = BatchStore(store_dir, {"gram_n": n}, ("bucket",))
+        self.out = BatchStore(out_dir)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         # substring_dedup groups by the key: duplicate-key rows inside one
         # micro-batch would be merged into ONE rewritten text and the
         # join-back below would then fan that row out across the
@@ -110,44 +79,28 @@ class SubstringDedupIndexer:
         )
         grams = gram_occurrences(
             batch_df, self.key, self.text_col, self.n
-        ).withColumn("bucket", F.pmod(F.col("_gh"), F.lit(self.n_buckets)))
+        ).withColumn("bucket", F.pmod(F.col("_gh"), F.lit(N_STORE_BUCKETS)))
         batch_gh = grams.select("bucket", "_gh").distinct().persist()
-
-        ext = None
-        if _dir_exists(spark, self.store_dir):
-            ext = self._store_grams(spark, batch_gh, batch_id)
-
-        rewritten = substring_dedup(
-            batch_df, self.key, text_col=self.text_col, n=self.n,
-            external_dup_grams=ext,
-        )
-        # join back ONLY the rewritten text: the input may legitimately
-        # carry columns named n_tokens / n_dropped (quality features) or a
-        # batch_id from an upstream batch-stamped table — colliding names
-        # would make the write ambiguous or double-stamp the partition col
-        out = batch_df.drop(self.text_col, "batch_id").join(
-            rewritten.select(
-                self.key, F.col("dedup_text").alias(self.text_col)
-            ),
-            self.key,
-        )
         try:
-            (
-                out.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
+            # (bucket, _gh) equi-join: bucket is a partition column, so the
+            # probe prunes the store scan to the batch's buckets
+            store = self.store.before(batch_id)
+            ext = None if store is None else (
+                store.join(batch_gh, ["bucket", "_gh"], "left_semi").select("_gh")
             )
-            (
-                batch_gh
-                .withColumn("gram_n", F.lit(self.n))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("gram_n", "batch_id", "bucket")
-                .parquet(self.store_dir)
+            rewritten = substring_dedup(
+                batch_df, self.key, text_col=self.text_col, n=self.n,
+                external_dup_grams=ext,
             )
+            # join back ONLY the rewritten text: the input may legitimately
+            # carry columns named n_tokens / n_dropped (quality features)
+            # that would make the join ambiguous
+            out = batch_df.drop(self.text_col).join(
+                rewritten.select(self.key, F.col("dedup_text").alias(self.text_col)),
+                self.key,
+            )
+            self.out.write(out, batch_id)
+            self.store.write(batch_gh, batch_id)
         finally:
             # a throwing sink is retried with a fresh DataFrame — don't
             # strand a cached copy per failed attempt

@@ -3,12 +3,12 @@ stream drives, in ONE micro-batch pass, (a) the tile-pyramid partial
 store (streaming.pyramid — every zoom level stays fresh for the map
 tier) and (b) geofence entry/exit alerts with cross-batch open-visit
 state (streaming.geofence). Both indexers are idempotent per batch_id
-(dynamic/direct partition overwrite), so their composition inside one
+(streaming.store.BatchStore), so their composition inside one
 foreachBatch is exactly-once as a unit: a replayed batch rewrites
-exactly its own partitions in both stores.
+exactly its own directories in both stores.
 
 Optional --maintain runs the store-maintenance levers after the stream
-drains: compact_batch_store on the pyramid partials and prune_snapshots
+drains: the pyramid store's compact() and prune_snapshots
 on the geofence state.
 
 Cluster:
@@ -51,7 +51,6 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from asf_tools_spark.session import STATIC_CONF
-    from asf_tools_spark.sources.maintenance import compact_batch_store
     from asf_tools_spark.sources.polygons import (
         bbox_cover_df, polygon_edges_df, watershed_polygons,
     )
@@ -95,7 +94,7 @@ def main() -> None:
     q.awaitTermination()
 
     if args.maintain:
-        stats = compact_batch_store(spark, args.pyramid, ["batch_id"], keep_latest=1)
+        stats = pyramid.store.compact(keep_latest=1)
         pruned = prune_snapshots(spark, args.state, keep=2)
         print(f"pyramid compaction: {stats}; pruned state snapshots: {pruned}")
 

@@ -1,12 +1,9 @@
-"""compact_batch_store: merging old per-batch partitions of the streaming
+"""BatchStore.compact: merging old per-batch partitions of the streaming
 lookup stores must PRESERVE dedup decisions (same cross-batch cuts, same
 candidate pairs), keep the latest batch replay-idempotent, and actually
 drop partition count. Age-out is the documented TTL trade: an aged-out
 span's next sighting becomes a new canonical."""
 
-import pytest
-
-from asf_tools_spark.sources.maintenance import compact_batch_store
 from asf_tools_spark.streaming.near_dup import NearDupIndexer
 from asf_tools_spark.streaming.substring import SubstringDedupIndexer
 
@@ -38,9 +35,7 @@ def test_compaction_preserves_cross_batch_cuts(spark, tmp_path):
     idx_plain = _run_three_batches(spark, plain_store, plain_out)
     idx_comp = _run_three_batches(spark, comp_store, comp_out)
 
-    res = compact_batch_store(
-        spark, comp_store, ["gram_n", "batch_id", "bucket"], keep_latest=1
-    )
+    res = idx_comp.store.compact(keep_latest=1)
     assert res["merged"] == [0, 1] and res["target_batch"] == 1
     assert res["partitions_after"] < res["partitions_before"]
 
@@ -57,7 +52,7 @@ def test_latest_batch_replays_identically_after_compaction(spark, tmp_path):
     store, out = str(tmp_path / "s"), str(tmp_path / "o")
     idx = _run_three_batches(spark, store, out)
     before = _texts(spark, out)
-    compact_batch_store(spark, store, ["gram_n", "batch_id", "bucket"], keep_latest=1)
+    idx.store.compact(keep_latest=1)
     # checkpoint-recovery semantics: foreachBatch re-runs the LAST batch;
     # its store lookup (batch_id < 2) must not see its own grams restamped
     # into an older partition
@@ -68,10 +63,7 @@ def test_latest_batch_replays_identically_after_compaction(spark, tmp_path):
 def test_age_out_readmits_ancient_spans(spark, tmp_path):
     store, out = str(tmp_path / "s"), str(tmp_path / "o")
     idx = _run_three_batches(spark, store, out)
-    res = compact_batch_store(
-        spark, store, ["gram_n", "batch_id", "bucket"],
-        keep_latest=1, age_out_below=1,
-    )
+    res = idx.store.compact(keep_latest=1, age_out_below=1)
     assert res["aged_out"] == [0]
     # batch 0's span is gone from the store: its re-serving is a NEW
     # canonical (kept intact), the documented TTL trade
@@ -92,10 +84,7 @@ def test_band_store_compaction_preserves_pairs(spark, tmp_path):
         idx(_batch(spark, rows1), 1)
         idx(_batch(spark, [("u2", "yet more filler prose for batch two okay")]), 2)
         if store == comp_store:
-            res = compact_batch_store(
-                spark, store, ["family", "batch_id", "band_id", "bucket"],
-                keep_latest=1,
-            )
+            res = idx.store.compact(keep_latest=1)
             assert res["target_batch"] == 1
             assert res["partitions_after"] < res["partitions_before"]
         idx(_batch(spark, late), 3)
@@ -109,8 +98,3 @@ def test_band_store_compaction_preserves_pairs(spark, tmp_path):
     got = pairs_set(comp_pairs)
     assert got == pairs_set(plain_pairs)
     assert ("u0", "u9") in got  # the cross-batch pair survives compaction
-
-
-def test_requires_batch_id_partition(spark):
-    with pytest.raises(ValueError, match="batch_id"):
-        compact_batch_store(spark, "/nonexistent", ["bucket"])

@@ -46,7 +46,7 @@ def test_stream_equals_batch_across_split_batches(spark, tmp_path):
     want = _sorted_flows(od_matrix(_pings(spark, ROWS), res=4))
     assert got == want
 
-    # replay of the last batch: identical (dynamic overwrite of its own partition)
+    # replay of the last batch: identical (it overwrites its own directory)
     idx(_pings(spark, [ROWS[2]]), 2)
     assert _sorted_flows(read_od(spark, store)) == want
 

@@ -1,12 +1,11 @@
 """Streaming tile-pyramid maintenance: stream-end state == batch
-tile_pyramid, exactly-once replay, mixed-resolution guard, compaction
-invariance, and a real availableNow stream run."""
+tile_pyramid, exactly-once replay, compaction invariance, and a real
+availableNow stream run."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from asf_tools_spark.operators.tiling import tile_pyramid
-from asf_tools_spark.sources.maintenance import compact_batch_store
 from asf_tools_spark.streaming.pyramid import (
     PyramidIndexer, read_pyramid, start_pyramid,
 )
@@ -42,8 +41,8 @@ def test_stream_equals_batch_and_replay_idempotent(spark, tmp_path):
     want = _sorted_rows(tile_pyramid(_points(spark, 0, 1000), BASE_RES))
     assert got == want
 
-    # failure-recovery replay of the LAST batch: dynamic overwrite rewrites
-    # only partition batch_id=2 — the pyramid is unchanged
+    # failure-recovery replay of the LAST batch rewrites only directory
+    # batch_id=2 — the pyramid is unchanged
     idx(_points(spark, 700, 1000), 2)
     assert _sorted_rows(read_pyramid(spark, store, BASE_RES)) == want
 
@@ -54,20 +53,12 @@ def test_compaction_preserves_pyramid(spark, tmp_path):
     for b in range(4):
         idx(_points(spark, 250 * b, 250 * (b + 1)), b)
     before = _sorted_rows(read_pyramid(spark, store, BASE_RES))
-    stats = compact_batch_store(spark, store, ["batch_id"], keep_latest=1)
+    stats = idx.store.compact(keep_latest=1)
     assert stats["partitions_after"] < stats["partitions_before"]
     assert _sorted_rows(read_pyramid(spark, store, BASE_RES)) == before
     # a replay of the newest batch still lands in its own (kept) partition
     idx(_points(spark, 750, 1000), 3)
     assert _sorted_rows(read_pyramid(spark, store, BASE_RES)) == before
-
-
-def test_mixed_resolution_store_refused(spark, tmp_path):
-    store = str(tmp_path / "store")
-    PyramidIndexer(store, BASE_RES)(_points(spark, 0, 50), 0)
-    PyramidIndexer(store, BASE_RES + 1)(_points(spark, 50, 100), 1)
-    with pytest.raises(ValueError, match="mixed-resolution"):
-        read_pyramid(spark, store, BASE_RES)
 
 
 def test_missing_store_raises(spark, tmp_path):

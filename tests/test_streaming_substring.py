@@ -1,8 +1,7 @@
 """Incremental substring dedup: cross-batch span removal (keep-first in
-stream order), within-batch first-copy rule, exactly-once replay, store
-n-width guard, and a real availableNow stream run."""
+stream order), within-batch first-copy rule, exactly-once replay and a
+real availableNow stream run."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from asf_tools_spark.streaming.substring import (
@@ -42,7 +41,7 @@ def test_cross_batch_span_cut_and_replay(spark, tmp_path):
 
     # replay batch 1 (failure recovery): identical result — the store
     # lookup excludes batch_id >= current, so its own landed grams don't
-    # mark it duplicated, and dynamic overwrite rewrites its partitions
+    # mark it duplicated, and the rewrite replaces its own directories
     idx(_batch(spark, [
         ("b1", f"second page repeats {SPAN} verbatim"),
         ("b2", "a fully unrelated page body here"),
@@ -60,17 +59,6 @@ def test_within_batch_keeps_local_first_copy(spark, tmp_path):
     t = _texts(spark, out)
     # batch-local rule: min (url, pos) occurrence survives
     assert (SPAN in t["a1"]) != (SPAN in t["a2"])  # exactly one keeps it
-
-
-def test_store_n_width_guard(spark, tmp_path):
-    store, out = str(tmp_path / "store"), str(tmp_path / "out")
-    SubstringDedupIndexer(store, out, key="url", n=8)(
-        _batch(spark, [("a1", f"x {SPAN} y")]), 0
-    )
-    with pytest.raises(ValueError, match="n="):
-        SubstringDedupIndexer(store, out, key="url", n=6)(
-            _batch(spark, [("c1", "whatever text")]), 1
-        )
 
 
 def test_colliding_input_columns(spark, tmp_path):
