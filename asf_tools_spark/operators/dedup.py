@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .labeling import merge_labels
+from .pairs import block_pairs
 
 
 def default_hash_family() -> str:
@@ -162,11 +163,8 @@ def lsh_candidate_pairs(
     if collapse_identical:
         sigs = collapse_identical_signatures(sigs, key)
     banded = band_rows(sigs, key, bands, rows_per_band)
-    a = banded.select(F.col(key).alias("key_a"), "band_id", "band_val")
-    b = banded.select(F.col(key).alias("key_b"), "band_id", "band_val")
     return (
-        a.join(b, ["band_id", "band_val"])
-        .where(F.col("key_a") < F.col("key_b"))
+        block_pairs(banded, banded, key, ["band_id", "band_val"])
         .select("key_a", "key_b")
         .distinct()
     )
@@ -319,12 +317,10 @@ def hamming_near_pairs(sim: DataFrame, key: str, bits: int = 16, max_distance: i
     blocked = sim.select(
         key, "simhash", F.explode(F.array(*block_exprs)).alias("b")
     ).select(key, "simhash", F.col("b.blk_id").alias("blk_id"), F.col("b.blk_val").alias("blk_val"))
-    a = blocked.select(F.col(key).alias("key_a"), F.col("simhash").alias("sh_a"), "blk_id", "blk_val")
-    b = blocked.select(F.col(key).alias("key_b"), F.col("simhash").alias("sh_b"), "blk_id", "blk_val")
-    pairs = a.join(b, ["blk_id", "blk_val"]).where(F.col("key_a") < F.col("key_b")).drop("blk_id", "blk_val")
+    pairs = block_pairs(blocked, blocked, key, ["blk_id", "blk_val"], carry=["simhash"])
     return (
-        pairs.distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        pairs.select("key_a", "key_b", "simhash_a", "simhash_b").distinct()
+        .withColumn("hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
         .where(F.col("hamming") <= max_distance)
         .select("key_a", "key_b", "hamming")
     )
@@ -374,13 +370,12 @@ def embedding_near_dup(
         key, vec_col, F.explode(F.array(*tables)).alias("tb")
     ).select(key, vec_col, F.col("tb.t").alias("t"), F.col("tb.b").alias("bucket"))
 
-    a = bucketed.select(F.col(key).alias("key_a"), F.col(vec_col).alias("va"), "t", "bucket")
-    b = bucketed.select(F.col(key).alias("key_b"), F.col(vec_col).alias("vb"), "t", "bucket")
-    # dedup multi-table collisions on the KEYS only — va/vb are determined
-    # by the keys, and .distinct() would shuffle the full embedding arrays
+    # dedup multi-table collisions on the KEYS only — the vectors are
+    # determined by the keys, and .distinct() would shuffle the full arrays
+    va, vb = f"{vec_col}_a", f"{vec_col}_b"
     pairs = (
-        a.join(b, ["t", "bucket"]).where(F.col("key_a") < F.col("key_b"))
-        .select("key_a", "key_b", "va", "vb").dropDuplicates(["key_a", "key_b"])
+        block_pairs(bucketed, bucketed, key, ["t", "bucket"], carry=[vec_col])
+        .select("key_a", "key_b", va, vb).dropDuplicates(["key_a", "key_b"])
     )
 
     def dot(x: str, y: str) -> Column:
@@ -396,7 +391,7 @@ def embedding_near_dup(
         ))
 
     return (
-        pairs.withColumn("cosine", dot("va", "vb") / (norm("va") * norm("vb")))
+        pairs.withColumn("cosine", dot(va, vb) / (norm(va) * norm(vb)))
         .where(F.col("cosine") >= cosine_threshold)
         .select("key_a", "key_b", "cosine")
     )
@@ -558,31 +553,17 @@ def setsim_join(
     prefix = ranked.select(
         F.col(key), "n_toks",
         F.posexplode(F.slice("toks", 1, pref_len)).alias("p0", "sh"),
-    )
-    # distinct column names per side: a self-join on a shared-lineage 'sh'
-    # column logs Spark's trivially-true-predicate warning and leans on
-    # dataset-id disambiguation — explicit aliases make the equi-join key
-    # unambiguous
-    a = prefix.select(
-        F.col(key).alias("key_a"), F.col("n_toks").alias("na"),
-        (F.col("p0") + 1).alias("pa"), F.col("sh").alias("sh_a"),
-    )
-    b = prefix.select(
-        F.col(key).alias("key_b"), F.col("n_toks").alias("nb"),
-        (F.col("p0") + 1).alias("pb"), F.col("sh").alias("sh_b"),
-    )
-    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("na") + F.col("nb")))
+    ).select(key, "n_toks", (F.col("p0") + 1).alias("pos"), "sh")
+    na, nb = F.col("n_toks_a"), F.col("n_toks_b")
+    alpha = F.ceil(F.lit(t / (1.0 + t)) * (na + nb))
     cand = (
-        a.join(
-            b,
-            (F.col("sh_a") == F.col("sh_b"))
-            & (F.col("key_a") < F.col("key_b"))
+        block_pairs(prefix, prefix, key, ["sh"], carry=["n_toks", "pos"])
+        .where(
             # length filter: t <= jac <= min(na,nb)/max(na,nb)
-            & (F.col("na") * F.lit(1.0) >= F.lit(t) * F.col("nb"))
-            & (F.col("nb") * F.lit(1.0) >= F.lit(t) * F.col("na"))
+            (na * F.lit(1.0) >= F.lit(t) * nb)
+            & (nb * F.lit(1.0) >= F.lit(t) * na)
             # ppjoin positional upper bound vs the alpha overlap floor
-            & (F.lit(1) + F.least(F.col("na") - F.col("pa"),
-                                  F.col("nb") - F.col("pb")) >= alpha),
+            & (F.lit(1) + F.least(na - F.col("pos_a"), nb - F.col("pos_b")) >= alpha)
         )
         .select("key_a", "key_b")
         .dropDuplicates(["key_a", "key_b"])

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .pairs import block_pairs
+
 
 def deletion_variants(col: Column, max_dist: int = 1) -> Column:
     """Array of DISTINCT strings reachable from ``col`` by 0..max_dist
@@ -64,8 +66,9 @@ def editsim_join(
     recall loss. ``key`` must be unique (one row per string).
 
     Plan: explode deletion variants -> xxhash64 the variant (8-byte
-    shuffle key; a collision only widens the candidate set) -> self-join
-    aliased sides -> distinct pairs -> length + levenshtein verify.
+    shuffle key; a collision only widens the candidate set) -> blocked
+    self-join on the variant hash -> distinct pairs -> length + levenshtein
+    verify.
     """
     if max_dist < 1:
         raise ValueError("max_dist must be >= 1 (use exact dedup for 0)")
@@ -74,27 +77,19 @@ def editsim_join(
         F.col(text_col).alias("_s"),
         F.explode(deletion_variants(F.col(text_col), max_dist)).alias("_v"),
     ).select("_k", "_s", F.xxhash64("_v").alias("_vh"))
-    a = sig.select(
-        F.col("_vh"), F.col("_k").alias("key_a"), F.col("_s").alias("_sa")
-    )
-    b = sig.select(
-        F.col("_vh").alias("_vhb"),
-        F.col("_k").alias("key_b"),
-        F.col("_s").alias("_sb"),
-    )
     cand = (
-        a.join(b, (a["_vh"] == b["_vhb"]) & (a["key_a"] < b["key_b"]))
-        .select("key_a", "key_b", "_sa", "_sb")
+        block_pairs(sig, sig, "_k", ["_vh"], carry=["_s"])
+        .select("key_a", "key_b", "_s_a", "_s_b")
         .distinct()
     )
     return (
         cand.where(
-            F.abs(F.length("_sa") - F.length("_sb")) <= F.lit(max_dist)
+            F.abs(F.length("_s_a") - F.length("_s_b")) <= F.lit(max_dist)
         )
         .select(
             "key_a",
             "key_b",
-            F.levenshtein("_sa", "_sb").alias("dist"),
+            F.levenshtein("_s_a", "_s_b").alias("dist"),
         )
         .where(F.col("dist") <= F.lit(max_dist))
     )

@@ -41,6 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.io import local_frame
+from .pairs import block_pairs
 
 DRIVER_MAX_GRAPH_EDGES = 100_000  # edge-row guard for the driver-local replays
 
@@ -560,12 +561,8 @@ def _triangles_from(und: DataFrame, deg: DataFrame) -> DataFrame:
         .otherwise(F.struct("_dega", F.col("a").alias("n")))
         .alias("_hi"),
     )
-    e1 = oriented.select("u", F.col("v").alias("v1"), F.col("_hi").alias("_k1"))
-    e2 = oriented.select(
-        F.col("u").alias("u2"), F.col("v").alias("v2"), F.col("_hi").alias("_k2")
-    )
-    wedges = e1.join(e2, (e1["u"] == e2["u2"]) & (e1["_k1"] < e2["_k2"])).select(
-        "u", "v1", "v2"
+    wedges = block_pairs(oriented, oriented, "_hi", ["u"], carry=["v"]).select(
+        "u", F.col("v_a").alias("v1"), F.col("v_b").alias("v2")
     )
     closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
     tris = wedges.join(closing, ["v1", "v2"])

@@ -33,6 +33,7 @@ from pyspark.sql.types import BooleanType
 
 from ..core import cells, geometry
 from ..core.io import local_frame
+from .pairs import block_pairs
 
 
 _BOUNDS = ("min_lat", "min_lon", "max_lat", "max_lon")
@@ -178,21 +179,20 @@ def distance_band_join(
 
     Never all-pairs: each point lands in its res-level grid cell; the
     LEFT side explodes the 3x3 neighbor offsets (constant fan-out) and
-    ONE equi-join on (row, col) against the unexploded side enumerates
-    only co-located candidates; the exact haversine refine runs on those.
+    ONE ``pairs.block_pairs`` equi-join on (row, col) against the
+    unexploded side enumerates only co-located candidates; the exact
+    haversine refine runs on those.
     COVERAGE PRECONDITION (caller picks res): any two points within
     radius_km must differ by < 1 cell in both axes, i.e.
     radius_km <= 111.19 * min(180/2^res, (360/2^res) * cos(lat_max)).
     The registry row documents its margin; no antimeridian wraparound
     (the synthetic corpus is bounded to lon [-175, 175]).
 
-    Each unordered pair is found twice (a exploded onto b's cell and
-    vice versa); ``key_a < key_b`` keeps exactly one. At 10^12 pages the
-    exchange is the (row, col) hash join; skewed mega-cells are the
-    same cells hotspot_clusters bounds — the candidate set within a
-    cell is quadratic in that CELL's population only, which is the
-    operator's intrinsic output bound (a dense clump genuinely has that
-    many qualifying pairs).
+    At 10^12 pages the exchange is the (row, col) hash join; skewed
+    mega-cells are the same cells hotspot_clusters bounds — the candidate
+    set within a cell is quadratic in that CELL's population only, which
+    is the operator's intrinsic output bound (a dense clump genuinely has
+    that many qualifying pairs).
     """
     from ..core import cells as C
 
@@ -205,26 +205,16 @@ def distance_band_join(
         F.expr(C.grid_y_sql(lat, res)).alias("_gy"),
         F.expr(C.grid_x_sql(lon, res)).alias("_gx"),
     )
-    left = (
-        base.withColumn("_o", F.explode(offs))
-        .select(
-            F.col(key).alias("key_a"),
-            F.col("_lat").alias("lat_a"), F.col("_lon").alias("lon_a"),
-            (F.col("_gy") + F.col("_o.dr")).alias("_gy"),
-            (F.col("_gx") + F.col("_o.dc")).alias("_gx"),
-        )
-    )
-    right = base.select(
-        F.col(key).alias("key_b"),
-        F.col("_lat").alias("lat_b"), F.col("_lon").alias("lon_b"),
-        "_gy", "_gx",
+    shifted = base.withColumn("_o", F.explode(offs)).select(
+        key, "_lat", "_lon",
+        (F.col("_gy") + F.col("_o.dr")).alias("_gy"),
+        (F.col("_gx") + F.col("_o.dc")).alias("_gx"),
     )
     dist = haversine_km(
-        F.col("lat_a"), F.col("lon_a"), F.col("lat_b"), F.col("lon_b")
+        F.col("_lat_a"), F.col("_lon_a"), F.col("_lat_b"), F.col("_lon_b")
     )
     return (
-        left.join(right, ["_gy", "_gx"])
-        .where(F.col("key_a") < F.col("key_b"))
+        block_pairs(shifted, base, key, ["_gy", "_gx"], carry=["_lat", "_lon"])
         .withColumn("dist_km", dist)
         .where(F.col("dist_km") <= F.lit(float(radius_km)))
         .select("key_a", "key_b", F.round("dist_km", 4).alias("dist_km"))

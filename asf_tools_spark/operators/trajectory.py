@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.spatial import with_cell_col
+from .pairs import block_pairs
 from .spatial_join import haversine_km
 
 
@@ -200,24 +201,13 @@ def colocation_pairs(
         )
         .distinct()
     )
-    a, b = occ.alias("a"), occ.alias("b")
-    pair = (
-        a.join(
-            b,
-            (F.col("a._cell") == F.col("b._cell"))
-            & (F.col("a._bucket") == F.col("b._bucket"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
+    return (
+        block_pairs(occ, occ, key, ["_cell", "_bucket"])
+        .groupBy(F.col("key_a").alias("user_a"), F.col("key_b").alias("user_b"))
+        .agg(
+            F.count(F.lit(1)).alias("n_windows"),
+            F.countDistinct("_cell").alias("n_cells"),
         )
-        .select(
-            F.col(f"a.{key}").alias("user_a"),
-            F.col(f"b.{key}").alias("user_b"),
-            F.col("a._cell").alias("cell"),
-            F.col("a._bucket").alias("bucket"),
-        )
-    )
-    return pair.groupBy("user_a", "user_b").agg(
-        F.count(F.lit(1)).alias("n_windows"),
-        F.countDistinct("cell").alias("n_cells"),
     )
 
 
@@ -304,52 +294,3 @@ def geofence_events(
         (next_seq.isNull() | (next_seq != F.col(seq) + 1)).alias("is_exit"),
     )
     return ev.where(F.col("is_entry") | F.col("is_exit"))
-
-
-def footprint_minhash_pairs(
-    pings: DataFrame,
-    res: int = 4,
-    n_hashes: int = 16,
-    bands: int = 16,
-    key: str = "user_id",
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """The 100 TB scale path for footprint similarity (the exact gate is
-    queries_geo.track_similarity): MinHash signatures over each entity's
-    visited-cell SET — sig_i = min over cells of xxhash64(salt_i, cell) —
-    banded LSH exactly like the text near-dup family (operators/dedup),
-    so candidate generation is band-bucket equi-joins, never the
-    occupancy self-join. Default operating point is 16 SINGLE-ROW bands:
-    track_similarity's threshold is LOW (J >= 0.2), where multi-row
-    bands collapse recall (P(band hit) = J^r) — r=1, b=16 gives
-    1-(1-J)^16 = 0.97 at J=0.2 at the price of more low-J candidates for
-    the exact verify (the standard low-threshold LSH trade). Returns
-    candidate pairs (user_a < user_b); feed them to the exact Jaccard
-    verify for the verified graph. Recall vs the exact pairs is pinned
-    by test (the lsh_recall_report discipline)."""
-    if n_hashes % bands != 0:
-        raise ValueError(f"bands {bands} must divide n_hashes {n_hashes}")
-    rows_per_band = n_hashes // bands
-    occ = (
-        with_cell_col(pings, lat, lon, res, "_cell")
-        .select(key, "_cell")
-        .distinct()
-    )
-    sigs = occ.groupBy(key).agg(*[
-        F.min(F.xxhash64(F.lit(f"fp-{i}"), F.col("_cell"))).alias(f"_h{i}")
-        for i in range(n_hashes)
-    ])
-    pairs = None
-    for b in range(bands):
-        cols = [f"_h{b * rows_per_band + r}" for r in range(rows_per_band)]
-        band_val = F.xxhash64(*[F.col(c) for c in cols])
-        left = sigs.select(F.col(key).alias("user_a"), band_val.alias("_bv"))
-        right = sigs.select(F.col(key).alias("user_b"), band_val.alias("_bv"))
-        cand = (
-            left.join(right, "_bv")
-            .where(F.col("user_a") < F.col("user_b"))
-            .select("user_a", "user_b")
-        )
-        pairs = cand if pairs is None else pairs.unionByName(cand)
-    return pairs.distinct()

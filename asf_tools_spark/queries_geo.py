@@ -22,6 +22,7 @@ from . import oracle
 from .core.io import local_frame, read_table
 from .core import cells
 from .functions import geocode
+from .operators.pairs import block_pairs
 from .sources.pages import _with_geotag, geotagged_documents
 
 _QK_Z = 8
@@ -542,17 +543,12 @@ def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tie-corrected variance and the standard +/-1 continuity
     correction; all-tied series (var 0) are 'no_trend' with NULL z."""
     filled = _daily_cube(spark, sf_dir)
-    a, b = filled.alias("a"), filled.alias("b")
     s = (
-        a.join(
-            b,
-            (F.col("a.row") == F.col("b.row")) & (F.col("a.col") == F.col("b.col"))
-            & (F.col("a.day") < F.col("b.day")),
-        )
-        .groupBy(F.col("a.row").alias("row"), F.col("a.col").alias("col"))
+        block_pairs(filled, filled, "day", ["row", "col"], carry=["x"])
+        .groupBy("row", "col")
         .agg(
             F.sum(
-                F.signum((F.col("b.x") - F.col("a.x")).cast("double")).cast("long")
+                F.signum((F.col("x_b") - F.col("x_a")).cast("double")).cast("long")
             ).alias("s")
         )
     )
@@ -853,14 +849,11 @@ def q_track_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     movement footprints: candidate pairs come from an INVERTED CELL INDEX
     (cell-keyed self-join of distinct occupancy), never all user pairs;
     |union| = |A| + |B| - |inter| from a broadcast per-user cell-count
-    join. This row is the EXACT gate: join volume is sum(u_c^2) over
-    cells, and the synthetic corpus is deliberately adversarial (every
-    user visits the same 5 hotspot cities -> ~5M intersection rows at
-    sf0.1, ~10 s). The 100 TB path is the repo's existing MinHash/LSH
-    machinery applied to the cell-id sets (operators/dedup.py — same
-    signatures, cell ids instead of shingles), with THIS row as its
-    recall oracle, exactly the lsh_recall_report discipline. Emits
-    pairs with jaccard >= 0.2."""
+    join. The cell self-join is ``pairs.block_pairs`` on (row, col). This
+    row is EXACT: join volume is sum(u_c^2) over cells, and the synthetic
+    corpus is deliberately adversarial (every user visits the same 5
+    hotspot cities -> ~5M intersection rows at sf0.1, ~10 s); the few
+    heavy cells carry that volume. Emits pairs with jaccard >= 0.2."""
     ev = _geotagged_events(spark, sf_dir)
     occ = (
         ev.select(
@@ -874,16 +867,9 @@ def q_track_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     sizes = occ.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_cells"))
-    a, b = occ.alias("a"), occ.alias("b")
     inter = (
-        a.join(
-            b,
-            (F.col("a.row") == F.col("b.row")) & (F.col("a.col") == F.col("b.col"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .groupBy(
-            F.col("a.user_id").alias("user_a"), F.col("b.user_id").alias("user_b")
-        )
+        block_pairs(occ, occ, "user_id", ["row", "col"])
+        .groupBy(F.col("key_a").alias("user_a"), F.col("key_b").alias("user_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     sa = sizes.select(F.col("user_id").alias("user_a"), F.col("n_cells").alias("_na"))

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import oracle
 from .core.io import local_frame
 from .operators import dedup, similarity, text
+from .operators.pairs import block_pairs
 
 
 def _register(spark: SparkSession, sf_dir: str, *names: str) -> None:
@@ -108,10 +109,8 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.table("documents").where(F.col("doc_id") < RECALL_SAMPLE)
     sh = dedup.word_shingles(docs, "doc_id")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    sa = sh.select(F.col("doc_id").alias("key_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("key_b"), "shingle")
     inter = (
-        sa.join(sb, "shingle").where(F.col("key_a") < F.col("key_b"))
+        block_pairs(sh, sh, "doc_id", ["shingle"])
         .groupBy("key_a", "key_b").agg(F.count(F.lit(1)).alias("i"))
     )
     truth = (

@@ -86,7 +86,10 @@ class NearDupIndexer:
                 .distinct()
             )
             # cross-batch pairs: new bands vs earlier batches' bands; the
-            # bucket join key prunes the partitioned store scan
+            # bucket join key prunes the partitioned store scan. Not
+            # pairs.block_pairs: the sides are two different sets, so a
+            # pair's smaller key can be on either side (least/greatest
+            # under != here; key_a < key_b would need a second join)
             store = self.store.before(batch_id)
             if store is not None:
                 cross = (
@@ -97,7 +100,6 @@ class NearDupIndexer:
                         F.least(F.col(f"n.{self.key}"), F.col(f"s.{self.key}")).alias("key_a"),
                         F.greatest(F.col(f"n.{self.key}"), F.col(f"s.{self.key}")).alias("key_b"),
                     )
-                    .distinct()
                 )
                 pairs = pairs.unionByName(cross).distinct()
             self.pairs.write(pairs, batch_id)

@@ -27,14 +27,16 @@ from .store import BatchStore
 
 class ODIndexer:
     """foreachBatch sink: reduce the batch to per-(user, day) endpoint
-    partials and land them under the batch's id."""
+    partials and land them under the batch's id. The store is stamped with
+    ``res``: partials at two resolutions would merge a first ping's cell
+    at one resolution with a last ping's cell at the other."""
 
     def __init__(
         self, store_dir: str, res: int = 4,
         key: str = "user_id", ts: str = "ts", tiebreak: str = "event_id",
         lat: str = "lat", lon: str = "lon",
     ):
-        self.store = BatchStore(store_dir)
+        self.store = BatchStore(store_dir, {"res": res})
         self.res = res
         self.key, self.ts, self.tiebreak = key, ts, tiebreak
         self.lat, self.lon = lat, lon
@@ -56,12 +58,14 @@ class ODIndexer:
         self.store.write(partials, batch_id)
 
 
-def read_od(spark: SparkSession, store_dir: str, key: str = "user_id") -> DataFrame:
-    """Serve the O-D flow matrix from the partial store: merge per-batch
-    endpoint partials with the same struct-ordered min/max (associative —
-    exact regardless of how pings were split across batches), then the
-    batch operator's flow rollup."""
-    store = BatchStore(store_dir).before()
+def read_od(
+    spark: SparkSession, store_dir: str, res: int = 4, key: str = "user_id"
+) -> DataFrame:
+    """Serve the O-D flow matrix from the partial store written at ``res``:
+    merge per-batch endpoint partials with the same struct-ordered min/max
+    (associative — exact regardless of how pings were split across
+    batches), then the batch operator's flow rollup."""
+    store = BatchStore(store_dir, {"res": res}).before()
     if store is None:
         raise FileNotFoundError(f"OD store {store_dir} does not exist")
     trips = (
@@ -77,9 +81,12 @@ def read_od(spark: SparkSession, store_dir: str, key: str = "user_id") -> DataFr
     )
 
 
-def start_od(points: DataFrame, store_dir: str, checkpoint_dir: str, **kwargs):
-    """availableNow streaming maintenance of the O-D endpoint store."""
-    indexer = ODIndexer(store_dir, **kwargs)
+def start_od(
+    points: DataFrame, store_dir: str, checkpoint_dir: str, res: int = 4, **kwargs
+):
+    """availableNow streaming maintenance of the O-D endpoint store at
+    ``res``; read it back with ``read_od(spark, store_dir, res)``."""
+    indexer = ODIndexer(store_dir, res, **kwargs)
     return (
         points.writeStream.outputMode("append")
         .foreachBatch(indexer)

@@ -9,6 +9,11 @@ lint* before compare, so the mirror can no longer pass where the driver
 hash-fails on int-vs-Decimal. Ints are hashed as ints (no int->float
 normalization leniency).
 
+Every PASS and rows-only (OK?) line carries the Spark-side value hash,
+so a diff of two runs' output (say, before and after a change) also
+covers the rows that have no oracle. Runs from any working directory: the
+package is imported from this script's repository.
+
 Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -18,11 +23,12 @@ import decimal
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -95,8 +101,9 @@ def main() -> int:
             print(f"FAIL {name}: spark error {e}")
             failures += 1
             continue
+        hs = value_hash(srows, scols)
         if name not in os_:
-            print(f"OK?  {name}: rows-only ({len(srows)} rows, no oracle)")
+            print(f"OK?  {name}: rows-only ({len(srows)} rows, no oracle) hash {hs}")
             continue
         try:
             otbl = con.execute(os_[name]).arrow()
@@ -118,14 +125,14 @@ def main() -> int:
         if sorted(scols) != sorted(ocols):
             status.append(f"cols {sorted(scols)} != {sorted(ocols)}")
         if not status:
-            hs, ho = value_hash(srows, scols), value_hash(orows, ocols)
+            ho = value_hash(orows, ocols)
             if hs != ho:
                 status.append(f"hash {hs} != {ho}")
         if status:
             print(f"FAIL {name}: {'; '.join(status)}")
             failures += 1
         else:
-            print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            print(f"PASS {name}: {len(srows)} rows hash {hs} ({time.time()-t0:.1f}s)")
     spark.stop()
     return 1 if failures else 0
 

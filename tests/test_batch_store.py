@@ -60,8 +60,8 @@ def _geofence(spark, tmp_path):
     return GeofenceAlertIndexer(edges, cover, str(tmp_path / "store"), str(tmp_path / "out")), _pings
 
 
-def _od(spark, tmp_path):
-    return ODIndexer(str(tmp_path / "store")), _pings
+def _od(spark, tmp_path, res=4):
+    return ODIndexer(str(tmp_path / "store"), res=res), _pings
 
 
 def _pyramid(spark, tmp_path, base_res=5):
@@ -105,7 +105,8 @@ def test_replay_leaves_every_store_unchanged(spark, tmp_path, name):
     ("near_dup", "family", {"hash_family": "xxhash64"}),
     ("substring", "gram_n", {"n": 6}),
     ("pyramid", "base_res", {"base_res": 6}),
-], ids=["near_dup", "substring", "pyramid"])
+    ("od", "res", {"res": 6}),
+], ids=["near_dup", "substring", "pyramid", "od"])
 def test_stamp_mismatch_raises(spark, tmp_path, no_cache_leak, name, column, other):
     sink, batch = SINKS[name](spark, tmp_path)
     sink(batch(spark, 0), 0)

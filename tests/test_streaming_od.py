@@ -1,6 +1,7 @@
 """Streaming O-D maintenance: stream-end state == batch od_matrix even
 when one user-day's pings are SPLIT across batches (the associativity
-claim), replay idempotence, late-data merge, and an availableNow run."""
+claim), replay idempotence, late-data merge, an availableNow run, and a
+store pinned to its resolution."""
 
 import datetime as dt
 
@@ -42,18 +43,30 @@ def test_stream_equals_batch_across_split_batches(spark, tmp_path):
     idx(_pings(spark, [ROWS[1], ROWS[3]]), 0)   # mid ping first
     idx(_pings(spark, [ROWS[0], ROWS[4]]), 1)   # origin arrives later (late data)
     idx(_pings(spark, [ROWS[2]]), 2)            # dest last
-    got = _sorted_flows(read_od(spark, store))
+    got = _sorted_flows(read_od(spark, store, res=4))
     want = _sorted_flows(od_matrix(_pings(spark, ROWS), res=4))
     assert got == want
 
     # replay of the last batch: identical (it overwrites its own directory)
     idx(_pings(spark, [ROWS[2]]), 2)
-    assert _sorted_flows(read_od(spark, store)) == want
+    assert _sorted_flows(read_od(spark, store, res=4)) == want
 
 
 def test_missing_store_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
-        read_od(spark, str(tmp_path / "nope"))
+        read_od(spark, str(tmp_path / "nope"), res=4)
+
+
+def test_store_pinned_to_resolution(spark, tmp_path):
+    """A res-6 indexer or reader on a res-4 store is refused: merging a
+    res-4 origin with a res-6 destination would be one bogus trip."""
+    store = str(tmp_path / "store")
+    ODIndexer(store, res=4)(_pings(spark, [ROWS[0]]), 0)
+    with pytest.raises(ValueError, match="res"):
+        ODIndexer(store, res=6)(_pings(spark, [ROWS[2]]), 1)
+    with pytest.raises(ValueError, match="res"):
+        read_od(spark, store, res=6)
+    assert len(read_od(spark, store, res=4).collect()) == 1
 
 
 def test_available_now_stream(spark, tmp_path):
@@ -64,5 +77,5 @@ def test_available_now_stream(spark, tmp_path):
     ).parquet(src)
     q = start_od(stream, str(tmp_path / "store"), str(tmp_path / "ckpt"), res=4)
     q.awaitTermination(120)
-    got = _sorted_flows(read_od(spark, str(tmp_path / "store")))
+    got = _sorted_flows(read_od(spark, str(tmp_path / "store"), res=4))
     assert got == _sorted_flows(od_matrix(_pings(spark, ROWS), res=4))

@@ -157,35 +157,3 @@ def test_geofence_events_entry_exit(spark):
         (1, 6): (True, True),   # isolated hit: enter and leave
         (2, 1): (True, True),
     }
-
-
-def test_footprint_minhash_recall_vs_exact(spark):
-    """The banded MinHash scale path must recover the exact
-    track_similarity pairs at fixture scale (the lsh_recall_report
-    discipline: exact row = recall oracle for the sub-quadratic path)."""
-    from asf_tools_spark.operators.trajectory import footprint_minhash_pairs
-    from asf_tools_spark.queries_geo import (
-        _TSIM_MIN_J, _TSIM_RES, q_track_similarity,
-    )
-    from asf_tools_spark.queries_geo import _geotagged_events
-
-    sf = "/root/testdata/sf0.001"
-    exact = {
-        (r.user_a, r.user_b)
-        for r in q_track_similarity(spark, sf).collect()
-    }
-    assert exact, "fixture scale must produce at least one exact pair"
-    cand = {
-        (r.user_a, r.user_b)
-        for r in footprint_minhash_pairs(
-            _geotagged_events(spark, sf), res=_TSIM_RES
-        ).collect()
-    }
-    hit = len(exact & cand)
-    recall = hit / len(exact)
-    # high-jaccard pairs (>= 0.2 on near-identical hotspot footprints)
-    # collide in at least one band with overwhelming probability
-    assert recall >= 0.9, (recall, len(exact), len(cand))
-    # and the candidate set stays far below all-pairs
-    n_users = _geotagged_events(spark, sf).select("user_id").distinct().count()
-    assert len(cand) < n_users * (n_users - 1) / 2
